@@ -36,17 +36,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // same extensions as Verify/specs/Explain — benched plans must be
-      // the plans the rest of the harness runs and publishes
-      .withExtensions(new functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Full materialization via the noop sink — a count() would let Catalyst
@@ -156,8 +146,14 @@ object Bench {
     // (st3's prior number was mostly its own setup write — r6 verdict).
     // Staged dirs are content-keyed and session-lifetime, so reruns
     // reuse them and TempDirs.sweep() between queries leaves them alone.
+    // A fixture that throws is recorded as that query's error: the query
+    // then re-stages inside its timed window, so its time is not the
+    // operator alone.
+    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def message(e: Throwable): String = Option(e.getMessage).getOrElse(e.getClass.getName)
     benched.foreach(q => q.stage.foreach(st =>
-      try st(spark, sfDir) catch { case _: Throwable => () }))
+      try st(spark, sfDir)
+      catch { case e: Throwable => errors(q.name) = s"fixture: ${message(e).take(80)}" }))
 
     // Machine-load context: a shared box can inflate CPU-saturating
     // queries up to ~2x run-to-run (round-3's dd3 12.2s->21.3s was load,
@@ -194,7 +190,6 @@ object Bench {
         }.toMap
       } catch { case _: Throwable => Map.empty }
 
-    val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     // Per-query attribution telemetry: (gc_ms, cache_mb, in_kb, out_kb,
     // shuffle_kb, task_ms). Cache is read BEFORE the inter-query
     // clearCache; byte/task counters come from a task-end listener,
@@ -241,21 +236,13 @@ object Bench {
       spark.catalog.clearCache()
       TempDirs.sweep()
       System.gc()
-      // Reset session-global experimental hooks: ev5/rj2 install their
-      // optimizer rule/strategy inside the query fn, and without this
-      // every LATER query (including ev3, the documented built-in-window
-      // baseline ev5 is compared against) silently benches the rewritten
-      // plan. Answers are unaffected (the rules are answer-preserving);
-      // the ev3-vs-ev5 comparison is what this protects.
-      spark.experimental.extraOptimizations = Nil
-      spark.experimental.extraStrategies = Nil
       val (in0, out0, sh0, task0) = io.snap()
       val gc0 = gcMs()
       val t0 = System.nanoTime()
       try run(SparkEntry.queries(name), dir)
       catch {
-        case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(80)
+        // a fixture failure stays recorded: it is the first cause
+        case e: Throwable => errors.getOrElseUpdate(name, message(e).take(80))
       }
       val sec = (System.nanoTime() - t0) / 1e9
       val cache = cachedMb()

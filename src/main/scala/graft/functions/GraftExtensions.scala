@@ -4,17 +4,19 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** `SparkSessionExtensions` hook so externally built sessions get the graft
-  * native functions at construction time:
+/** `SparkSessionExtensions` hook: the only route by which the graft plan
+  * rules (snapshot DML, range-join binning, TopK-per-key) and native
+  * functions reach a session. `graft.GraftSession.builder` adds it to
+  * every session the project builds; an external session can take it by
+  * conf:
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)
-  *   // or: .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+  * spark.sql.extensions=graft.functions.GraftExtensions
   * }}}
   *
-  * Sessions built elsewhere can call `GraftFunctions.register(spark)`
-  * instead — the query builders do this defensively.
+  * Sessions built without it can call `GraftFunctions.register(spark)`
+  * for the native functions only — the query builders do this
+  * defensively.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

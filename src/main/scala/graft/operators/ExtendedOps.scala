@@ -806,28 +806,20 @@ object ExtendedOps {
     // optimizer rule to apply rj1's rewrite automatically. Driver-
     // verifying this alongside rj1 proves the rule is answer-preserving
     // on real data, not just plan-shaped (the spec asserts the
-    // nested-loop is gone).
+    // nested-loop is gone). The rule reaches the session through
+    // GraftExtensions, so the plan below is the rewritten equi join.
     Q(
       "rj2_range_join_rule",
       (s, dir) => {
-        // scoped install + eager materialization (ev5's discipline): a
-        // lingering session-global rule would silently reroute every
-        // later non-equi range join — including rj1's manual-rewrite
-        // baseline on a rerun and the plan-audit session's other rows
-        graft.plans.RangeJoinBinning.install(s)
-        val out =
-          try {
-            val ev = Tables(s, dir, "events")
-            val e = ev.filter(col("event_type") === "error")
-              .select(col("event_id"), unix_micros(col("ts")).as("eus"))
-            val p = ev.filter(col("event_type") === "purchase")
-              .select(unix_micros(col("ts")).as("pus"))
-            e.join(p, abs(col("pus") - col("eus")) <= 300000000L, "left")
-              .groupBy("event_id")
-              .agg(count(col("pus")).as("n_nearby_purchases"))
-              .localCheckpoint(true)
-          } finally graft.plans.RangeJoinBinning.uninstall(s)
-        out.orderBy("event_id")
+        val ev = Tables(s, dir, "events")
+        val e = ev.filter(col("event_type") === "error")
+          .select(col("event_id"), unix_micros(col("ts")).as("eus"))
+        val p = ev.filter(col("event_type") === "purchase")
+          .select(unix_micros(col("ts")).as("pus"))
+        e.join(p, abs(col("pus") - col("eus")) <= 300000000L, "left")
+          .groupBy("event_id")
+          .agg(count(col("pus")).as("n_nearby_purchases"))
+          .orderBy("event_id")
       },
       Some("""WITH e AS (SELECT event_id, epoch_us(ts) AS eus FROM events WHERE event_type = 'error'),
              |p AS (SELECT epoch_us(ts) AS pus FROM events WHERE event_type = 'purchase')
@@ -850,23 +842,17 @@ object ExtendedOps {
     Q(
       "rj3_interval_join_rule",
       (s, dir) => {
-        // scoped install + eager materialization, same as rj2
-        graft.plans.RangeJoinBinning.install(s)
-        val out =
-          try {
-            val ev = Tables(s, dir, "events")
-            val p = ev.filter(col("event_type") === "purchase")
-              .select(col("event_id"), unix_micros(col("ts")).as("pus"))
-            val e = ev.filter(col("event_type") === "error")
-              .select(unix_micros(col("ts")).as("eus"))
-            p.join(e,
-                col("pus") >= col("eus") && col("pus") <= col("eus") + 600000000L,
-                "left")
-              .groupBy("event_id")
-              .agg(count(col("eus")).as("n_recent_errors"))
-              .localCheckpoint(true)
-          } finally graft.plans.RangeJoinBinning.uninstall(s)
-        out.orderBy("event_id")
+        val ev = Tables(s, dir, "events")
+        val p = ev.filter(col("event_type") === "purchase")
+          .select(col("event_id"), unix_micros(col("ts")).as("pus"))
+        val e = ev.filter(col("event_type") === "error")
+          .select(unix_micros(col("ts")).as("eus"))
+        p.join(e,
+            col("pus") >= col("eus") && col("pus") <= col("eus") + 600000000L,
+            "left")
+          .groupBy("event_id")
+          .agg(count(col("eus")).as("n_recent_errors"))
+          .orderBy("event_id")
       },
       Some("""WITH p AS (SELECT event_id, epoch_us(ts) AS pus FROM events WHERE event_type = 'purchase'),
              |e AS (SELECT epoch_us(ts) AS eus FROM events WHERE event_type = 'error')

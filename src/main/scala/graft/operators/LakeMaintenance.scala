@@ -265,7 +265,7 @@ object LakeMaintenance {
     // write-side plan is invisible to Explain/Prof because the write runs
     // as a side effect inside the query builder
     if (sys.env.get("SPARK_GRAFT_EXPLAIN_WRITE").contains("1"))
-      println(frame.queryExecution.explainString(
+      System.err.println(frame.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     frame.write.mode("overwrite").option("compression", "zstd").parquet(outDir)
   }

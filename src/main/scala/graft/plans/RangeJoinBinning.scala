@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter}
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -51,33 +50,10 @@ import org.apache.spark.sql.types.LongType
   *
   * Fires only when the join has no equality conjunct already (after the
   * rewrite the join HAS one, so the rule is idempotent by construction).
-  * Active in sessions built `.withExtensions(new GraftExtensions)`
-  * (injected as an optimizer rule) or via [[install]] on a live session.
+  * Active in every session built by `graft.GraftSession`, through
+  * `GraftExtensions` (injected as an optimizer rule).
   */
 object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
-
-  /** Idempotently activate on an existing session (the
-    * `experimental.extraOptimizations` hook — runs as the optimizer's
-    * final user batch, still before physical planning).
-    */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(this)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    }
-  }
-
-  /** Remove the rewrite from the session — it is session-global while
-    * installed, so a caller demonstrating the rule (rj2/rj3) must
-    * scope the install around its own materialization (TopKPerKey's
-    * ev5 discipline) or every LATER non-equi range join in the shared
-    * session — including naive-baseline rows and the plan-audit runs —
-    * silently plans through the rewrite.
-    */
-  def uninstall(spark: SparkSession): Unit = synchronized {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == this)
-  }
 
   private def longLit(e: Expression): Option[Long] = e match {
     case Literal(v: Long, LongType) => Some(v)

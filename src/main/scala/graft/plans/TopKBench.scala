@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,13 +28,7 @@ object TopKBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val replicate = sys.env.getOrElse("SPARK_GRAFT_TOPK_REPLICATE", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val base = graft.Tables(spark, sfDir, "events")
@@ -71,19 +64,24 @@ object TopKBench {
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    def run(install: Boolean): (Double, Long) = {
-      spark.experimental.extraOptimizations = Nil
-      spark.experimental.extraStrategies = Nil
-      if (install) TopKPerKey.install(spark)
-      Thread.sleep(500) // let prior listener events drain
-      shuffleBytes.set(0L)
-      val sec = time(query().write.format("noop").mode("overwrite").save())
-      Thread.sleep(500)
-      (sec, shuffleBytes.get())
+    // The stock plan is the same query with the rewrite rule excluded
+    // for the run (Spark's own optimizer switch): the planner then never
+    // sees a TopKPerKeyRank node, so the strategy has nothing to plan.
+    def run(topk: Boolean): (Double, Long) = {
+      if (!topk) spark.conf.set("spark.sql.optimizer.excludedRules", TopKViaRowNumber.ruleName)
+      try {
+        val plan = query().queryExecution.executedPlan.toString
+        require(plan.contains("TopKPerKey") == topk, plan)
+        Thread.sleep(500) // let prior listener events drain
+        shuffleBytes.set(0L)
+        val sec = time(query().write.format("noop").mode("overwrite").save())
+        Thread.sleep(500)
+        (sec, shuffleBytes.get())
+      } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
-    run(install = false); run(install = true) // warm-up both plans
-    val (windowSec, windowBytes) = run(install = false)
-    val (topkSec, topkBytes) = run(install = true)
+    run(topk = false); run(topk = true) // warm-up both plans
+    val (windowSec, windowBytes) = run(topk = false)
+    val (topkSec, topkBytes) = run(topk = true)
     println(f"""{"rows":$n,"window_sec":$windowSec%.2f,"topk_sec":$topkSec%.2f,""" +
       f""""window_shuffle_mb":${windowBytes / 1e6}%.1f,"topk_shuffle_mb":${topkBytes / 1e6}%.1f,""" +
       f""""shuffle_reduction":${windowBytes.toDouble / math.max(topkBytes, 1)}%.1f}""")

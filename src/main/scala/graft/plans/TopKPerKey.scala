@@ -3,7 +3,6 @@ package graft.plans
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -67,40 +66,17 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Ties rank nondeterministically exactly like `row_number` (callers
   * add a tiebreak column to O for determinism).
   *
-  * Active via `GraftExtensions` (rule + strategy injection) or
-  * [[TopKPerKey.install]] on a live session. `ev5_topk_per_key` is the
-  * driver-oracle-checked twin of the window-form `ev3`.
+  * Active in every session built by `graft.GraftSession`, through
+  * `GraftExtensions` (rule + strategy injection). The stock Window plan
+  * is the same query with `spark.sql.optimizer.excludedRules` set to
+  * [[TopKViaRowNumber]]'s rule name ([[TopKBench]] compares the two).
+  * `ev3` and `ev5` both plan through this stack.
   */
 object TopKPerKey {
 
   /** Cap on distinct keys held by one partial-pass task (keys × k rows). */
   val MaxHeapKeysConf = "spark.graft.topk.maxHeapKeys"
   val MaxHeapKeysDefault = 1 << 20
-
-  /** Idempotently activate rule + strategy on an existing session. */
-  def install(spark: SparkSession): Unit = synchronized {
-    if (!spark.experimental.extraOptimizations.contains(TopKViaRowNumber)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ TopKViaRowNumber
-    }
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-  }
-
-  /** Remove the rewrite from the session — the rule is session-global
-    * while installed, so a caller comparing the custom operator
-    * against the STOCK window plan (ev5 vs ev3) must scope the
-    * install around its own materialization or every later
-    * Filter+row_number query silently reroutes through the heap.
-    */
-  def uninstall(spark: SparkSession): Unit = synchronized {
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations.filterNot(_ == TopKViaRowNumber)
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies.filterNot(_ == TopKStrategy)
-  }
 
   /** Bounded-heap top-k reduction of one input partition (the partial
     * pass), as an iterator over [[PartialTopKRuntime]] — the same state

@@ -68,13 +68,8 @@ object EtlHandler {
       sys.exit(1)
     }
     val Array(docsDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), 4)
       .appName("recipe-etl-handler")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val r = try handle(spark, docsDir, outDir) finally spark.stop()

@@ -58,13 +58,8 @@ object RecipeEtl {
 
   def main(args: Array[String]): Unit = {
     val Array(docsDir, outDir) = args
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), 4)
       .appName("recipe-etl")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counts = run(spark, docsDir, outDir)

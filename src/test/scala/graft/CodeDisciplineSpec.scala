@@ -31,6 +31,17 @@ class CodeDisciplineSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"udf() used in: $offenders")
   }
 
+  test("plan rules reach a session only through GraftSession's extensions") {
+    val hooks = mainSources.collect {
+      case (path, src) if src.contains("spark.experimental.extra") => path
+    }
+    assert(hooks.isEmpty, s"session-global optimizer hooks in: $hooks")
+    val builders = mainSources.collect {
+      case (path, src) if src.contains("SparkSession.builder(") => Paths.get(path).getFileName.toString
+    }
+    assert(builders === Seq("GraftSession.scala"), "SparkSession built outside GraftSession")
+  }
+
   test("every registered query has a DuckDB oracle") {
     val missing = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
     assert(missing.isEmpty, s"queries without oracles: $missing")

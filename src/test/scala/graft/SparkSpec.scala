@@ -10,19 +10,12 @@ import org.scalatest.BeforeAndAfterAll
   */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", 4)
       .appName("graft-tests")
-      .withExtensions(new functions.GraftExtensions)
       // staged(): session-lifetime + shutdown-hook deletion — before this
       // every test JVM left its warehouse dir behind (58 orphans found)
       .config("spark.sql.warehouse.dir",
         TempDirs.staged("test_warehouse")(_ => ()).resolve("wh").toString)
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -130,12 +130,4 @@ class RangeJoinBinningSpec extends SparkSpec {
     assert(!plan.contains("graft_bin"), plan)
     assert(joined.count() === 1)
   }
-
-  test("install() activates the rule on a session without extensions") {
-    // the shared test session has GraftExtensions; install must be a
-    // no-op-safe second registration path
-    RangeJoinBinning.install(spark)
-    RangeJoinBinning.install(spark)
-    assert(spark.experimental.extraOptimizations.count(_ == RangeJoinBinning) === 1)
-  }
 }

@@ -92,10 +92,10 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("partial pass participates in whole-stage codegen (no fallback)") {
+    // newSession() keeps the parent's GraftExtensions, so the rule is active
     val s = spark.newSession()
     // compile failures must throw, not silently fall back to interpreted
     s.conf.set("spark.sql.codegen.fallback", "false")
-    TopKPerKey.install(s)
     import s.implicits._
     val df = (1 to 400).map(i => (s"k${i % 7}", (i * 37) % 100, i.toLong))
       .toDF("key", "value", "id").repartition(11)
@@ -136,5 +136,22 @@ class TopKPerKeySpec extends SparkSpec {
     val got = ev5.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
     assert(got === want)
+  }
+
+  test("ev3 and ev5 plan through the heaps; excluding the rule gives ev3 the stock Window") {
+    def query(name: String) = graft.SparkEntry.queries(name)(spark, TestSpark.Sf0001)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq
+    val ev3 = query("ev3_top_purchases_per_user")
+    val custom = rows(ev3)
+    Seq(ev3, query("ev5_topk_per_key")).foreach { df =>
+      assert(planOf(df).contains("PartialTopKPerKey"), planOf(df).take(800))
+    }
+    spark.conf.set("spark.sql.optimizer.excludedRules", TopKViaRowNumber.ruleName)
+    try {
+      val stock = query("ev3_top_purchases_per_user")
+      val plan = planOf(stock)
+      assert(plan.contains("Window") && !plan.contains("TopKPerKey"), plan.take(800))
+      assert(rows(stock) === custom)
+    } finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 }
