@@ -290,6 +290,10 @@ object Bench {
       val s = f"$v%.2f"
       if (s.contains('.')) s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".") else s
     }
+    // the EFFECTIVE parallelism the sweep ran under, so a reader can
+    // tell a core-count change from an engine change
+    val cores = spark.sparkContext.defaultParallelism
+    val shufflePartitions = spark.sessionState.conf.numShufflePartitions
     def line(f: Double => String, keep: Int, errCap: Int = 5,
         errLen: Int = 40): String = {
       // stdout budget: the registry outgrew the driver's ~2000-char tail
@@ -332,7 +336,7 @@ object Bench {
           "\"" + esc(k) + s"""":[${t.inKb},${t.outKb},${t.shKb},${fmt(t.taskMs / 1000.0)}]""") }
           .mkString(""","io_kb_task_s":{""", ",", "}")
       s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$qs$taskJson$othersJson,"sf":"${
-        new java.io.File(sfDir).getName}","load":{"start":"$loadStart","end":"$loadEnd"}$rerunJson$ioJson$errJson}"""
+        new java.io.File(sfDir).getName}","cores":$cores,"shuffle_partitions":$shufflePartitions,"load":{"start":"$loadStart","end":"$loadEnd"}$rerunJson$ioJson$errJson}"""
     }
     // Full telemetry rides in BENCH_FULL.json (no stdout budget there);
     // a rerun query's entry reflects its LAST (rerun) window.

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /** One registered engine query.
   *
@@ -69,19 +71,29 @@ object Tables {
     if (scanParts(df) >= n) df else df.repartition(n)
   }
 
-  /** Split count of `df`'s scan, memoized per (session, file set): the
-    * `df.rdd` probe forces a full physical planning + RDD conversion of
-    * the subtree per call (ADVICE r16), but the answer depends only on
-    * the files and the session's split confs — spread() only ever wraps
-    * near-scan frames (projections/filters never change split packing
-    * on these unpartitioned tables), so one probe per input table per
-    * session covers every caller. Sessions are weakly keyed: test
-    * suites churn sessions and must not accumulate entries.
+  /** Split count of `df`'s scan. The `df.rdd` probe forces a full
+    * physical planning + RDD conversion of the subtree per call (ADVICE
+    * r16), so a NEAR-SCAN frame ([[nearScan]]: projections/filters,
+    * which never change split packing on these unpartitioned tables)
+    * is memoized per (session, file set) — one probe per input table
+    * per session covers every such caller. Any other frame (a
+    * coalesce, a join, an aggregate over the same files) gets its own
+    * probe: its partitioning is not the file set's. Sessions are weakly
+    * keyed: test suites churn sessions and must not accumulate entries.
     */
   private val spreadParts =
     new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, java.lang.Integer]]()
 
+  /** Whether an analyzed plan is Project/Filter over ONE file relation. */
+  private def nearScan(plan: LogicalPlan): Boolean = plan match {
+    case p: Project => nearScan(p.child)
+    case f: Filter => nearScan(f.child)
+    case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+    case _ => false
+  }
+
   private def scanParts(df: DataFrame): Int = {
+    if (!nearScan(df.queryExecution.analyzed)) return df.rdd.getNumPartitions
     val s = df.sparkSession
     val key = df.inputFiles.sorted.mkString("\n")
     spreadParts.synchronized {

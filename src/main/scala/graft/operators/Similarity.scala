@@ -571,8 +571,9 @@ object Similarity {
     val ideal = n.toDouble / k
     val hot = counts.filter(_._2 > threshold * ideal).map(_._1).sorted
     if (hot.isEmpty) return Seq.empty
-    val (base, pos, schema) = SnapshotLog.readPosForDml(s, root, asOf = cur0)
-    val cellType = schema("cell").dataType
+    val snap = SnapshotLog.resolve(s, root, cur0)
+    val pos = SnapshotLog.readPosForDml(s, snap)
+    val cellType = snap.schema("cell").dataType
     // O(hot rows) working set, reused by the sub-trains, the delete
     // vector, and the re-assignment — one scan of the table feeds it
     val hotAll = graft.CacheScope.track(
@@ -608,7 +609,7 @@ object Similarity {
       cents.zipWithIndex.map { case (cn, i) => (i + 1, cn.toSeq) }
         .toDF("cell", "centroid")
     }
-    SnapshotLog.commitTransactionMor(s, txnDir, root, base, dead, reassigned,
+    SnapshotLog.commitTransactionMor(s, txnDir, root, snap.id, dead, reassigned,
       Seq(centsRoot -> centRows), overwriteRoots = Set(centsRoot),
       expectedBase = Map(centsRoot -> centsCur))
     splitCells

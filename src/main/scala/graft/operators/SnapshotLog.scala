@@ -446,10 +446,8 @@ object SnapshotLog {
       asOf: Long = 0L): Option[Int] = {
     val id = if (asOf > 0) asOf else currentId(spark, root)
     if (id == 0) return None
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    if (!schema.fieldNames.contains(column)) return None
+    val snap = resolve(spark, root, id)
+    if (!snap.schema.fieldNames.contains(column)) return None
     def maxN(ns: Iterator[Int]): Option[Int] =
       ns.foldLeft(Option.empty[Int])((a, n) => Some(math.max(a.getOrElse(0), n)))
     // fast path: list BANDS already carry the layout key (re-keyed to
@@ -458,17 +456,10 @@ object SnapshotLog {
     // whose bands lost the key (mixed-era lists) pays the per-file
     // scan, which resolves physical names through ids.
     val prefix = s"__bucket:$column:"
-    val fromBands = maxN(raw.refs.iterator.flatMap(_.band.keys)
+    val fromBands = maxN(snap.raw.refs.iterator.flatMap(_.band.keys)
       .filter(_.startsWith(prefix)).map(_.stripPrefix(prefix).toInt))
     if (fromBands.isDefined) return fromBands
-    val curIds = currentIdsOf(raw, schema)._1
-    val files = raw.inline ++ raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    maxN(files.iterator.flatMap { f =>
-      physNameIn(f, column, curIds).toSeq.flatMap { p =>
-        val pfx = s"__bucket:$p:"
-        f.stats.keys.filter(_.startsWith(pfx)).map(_.stripPrefix(pfx).toInt)
-      }
-    })
+    maxN(layoutsIn(snap.files, column, snap.curIds).iterator)
   }
 
   private def validateSpec(fields: Seq[PartField], schema: StructType): Unit =
@@ -524,7 +515,7 @@ object SnapshotLog {
       asOf: Long = 0L): Seq[PartField] = {
     val id = if (asOf > 0) asOf else currentId(spark, root)
     if (id == 0) Seq.empty
-    else rawManifest(spark, root, id).spec
+    else resolve(spark, root, id).spec
   }
 
   /** Append `df` DECLARING `fields` as the table's partition spec in
@@ -1121,7 +1112,7 @@ object SnapshotLog {
     */
   def sortOrderOf(spark: SparkSession, root: String): Seq[SortField] = {
     val id = currentId(spark, root)
-    if (id == 0) Seq.empty else rawManifest(spark, root, id).sortOrder
+    if (id == 0) Seq.empty else resolve(spark, root, id).sortOrder
   }
 
   /** Declare (or replace — empty clears) the table's write sort order:
@@ -1763,16 +1754,98 @@ object SnapshotLog {
   private[operators] def headOperation(spark: SparkSession,
       root: String): Option[String] = {
     val id = currentId(spark, root)
-    if (id == 0L) None else Some(rawManifest(spark, root, id).operation)
+    if (id == 0L) None else Some(resolve(spark, root, id).raw.operation)
+  }
+
+  /** One snapshot resolved from ONE manifest parse — the value every
+    * read plans and scans from (Iceberg's TableMetadata/Snapshot
+    * split). The manifest, schema, field ids, partition spec and sort
+    * order are fixed at [[resolve]]; the live file inventory, the
+    * delete map and the table-level column meta load on first use and
+    * are then shared, so a table, a scan builder and the scan it builds
+    * all read ONE snapshot however many commits land meanwhile.
+    * `branch` is the branch-head pin it came from (None = main chain).
+    */
+  private[graft] final class Resolved private[SnapshotLog] (
+      val root: String, private[SnapshotLog] val raw: RawManifest,
+      val branch: Option[(String, Long)], fs: FileSystem) {
+    val schema: StructType = StructType.fromDDL(raw.schemaDdl)
+    val curIds: Map[String, Int] = currentIdsOf(raw, schema)._1
+    def id: Long = raw.id
+    def spec: Seq[PartField] = raw.spec
+    def sortOrder: Seq[SortField] = raw.sortOrder
+    /** Outstanding EQUALITY deletes — the state a per-file scan cannot
+      * serve (their sequence-rule anti-join is not a per-file test).
+      */
+    def eqOutstanding: Boolean = raw.eqRefs.nonEmpty
+    /** Live file count from the manifest's per-list subtotals — never
+      * from opening lists (report-only; a pruned plan stays
+      * O(matching lists)).
+      */
+    def totalFiles: Int = raw.inline.size + raw.refs.iterator.map(_.nFiles).sum
+
+    private val lists =
+      scala.collection.concurrent.TrieMap.empty[String, Seq[FileEntry]]
+    /** One referenced file list, opened at most once per value. */
+    private[SnapshotLog] def listed(r: ListRef): Seq[FileEntry] =
+      lists.getOrElseUpdate(r.path, readFileList(fs, root, r.path))
+
+    lazy val files: Seq[FileEntry] = raw.inline ++ raw.refs.flatMap(listed)
+    private[SnapshotLog] lazy val deletes: Map[String, Seq[DeleteEntry]] =
+      deleteMapOf(fs, root, raw)
+    /** Per-target-file delete-vector dirs (each dirty file's reader
+      * loads ONLY its own DV rows, executor-side).
+      */
+    lazy val dvByTarget: Map[String, Seq[String]] =
+      deletes.map { case (t, es) => t -> es.map(_.dvDir).distinct }
+    /** Per-target-file DV kill counts (sum of each DV's recorded
+      * delRows — disjoint by construction: a MoR delete computes
+      * positions from a MoR read, so a dead row never re-kills). What
+      * keeps row counts, COUNT(col) pushdown and CBO stats truthful
+      * while DVs are outstanding.
+      */
+    lazy val dvKills: Map[String, Long] =
+      deletes.map { case (t, es) => t -> es.map(_.delRows).sum }
+    /** Table-level (nullCount, ndvEstimate) per column ([[tableColMeta]]). */
+    lazy val colMeta: Map[String, (Long, Long)] = tableColMeta(raw, schema)
+    /** Table-level typed (min, max) per column ([[tableBandBounds]]). */
+    lazy val colBounds: Map[String, (Any, Any)] = tableBandBounds(raw, schema)
+
+    /** How scan descriptions name the pin. */
+    def pinLabel: String = branch match {
+      case Some((b, k)) => s"asOf=0 branch=$b@$k"
+      case None => s"asOf=$id"
+    }
+  }
+
+  /** Resolve the snapshot a read pins: main-chain snapshot `asOf` (0 =
+    * the current head), or — when `branch` is set — that branch's head
+    * at commit count k (k = 0: the fork snapshot). Branch manifests are
+    * write-once like main ones, so a pin reads a consistent snapshot
+    * however many commits land after it. The read side's one manifest
+    * parse.
+    */
+  private[graft] def resolve(spark: SparkSession, root: String,
+      asOf: Long = 0L, branch: Option[(String, Long)] = None): Resolved = {
+    val fs = fsOf(spark, root)
+    val raw = branch match {
+      case Some((name, k)) =>
+        if (k == 0)
+          rawManifest(spark, root, tagId(spark, root, branchRefName(name)))
+        else parseManifest(readTextFile(fs, branchManifestPath(root, name, k)))
+      case None =>
+        val id = if (asOf > 0) asOf else currentId(spark, root)
+        require(id > 0, s"no snapshots under $root")
+        rawManifest(spark, root, id)
+    }
+    new Resolved(root, raw, branch, fs)
   }
 
   /** Load one snapshot's full metadata (manifest + its file lists). */
   def snapshot(spark: SparkSession, root: String, id: Long): Snapshot = {
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val files = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    Snapshot(raw.id, raw.parent, raw.operation, raw.rows, raw.schemaDdl, files)
+    val s = resolve(spark, root, id)
+    Snapshot(s.id, s.raw.parent, s.raw.operation, s.raw.rows,
+      s.raw.schemaDdl, s.files)
   }
 
   /** All snapshots, oldest first — the table's history. */
@@ -1801,13 +1874,8 @@ object SnapshotLog {
     * yields the narrow schema, because that manifest recorded it.
     */
   def read(spark: SparkSession, root: String, asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val files = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    dvRead(spark, root, raw, files, schema, currentIdsOf(raw, schema)._1)
+    val snap = resolve(spark, root, asOf)
+    dvRead(spark, snap, snap.files)
   }
 
   /** Read `files` under `schema`, resolving columns by FIELD ID: each
@@ -1900,11 +1968,10 @@ object SnapshotLog {
     * scan cost a DV adds is bounded by the DIRTY files plus the DV
     * rows, never the table.
     */
-  private def dvRead(spark: SparkSession, root: String, raw: RawManifest,
-      files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int]): DataFrame =
-    morApply(spark, root, files, schema, curIds,
-      deleteMapOf(fsOf(spark, root), root, raw), raw.eqRefs)
+  private[graft] def dvRead(spark: SparkSession, snap: Resolved,
+      files: Seq[FileEntry]): DataFrame =
+    morApply(spark, snap.root, files, snap.schema, snap.curIds,
+      snap.deletes, snap.raw.eqRefs)
 
   /** Join `df` (table rows under the current schema) against ONE
     * equality delete's key set: anti = survivors, semi = the rows it
@@ -2145,16 +2212,8 @@ object SnapshotLog {
     * scan never opens — or even lists — the rest.
     */
   def readRange(spark: SparkSession, root: String, column: String,
-      lower: Option[String], upper: Option[String], asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val (kept, schema) = rangeFiles(spark, root, column, lower, upper, id)
-    val raw = rawManifest(spark, root, id)
-    val dt = schema(column).dataType
-    val base = dvRead(spark, root, raw, kept, schema, currentIdsOf(raw, schema)._1)
-    val c = col(column)
-    val withLo = lower.map(l => base.filter(c >= lit(l).cast(dt))).getOrElse(base)
-    upper.map(u => withLo.filter(c <= lit(u).cast(dt))).getOrElse(withLo)
-  }
+      lower: Option[String], upper: Option[String], asOf: Long = 0L): DataFrame =
+    readBox(spark, root, Seq((column, lower, upper)), asOf)
 
   /** True iff a recorded `[mn, mx]` can intersect `[lower, upper]`
     * under `dt`'s order. Unparseable stats (NaN/Infinity renderings)
@@ -2209,14 +2268,6 @@ object SnapshotLog {
       Math.ulp(java.lang.Float.parseFloat(s)).toDouble)).underlying
       .toPlainString
 
-  /** The file entries a [[readRange]] would scan — the one-predicate
-    * case of [[boxFiles]].
-    */
-  private[graft] def rangeFiles(spark: SparkSession, root: String,
-      column: String, lower: Option[String], upper: Option[String],
-      asOf: Long = 0L): (Seq[FileEntry], StructType) =
-    boxFiles(spark, root, Seq((column, lower, upper)), asOf)
-
   /** MULTI-column conjunctive range read (a "box" read): a file is kept
     * only if EVERY (column, lower, upper) predicate's band can
     * intersect its recorded stats. Single-column clustering bounds one
@@ -2231,31 +2282,101 @@ object SnapshotLog {
   def readBox(spark: SparkSession, root: String,
       preds: Seq[(String, Option[String], Option[String])],
       asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val (kept, schema) = boxFiles(spark, root, preds, id)
-    val raw = rawManifest(spark, root, id)
-    val base = dvRead(spark, root, raw, kept, schema, currentIdsOf(raw, schema)._1)
+    require(preds.nonEmpty, "boxFiles needs at least one predicate")
+    val snap = resolve(spark, root, asOf)
+    requireColumns(snap, preds.map(_._1))
+    val base = dvRead(spark, snap, boxFiles(snap, preds))
     preds.foldLeft(base) { case (df, (column, lower, upper)) =>
-      val dt = schema(column).dataType
+      val dt = snap.schema(column).dataType
       val c = col(column)
       val withLo = lower.map(l => df.filter(c >= lit(l).cast(dt))).getOrElse(df)
       upper.map(u => withLo.filter(c <= lit(u).cast(dt))).getOrElse(withLo)
     }
   }
 
-  /** The file entries a [[readBox]] would scan — two-level pruning:
-    * whole file LISTS whose manifest band excludes ANY predicate's
-    * range are skipped WITHOUT being opened (O(matching lists)
-    * planning I/O on a many-list table), then the opened lists' files
-    * prune on their own stats. A list or file without a usable
-    * band/stat for a predicate column is kept.
+  /** The ONE file pruner every snapshot read plans through — library
+    * range, box and point reads, row-level DML discovery and the
+    * catalog scan alike:
+    *  1. whole file LISTS whose manifest band excludes any predicate
+    *     (stat band or hidden-partitioning transform band) are skipped
+    *     WITHOUT being opened — O(matching lists) planning I/O on a
+    *     many-list table;
+    *  2. the opened lists' files prune on their own stat and transform
+    *     bands ([[pruneEntriesForBoxes]]);
+    *  3. integral POINT conjuncts consult each surviving file's bloom
+    *     filter — what prunes a key inside a wide band.
+    * A list or file without a usable band/stat/bloom for a predicate is
+    * kept, and predicates on columns the snapshot lacks are ignored
+    * (the caller's residual filter still applies — pruning only ever
+    * skips files, never changes the answer); no predicates = the full
+    * live inventory.
     */
-  private[graft] def boxFiles(spark: SparkSession, root: String,
-      preds: Seq[(String, Option[String], Option[String])],
-      asOf: Long = 0L): (Seq[FileEntry], StructType) = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    boxFilesRaw(spark, root, rawManifest(spark, root, id), preds)
+  private[graft] def boxFiles(snap: Resolved,
+      preds: Seq[(String, Option[String], Option[String])]): Seq[FileEntry] = {
+    val boxes = boxesOf(snap.schema, preds)
+    if (boxes.isEmpty) return snap.files
+    val memo = scala.collection.mutable.HashMap
+      .empty[(String, Int, String), Option[String]]
+    // list bands carry CURRENT column names (rename commits re-key them)
+    val listed = snap.raw.inline ++ snap.raw.refs
+      .filter(r => boxKeeps(boxes, r.band, Some(_), memo))
+      .flatMap(snap.listed)
+    val banded = pruneEntriesForBoxes(listed, snap.schema, snap.curIds, preds)
+    val points = boxes.collect {
+      case (c, dt, Some(lo), Some(hi)) if lo == hi &&
+        scala.util.Try(lo.toLong).isSuccess => (c, dt, lo.toLong)
+    }
+    if (points.isEmpty) banded
+    else banded.filter(f => points.forall { case (c, dt, v) =>
+      physNameIn(f, c, snap.curIds).flatMap(bloomOf(f, _, dt))
+        .forall(_.mightContainLong(v))
+    })
   }
+
+  /** The library reads' column check — a predicate on a column the
+    * snapshot lacks is a caller error there, not a no-op.
+    */
+  private def requireColumns(snap: Resolved, columns: Seq[String]): Unit =
+    columns.foreach(c => require(snap.schema.fieldNames.contains(c),
+      s"no column $c in snapshot ${snap.id}"))
+
+  /** Box predicates a pruner can use: known columns with at least one
+    * bound, data types resolved once (not per file × predicate — noise
+    * here, real on the million-file planning path this exists for).
+    */
+  private def boxesOf(schema: StructType,
+      preds: Seq[(String, Option[String], Option[String])])
+      : Seq[(String, org.apache.spark.sql.types.DataType, Option[String], Option[String])] =
+    preds.collect {
+      case (c, lo, hi) if schema.fieldNames.contains(c) &&
+        (lo.isDefined || hi.isDefined) => (c, schema(c).dataType, lo, hi)
+    }
+
+  /** Whether one stats map — a list band under current names, or a
+    * file's stats under the physical names `nameOf` resolves through
+    * its field ids — can hold rows inside EVERY box: the column's stat
+    * band must intersect it, and every `__part:`/`__bucket:` transform
+    * band must admit it mapped into transform space (every supported
+    * transform but bucket is monotonic; a bucket band prunes a point
+    * from its driver-computed bucket id). A missing name or stat keeps.
+    */
+  private def boxKeeps(
+      boxes: Seq[(String, org.apache.spark.sql.types.DataType, Option[String], Option[String])],
+      stats: Map[String, (String, String)],
+      nameOf: String => Option[String],
+      memo: scala.collection.mutable.HashMap[(String, Int, String), Option[String]])
+      : Boolean =
+    boxes.forall { case (c, dt, lo, hi) =>
+      nameOf(c) match {
+        case None => true
+        case Some(nm) =>
+          stats.get(nm).forall { case (mn, mx) =>
+            rangeIntersects(dt, mn, mx, lo, hi) } &&
+            stats.forall { case (k, (mn, mx)) =>
+              partStatKeepsCore(memo, k, nm, mn, mx, dt, lo, hi)
+            }
+      }
+    }
 
   /** One transform-band test shared by every pruner (plan-time boxes
     * and the runtime-filter point sets): a `__part:` or `__bucket:`
@@ -2296,67 +2417,6 @@ object SnapshotLog {
         case _ => true
       }
     } else true
-  }
-
-  /** [[boxFiles]] from an already-resolved manifest — the shared core
-    * main-chain and BRANCH reads prune through.
-    */
-  private def boxFilesRaw(spark: SparkSession, root: String,
-      raw: RawManifest,
-      preds: Seq[(String, Option[String], Option[String])])
-      : (Seq[FileEntry], StructType) = {
-    require(preds.nonEmpty, "boxFiles needs at least one predicate")
-    val fs = fsOf(spark, root)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    preds.foreach { case (column, _, _) =>
-      require(schema.fieldNames.contains(column),
-        s"no column $column in snapshot ${raw.id}")
-    }
-    val curIds = currentIdsOf(raw, schema)._1
-    // data types hoisted out of the per-file loop: resolving through
-    // the StructType per (file × predicate) is a linear field scan —
-    // noise here, real on the million-file planning path this exists for
-    val resolved = preds.map { case (column, lower, upper) =>
-      (column, schema(column).dataType, lower, upper)
-    }
-    def keeps(statOf: String => Option[(String, String)]): Boolean =
-      resolved.forall { case (column, dt, lower, upper) =>
-        statOf(column) match {
-          case Some((mn, mx)) => rangeIntersects(dt, mn, mx, lower, upper)
-          case None => true
-        }
-      }
-    // hidden-partitioning pruning: a `__part:` transform band prunes
-    // from the RAW predicate mapped into transform space (every
-    // supported transform but bucket is monotonic), a `__bucket:` band
-    // from a point predicate's driver-computed bucket id. Mapped
-    // bounds are memoized per (transform, n, value) — O(preds ×
-    // transforms) parses, not O(files).
-    val boundMemo = scala.collection.mutable.HashMap
-      .empty[(String, Int, String), Option[String]]
-    def partStatKeeps(key: String, nm: String, mn: String, mx: String,
-        dt: org.apache.spark.sql.types.DataType,
-        lower: Option[String], upper: Option[String]): Boolean =
-      partStatKeepsCore(boundMemo, key, nm, mn, mx, dt, lower, upper)
-    def transformKeeps(stats: Map[String, (String, String)],
-        nameOf: String => Option[String]): Boolean =
-      resolved.forall { case (column, dt, lower, upper) =>
-        (lower.isEmpty && upper.isEmpty) || (nameOf(column) match {
-          case None => true
-          case Some(nm) => stats.forall { case (k, (mn, mx)) =>
-            partStatKeeps(k, nm, mn, mx, dt, lower, upper)
-          }
-        })
-      }
-    // per-file stats live under the file's PHYSICAL column name —
-    // resolved through its field ids, so pruning stays exact across
-    // renames (bands are remapped by the rename commit itself)
-    val kept = (raw.inline ++ raw.refs
-      .filter(r => keeps(r.band.get) && transformKeeps(r.band, Some(_)))
-      .flatMap(r => readFileList(fs, root, r.path)))
-      .filter(f => keeps(c => physNameIn(f, c, curIds).flatMap(f.stats.get)) &&
-        transformKeeps(f.stats, c => physNameIn(f, c, curIds)))
-    (kept, schema)
   }
 
   /** METADATA-ONLY aggregate: COUNT(*) plus per-column MIN/MAX for a
@@ -2585,23 +2645,14 @@ object SnapshotLog {
     */
   def statsTable(spark: SparkSession, root: String,
       asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val cols = statCols(schema)
-    val meta = tableColMeta(raw, schema)
+    val snap = resolve(spark, root, asOf)
+    val meta = snap.colMeta
     // the SAME merged equi-height boundaries the scan serves CBO
     // (kill-adjusted weights under outstanding DVs) — SQL-visible so a
     // user tuning a skewed workload can audit what the optimizer sees;
     // null for non-CBO-double-domain columns and pre-histogram files
-    val curIds = currentIdsOf(raw, schema)._1
-    val kills = deleteMapOf(fsOf(spark, root), root, raw)
-      .map { case (t, es) => t -> es.map(_.delRows).sum }
-    val hist = subsetColHist(
-      raw.inline ++ raw.refs.flatMap(r =>
-        readFileList(fsOf(spark, root), root, r.path)),
-      schema, curIds, kills)
-    val rows = statsSummaryRows(spark, root, cols, id).map {
+    val hist = subsetColHist(snap.files, snap.schema, snap.curIds, snap.dvKills)
+    val rows = statsSummaryRows(snap, statCols(snap.schema)).map {
       case (c, nRows, mn, mx) =>
         val m = meta.get(c)
         Row(c, nRows.map(java.lang.Long.valueOf).orNull,
@@ -2620,14 +2671,9 @@ object SnapshotLog {
     * shared with [[statsTable]] so neither path ever collect()s the
     * other's frame.
     */
-  private def statsSummaryRows(spark: SparkSession, root: String,
-      columns: Seq[String], asOf: Long = 0L)
+  private def statsSummaryRows(snap: Resolved, columns: Seq[String])
       : Seq[(String, Option[Long], String, String)] = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val s = snapshot(spark, root, id)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(s.schemaDdl)
-    val curIds = currentIdsOf(raw, schema)._1
+    val (raw, schema, curIds) = (snap.raw, snap.schema, snap.curIds)
     // outstanding delete vectors keep the LIVE count exact (the header
     // maintains it per MoR commit), but a per-file min/max may now be
     // carried by a dead row — bounds go null and the caller falls back
@@ -2638,14 +2684,14 @@ object SnapshotLog {
     val eqDirty = raw.eqRefs.nonEmpty
     val nRows: Option[Long] =
       if (eqDirty) None
-      else Some(s.files.map(_.rows).sum -
+      else Some(snap.files.map(_.rows).sum -
         raw.dRefs.iterator.map(_.delRows).sum)
     val morDirty = raw.dRefs.nonEmpty || eqDirty
     // zero-row files constrain nothing (append() tolerates empty
     // tasks, which record no stats) — they must not null the bounds
-    val live = s.files.filter(_.rows > 0)
+    val live = snap.files.filter(_.rows > 0)
     val out = columns.sorted.map { c =>
-      require(schema.fieldNames.contains(c), s"no column $c in snapshot $id")
+      require(schema.fieldNames.contains(c), s"no column $c in snapshot ${snap.id}")
       val dt = schema(c).dataType
       val perFile = live.map(f => physNameIn(f, c, curIds).flatMap(f.stats.get))
       // a live file whose stats map is entirely EMPTY is a legacy
@@ -2679,7 +2725,7 @@ object SnapshotLog {
   def statsSummary(spark: SparkSession, root: String,
       columns: Seq[String], asOf: Long = 0L): DataFrame = {
     import spark.implicits._
-    statsSummaryRows(spark, root, columns, asOf)
+    statsSummaryRows(resolve(spark, root, asOf), columns)
       .toDF("col_name", "n_rows", "min_val", "max_val")
   }
 
@@ -2694,16 +2740,10 @@ object SnapshotLog {
     */
   def partitionsTable(spark: SparkSession, root: String,
       asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val curIds = currentIdsOf(raw, schema)._1
-    val fs = fsOf(spark, root)
-    val files = (raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path)))
-      .filter(_.rows > 0)
-    val killsByTarget: Map[String, Long] = deleteMapOf(fs, root, raw)
-      .map { case (t, es) => t -> es.iterator.map(_.delRows).sum }
+    val snap = resolve(spark, root, asOf)
+    val (raw, curIds) = (snap.raw, snap.curIds)
+    val files = snap.files.filter(_.rows > 0)
+    val killsByTarget = snap.dvKills
     val eqDirty = raw.eqRefs.nonEmpty
     def label(f: PartField, v: Option[String]): String = {
       val nm = if (f.n > 0) s"${f.transform}(${f.n},${f.column})"
@@ -2777,19 +2817,10 @@ object SnapshotLog {
   }
 
   // ---- DSv2 catalog support: the SQL front door (graft.sources
-  // .SnapshotCatalog) plans reads through these three hooks, so the
-  // catalog path and the library API share one pruning + MoR
-  // resolution implementation and can never diverge. ----
-
-  /** Table schema at snapshot `asOf` (current when 0) — what the
-    * catalog's loadTable reports before any scan is built.
-    */
-  private[graft] def schemaAt(spark: SparkSession, root: String,
-      asOf: Long = 0L): StructType = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    require(id > 0, s"no snapshots under $root")
-    StructType.fromDDL(rawManifest(spark, root, id).schemaDdl)
-  }
+  // .SnapshotCatalog) resolves each table and scan to one [[Resolved]]
+  // snapshot, prunes through [[boxFiles]] and reads through [[dvRead]]
+  // — the library reads' own pruner and MoR resolution, so the catalog
+  // path and the library API can never diverge. ----
 
   /** Latest VISIBLE snapshot published at or before `tsMillis` — the
     * `TIMESTAMP AS OF` resolution. Manifests are written once via
@@ -2819,96 +2850,6 @@ object SnapshotLog {
     vis
   }
 
-  /** The catalog scan's FILE plan: live entries pruned by the pushed
-    * conjuncts' stat bands (list-level bands first, so unmatched lists
-    * are never opened), plus per-file bloom consult for point
-    * conjuncts on integral columns — the same two-level skipping
-    * [[readBox]]/[[readPoint]] apply, driven here by SQL predicates
-    * the V2 pushdown hands the scan builder. Returns (kept, total
-    * live, schema); empty `preds` = the full inventory. Conjuncts on
-    * unknown columns are ignored (the residual filter still applies —
-    * pruning only ever skips files, never changes the answer).
-    */
-  private[graft] def catalogPlan(spark: SparkSession, root: String,
-      asOf: Long, preds: Seq[(String, Option[String], Option[String])])
-      : (Seq[FileEntry], Int, StructType) = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    catalogPlanRaw(spark, root, rawManifest(spark, root, id), preds)
-  }
-
-  /** [[catalogPlan]] from an already-resolved manifest — shared by
-    * main-chain pins and branch-head pins.
-    */
-  private def catalogPlanRaw(spark: SparkSession, root: String,
-      raw: RawManifest,
-      preds: Seq[(String, Option[String], Option[String])])
-      : (Seq[FileEntry], Int, StructType) = {
-    val fs = fsOf(spark, root)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    // the live TOTAL comes from the manifest lines' per-list subtotals
-    // — never from opening lists: a pruned plan on a million-file
-    // table must stay O(matching lists), and the total is report-only
-    val total = raw.inline.size + raw.refs.iterator.map(_.nFiles).sum
-    val usable = preds.filter { case (c, _, _) => schema.fieldNames.contains(c) }
-    val kept0 =
-      if (usable.isEmpty)
-        raw.inline ++ raw.refs.flatMap(r => readFileList(fs, root, r.path))
-      else boxFilesRaw(spark, root, raw, usable)._1
-    val curIds = currentIdsOf(raw, schema)._1
-    val points = usable.flatMap {
-      case (c, Some(lo), Some(hi)) if lo == hi =>
-        val integral = schema(c).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => true
-          case _ => false
-        }
-        if (integral) scala.util.Try(lo.toLong).toOption.map(c -> _) else None
-      case _ => None
-    }
-    val kept =
-      if (points.isEmpty) kept0
-      else kept0.filter { f =>
-        points.forall { case (c, v) =>
-          physNameIn(f, c, curIds).flatMap(f.blooms.get) match {
-            case Some(b64) =>
-              org.apache.spark.util.sketch.BloomFilter.readFrom(
-                new java.io.ByteArrayInputStream(
-                  java.util.Base64.getDecoder.decode(b64)))
-                .mightContainLong(v)
-            case None => true
-          }
-        }
-      }
-    (kept, total, schema)
-  }
-
-  /** Full merge-on-read read of an externally PRUNED subset of
-    * snapshot `asOf`'s live files — the catalog scan's row producer.
-    * Delete vectors and equality deletes apply exactly as in [[read]];
-    * pruning away a DV's other targets never breaks the anti-join
-    * (coordinates are exact per file).
-    */
-  private[graft] def readFileSubset(spark: SparkSession, root: String,
-      files: Seq[FileEntry], asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    readFileSubsetRaw(spark, root, rawManifest(spark, root, id), files)
-  }
-
-  private def readFileSubsetRaw(spark: SparkSession, root: String,
-      raw: RawManifest, files: Seq[FileEntry]): DataFrame = {
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    dvRead(spark, root, raw, files, schema, currentIdsOf(raw, schema)._1)
-  }
-
-  // ---- catalog PIN resolution: a catalog table is pinned either to a
-  // main-chain snapshot (asOf; 0 = the head, resolved ONCE per scan)
-  // or to a BRANCH HEAD ((name, k) — `VERSION AS OF '<branch>'`, k
-  // resolved once at loadTable). Branch manifests are write-once like
-  // main ones, so a pin reads a consistent snapshot however many
-  // branch commits land after it. ----
-
   /** The branch's current commit count — the `k` a catalog branch pin
     * freezes (0 = fresh branch: content is the fork snapshot).
     */
@@ -2916,81 +2857,12 @@ object SnapshotLog {
       name: String): Long =
     branchHeadK(fsOf(spark, root), root, name)
 
-  private def pinnedManifest(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)]): RawManifest =
-    branch match {
-      case Some((name, k)) =>
-        if (k == 0)
-          rawManifest(spark, root, tagId(spark, root, branchRefName(name)))
-        else parseManifest(readTextFile(fsOf(spark, root),
-          branchManifestPath(root, name, k)))
-      case None =>
-        val id = if (asOf > 0) asOf else currentId(spark, root)
-        require(id > 0, s"no snapshots under $root")
-        rawManifest(spark, root, id)
-    }
-
-  private[graft] def schemaOfPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)]): StructType =
-    StructType.fromDDL(pinnedManifest(spark, root, asOf, branch).schemaDdl)
-
-  private[graft] def specOfPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)]): Seq[PartField] =
-    pinnedManifest(spark, root, asOf, branch).spec
-
-  private[graft] def sortOrderOfPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)]): Seq[SortField] =
-    // an empty table has no manifest to read an order from
-    if (asOf == 0L && branch.isEmpty && currentId(spark, root) == 0L)
-      Seq.empty
-    else pinnedManifest(spark, root, asOf, branch).sortOrder
-
-  private[graft] def catalogPlanPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)],
-      preds: Seq[(String, Option[String], Option[String])])
-      : (Seq[FileEntry], Int, StructType) =
-    catalogPlanRaw(spark, root,
-      pinnedManifest(spark, root, asOf, branch), preds)
-
-  private[graft] def readFileSubsetPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)],
-      files: Seq[FileEntry]): DataFrame =
-    readFileSubsetRaw(spark, root,
-      pinnedManifest(spark, root, asOf, branch), files)
-
-  /** Everything the catalog's V2 BATCH scan needs from one pinned
-    * manifest, resolved ONCE at plan time: the box-pruned file set,
-    * the field-id map (physical-name resolution per file), whether
-    * equality deletes are outstanding (the state that scan falls back
-    * to the V1 join read for), and the per-target-file delete-vector
-    * dirs (so each dirty file's reader loads ONLY its own DV rows,
-    * executor-side).
+  /** The catalog's V2 BATCH scan plan: the resolved snapshot it reads
+    * (schema, field ids, delete vectors, spec, sort order, column meta)
+    * and the files its pushed conjuncts kept ([[boxFiles]]).
     */
-  private[graft] final case class CatalogBatchPlan(
-      schema: StructType, curIds: Map[String, Int],
-      kept: Seq[FileEntry], totalFiles: Int,
-      eqOutstanding: Boolean,
-      dvByTarget: Map[String, Seq[String]],
-      spec: Seq[PartField] = Seq.empty,
-      // table-level (nullCount, ndvEstimate) per column, from the
-      // manifest's list meta — the scan's CBO column statistics. A
-      // THUNK (memoized at first use): only CBO columnStats and the
-      // ungrouped COUNT(col)/GROUP BY pushdowns consume it, and every
-      // other plan must not pay the O(#lists x #cols) sketch fold
-      colMeta: () => Map[String, (Long, Long)] = () => Map.empty,
-      // table-level typed (min, max) per column from the list bands —
-      // the CBO range feed; same thunk discipline as colMeta
-      colBounds: () => Map[String, (Any, Any)] = () => Map.empty,
-      // per-TARGET-FILE delete-vector kill counts (sum of each DV's
-      // recorded delRows for the file — disjoint by construction: a
-      // MoR delete computes positions from a MoR read, so an already-
-      // dead row never re-kills). What lets row counts, COUNT(col)
-      // pushdown, and CBO stats stay truthful while DVs are
-      // outstanding instead of refusing until compaction.
-      dvKills: Map[String, Long] = Map.empty,
-      // the table's declared write sort order — the scan's reported-
-      // ordering gate reads it together with each file's sortedBy stamp
-      sortOrder: Seq[SortField] = Seq.empty)
+  private[graft] final case class CatalogBatchPlan(snap: Resolved,
+      kept: Seq[FileEntry])
 
   /** Snapshot `id`'s parent id — header bytes only. The default
     * changelog window (`parent(current) -> current`) resolves through
@@ -2999,32 +2871,7 @@ object SnapshotLog {
   private[graft] def parentOf(spark: SparkSession, root: String,
       id: Long): Long = {
     require(id > 0, s"no snapshot $id under $root")
-    rawManifest(spark, root, id).parent
-  }
-
-  /** Whether the pinned snapshot carries outstanding EQUALITY deletes —
-    * the state the catalog's batch scan cannot serve per-file (header
-    * + refs read only, the cheap mode probe).
-    */
-  private[graft] def eqOutstandingPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)]): Boolean =
-    pinnedManifest(spark, root, asOf, branch).eqRefs.nonEmpty
-
-  private[graft] def catalogBatchPlanPin(spark: SparkSession, root: String,
-      asOf: Long, branch: Option[(String, Long)],
-      preds: Seq[(String, Option[String], Option[String])])
-      : CatalogBatchPlan = {
-    val raw = pinnedManifest(spark, root, asOf, branch)
-    val (kept, total, schema) = catalogPlanRaw(spark, root, raw, preds)
-    val curIds = currentIdsOf(raw, schema)._1
-    val dMap = deleteMapOf(fsOf(spark, root), root, raw)
-    val dv = dMap.map { case (t, es) => t -> es.map(_.dvDir).distinct }
-    val kills = dMap.map { case (t, es) => t -> es.map(_.delRows).sum }
-    lazy val colMeta = tableColMeta(raw, schema)
-    lazy val colBounds = tableBandBounds(raw, schema)
-    CatalogBatchPlan(schema, curIds, kept, total, raw.eqRefs.nonEmpty, dv,
-      raw.spec, () => colMeta, () => colBounds, kills,
-      sortOrder = raw.sortOrder)
+    resolve(spark, root, id).raw.parent
   }
 
   /** The single transform VALUE a file covers for one spec field, when
@@ -3040,36 +2887,41 @@ object SnapshotLog {
       f.stats.get(partStatName(PartField(field.transform, nm, field.n)))
     }.collect { case (mn, mx) if mn == mx => mn }
 
-  /** Per-entry box pruning over an ALREADY-PLANNED file set — the
-    * file-level half of [[boxFilesRaw]] (stat bands + transform
-    * bands), for runtime filters too wide to test value-by-value
-    * (a huge DPP key set degrades to its envelope).
+  /** Per-entry box pruning over a file set (stat bands + transform
+    * bands) — the file-level step of [[boxFiles]], and the runtime
+    * filter for key sets too wide to test value-by-value (a huge DPP
+    * key set degrades to its envelope). Per-file stats live under the
+    * file's PHYSICAL column names — resolved through its field ids, so
+    * pruning stays exact across renames.
     */
   private[graft] def pruneEntriesForBoxes(files: Seq[FileEntry],
       schema: StructType, curIds: Map[String, Int],
       preds: Seq[(String, Option[String], Option[String])]): Seq[FileEntry] = {
-    val resolved = preds.collect {
-      case (c, lo, hi) if schema.fieldNames.contains(c) &&
-        (lo.isDefined || hi.isDefined) => (c, schema(c).dataType, lo, hi)
-    }
-    if (resolved.isEmpty) return files
+    val boxes = boxesOf(schema, preds)
+    if (boxes.isEmpty) return files
     val memo = scala.collection.mutable.HashMap
       .empty[(String, Int, String), Option[String]]
-    files.filter { f =>
-      resolved.forall { case (c, dt, lo, hi) =>
-        physNameIn(f, c, curIds) match {
-          case None => true
-          case Some(nm) =>
-            (f.stats.get(nm) match {
-              case Some((mn, mx)) => rangeIntersects(dt, mn, mx, lo, hi)
-              case None => true
-            }) && f.stats.forall { case (k, (mn, mx)) =>
-              partStatKeepsCore(memo, k, nm, mn, mx, dt, lo, hi)
-            }
-        }
-      }
-    }
+    files.filter(f => boxKeeps(boxes, f.stats, physNameIn(f, _, curIds), memo))
   }
+
+  /** File `f`'s bloom filter on physical column `nm`, when `dt` is
+    * integral (blooms record `cast(long)` values, so only an integral
+    * column's point maps onto them exactly).
+    */
+  private def bloomOf(f: FileEntry, nm: String,
+      dt: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.util.sketch.BloomFilter] =
+    dt match {
+      case org.apache.spark.sql.types.ByteType |
+           org.apache.spark.sql.types.ShortType |
+           org.apache.spark.sql.types.IntegerType |
+           org.apache.spark.sql.types.LongType =>
+        f.blooms.get(nm).map(b64 =>
+          org.apache.spark.util.sketch.BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(
+              java.util.Base64.getDecoder.decode(b64))))
+      case _ => None
+    }
 
   /** Runtime-filter (DPP) file pruning: keep the files that could hold
     * ANY of `values` for EVERY listed column. Per candidate value the
@@ -3090,22 +2942,13 @@ object SnapshotLog {
     if (resolved.isEmpty) return files
     val memo = scala.collection.mutable.HashMap
       .empty[(String, Int, String), Option[String]]
-    val integral = Set[org.apache.spark.sql.types.DataType](
-      org.apache.spark.sql.types.ByteType,
-      org.apache.spark.sql.types.ShortType,
-      org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType)
     files.filter { f =>
       resolved.forall { case (c, dt, vs) =>
         physNameIn(f, c, curIds) match {
           case None => true
           case Some(nm) =>
             // decode the bloom once per (file, column), not per value
-            val bloom = if (!integral(dt)) None
-              else f.blooms.get(nm).map(b64 =>
-                org.apache.spark.util.sketch.BloomFilter.readFrom(
-                  new java.io.ByteArrayInputStream(
-                    java.util.Base64.getDecoder.decode(b64))))
+            val bloom = bloomOf(f, nm, dt)
             vs.exists { v =>
               val bandOk = f.stats.get(nm) match {
                 case Some((mn, mx)) =>
@@ -3176,7 +3019,7 @@ object SnapshotLog {
       // superseded), and the alternative is crashing every addBatch on
       // a table with expired history
       if (!fs.exists(manifestPath(root, id))) return None
-      val raw = rawManifest(spark, root, id)
+      val raw = resolve(spark, root, id).raw
       prefixes.find(raw.operation.startsWith) match {
         case Some(p) => return Some(raw.operation.stripPrefix(p).toLong)
         case None => id = raw.parent
@@ -3226,8 +3069,9 @@ object SnapshotLog {
     commit(spark, root, df, "append", keepBase = true, bloomSpec = Some(blooms))
 
   /** Point read with bloom + min/max file pruning: files whose recorded
-    * stats exclude `value` OR whose bloom filter rules it out are
-    * dropped at planning time, on the driver, from metadata alone. The
+    * stats or transform bands exclude `value`, OR whose bloom filter
+    * (integral columns) rules it out, are dropped at planning time, on
+    * the driver, from metadata alone ([[boxFiles]] with lo = hi). The
     * residual `column = value` filter still applies (blooms prune
     * files, not rows; false positives just mean an extra file is read),
     * so the result is correct whether or not any file was skipped. A
@@ -3235,53 +3079,11 @@ object SnapshotLog {
     */
   def readPoint(spark: SparkSession, root: String, column: String,
       value: Long, asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val (kept, schema) = pointFiles(spark, root, column, value, id)
-    val raw = rawManifest(spark, root, id)
-    val dt = schema(column).dataType
-    dvRead(spark, root, raw, kept, schema, currentIdsOf(raw, schema)._1)
-      .filter(col(column) === lit(value).cast(dt))
-  }
-
-  /** The file entries a [[readPoint]] would scan — exposed so tests can
-    * assert the PRUNING (files skipped), not just the answer.
-    */
-  private[graft] def pointFiles(spark: SparkSession, root: String,
-      column: String, value: Long, asOf: Long = 0L): (Seq[FileEntry], StructType) = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    require(schema.fieldNames.contains(column), s"no column $column in snapshot $id")
-    val dt = schema(column).dataType
+    val snap = resolve(spark, root, asOf)
+    requireColumns(snap, Seq(column))
     val v = value.toString
-    val curIds = currentIdsOf(raw, schema)._1
-    def bandKeeps(stats: Map[String, (String, String)]): Boolean =
-      stats.get(column) match {
-        case Some((mn, mx)) => rangeIntersects(dt, mn, mx, Some(v), Some(v))
-        case None => true
-      }
-    // list-level band prune first (blooms are per-file; a skipped list
-    // is never opened, so its blooms are never even read); file-level
-    // stats and blooms resolve through the file's physical name
-    val files = raw.inline ++ raw.refs.filter(r => bandKeeps(r.band))
-      .flatMap(r => readFileList(fs, root, r.path))
-    val kept = files.filter { f =>
-      val phys = physNameIn(f, column, curIds)
-      val rangeKeeps = phys.flatMap(f.stats.get) match {
-        case Some((mn, mx)) => rangeIntersects(dt, mn, mx, Some(v), Some(v))
-        case None => true
-      }
-      rangeKeeps && (phys.flatMap(f.blooms.get) match {
-        case Some(b64) =>
-          org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(
-              java.util.Base64.getDecoder.decode(b64)))
-            .mightContainLong(value)
-        case None => true
-      })
-    }
-    (kept, schema)
+    dvRead(spark, snap, boxFiles(snap, Seq((column, Some(v), Some(v)))))
+      .filter(col(column) === lit(value).cast(snap.schema(column).dataType))
   }
 
   /** Bucket-pruned read: only the rows of `column`'s hash buckets in
@@ -3295,28 +3097,21 @@ object SnapshotLog {
     */
   def readBuckets(spark: SparkSession, root: String, column: String,
       numBuckets: Int, buckets: Set[Long], asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val (kept, schema) = bucketFilesOf(spark, root, column, numBuckets, buckets, id)
-    val raw = rawManifest(spark, root, id)
+    val snap = resolve(spark, root, asOf)
+    val kept = bucketFilesOf(snap, column, numBuckets, buckets)
     val base =
       if (buckets.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      else dvRead(spark, root, raw, kept, schema, currentIdsOf(raw, schema)._1)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
+      else dvRead(spark, snap, kept)
     base.filter(bucketExpr(column, numBuckets).isin(buckets.toSeq: _*))
   }
 
   /** The file entries a [[readBuckets]] would scan — exposed so tests
     * can assert the pruning itself, not just the answer.
     */
-  private[graft] def bucketFilesOf(spark: SparkSession, root: String,
-      column: String, numBuckets: Int, buckets: Set[Long],
-      asOf: Long = 0L): (Seq[FileEntry], StructType) = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    require(schema.fieldNames.contains(column), s"no column $column in snapshot $id")
-    val curIds = currentIdsOf(raw, schema)._1
+  private[graft] def bucketFilesOf(snap: Resolved, column: String,
+      numBuckets: Int, buckets: Set[Long]): Seq[FileEntry] = {
+    requireColumns(snap, Seq(column))
     def bandIn(mm: (String, String)): Boolean =
       try {
         val (lo, hi) = (mm._1.toLong, mm._2.toLong)
@@ -3326,12 +3121,11 @@ object SnapshotLog {
       stats.get(bucketStatName(column, numBuckets)).forall(bandIn)
     // the file-level bucket stat embeds the file's PHYSICAL column name
     def fileKeeps(f: FileEntry): Boolean =
-      physNameIn(f, column, curIds)
+      physNameIn(f, column, snap.curIds)
         .flatMap(p => f.stats.get(bucketStatName(p, numBuckets)))
         .forall(bandIn)
-    val kept = (raw.inline ++ raw.refs.filter(r => bandKeeps(r.band))
-      .flatMap(r => readFileList(fs, root, r.path))).filter(fileKeeps)
-    (kept, schema)
+    (snap.raw.inline ++ snap.raw.refs.filter(r => bandKeeps(r.band))
+      .flatMap(snap.listed)).filter(fileKeeps)
   }
 
   /** The distinct bucket layouts `files` record for `column` (per-file
@@ -3368,14 +3162,9 @@ object SnapshotLog {
       column: String, asOf: Long = 0L): Seq[Int] = {
     val id = if (asOf > 0) asOf else currentId(spark, root)
     if (id == 0) return Seq.empty
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    if (!schema.fieldNames.contains(column)) return Seq.empty
-    val curIds = currentIdsOf(raw, schema)._1
-    layoutsIn(
-      raw.inline ++ raw.refs.flatMap(r => readFileList(fs, root, r.path)),
-      column, curIds)
+    val snap = resolve(spark, root, id)
+    if (!snap.schema.fieldNames.contains(column)) return Seq.empty
+    layoutsIn(snap.files, column, snap.curIds)
   }
 
   /** The files a [[readForKeys]] scan keeps, plus each layout's bucket
@@ -3387,20 +3176,13 @@ object SnapshotLog {
     * dropped without their files being considered, mirroring
     * [[bucketFilesOf]]'s list-level skip.
     */
-  private[graft] def keyFilesOf(spark: SparkSession, root: String,
-      column: String, keys: DataFrame,
-      asOf: Long = 0L): (Seq[FileEntry], StructType, Map[Int, Set[Long]]) = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, id)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    require(schema.fieldNames.contains(column), s"no column $column in snapshot $id")
+  private[graft] def keyFilesOf(snap: Resolved, column: String,
+      keys: DataFrame): (Seq[FileEntry], Map[Int, Set[Long]]) = {
+    requireColumns(snap, Seq(column))
     require(keys.columns.contains(column), s"key frame has no column $column")
-    val curIds = currentIdsOf(raw, schema)._1
-    val groups = raw.refs.map(r => r -> readFileList(fs, root, r.path))
-    val files = raw.inline ++ groups.flatMap(_._2)
-    val layouts = layoutsIn(files, column, curIds)
-    if (layouts.isEmpty) return (files, schema, Map.empty)
+    val curIds = snap.curIds
+    val layouts = layoutsIn(snap.files, column, curIds)
+    if (layouts.isEmpty) return (snap.files, Map.empty)
     // ONE bounded driver job: the key set's bucket ids under EVERY
     // recorded layout (≤ n values per layout — the same metadata class
     // as a CoW delete's hit-file set)
@@ -3431,9 +3213,9 @@ object SnapshotLog {
               bandIn(k.stripPrefix(s"__bucket:$p:").toInt, lo, hi)
           }
       }
-    val kept = (raw.inline ++ groups.filter(g => bandKeeps(g._1.band))
-      .flatMap(_._2)).filter(keeps)
-    (kept, schema, byLayout)
+    val kept = (snap.raw.inline ++ snap.raw.refs.filter(r => bandKeeps(r.band))
+      .flatMap(snap.listed)).filter(keeps)
+    (kept, byLayout)
   }
 
   /** Key-set pruned read across MIXED bucket layouts — the read side of
@@ -3451,10 +3233,9 @@ object SnapshotLog {
     */
   def readForKeys(spark: SparkSession, root: String, column: String,
       keys: DataFrame, asOf: Long = 0L): DataFrame = {
-    val id = if (asOf > 0) asOf else currentId(spark, root)
-    val (kept, schema, byLayout) = keyFilesOf(spark, root, column, keys, id)
-    val raw = rawManifest(spark, root, id)
-    val base = dvRead(spark, root, raw, kept, schema, currentIdsOf(raw, schema)._1)
+    val snap = resolve(spark, root, asOf)
+    val (kept, byLayout) = keyFilesOf(snap, column, keys)
+    val base = dvRead(spark, snap, kept)
     byLayout.toSeq.sortBy(_._1).foldLeft(base) { case (d, (n, set)) =>
       d.filter(bucketExpr(column, n).isin(set.toSeq: _*))
     }
@@ -3572,7 +3353,7 @@ object SnapshotLog {
       // re-key the staged lists' band stats through field ids: a
       // rename since staging moved the column to a new name (and may
       // have freed the OLD name for a fresh unrelated column), so a
-      // verbatim splice would let boxFiles/rangeFiles prune the staged
+      // verbatim splice would let boxFiles prune the staged
       // list against the WRONG column's bounds and silently drop live
       // rows. Keys without a staged id (derived layout stats, legacy)
       // carry unchanged — file-level resolution handles those.
@@ -4386,8 +4167,8 @@ object SnapshotLog {
       .filterNot(f => dirty(f.path))
     val tableSchema = StructType.fromDDL(raw.schemaDdl)
     val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
-    val rewritten = dvRead(spark, root, raw,
-      allFiles.filter(f => dirty(f.path)), tableSchema, tableIds)
+    val rewritten = dvApply(spark, root,
+      allFiles.filter(f => dirty(f.path)), tableSchema, tableIds, dv)
     commitFiles(spark, root, rewritten, "rewrite-deletes",
       intact.map(_._1), keepInline, tableSchema,
       derivedStats = inheritedBucketStats(allFiles, tableSchema, tableIds),
@@ -4446,7 +4227,7 @@ object SnapshotLog {
         }
         val scanFiles =
           if (preds.isEmpty) allFiles
-          else boxFilesRaw(spark, root, raw, preds)._1
+          else boxFiles(new Resolved(root, raw, None, fs), preds)
         val live = livePosRead(spark, root, raw, scanFiles, tableSchema, tableIds)
         Some(live.join(keys, keyCols, "left_semi")
           .select(col("__path").as("t_path"), col("__pos").as("t_pos")))
@@ -4592,68 +4373,28 @@ object SnapshotLog {
     throw new IllegalStateException("unreachable")
   }
 
-  /** The LIVE current-head rows with their (file, position)
-    * coordinates, plus the head id — the discovery view a SQL
-    * row-level command (MERGE / UPDATE) joins its source against.
-    * Columns: the table's, then `__path`/`__pos`. An empty table
-    * yields an empty frame under the table schema.
+  /** The LIVE rows of a resolved snapshot (a main snapshot or a
+    * branch head) with their (file, position) coordinates — the
+    * discovery view a SQL row-level command (MERGE / UPDATE / DELETE)
+    * joins its source against; its delete vectors and equality deletes
+    * applied. Columns: the table's, then `__path`/`__pos`. An empty
+    * table yields an empty frame under the table schema.
     */
-  private[graft] def readPosForDml(spark: SparkSession, root: String,
-      asOf: Long = 0L,
+  private[graft] def readPosForDml(spark: SparkSession, snap: Resolved,
       preds: Seq[(String, Option[String], Option[String])] = Seq.empty)
-      : (Long, DataFrame, StructType) = {
-    val base = if (asOf > 0) asOf else currentId(spark, root)
-    require(base > 0, s"no snapshots under $root")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
+      : DataFrame = {
     // discovery pruning: conjuncts the CALLER proved conservative (a
     // row-level command's matched rows all fall inside them) skip
     // whole files from the stat bands — files without usable stats are
     // kept, so pruning can only ever shrink the scan, never the answer
-    val usable = preds.filter(p => schema.fieldNames.contains(p._1))
-    val files =
-      if (usable.nonEmpty) boxFilesRaw(spark, root, raw, usable)._1
-      else raw.inline ++
-        raw.refs.flatMap(r => readFileList(fsOf(spark, root), root, r.path))
-    val ids = currentIdsOf(raw, schema)._1
-    val df =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.add("__path", org.apache.spark.sql.types.StringType)
-            .add("__pos", org.apache.spark.sql.types.LongType))
-      else livePosRead(spark, root, raw, files, schema, ids)
-    (base, df, schema)
-  }
-
-  /** [[readPosForDml]] against a BRANCH head — the discovery view a
-    * row-level command under write-audit-publish joins its source
-    * against: the branch's live rows (its own delete vectors and
-    * carried equality deletes applied) with (file, position)
-    * coordinates, plus the branch's commit count `k` (the CAS the
-    * branch MoR commit fires at). Discovery pruning from the branch
-    * manifest's stat bands, same as main.
-    */
-  private[graft] def readPosForDmlBranch(spark: SparkSession, root: String,
-      name: String,
-      preds: Seq[(String, Option[String], Option[String])] = Seq.empty)
-      : (Long, DataFrame, StructType) = {
-    val (raw, _, k) = branchRaw(spark, root, name)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val usable = preds.filter(p => schema.fieldNames.contains(p._1))
-    val files =
-      if (usable.nonEmpty) boxFilesRaw(spark, root, raw, usable)._1
-      else raw.inline ++
-        raw.refs.flatMap(r => readFileList(fsOf(spark, root), root, r.path))
-    val ids = currentIdsOf(raw, schema)._1
-    val df =
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          schema.add("__path", org.apache.spark.sql.types.StringType)
-            .add("__pos", org.apache.spark.sql.types.LongType))
-      else livePosRead(spark, root, raw, files, schema, ids)
-    (k, df, schema)
+    val files = boxFiles(snap, preds)
+    if (files.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        snap.schema.add("__path", org.apache.spark.sql.types.StringType)
+          .add("__pos", org.apache.spark.sql.types.LongType))
+    else livePosRead(spark, snap.root, snap.raw, files, snap.schema,
+      snap.curIds)
   }
 
   /** The merge-on-read commit against a BRANCH head — [[morCommit]]'s
@@ -4670,7 +4411,9 @@ object SnapshotLog {
       name: String, baseK: Long, dead: Option[DataFrame], adds: DataFrame,
       operation: String): Long = {
     val fs = fsOf(spark, root)
-    val (raw, fork, k) = branchRaw(spark, root, name)
+    val fork = tagId(spark, root, branchRefName(name))
+    val k = branchPin(spark, root, name)
+    val raw = resolve(spark, root, branch = Some((name, k))).raw
     require(k == baseK,
       s"branch $name of $root advanced since discovery ($baseK -> $k); " +
         "recompute against the branch head and retry")
@@ -4750,7 +4493,7 @@ object SnapshotLog {
   def hasOutstandingDeletes(spark: SparkSession, root: String): Boolean = {
     val id = currentId(spark, root)
     if (id == 0L) return false
-    val raw = rawManifest(spark, root, id)
+    val raw = resolve(spark, root, id).raw
     raw.dRefs.nonEmpty || raw.eqRefs.nonEmpty
   }
 
@@ -5888,13 +5631,12 @@ object SnapshotLog {
   def changes(spark: SparkSession, root: String, fromId: Long, toId: Long): DataFrame = {
     require(fromId < toId, s"changes requires fromId < toId, got $fromId >= $toId")
     require(fromId >= 0, s"changes fromId must be >= 0, got $fromId")
-    val to = snapshot(spark, root, toId)
+    val to = resolve(spark, root, toId)
     // fromId = 0 is the virtual empty table before the first commit, so
     // changes(0, x) is snapshot x's full content as inserts
-    val from =
-      if (fromId == 0) Snapshot(0L, 0L, "empty", 0L, to.schemaDdl, Seq.empty)
-      else snapshot(spark, root, fromId)
-    val fromPaths = from.files.map(_.path).toSet
+    val from = if (fromId == 0) None else Some(resolve(spark, root, fromId))
+    val fromFiles = from.map(_.files).getOrElse(Seq.empty)
+    val fromPaths = fromFiles.map(_.path).toSet
     val toPaths = to.files.map(_.path).toSet
     // both sides read under the TO snapshot's schema: by-name parquet
     // resolution makes the diff robust to physical column order, and
@@ -5903,8 +5645,8 @@ object SnapshotLog {
     // both sides render it identically). A RETYPED column (possible via
     // overwrite, which replaces the schema wholesale) has no sound diff
     // — fail with the contract, not a parquet conversion error.
-    val schema = StructType.fromDDL(to.schemaDdl)
-    StructType.fromDDL(from.schemaDdl).fields.foreach { f =>
+    val schema = to.schema
+    from.fold(schema)(_.schema).fields.foreach { f =>
       schema.fields.find(_.name == f.name).foreach(tf =>
         // a lossless WIDENING is diffable (both sides read upcast to
         // the wide type, so carried rows still cancel); an arbitrary
@@ -5916,26 +5658,22 @@ object SnapshotLog {
     }
     // both sides resolve by field id under the TO snapshot's mapping,
     // so a diff spanning a rename compares the same logical columns
-    val rawTo = rawManifest(spark, root, toId)
-    val toIds = currentIdsOf(rawTo, schema)._1
-    val fs = fsOf(spark, root)
+    val toIds = to.curIds
     // each side's file diff reads under ITS OWN delete vectors AND
     // equality key sets: a dead row must not surface as a change when
     // its file is rewritten (rewriteDeletes'/optimize's carried
     // survivors then cancel under the multiset diff exactly like a CoW
     // rewrite's)
-    val rawFrom =
-      if (fromId == 0) None else Some(rawManifest(spark, root, fromId))
-    val fromDv = rawFrom.map(deleteMapOf(fs, root, _))
+    val fromDv = from.map(_.deletes)
       .getOrElse(Map.empty[String, Seq[DeleteEntry]])
-    val toDv = deleteMapOf(fs, root, rawTo)
-    val eqFrom = rawFrom.map(_.eqRefs).getOrElse(Seq.empty)
-    val eqTo = rawTo.eqRefs
+    val toDv = to.deletes
+    val eqFrom = from.map(_.raw.eqRefs).getOrElse(Seq.empty)
+    val eqTo = to.raw.eqRefs
     def readFiles(files: Seq[FileEntry], dv: Map[String, Seq[DeleteEntry]],
         eqs: Seq[EqRef]): DataFrame =
       morApply(spark, root, files.sortBy(_.path), schema, toIds, dv, eqs)
     val addedFiles = to.files.filter(f => !fromPaths(f.path))
-    val removedFiles = from.files.filter(f => !toPaths(f.path))
+    val removedFiles = fromFiles.filter(f => !toPaths(f.path))
     val added = readFiles(addedFiles, toDv, eqTo)
     val removed = readFiles(removedFiles, fromDv, eqFrom)
     // One-sided file diffs skip the exceptAll pair outright:
@@ -6098,7 +5836,7 @@ object SnapshotLog {
     * to drain it ([[graft.sources.SnapshotChangeSource]]).
     */
   def operationOf(spark: SparkSession, root: String, id: Long): String =
-    rawManifest(spark, root, id).operation
+    resolve(spark, root, id).raw.operation
 
   /** The rows snapshot `id` ADDED, read from its file diff against its
     * parent — zero shuffles, no exceptAll: for an append-class commit
@@ -6116,8 +5854,8 @@ object SnapshotLog {
     */
   def appendedRows(spark: SparkSession, root: String, id: Long,
       schemaAt: Long = 0L): DataFrame = {
-    val raw = rawManifest(spark, root, id)
-    val fs = fsOf(spark, root)
+    val snap = resolve(spark, root, id)
+    val raw = snap.raw
     // REF-level diff, not an inventory diff: an append carries the
     // parent's file lists by reference and adds exactly one new list,
     // so comparing list PATHS (header bytes on both sides) finds the
@@ -6127,19 +5865,16 @@ object SnapshotLog {
     // inline filter covers legacy flat-manifest migration (the one
     // append shape whose new list also carries inherited entries).
     val praw =
-      if (raw.parent == 0L) None else Some(rawManifest(spark, root, raw.parent))
+      if (raw.parent == 0L) None else Some(resolve(spark, root, raw.parent).raw)
     val parentRefs = praw.map(_.refs.map(_.path).toSet).getOrElse(Set.empty)
     val parentInline = praw.map(_.inline.map(_.path).toSet).getOrElse(Set.empty)
     val files = (raw.inline ++
-      raw.refs.filterNot(r => parentRefs(r.path))
-        .flatMap(r => readFileList(fs, root, r.path)))
+      raw.refs.filterNot(r => parentRefs(r.path)).flatMap(snap.listed))
       .filterNot(f => parentInline(f.path))
-    val sRaw =
-      if (schemaAt > 0L && schemaAt != id) rawManifest(spark, root, schemaAt)
-      else raw
-    val schema = StructType.fromDDL(sRaw.schemaDdl)
-    resolvedRead(spark, root, files.sortBy(_.path), schema,
-      currentIdsOf(sRaw, schema)._1)
+    val at =
+      if (schemaAt > 0L && schemaAt != id) resolve(spark, root, schemaAt)
+      else snap
+    resolvedRead(spark, root, files.sortBy(_.path), at.schema, at.curIds)
   }
 
   def changelog(spark: SparkSession, root: String, fromId: Long = 0L,
@@ -6529,20 +6264,6 @@ object SnapshotLog {
       .foldLeft(0L)(math.max)
   }
 
-  /** The branch head's manifest (the fork's when no branch commit has
-    * landed yet), plus the fork id and commit count.
-    */
-  private def branchRaw(spark: SparkSession, root: String,
-      name: String): (RawManifest, Long, Long) = {
-    val fs = fsOf(spark, root)
-    val fork = tagId(spark, root, branchRefName(name))
-    val k = branchHeadK(fs, root, name)
-    val raw =
-      if (k == 0) rawManifest(spark, root, fork)
-      else parseManifest(readTextFile(fs, branchManifestPath(root, name, k)))
-    (raw, fork, k)
-  }
-
   /** Serialize a parsed manifest back to its wire text — the
     * fast-forward publisher's tool; ManifestRoundtripSpec pins
     * parse∘serialize identity on every line type.
@@ -6600,7 +6321,9 @@ object SnapshotLog {
   def appendToBranch(spark: SparkSession, root: String, name: String,
       df: DataFrame): Long = {
     val fs = fsOf(spark, root)
-    val (base, fork, k) = branchRaw(spark, root, name)
+    val fork = tagId(spark, root, branchRefName(name))
+    val k = branchPin(spark, root, name)
+    val base = resolve(spark, root, branch = Some((name, k))).raw
     val ps = StructType.fromDDL(base.schemaDdl)
     val (pIds, pLast) = currentIdsOf(base, ps)
     val merged = mergeSchemas(ps, df.schema)
@@ -6657,11 +6380,9 @@ object SnapshotLog {
     * deletes applied exactly as a main read would.
     */
   def readBranch(spark: SparkSession, root: String, name: String): DataFrame = {
-    val fs = fsOf(spark, root)
-    val (raw, _, _) = branchRaw(spark, root, name)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val files = raw.inline ++ raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    dvRead(spark, root, raw, files, schema, currentIdsOf(raw, schema)._1)
+    val snap = resolve(spark, root,
+      branch = Some((name, branchPin(spark, root, name))))
+    dvRead(spark, snap, snap.files)
   }
 
   /** Publish the branch onto main — allowed only while main's head IS
@@ -6675,7 +6396,9 @@ object SnapshotLog {
     */
   def fastForward(spark: SparkSession, root: String, name: String): Long = {
     val fs = fsOf(spark, root)
-    val (head, fork, k) = branchRaw(spark, root, name)
+    val fork = tagId(spark, root, branchRefName(name))
+    val k = branchPin(spark, root, name)
+    val head = resolve(spark, root, branch = Some((name, k))).raw
     if (k == 0) { dropBranch(spark, root, name); return fork }
     val cur = currentId(spark, root)
     require(cur == fork,

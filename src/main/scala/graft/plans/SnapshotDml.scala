@@ -211,8 +211,13 @@ private[plans] object SnapshotDml {
     case Some(b) =>
       if (!SnapshotLog.branchExists(spark, root, b))
         SnapshotLog.createBranch(spark, root, b)
-      SnapshotLog.readPosForDmlBranch(spark, root, b, preds)
-    case None => SnapshotLog.readPosForDml(spark, root, preds = preds)
+      // the branch commit count k is the CAS the branch MoR commit fires at
+      val k = SnapshotLog.branchPin(spark, root, b)
+      val snap = SnapshotLog.resolve(spark, root, branch = Some((b, k)))
+      (k, SnapshotLog.readPosForDml(spark, snap, preds), snap.schema)
+    case None =>
+      val snap = SnapshotLog.resolve(spark, root)
+      (snap.id, SnapshotLog.readPosForDml(spark, snap, preds), snap.schema)
   }
 
   /** The matching commit door: main MoR commit (validate-and-retry) or
@@ -556,8 +561,7 @@ private[plans] object SnapshotDml {
         case _ => false
       }
       val pruning = literalBoxes(cond, tgtSet)
-      val (base, tgt, schema) =
-        SnapshotLog.readPosForDml(spark, root, preds = pruning)
+      val (base, tgt, schema) = discover(spark, root, None, pruning)
       val tgtBy = outputsByName(tgt)
       val remap = binder(Seq(table -> tgtBy))
       val dead = tgt.filter(coalesce(remap(cond), lit(false)))

@@ -17,12 +17,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 import graft.operators.SnapshotLog
 
 /** What a spec (and `description()`) reads off a planned catalog scan,
-  * V1 or V2: the pinned snapshot and the file-pruning outcome.
+  * V1 or V2: the table and the file-pruning outcome.
   */
 trait SnapshotScanLike {
   def root: String
-  def asOf: Long
-  def branch: Option[(String, Long)]
   def keptFiles: Seq[SnapshotLog.FileEntry]
   def totalFiles: Int
   def readSchema(): StructType
@@ -54,9 +52,7 @@ trait SnapshotScanLike {
   * projects to the current schema (absent columns surface NULL),
   * exactly [[SnapshotLog]]'s resolvedRead semantics per partition.
   */
-class SnapshotBatchScan(val root: String, val asOf: Long,
-    val branch: Option[(String, Long)],
-    required: StructType,
+class SnapshotBatchScan(required: StructType,
     plan0: SnapshotLog.CatalogBatchPlan,
     reportPushed: Seq[sources.Filter])
     extends Scan with Batch
@@ -66,8 +62,10 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     with SnapshotScanLike {
 
   private val spark = SparkSession.active
-  val totalFiles: Int = plan0.totalFiles
-  val tableSchema: StructType = plan0.schema
+  private val snap = plan0.snap
+  val root: String = snap.root
+  val totalFiles: Int = snap.totalFiles
+  val tableSchema: StructType = snap.schema
 
   @volatile private var kept: Seq[SnapshotLog.FileEntry] = plan0.kept
   @volatile private var runtimeDropped: Int = 0
@@ -78,8 +76,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
   override def toBatch: Batch = this
 
   override def description(): String =
-    s"SnapshotBatchScan root=$root asOf=$asOf" +
-      branch.map { case (b, k) => s" branch=$b@$k" }.getOrElse("") +
+    s"SnapshotBatchScan root=$root ${snap.pinLabel}" +
       s" files=${kept.size}/$totalFiles" +
       (if (runtimeDropped > 0) s" runtimeDropped=$runtimeDropped" else "") +
       s" pushed=${reportPushed.mkString("[", ", ", "]")}"
@@ -89,7 +86,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     // DV kill count — exact, so a MoR-heavy table's CBO sees the true
     // cardinality instead of dead-row-inflated counts
     private val rows =
-      kept.map(f => f.rows - plan0.dvKills.getOrElse(f.path, 0L)).sum
+      kept.map(f => f.rows - snap.dvKills.getOrElse(f.path, 0L)).sum
     override def sizeInBytes(): util.OptionalLong =
       util.OptionalLong.of(math.max(1L, rows) *
         math.max(1, required.map(_.dataType.defaultSize).sum))
@@ -116,23 +113,23 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
       // has its own stricter gate.
       val pruned = kept.size != totalFiles
       val hasKills =
-        kept.exists(f => plan0.dvKills.getOrElse(f.path, 0L) > 0L)
+        kept.exists(f => snap.dvKills.getOrElse(f.path, 0L) > 0L)
       val (metaMap, boundsMap): (Map[String, (Long, Long)],
           Map[String, (Any, Any)]) =
-        if (!pruned && !hasKills) (plan0.colMeta(), plan0.colBounds())
-        else (SnapshotLog.subsetColMeta(kept, tableSchema, plan0.curIds,
-          plan0.dvKills),
+        if (!pruned && !hasKills) (snap.colMeta, snap.colBounds)
+        else (SnapshotLog.subsetColMeta(kept, tableSchema, snap.curIds,
+          snap.dvKills),
           // bounds may include dead extremes — a (slightly) widened
           // band, safe for range-selectivity estimation
-          SnapshotLog.subsetColBounds(kept, tableSchema, plan0.curIds))
+          SnapshotLog.subsetColBounds(kept, tableSchema, snap.curIds))
       // equi-height histogram boundaries fold from the kept files'
       // per-file quantiles (pruned or not — one code path): the
       // range-selectivity feed that corrects CBO where min/max-uniform
       // misleads on a skewed column. DV kills shrink each file's
       // weight to its live non-null estimate.
       val histMap: Map[String, (Long, Vector[Double])] =
-        SnapshotLog.subsetColHist(kept, tableSchema, plan0.curIds,
-          plan0.dvKills)
+        SnapshotLog.subsetColHist(kept, tableSchema, snap.curIds,
+          snap.dvKills)
       required.fieldNames.foreach { c =>
         metaMap.get(c).foreach { case (nulls, ndv) =>
           // typed min/max beside ndv/nulls — the range-selectivity
@@ -216,10 +213,10 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
       conf.getOption("spark.graft.catalog.preserveGrouping")
         .exists(_.toBoolean)
     if (!on || plan0.kept.isEmpty) None
-    else plan0.spec.find(f =>
+    else snap.spec.find(f =>
       required.fieldNames.contains(f.column) &&
       plan0.kept.forall(file =>
-        SnapshotLog.fileTransformPoint(file, f, plan0.curIds).isDefined))
+        SnapshotLog.fileTransformPoint(file, f, snap.curIds).isDefined))
   }
 
   /** The reported V2 transform for the SPJ field — by the NAME the
@@ -286,7 +283,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
   // stays sorted and disjoint. ----
 
   private lazy val orderedLayout: Option[Seq[SnapshotLog.SortField]] = {
-    val so = plan0.sortOrder
+    val so = snap.sortOrder
     val on = SparkSession.active.conf
       .getOption("spark.graft.catalog.reportOrdering").forall(_.toBoolean)
     if (!on || so.isEmpty || plan0.kept.isEmpty) None
@@ -331,7 +328,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
       def fits = spjField match {
         case Some(field) =>
           bearing.groupBy(f => SnapshotLog.fileTransformPoint(
-            f, field, plan0.curIds).get).values.forall(chainOk)
+            f, field, snap.curIds).get).values.forall(chainOk)
         case None => chainOk(bearing)
       }
       try {
@@ -382,7 +379,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     */
   private def keyOf(f: SnapshotLog.FileEntry): InternalRow =
     spjField.map { field =>
-      val v = SnapshotLog.fileTransformPoint(f, field, plan0.curIds)
+      val v = SnapshotLog.fileTransformPoint(f, field, snap.curIds)
         .getOrElse(throw new IllegalStateException(
           s"SPJ-keyed scan lost the point band of ${f.path}"))
       new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
@@ -410,18 +407,18 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
           .flatMap(SnapshotCatalog.render)
         if (rendered.nonEmpty && rendered.size <= SetPruneCap)
           kept = SnapshotLog.pruneEntriesForSets(
-            kept, tableSchema, plan0.curIds, Seq(c -> rendered))
+            kept, tableSchema, snap.curIds, Seq(c -> rendered))
         else if (rendered.nonEmpty)
           kept = SnapshotLog.pruneEntriesForBoxes(
-            kept, tableSchema, plan0.curIds,
+            kept, tableSchema, snap.curIds,
             SnapshotCatalog.boxOf(sources.In(c, vs)))
       case f @ sources.EqualTo(c, v) =>
         SnapshotCatalog.render(v).foreach(r =>
           kept = SnapshotLog.pruneEntriesForSets(
-            kept, tableSchema, plan0.curIds, Seq(c -> Seq(r))))
+            kept, tableSchema, snap.curIds, Seq(c -> Seq(r))))
       case other =>
         kept = SnapshotLog.pruneEntriesForBoxes(
-          kept, tableSchema, plan0.curIds, SnapshotCatalog.boxOf(other))
+          kept, tableSchema, snap.curIds, SnapshotCatalog.boxOf(other))
     }
     runtimeDropped += before - kept.size
   }
@@ -437,7 +434,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
   private def projectionOf(f: SnapshotLog.FileEntry)
       : Seq[Option[org.apache.spark.sql.types.StructField]] =
     required.fields.toSeq.map(c =>
-      SnapshotLog.physFieldIn(f, c, plan0.curIds))
+      SnapshotLog.physFieldIn(f, c, snap.curIds))
 
   private def isIdentity(
       proj: Seq[Option[org.apache.spark.sql.types.StructField]]): Boolean =
@@ -456,7 +453,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     */
   private lazy val columnarMode: Boolean = {
     val files = kept
-    !files.exists(f => plan0.dvByTarget.contains(f.path)) &&
+    !files.exists(f => snap.dvByTarget.contains(f.path)) &&
       files.groupBy(projectionOf).keys.forall(isIdentity) &&
       ParquetReadBridge.supportBatch(spark, required)
   }
@@ -495,7 +492,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
         val readIdx = present.map(_._2).zipWithIndex.toMap // requiredIdx -> readIdx
         required.fields.indices.map(i => readIdx.getOrElse(i, -1)).toArray
       }
-      val dirty = gFiles.exists(f => plan0.dvByTarget.contains(f.path))
+      val dirty = gFiles.exists(f => snap.dvByTarget.contains(f.path))
       // pushed filters reach the parquet reader (row-group/page skip)
       // only when the group reads under CURRENT names — renamed files
       // skip pushdown, the residual Filter above re-applies exactly.
@@ -531,7 +528,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     val groupIdx = groups.zipWithIndex
       .flatMap { case ((_, gf), gi) => gf.map(f => f.path -> gi) }.toMap
     def sliceOf(f: SnapshotLog.FileEntry): SnapshotFileSlice = {
-      val dvDirs = plan0.dvByTarget.getOrElse(f.path, Seq.empty)
+      val dvDirs = snap.dvByTarget.getOrElse(f.path, Seq.empty)
       SnapshotFileSlice(
         groupIdx(f.path),
         s"$root/${f.path}", relPath = f.path, bytes = f.bytes,
@@ -558,7 +555,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     val maxBytes = sqlConf.filesMaxPartitionBytes
     val openCost = sqlConf.filesOpenCostInBytes
     val rowWidth = math.max(1,
-      plan0.schema.map(_.dataType.defaultSize).sum)
+      snap.schema.map(_.dataType.defaultSize).sum)
     def costOf(f: SnapshotLog.FileEntry): Long =
       (if (f.bytes > 0) f.bytes else f.rows * rowWidth) + openCost
     // under a reported ordering, tasks must concatenate files in
@@ -594,7 +591,7 @@ class SnapshotBatchScan(val root: String, val asOf: Long,
     val parts: Array[InputPartition] = (spjField match {
       case Some(field) =>
         files.groupBy(f => SnapshotLog.fileTransformPoint(
-          f, field, plan0.curIds).get)
+          f, field, snap.curIds).get)
           .toSeq.sortBy(_._1)
           .flatMap { case (_, kf) => pack(kf, keyOf(kf.head)) }
       case None => pack(files, null)

@@ -39,12 +39,13 @@ import graft.operators.SnapshotLog
   * need no warehouse root and keep the catalog instance stateless, so
   * one registered name serves every log on the filesystem.
   *
-  * The read path is the LIBRARY read path: `loadTable` resolves the
-  * manifest (version / timestamp pinned for time travel), the scan
-  * builder receives Spark's pushed conjuncts and turns them into
-  * manifest stat-band + bloom file pruning via `SnapshotLog
-  * .catalogPlan`, and the physical scan is a [[V1Scan]] whose relation
-  * produces rows from `SnapshotLog.readFileSubset` — the same
+  * The read path is the LIBRARY read path: a loaded table resolves
+  * its manifest once (`SnapshotLog.resolve`; version / timestamp
+  * pinned for time travel), the scan builder receives Spark's pushed
+  * conjuncts and turns them into manifest stat-band + transform-band +
+  * bloom file pruning via `SnapshotLog.boxFiles`, and the scan — the
+  * per-file [[SnapshotBatchScan]], or the [[V1Scan]] fallback whose
+  * relation produces rows from `SnapshotLog.dvRead` — applies the same
   * field-id schema resolution, delete-vector anti-joins, and equality
   * -delete application every library read gets, so SQL and API results
   * can never diverge. Filters fully translated to Catalyst columns are
@@ -447,10 +448,14 @@ object SnapshotCatalog {
       root: String): Boolean = {
     val fanout = spark.conf.getOption("spark.graft.write.fanout")
       .exists(_.toBoolean)
-    !fanout && wapBranch(spark).isEmpty && !SqlTxn.isActive(spark) &&
-      SnapshotLog.currentId(spark, root) > 0L &&
-      (SnapshotLog.specOfPin(spark, root, 0L, None).nonEmpty ||
-        SnapshotLog.sortOrderOf(spark, root).nonEmpty)
+    !fanout && wapBranch(spark).isEmpty && !SqlTxn.isActive(spark) && {
+      // writes target the CURRENT head — resolved here, once
+      val head = SnapshotLog.currentId(spark, root)
+      head > 0L && {
+        val snap = SnapshotLog.resolve(spark, root, head)
+        snap.spec.nonEmpty || snap.sortOrder.nonEmpty
+      }
+    }
   }
 
   /** A declared partition field as the V2 transform THE CATALOG'S OWN
@@ -867,10 +872,15 @@ class SnapshotBatch extends org.apache.spark.sql.connector.catalog.TableProvider
 }
 
 /** One snapshot-log table pinned (optionally) to a time-travel
-  * snapshot or a branch head. Schema comes from the pinned manifest,
-  * so `VERSION AS OF` reads resolve against the schema IN EFFECT then
-  * — a later rename never leaks backwards into an old read, and a
-  * branch read sees the branch's own evolution.
+  * snapshot or a branch head. The pin resolves ONCE, lazily ([[snap]]):
+  * schema, partitioning and properties all describe that one snapshot
+  * — a commit landing between those calls can never hand Spark a
+  * table whose schema and layout disagree — so `VERSION AS OF` reads
+  * resolve against the schema IN EFFECT then (a later rename never
+  * leaks backwards into an old read) and a branch read sees the
+  * branch's own evolution. Writes and new scans of a current-head
+  * table still target the head (see [[capabilities]] and
+  * [[newScanBuilder]]).
   */
 private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
     val branch: Option[(String, Long)] = None,
@@ -910,8 +920,10 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
     case None => s"snapshot-log `$root`"
   }
 
-  override lazy val schema: StructType =
-    SnapshotLog.schemaOfPin(SparkSession.active, root, asOf, branch)
+  private lazy val snap: SnapshotLog.Resolved =
+    SnapshotLog.resolve(SparkSession.active, root, asOf, branch)
+
+  override lazy val schema: StructType = snap.schema
 
   // MICRO_BATCH_READ admits `readStream.table(...)` through analysis;
   // graft.plans.SnapshotStreamTableRule then substitutes the V1
@@ -952,7 +964,7 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
     * introspection see `days(ts)` etc. exactly as on Iceberg tables).
     */
   override def partitioning(): Array[Transform] =
-    SnapshotLog.specOfPin(SparkSession.active, root, asOf, branch).map { f =>
+    snap.spec.map { f =>
       import org.apache.spark.sql.connector.expressions.Expressions
       f.transform match {
         case "bucket" => Expressions.bucket(f.n, f.column)
@@ -965,15 +977,27 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
     }.toArray
 
   override def properties(): util.Map[String, String] = {
-    val so = SnapshotLog.sortOrderOfPin(SparkSession.active, root, asOf, branch)
+    val so = snap.sortOrder
     (Map("provider" -> "snapshot-log", "location" -> root) ++
       (if (so.isEmpty) Map.empty[String, String]
        else Map(SnapshotCatalog.SortOrderKey ->
          SnapshotCatalog.renderSortOrderProp(so)))).asJava
   }
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SnapshotScanBuilder(root, asOf, branch, schema)
+  /** A current-head table plans each new scan against the head as of
+    * builder creation (reusing [[snap]] while it still IS the head); a
+    * time-travel or branch table scans its pinned snapshot.
+    */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val scanSnap =
+      if (asOf > 0L || branch.isDefined) snap
+      else {
+        val head = SnapshotLog.currentId(SparkSession.active, root)
+        if (head == snap.id) snap
+        else SnapshotLog.resolve(SparkSession.active, root, head)
+      }
+    new SnapshotScanBuilder(scanSnap, schema)
+  }
 
   /** `DELETE FROM t WHERE …` — accepted only when EVERY conjunct
     * translates exactly (canDeleteWhere; Spark falls back to an
@@ -1363,10 +1387,15 @@ private[sources] class SnapshotWriterFactory(root: String, dataDir: String,
   * pushed conjuncts drive manifest file pruning (all of them — even a
   * residual-only filter's box can skip files) and, where fully
   * translatable, become exact predicates evaluated inside the produced
-  * plan.
+  * plan. `snap` is the snapshot the scan reads — the table's own for a
+  * time-travel or branch read, the head at builder creation for a
+  * current-head read — so the file plan and the execution-time MoR
+  * resolution (schema, delete vectors, equality deletes) come from the
+  * SAME snapshot: a commit landing between plan and execute can never
+  * produce a mixed-snapshot read.
   */
-private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
-    branch: Option[(String, Long)], tableSchema: StructType)
+private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
+    tableSchema: StructType)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
@@ -1380,8 +1409,8 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
   private var aggScan: Option[SnapshotAggScan] = None
   private var limit: Option[Int] = None
 
-  /** ONE manifest resolution shared by pushFilters' claim decision,
-    * the aggregate pushdown, and build() — keyed by the pruning boxes
+  /** ONE file plan shared by pushFilters' claim decision, the
+    * aggregate pushdown, and build() — keyed by the pruning boxes
     * (identical within one builder lifecycle after pushFilters ran).
     */
   private var planCache
@@ -1391,8 +1420,7 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
   private def resolvePlan(): SnapshotLog.CatalogBatchPlan = {
     val c = planCache
     if (c != null && c._1 == boxes) return c._2
-    val p = SnapshotLog.catalogBatchPlanPin(
-      SparkSession.active, root, pinnedAsOf, branch, boxes)
+    val p = SnapshotLog.CatalogBatchPlan(snap, SnapshotLog.boxFiles(snap, boxes))
     planCache = (boxes, p)
     p
   }
@@ -1405,7 +1433,7 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
       : Seq[SnapshotLog.FileEntry] =
     if (claimed.isEmpty) plan.kept
     else plan.kept.filter(f => claimed.forall(c =>
-      SnapshotCatalog.fileFilterState(f, plan.schema, plan.curIds, c)
+      SnapshotCatalog.fileFilterState(f, snap.schema, snap.curIds, c)
         .contains(true)))
 
   // ---- limit pushdown into FILE PLANNING: a bare `LIMIT n` needs
@@ -1438,17 +1466,6 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
     }
     b.result()
   }
-
-  /** The snapshot this scan reads, resolved ONCE at build time: an
-    * asOf=0 (current-head) read pins the head HERE, so the file plan
-    * and the execution-time MoR resolution (schema, delete vectors,
-    * equality deletes) come from the SAME snapshot — a commit landing
-    * between plan and execute can no longer produce a mixed-snapshot
-    * read (old head's file list under the new head's deletes).
-    */
-  private lazy val pinnedAsOf: Long =
-    if (branch.isDefined || asOf > 0) asOf
-    else SnapshotLog.currentId(SparkSession.active, root)
 
   /** V2 per-file batch scan by default ([[SnapshotBatchScan]] — the
     * runtime-filterable planning shape); the V1 join read remains for
@@ -1487,9 +1504,9 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
     if (exact.isEmpty) return filters
     val plan = resolvePlan()
     claimed =
-      if (plan.eqOutstanding) Seq.empty
+      if (snap.eqOutstanding) Seq.empty
       else exact.filter(f => plan.kept.forall(file =>
-        SnapshotCatalog.fileFilterState(file, plan.schema, plan.curIds, f)
+        SnapshotCatalog.fileFilterState(file, snap.schema, snap.curIds, f)
           .isDefined))
     filters.filterNot(claimed.contains)
   }
@@ -1566,11 +1583,11 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
     // count is manifest-recorded, so COUNT stays exact under MoR
     // (per-file rules below); MIN/MAX refuse per killed file (the
     // extremum may be dead).
-    if (plan0.eqOutstanding) return None
+    if (snap.eqOutstanding) return None
     val plan = if (claimed.isEmpty) plan0
       else plan0.copy(kept = refinedKept(plan0))
     def killOf(f: SnapshotLog.FileEntry): Long =
-      plan.dvKills.getOrElse(f.path, 0L)
+      snap.dvKills.getOrElse(f.path, 0L)
 
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
@@ -1592,15 +1609,15 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
       cs.flatten
     }
     def pointOf(f: SnapshotLog.FileEntry, c: String): Option[Any] = {
-      val dt = plan.schema(c).dataType
-      SnapshotLog.physNameIn(f, c, plan.curIds).flatMap(f.stats.get)
+      val dt = snap.schema(c).dataType
+      SnapshotLog.physNameIn(f, c, snap.curIds).flatMap(f.stats.get)
         .collect { case (mn, mx) if mn == mx => mn }
         .flatMap(SnapshotLog.statValueOf(dt, _))
     }
     val groups: Seq[(Seq[Any], Seq[SnapshotLog.FileEntry])] =
       if (groupCols.isEmpty) Seq((Seq.empty, plan.kept))
       else {
-        if (groupCols.exists(c => !plan.schema.fieldNames.contains(c)))
+        if (groupCols.exists(c => !snap.schema.fieldNames.contains(c)))
           return None
         // a point band proves nothing about NULLS in the grouping
         // column (min/max skip them): a file with rows at the point
@@ -1610,9 +1627,9 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
         // the list-level meta, or per kept file by the per-file null
         // counts (the proof that also holds under pruning).
         if (groupCols.exists(c =>
-            !plan.colMeta().get(c).exists(_._1 == 0L) &&
+            !snap.colMeta.get(c).exists(_._1 == 0L) &&
             !(plan.kept.nonEmpty && plan.kept.forall(f =>
-              SnapshotLog.fileNullCount(f, c, plan.curIds).contains(0L)))))
+              SnapshotLog.fileNullCount(f, c, snap.curIds).contains(0L)))))
           return None
         val keyed = plan.kept.map { f =>
           val ks = groupCols.map(c => pointOf(f, c))
@@ -1626,13 +1643,13 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
     def minMax(files: Seq[SnapshotLog.FileEntry], c: String,
         wantMin: Boolean)
         : Option[(org.apache.spark.sql.types.DataType, Any)] = {
-      if (!plan.schema.fieldNames.contains(c)) return None
+      if (!snap.schema.fieldNames.contains(c)) return None
       // a DV may have killed exactly the extremal row — file bands
       // cannot answer min/max over the survivors
       if (files.exists(killOf(_) > 0L)) return None
-      val dt = plan.schema(c).dataType
+      val dt = snap.schema(c).dataType
       val vals = files.map { f =>
-        SnapshotLog.physNameIn(f, c, plan.curIds) match {
+        SnapshotLog.physNameIn(f, c, snap.curIds) match {
           case None => Some(None) // column absent in file: all NULL, skips
           case Some(nm) => f.stats.get(nm) match {
             case Some((mn, mx)) =>
@@ -1669,10 +1686,10 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
         case c: org.apache.spark.sql.connector.expressions.aggregate.Count
             if !c.isDistinct =>
           colOf(c.column).flatMap { cn =>
-            if (!plan.schema.fieldNames.contains(cn)) None
+            if (!snap.schema.fieldNames.contains(cn)) None
             else {
               val perFile: Seq[Option[Long]] = files.map { f =>
-                SnapshotLog.fileNullCount(f, cn, plan.curIds).flatMap { nu =>
+                SnapshotLog.fileNullCount(f, cn, snap.curIds).flatMap { nu =>
                   val k = killOf(f)
                   if (k == 0L) Some(f.rows - nu)
                   else if (nu == 0L) Some(f.rows - k)
@@ -1684,7 +1701,7 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
                 if (perFile.forall(_.isDefined)) Some(perFile.flatten.sum)
                 else if (groupCols.isEmpty && claimed.isEmpty &&
                     files.forall(killOf(_) == 0L))
-                  plan.colMeta().get(cn).map(nu => files.map(_.rows).sum - nu._1)
+                  snap.colMeta.get(cn).map(nu => files.map(_.rows).sum - nu._1)
                 else None
               count.map(n => (s"count($cn)",
                 LongType: org.apache.spark.sql.types.DataType,
@@ -1707,37 +1724,32 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
     // complete-pushdown output convention: grouping columns FIRST,
     // then the aggregate columns, one row per group
     val outSchema = StructType(
-      groupCols.map(c => plan.schema(c)) ++ aggFields)
+      groupCols.map(c => snap.schema(c)) ++ aggFields)
     val outRows = groups.zip(perGroup).map { case ((key, _), vals) =>
       org.apache.spark.sql.catalyst.InternalRow
         .fromSeq(key ++ vals.get.map(_._3))
     }.toArray
-    Some(new SnapshotAggScan(root, pinnedAsOf, branch, outSchema,
-      outRows, plan.kept.size, plan.totalFiles))
+    Some(new SnapshotAggScan(snap, outSchema, outRows, plan.kept.size))
   }
 
   override def build(): Scan = {
     if (aggScan.isDefined) return aggScan.get
-    val pin = pinnedAsOf
-    if (!batchConf)
-      return new SnapshotScan(root, pin, branch, required, boxes, exact)
-    // ONE manifest resolution (shared with pushFilters' claim decision
-    // and the aggregate pushdown) decides both the file plan and the
-    // eq-outstanding fallback
+    // ONE file plan (shared with pushFilters' claim decision and the
+    // aggregate pushdown) serves the batch scan and the V1 fallback
     val plan0 = resolvePlan()
-    if (plan0.eqOutstanding)
-      return new SnapshotScan(root, pin, branch, required, boxes, exact)
+    if (!batchConf || snap.eqOutstanding)
+      return new SnapshotScan(plan0, required, exact)
     // claimed filters apply exactly at FILE granularity: the all-false
     // files drop here, the all-true survivors are the claim's contract
     val plan = if (claimed.isEmpty) plan0
       else plan0.copy(kept = refinedKept(plan0))
     val limited = limit match {
       case Some(n) if exact.isEmpty && boxes.isEmpty &&
-          plan.dvByTarget.isEmpty =>
+          snap.dvByTarget.isEmpty =>
         plan.copy(kept = limitFiles(plan.kept, n))
       case _ => plan
     }
-    new SnapshotBatchScan(root, pin, branch, required, limited, exact)
+    new SnapshotBatchScan(required, limited, exact)
   }
 }
 
@@ -1750,11 +1762,10 @@ private[sources] class SnapshotScanBuilder(root: String, asOf: Long,
   * at 100 TB this turns `SELECT count(*), min(ts), max(ts) FROM t`
   * from a full-table scan into a kilobyte manifest read.
   */
-class SnapshotAggScan(val root: String, val asOf: Long,
-    val branch: Option[(String, Long)],
+class SnapshotAggScan(snap: SnapshotLog.Resolved,
     out: StructType,
     answer: Array[org.apache.spark.sql.catalyst.InternalRow],
-    val filesAggregated: Int, val totalFiles: Int)
+    val filesAggregated: Int)
     extends org.apache.spark.sql.connector.read.LocalScan {
 
   override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] =
@@ -1763,34 +1774,30 @@ class SnapshotAggScan(val root: String, val asOf: Long,
   override def readSchema(): StructType = out
 
   override def description(): String =
-    s"SnapshotAggScan root=$root asOf=$asOf" +
-      branch.map { case (b, k) => s" branch=$b@$k" }.getOrElse("") +
-      s" files=$filesAggregated/$totalFiles (manifest-only)" +
+    s"SnapshotAggScan root=${snap.root} ${snap.pinLabel}" +
+      s" files=$filesAggregated/${snap.totalFiles} (manifest-only)" +
       s" out=${out.fieldNames.mkString("[", ", ", "]")}"
 }
 
-/** The planned scan: file pruning happens HERE, once, on the driver —
+/** The V1 fallback scan: reads exactly the builder's file plan —
   * `keptFiles`/`totalFiles` are what a spec (and `description()`)
-  * asserts. Row production goes through the V1 relation below.
+  * asserts — from the same resolved snapshot it was planned on. Row
+  * production goes through the V1 relation below.
   */
-class SnapshotScan(val root: String, val asOf: Long,
-    val branch: Option[(String, Long)],
+class SnapshotScan(plan: SnapshotLog.CatalogBatchPlan,
     required: StructType,
-    boxes: Seq[(String, Option[String], Option[String])],
     exact: Seq[sources.Filter])
     extends V1Scan with SupportsReportStatistics with SnapshotScanLike {
 
   private val spark = SparkSession.active
-  val (keptFiles, totalFiles, tableSchema) = {
-    val (k, t, s) = SnapshotLog.catalogPlanPin(spark, root, asOf, branch, boxes)
-    (k, t, s)
-  }
+  val root: String = plan.snap.root
+  val keptFiles: Seq[SnapshotLog.FileEntry] = plan.kept
+  val totalFiles: Int = plan.snap.totalFiles
 
   override def readSchema(): StructType = required
 
   override def description(): String =
-    s"SnapshotScan root=$root asOf=$asOf" +
-      branch.map { case (b, k) => s" branch=$b@$k" }.getOrElse("") +
+    s"SnapshotScan root=$root ${plan.snap.pinLabel}" +
       s" files=${keptFiles.size}/$totalFiles" +
       s" pushed=${exact.mkString("[", ", ", "]")}"
 
@@ -1818,7 +1825,7 @@ class SnapshotScan(val root: String, val asOf: Long,
     * lazily at execution so the relation plans nothing twice.
     */
   private[sources] def innerPlan(): DataFrame = {
-    val base = SnapshotLog.readFileSubsetPin(spark, root, asOf, branch, keptFiles)
+    val base = SnapshotLog.dvRead(spark, plan.snap, keptFiles)
     val filtered = exact.flatMap(SnapshotCatalog.columnOf)
       .foldLeft(base)((d, c) => d.filter(c))
     filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
@@ -1909,8 +1916,7 @@ private[graft] class SnapshotMetaTable(val root: String, val kind: String)
     case "changes" =>
       // the table's own columns plus the change tag — the exact frame
       // SnapshotLog.changes produces
-      StructType(SnapshotLog.schemaOfPin(
-        SparkSession.active, root, 0L, None).fields :+
+      StructType(SnapshotLog.resolve(SparkSession.active, root).schema.fields :+
         org.apache.spark.sql.types.StructField("change",
           org.apache.spark.sql.types.StringType))
     case _ => StructType.fromDDL(
@@ -1996,12 +2002,11 @@ private[graft] class SnapshotMetaTable(val root: String, val kind: String)
             val s = context.sparkSession
             val df = kind match {
               case "files" =>
-                val cur = SnapshotLog.currentId(s, root)
                 // sorted_by: the file's physical-sort stamp (NULL =
                 // unsorted/legacy) — the layout-audit twin of Iceberg's
                 // files.sort_order_id; a user can see exactly which
                 // files still block the reported-ordering gate
-                val rows = SnapshotLog.snapshot(s, root, cur).files
+                val rows = SnapshotLog.resolve(s, root).files
                   .map(f => Row(f.path, f.rows, f.bytes,
                     if (f.sortedBy.isEmpty) null else f.sortedBy))
                 s.createDataFrame(s.sparkContext.parallelize(rows, 1),

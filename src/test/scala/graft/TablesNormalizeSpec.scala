@@ -54,4 +54,25 @@ class TablesNormalizeSpec extends SparkSpec {
     val orders = Tables(spark, "/root/testdata/sf0.001", "orders")
     assert(orders.schema("o_orderdate").dataType === TimestampType)
   }
+
+  test("spread's split memo serves near-scan frames only; a coalesced frame is re-probed") {
+    val dir = TempDirs.create("spread").resolve("t").toString
+    spark.range(0, 4000).repartition(8).write.parquet(dir)
+    // small splits so the table spans more splits than spread's width
+    val confs = Seq("spark.sql.files.maxPartitionBytes" -> "1k",
+      "spark.sql.files.openCostInBytes" -> "1")
+    val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val t = spark.read.parquet(dir)
+      val n = math.max(4, spark.sessionState.conf.numShufflePartitions / 2)
+      assert(t.rdd.getNumPartitions >= n, "fixture must span >= n splits")
+      assert(Tables.spread(t) eq t, "a wide scan is left as is")
+      // same file set, different partitioning: the memo must not answer
+      assert(Tables.spread(t.coalesce(1)).rdd.getNumPartitions == n)
+    } finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

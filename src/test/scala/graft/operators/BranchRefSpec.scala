@@ -176,7 +176,7 @@ class BranchRefSpec extends SparkSpec {
     createBranch(spark, root, "routed")
     appendToBranch(spark, root, "routed", kv(2L -> "b", 3L -> "c"))
     fastForward(spark, root, "routed")
-    val (all, _) = rangeFiles(spark, root, "k", None, None)
+    val all = resolve(spark, root).files
     assert(all.filter(_.rows > 0).forall(f =>
       f.stats.keys.exists(_.startsWith("__bucket:k:4"))))
   }

@@ -37,6 +37,39 @@ class HiddenPartitionSpec extends SparkSpec {
       .drop("d")
   }
 
+  test("point read prunes on the bucket transform band of a bloomed table") {
+    val root = graft.TempDirs.create("hp_point").resolve("log").toString
+    val df = spark.range(0, 400)
+      .select(col("id").as("k"), (col("id") % 10).as("g"))
+    multiFile {
+      appendPartitioned(spark, root, df.filter(col("k") < 200),
+        Seq(PartField("bucket", "k", 4)))
+      // blooms on g only: for a point on k the stat band keeps every
+      // era-2 file, so only the bucket band can narrow them
+      appendBloomed(spark, root, df.filter(col("k") >= 200),
+        BloomSpec(Seq("g")))
+    }
+    val v = 250L
+    val expected = rowSet(read(spark, root).filter(col("k") === v))
+    val snap = resolve(spark, root)
+    val kept = boxFiles(snap, Seq(("k", Some(v.toString), Some(v.toString))))
+    val statOnly = snap.files.filter(f => f.rows > 0 &&
+      f.stats.get("k").forall { case (mn, mx) => mn.toLong <= v && v <= mx.toLong })
+    val bucket = bucketOfValue(org.apache.spark.sql.types.LongType,
+      v.toString, 4).get
+    assert(kept.nonEmpty && kept.size < statOnly.size,
+      s"bucket band must prune the point read: ${kept.size}/${statOnly.size}")
+    assert(kept.forall(f => f.stats.get("__bucket:k:4").forall {
+      case (lo, hi) => lo.toLong <= bucket && bucket <= hi.toLong }))
+    // the strong form: every pruned file deleted, the read still answers
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val keptPaths = kept.map(_.path).toSet
+    snap.files.filterNot(f => keptPaths(f.path))
+      .foreach(f => fs.delete(new Path(s"$root/${f.path}"), false))
+    assert(rowSet(readPoint(spark, root, "k", v)) == expected)
+    assert(expected.size == 1)
+  }
+
   test("days(ts) spec routes appends and survives file deletion on a narrow read") {
     val root = graft.TempDirs.create("hp_days").resolve("log").toString
     appendPartitioned(spark, root, tsDf(Seq(0, 50, 100)),
@@ -44,9 +77,9 @@ class HiddenPartitionSpec extends SparkSpec {
     assert(partitionSpecOf(spark, root) == Seq(PartField("days", "ts")))
     // plain append consults the declared spec — no caller-side routing
     append(spark, root, tsDf(Seq(200, 250)))
-    val (kept, _) = boxFiles(spark, root,
+    val kept = boxFiles(resolve(spark, root),
       Seq(("ts", Some("1970-02-20 00:00:00"), Some("1970-02-21 00:00:00"))))
-    val (all, _) = rangeFiles(spark, root, "ts", None, None)
+    val all = resolve(spark, root).files
     assert(kept.size < all.size, "day-band pruning must skip files")
     // the STRONG form: delete every pruned file from disk — the read
     // must still answer, proving those files were never planned
@@ -102,13 +135,13 @@ class HiddenPartitionSpec extends SparkSpec {
     append(spark, root, tsDf(Seq(300)))
     // old files keep their days stats (prune on ts), new files carry
     // trunc(k) stats (prune on k) — both eras prune under THEIR spec
-    val (tsKept, _) = boxFiles(spark, root,
+    val tsKept = boxFiles(resolve(spark, root),
       Seq(("ts", Some("1970-01-01 00:00:00"), Some("1970-01-02 00:00:00"))))
     assert(tsKept.forall(f =>
       f.stats.keys.exists(_.startsWith("__part:days:")) || f.rows == 0))
-    val (kKept, _) = boxFiles(spark, root,
+    val kKept = boxFiles(resolve(spark, root),
       Seq(("k", Some("3001"), Some("3002"))))
-    val (all, _) = rangeFiles(spark, root, "k", None, None)
+    val all = resolve(spark, root).files
     assert(kKept.size < all.size)
     assert(readBox(spark, root, Seq(("k", Some("3001"), Some("3002"))))
       .count() == 2L)
@@ -122,9 +155,9 @@ class HiddenPartitionSpec extends SparkSpec {
     assert(partitionSpecOf(spark, root) == Seq(PartField("days", "event_ts")))
     // writes after the rename still route (under the new name)
     append(spark, root, tsDf(Seq(20)).withColumnRenamed("ts", "event_ts"))
-    val (kept, _) = boxFiles(spark, root,
+    val kept = boxFiles(resolve(spark, root),
       Seq(("event_ts", Some("1970-01-21 00:00:00"), Some("1970-01-22 00:00:00"))))
-    val (all, _) = rangeFiles(spark, root, "event_ts", None, None)
+    val all = resolve(spark, root).files
     assert(kept.size < all.size)
     val specId = 1L
     rollback(spark, root, specId)
@@ -138,11 +171,11 @@ class HiddenPartitionSpec extends SparkSpec {
         Seq(PartField("days", "ts")))
       deleteWhere(spark, root, col("k") === 1001L)
     }
-    val (all, _) = rangeFiles(spark, root, "ts", None, None)
+    val all = resolve(spark, root).files
     assert(all.filter(_.rows > 0).forall(f =>
       f.stats.keys.exists(_.startsWith("__part:days:"))),
       "rewritten files must keep the transform stat")
-    val (kept, _) = boxFiles(spark, root,
+    val kept = boxFiles(resolve(spark, root),
       Seq(("ts", Some("1970-04-11 00:00:00"), Some("1970-04-12 00:00:00"))))
     assert(kept.size < all.size)
   }
@@ -154,8 +187,8 @@ class HiddenPartitionSpec extends SparkSpec {
       Seq("alpha", "amber", "bravo", "beta", "zeta", "zulu")
         .zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("k", "v"),
       Seq(PartField("trunc", "v", 1))) }
-    val (kept, _) = boxFiles(spark, root, Seq(("v", Some("ba"), Some("bz"))))
-    val (all, _) = rangeFiles(spark, root, "v", None, None)
+    val kept = boxFiles(resolve(spark, root), Seq(("v", Some("ba"), Some("bz"))))
+    val all = resolve(spark, root).files
     assert(kept.size < all.size)
     assert(readBox(spark, root, Seq(("v", Some("ba"), Some("bz"))))
       .count() == 2L)
@@ -163,9 +196,9 @@ class HiddenPartitionSpec extends SparkSpec {
 
   test("tt27's staged events fixture prunes its two-day window from day bands") {
     val root = SnapshotLog.partitionLog(spark, graft.TestSpark.Sf0001)
-    val (kept, _) = boxFiles(spark, root, Seq(("ts",
+    val kept = boxFiles(resolve(spark, root), Seq(("ts",
       Some("2024-01-10 00:00:00"), Some("2024-01-11 23:59:59"))))
-    val (all, _) = rangeFiles(spark, root, "ts", None, None)
+    val all = resolve(spark, root).files
     assert(kept.size < all.size,
       s"the registry row's window must skip files (${kept.size}/${all.size})")
     assert(kept.forall(f => f.rows == 0 ||
@@ -187,9 +220,9 @@ class HiddenPartitionSpec extends SparkSpec {
           .drop("us"),
         Seq(PartField("hours", "ts")))
     }
-    val (kept, _) = boxFiles(spark, root,
+    val kept = boxFiles(resolve(spark, root),
       Seq(("ts", Some("1970-01-01 03:00:00"), Some("1970-01-01 03:59:59"))))
-    val (all, _) = rangeFiles(spark, root, "ts", None, None)
+    val all = resolve(spark, root).files
     assert(kept.size < all.size)
     assert(readBox(spark, root,
       Seq(("ts", Some("1970-01-01 03:00:00"), Some("1970-01-01 03:59:59"))))

@@ -66,8 +66,8 @@ class ManifestBandSpec extends SparkSpec {
 
   test("narrow range read plans one list and survives the others' deletion") {
     val root = seeded()
-    val (kept, _) = SnapshotLog.rangeFiles(spark, root, "k",
-      Some("250"), Some("299"))
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("k", Some("250"), Some("299"))))
     assert(kept.size === 1, s"kept ${kept.map(_.path)}")
     dropNonMatching(root, kept.map(_.path).toSet)
     val got = SnapshotLog.readRange(spark, root, "k", Some("250"), Some("299"))
@@ -77,7 +77,8 @@ class ManifestBandSpec extends SparkSpec {
 
   test("point read prunes lists by band and survives their deletion") {
     val root = seeded()
-    val (kept, _) = SnapshotLog.pointFiles(spark, root, "k", 135L)
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("k", Some("135"), Some("135"))))
     assert(kept.size === 1, s"kept ${kept.map(_.path)}")
     dropNonMatching(root, kept.map(_.path).toSet)
     assert(rowSet(SnapshotLog.readPoint(spark, root, "k", 135L)) ===
@@ -97,8 +98,8 @@ class ManifestBandSpec extends SparkSpec {
     try out.write(rewritten.getBytes("UTF-8")) finally out.close()
     // no list-level pruning possible, but file-level stats still prune
     // to one file and the answer is exact
-    val (kept, _) = SnapshotLog.rangeFiles(spark, root, "k",
-      Some("250"), Some("299"))
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("k", Some("250"), Some("299"))))
     assert(kept.size === 1)
     assert(SnapshotLog.readRange(spark, root, "k", Some("250"), Some("299"))
       .count() === 50L)

@@ -26,7 +26,8 @@ class MorCommitRetrySpec extends SparkSpec {
     */
   private def upsertParts(root: String, base: Long, keys: Seq[Long],
       tag: String) = {
-    val (_, pos, _) = SnapshotLog.readPosForDml(spark, root, asOf = base)
+    val pos =
+      SnapshotLog.readPosForDml(spark, SnapshotLog.resolve(spark, root, base))
     val hit = pos.filter(col("k").isin(keys: _*))
     val dead = hit.select(col("__path").as("t_path"), col("__pos").as("t_pos"))
     val adds = hit.select(col("k"), concat(lit(tag), col("k")).as("v"))

@@ -92,8 +92,8 @@ class SchemaEvolutionSpec extends SparkSpec {
           .toDF("k", "v").coalesce(1))
     }
     SnapshotLog.renameColumn(spark, root, "k", "key")
-    val (kept, _) = SnapshotLog.rangeFiles(spark, root, "key",
-      Some("15"), Some("17"))
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("key", Some("15"), Some("17"))))
     assert(kept.size === 1, s"kept ${kept.map(_.path)}")
     assert(rowSet(SnapshotLog.readRange(spark, root, "key", Some("15"), Some("17")))
       === rowSet(Seq((15L, "v15"), (16L, "v16"), (17L, "v17")).toDF("key", "v")))

@@ -42,7 +42,8 @@ class SnapshotBloomSpec extends SparkSpec {
     SnapshotLog.appendBloomed(spark, root, data.repartition(8),
       SnapshotLog.BloomSpec(Seq("k"), expectedPerFile = 2000L, fpp = 0.0001))
 
-    val (keptHit, _) = SnapshotLog.pointFiles(spark, root, "k", 4242L)
+    val keptHit = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("k", Some("4242"), Some("4242"))))
     // the key lives in exactly one file; fpp 1e-4 over 7 other files
     // makes extra keeps vanishingly unlikely (and deterministic for
     // fixed data — reruns see the same filters)
@@ -53,7 +54,8 @@ class SnapshotBloomSpec extends SparkSpec {
     assert(rowSet(hit) === rowSet(data.filter(col("k") === 4242L)))
 
     // absent key: typically zero files survive pruning; answer is empty
-    val (keptMiss, _) = SnapshotLog.pointFiles(spark, root, "k", 999999L)
+    val keptMiss = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("k", Some("999999"), Some("999999"))))
     assert(keptMiss.size <= 1, s"absent key kept ${keptMiss.size}/8 files")
     assert(SnapshotLog.readPoint(spark, root, "k", 999999L).count() === 0L)
   }

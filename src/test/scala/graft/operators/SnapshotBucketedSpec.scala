@@ -42,7 +42,8 @@ class SnapshotBucketedSpec extends SparkSpec {
     val root = seeded()
     val all = SnapshotLog.snapshot(spark, root, 2L).files
     val one = Set(3L)
-    val (kept, _) = SnapshotLog.bucketFilesOf(spark, root, "k", N, one)
+    val kept = SnapshotLog.bucketFilesOf(SnapshotLog.resolve(spark, root),
+      "k", N, one)
     assert(kept.nonEmpty && kept.size < all.size,
       s"no pruning: kept ${kept.size} of ${all.size}")
     val got = SnapshotLog.readBuckets(spark, root, "k", N, one)
@@ -92,7 +93,8 @@ class SnapshotBucketedSpec extends SparkSpec {
     assert(newFiles.nonEmpty)
     // probe bucket 5: the appended list's band [0,1] excludes it — the
     // whole list (every new file) must be skipped at planning
-    val (kept, _) = SnapshotLog.bucketFilesOf(spark, root, "k", N, Set(5L))
+    val kept = SnapshotLog.bucketFilesOf(SnapshotLog.resolve(spark, root),
+      "k", N, Set(5L))
     assert(newFiles.forall(f => !kept.contains(f)),
       s"appended list not band-skipped: kept ${kept.map(_.path)}")
     val got = SnapshotLog.readBuckets(spark, root, "k", N, Set(5L))
@@ -123,8 +125,8 @@ class SnapshotBucketedSpec extends SparkSpec {
     val tailBucket = spark.range(1)
       .select(pmod(hash(lit(100L)), lit(N)).cast("long")).head().getLong(0)
     val other = (tailBucket + 1) % N
-    assert(SnapshotLog.bucketFilesOf(spark, root, "k", N, Set(other))
-      ._1.contains(tailFile), "statless file must be conservatively kept")
+    assert(SnapshotLog.bucketFilesOf(SnapshotLog.resolve(spark, root),
+      "k", N, Set(other)).contains(tailFile), "statless file must be conservatively kept")
     assert(SnapshotLog.readBuckets(spark, root, "k", N, Set(tailBucket))
       .filter(col("k") === 100L).count() === 1L)
     assert(SnapshotLog.readBuckets(spark, root, "k", N, Set(other))
@@ -142,7 +144,8 @@ class SnapshotBucketedSpec extends SparkSpec {
       SnapshotLog.currentId(spark, root)).files
     val era1 = SnapshotLog.snapshot(spark, root, 2L).files.map(_.path).toSet
     val keys = Seq(5L, 70L).toDF("k")
-    val (kept, _, byLayout) = SnapshotLog.keyFilesOf(spark, root, "k", keys)
+    val (kept, byLayout) =
+      SnapshotLog.keyFilesOf(SnapshotLog.resolve(spark, root), "k", keys)
     assert(byLayout.keySet === Set(8, 16))
     // pruning bites in EACH era, not just the declared (max-n) one —
     // the property readBuckets alone cannot give a mixed-layout table

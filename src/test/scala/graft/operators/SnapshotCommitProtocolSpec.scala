@@ -93,9 +93,9 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
     val lo = SnapshotLog.readRange(spark, root, "b", Some("100"), Some("200"))
       .select("k").as[Long].collect().toSet
     assert(lo === Set(3L, 4L))
-    val (keptNarrow, _) = SnapshotLog.rangeFiles(spark, root, "b",
-      Some("10"), Some("20"))
-    val (keptAll, _) = SnapshotLog.rangeFiles(spark, root, "b", None, None)
+    val keptNarrow = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("b", Some("10"), Some("20"))))
+    val keptAll = SnapshotLog.resolve(spark, root).files
     assert(keptNarrow.size < keptAll.size,
       s"band re-key should let the narrow read skip the staged list " +
         s"(${keptNarrow.size} vs ${keptAll.size})")

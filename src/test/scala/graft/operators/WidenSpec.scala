@@ -50,8 +50,8 @@ class WidenSpec extends SparkSpec {
       .as[(Long, String, String)].collect().toSeq
     assert(d === Seq((35L, "v35", "delete")))
     // narrow-era stats still prune (decimal compare is width-blind)
-    val (kept, _) = SnapshotLog.rangeFiles(spark, root, "k",
-      Some("5"), Some("8"))
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("k", Some("5"), Some("8"))))
     assert(kept.size === 1)
     assert(SnapshotLog.readRange(spark, root, "k", Some("5"), Some("8"))
       .count() === 4L)
@@ -70,8 +70,8 @@ class WidenSpec extends SparkSpec {
     SnapshotLog.widenColumn(spark, root, "x", DoubleType)
     val v = 0.7f.toDouble // 0.699999988079071
     val bound = v.toString
-    val (kept, _) = SnapshotLog.rangeFiles(spark, root, "x",
-      Some(bound), Some(bound))
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root),
+      Seq(("x", Some(bound), Some(bound))))
     assert(kept.size === 1, "slack keeps the 0.7f file, prunes the other")
     assert(SnapshotLog.readRange(spark, root, "x", Some(bound), Some(bound))
       .count() === 1L)

@@ -64,8 +64,8 @@ class ZOrderSpec extends SparkSpec {
     val wideBox = Seq(
       ("x", Some("8"), Some("55")),
       ("y", Some("20"), Some("27")))
-    val zKept = SnapshotLog.boxFiles(spark, zRoot, wideBox)._1.size
-    val xKept = SnapshotLog.boxFiles(spark, xRoot, wideBox)._1.size
+    val zKept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, zRoot), wideBox).size
+    val xKept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, xRoot), wideBox).size
     // strict win with a wide margin (~4 Morton tiles vs ~12 x-slabs);
     // the absolute bound stays loose because RangePartitioner's sampled
     // boundaries can straddle tile edges and bloat a file's box

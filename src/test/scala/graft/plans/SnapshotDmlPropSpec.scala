@@ -163,7 +163,8 @@ class SnapshotDmlPropSpec extends SparkSpec {
       val keysA = rnd.shuffle((1L to 40L).toList).take(1 + rnd.nextInt(8))
       val keysB = rnd.shuffle((1L to 40L).toList).take(1 + rnd.nextInt(8))
       def parts(keys: Seq[Long], tag: String) = {
-        val (_, pos, _) = SnapshotLog.readPosForDml(spark, root, asOf = 1L)
+        val pos =
+          SnapshotLog.readPosForDml(spark, SnapshotLog.resolve(spark, root, 1L))
         val hit = pos.filter(col("k").isin(keys: _*))
         (hit.select(col("__path").as("t_path"), col("__pos").as("t_pos")),
           hit.select(col("k"), concat(lit(tag), col("k")).as("v")))

@@ -399,7 +399,8 @@ class SnapshotDmlSpec extends SparkSpec {
     val root = newLog("corrrace")
     Seq(1L, 2L, 3L).toDF("tk").createOrReplaceTempView("dml_race_tomb")
     // a MERGE discovers against base 1 (stale once the DELETE lands)
-    val (_, pos, _) = SnapshotLog.readPosForDml(spark, root, asOf = 1L)
+    val pos =
+      SnapshotLog.readPosForDml(spark, SnapshotLog.resolve(spark, root, 1L))
     val hit = pos.filter(col("k").isin(90L, 91L))
     val dead = hit.select(col("__path").as("t_path"),
       col("__pos").as("t_pos"))
@@ -419,7 +420,8 @@ class SnapshotDmlSpec extends SparkSpec {
     // same-key race: a stale merge touching a row the correlated
     // DELETE killed must abort loudly, never resurrect it
     Seq(50L).toDF("tk").createOrReplaceTempView("dml_race_tomb2")
-    val (_, pos2, _) = SnapshotLog.readPosForDml(spark, root, asOf = 3L)
+    val pos2 =
+      SnapshotLog.readPosForDml(spark, SnapshotLog.resolve(spark, root, 3L))
     val hit2 = pos2.filter(col("k") === 50L)
     val dead2 = hit2.select(col("__path").as("t_path"),
       col("__pos").as("t_pos"))
@@ -474,7 +476,8 @@ class SnapshotDmlSpec extends SparkSpec {
     Seq((50L, "C"), (60L, "C")).toDF("k", "v")
       .createOrReplaceTempView("dml_cmr_src")
     // both stale commits discover against base 1
-    val (_, pos, _) = SnapshotLog.readPosForDml(spark, root, asOf = 1L)
+    val pos =
+      SnapshotLog.readPosForDml(spark, SnapshotLog.resolve(spark, root, 1L))
     val disjoint = pos.filter(col("k") === 90L)
     val deadD = disjoint.select(col("__path").as("t_path"),
       col("__pos").as("t_pos"))

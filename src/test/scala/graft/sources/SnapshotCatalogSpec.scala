@@ -202,6 +202,27 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(sqlRead(root).count() == 5L, "a fresh read sees the delete")
   }
 
+  test("a loaded table reports ONE snapshot's schema, spec and sort order") {
+    val root = freshLog()
+    val catalog = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[SnapshotCatalog]
+    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
+      Array.empty, root)
+    val held = catalog.loadTable(ident)
+    assert(held.schema.fieldNames.toSeq == Seq("k", "v"))
+    // layout commits land after the load
+    SnapshotLog.setSortOrder(spark, root, Seq(SnapshotLog.SortField("k")))
+    SnapshotLog.setPartitionSpec(spark, root,
+      Seq(SnapshotLog.PartField("bucket", "k", 4)))
+    assert(held.partitioning().isEmpty,
+      "the held table must report the spec of the snapshot it loaded")
+    assert(!held.properties().containsKey(SnapshotCatalog.SortOrderKey),
+      "the held table must report the sort order of the snapshot it loaded")
+    val fresh = catalog.loadTable(ident)
+    assert(fresh.partitioning().map(_.toString).toSeq == Seq("bucket(4, k)"))
+    assert(fresh.properties().get(SnapshotCatalog.SortOrderKey) == "k")
+  }
+
   test("metadata tables answer from manifests with zero data files opened") {
     val root = freshLog()
     SnapshotLog.deleteWhereMoR(spark, root,

@@ -70,7 +70,7 @@ class SnapshotProcedureSpec extends SparkSpec {
       .head().getLong(0)
     assert(zId == 2L)
     // a 2-D box over the Morton layout prunes on both axes
-    val (kept, _) = SnapshotLog.boxFiles(spark, root, Seq(
+    val kept = SnapshotLog.boxFiles(SnapshotLog.resolve(spark, root), Seq(
       ("x", Some("1"), Some("40")), ("y", Some("1"), Some("40"))))
     assert(kept.size < 16, s"z-order box pruning must skip files (${kept.size}/16)")
     assert(SnapshotLog.read(spark, root).count() == 256L)
