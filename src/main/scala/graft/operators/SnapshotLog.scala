@@ -547,20 +547,11 @@ object SnapshotLog {
       s"table already exists at $root")
     val fs = fsOf(spark, root)
     val (ids, last) = assignNewIds(schema, Map.empty, 0)
-    val raw = RawManifest(1L, 0L, "create", 0L,
-      schema.toDDL.replace("\t", " ").replace("\n", " "),
-      Seq.empty, Seq.empty, ids, last, Seq.empty, Seq.empty, spec,
-      System.currentTimeMillis())
-    val m = manifestPath(root, 1L)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(manifestText(raw).getBytes("UTF-8")) finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    val raw = RawManifest(1L, 0L, "create", 0L, headerDdl(schema),
+      Seq.empty, Seq.empty, ids, last, spec = spec)
+    if (!publishManifest(fs, manifestPath(root, 1L), raw))
       throw new IllegalStateException(
         s"create of $root lost a race: the table already exists")
-    }
     1L
   }
 
@@ -724,12 +715,8 @@ object SnapshotLog {
   private[graft] def decideTxn(spark: SparkSession, dir: String,
       decision: String): String = {
     val p = new Path(s"$dir/decision")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val tmp = new Path(s"$dir/.decision_${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(decision.getBytes("UTF-8")) finally out.close()
-    if (!publish(fs, tmp, p)) fs.delete(tmp, false)
+    publishNew(p.getFileSystem(spark.sparkContext.hadoopConfiguration), p,
+      decision)
     txnDecisionOf(spark, dir).getOrElse(decision)
   }
 
@@ -784,17 +771,10 @@ object SnapshotLog {
     */
   private def txnPlanWrite(spark: SparkSession, txnDir: String,
       roots: Seq[String]): Unit = {
-    val tp = new Path(txnDir)
-    val tfs = tp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!tfs.exists(new Path(s"$txnDir/plan")),
-      s"transaction dir $txnDir already used")
-    tfs.mkdirs(tp)
-    val planTmp = new Path(
-      s"$txnDir/.plan_${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = tfs.create(planTmp, true)
-    try out.write(roots.mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    require(publish(tfs, planTmp, new Path(s"$txnDir/plan")),
+    val plan = new Path(s"$txnDir/plan")
+    val tfs = plan.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    require(!tfs.exists(plan), s"transaction dir $txnDir already used")
+    require(publishNew(tfs, plan, roots.mkString("\n")),
       s"transaction dir $txnDir already used")
   }
 
@@ -961,7 +941,7 @@ object SnapshotLog {
     * opens O(matching lists) list files, not O(#lists). Empty band =
     * legacy line or no foldable stats — the list is always opened.
     */
-  private final case class ListRef(path: String, nFiles: Int, rows: Long,
+  private[graft] final case class ListRef(path: String, nFiles: Int, rows: Long,
       band: Map[String, (String, String)] = Map.empty,
       // per-column (nullCount, KMV bottom-k xxhash64 sketch) over the
       // list's live files — null counts are exactly additive across
@@ -982,7 +962,7 @@ object SnapshotLog {
     * Carried BY REFERENCE across later commits exactly like file
     * lists, so MoR metadata stays O(#commits).
     */
-  private final case class DeleteRef(path: String, nTargets: Int, delRows: Long)
+  private[graft] final case class DeleteRef(path: String, nTargets: Int, delRows: Long)
 
   /** One delete-list line: target data file, rows its DVs kill, and
     * the DV parquet dir holding those (t_path, t_pos) rows.
@@ -1003,7 +983,7 @@ object SnapshotLog {
     * delete. [[rewriteEqualityDeletes]] converts outstanding key sets
     * to positional vectors when read amplification warrants it.
     */
-  private final case class EqRef(dir: String, nKeys: Long, seq: Long,
+  private[graft] final case class EqRef(dir: String, nKeys: Long, seq: Long,
       keyIds: Map[String, Int])
 
   private def eqLines(eqs: Seq[EqRef]): Seq[String] =
@@ -1136,23 +1116,12 @@ object SnapshotLog {
       so.foreach(f => require(schema.fieldNames.contains(f.column),
         s"sort column ${f.column} is not in the table schema"))
       val next = base + 1
-      val m = manifestPath(root, next)
-      val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      fs.mkdirs(m.getParent)
-      val ddl = raw.schemaDdl
-      val out = fs.create(tmp, true)
-      try out.write(
-        ((s"$next\t$base\tset-sort-order\t${raw.rows}\t$ddl" +
-          s"\t${idsField(raw.ids)}\t${raw.lastColId}") +:
-          (raw.refs.map(refLine) ++ raw.inline.map(fileLine) ++
-            dRefLines(raw.dRefs) ++ eqLines(raw.eqRefs) ++
-            specLines(raw.spec) ++ sortLines(so) :+ commitTimeLine()))
-          .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (publish(fs, tmp, m)) return next
-      fs.delete(tmp, false)
+      if (publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
+          parent = base, operation = "set-sort-order", sortOrder = so)))
+        return next
       attempt += 1
-      require(attempt < 20, s"set-sort-order on $root lost $attempt races")
+      require(attempt < MaxCommitRaces,
+        s"set-sort-order on $root lost $attempt races")
     }
     -1L // unreachable
   }
@@ -1300,7 +1269,7 @@ object SnapshotLog {
     * bound (the scan-free eq commit cannot know its kill count);
     * [[rewriteEqualityDeletes]] re-exacts it.
     */
-  private final case class RawManifest(id: Long, parent: Long,
+  private[graft] final case class RawManifest(id: Long, parent: Long,
       operation: String, rows: Long, schemaDdl: String,
       refs: Seq[ListRef], inline: Seq[FileEntry],
       ids: Map[String, Int] = Map.empty, lastColId: Int = 0,
@@ -1460,7 +1429,7 @@ object SnapshotLog {
     parseManifest(readTextFile(fs, p))
   }
 
-  private def parseManifest(text: String): RawManifest = {
+  private[graft] def parseManifest(text: String): RawManifest = {
     val lines = text.split('\n').toSeq
     // header: id<TAB>parent<TAB>op<TAB>totalRows<TAB>schemaDDL
     // [<TAB>fieldIds<TAB>lastColId] — the two id fields are absent on
@@ -1508,11 +1477,11 @@ object SnapshotLog {
       oLines.map(parseSortLine))
   }
 
-  /** Commit-time body line (`T<TAB>epochMillis`), stamped by every
-    * commit path so audit surfaces report a time that survives
-    * copy/restore of the log directory.
+  /** A schema as the manifest header's DDL field: the header is TSV,
+    * so tabs and newlines fold to spaces.
     */
-  private def commitTimeLine(): String = s"T\t${System.currentTimeMillis()}"
+  private def headerDdl(schema: StructType): String =
+    schema.toDDL.replace("\t", " ").replace("\n", " ")
 
   /** A manifest's commit time: the stamped `T` line when present
     * (authoritative), file modification time as the legacy fallback.
@@ -3284,15 +3253,14 @@ object SnapshotLog {
         sortedBy = if (wapSort.isEmpty) "" else renderSortOrder(wapSort)))
     val ref = writeFileList(fs, root, 0L, written, schema)
     val key = java.util.UUID.randomUUID().toString.take(8)
-    val ddl = df.schema.toDDL.replace("\t", " ").replace("\n", " ")
-    val p = stagedPath(root, key)
-    val out = fs.create(p, false)
-    try out.write(
-      (s"0\t$base\tstaged-append\t${ref.rows}\t$ddl" +
-        s"\t${idsField(stagedIds)}\t$last" +
-        s"\nM\t${ref.path}\t${ref.nFiles}\t${ref.rows}\t${statsField(ref.band)}")
-        .getBytes("UTF-8"))
-    finally out.close()
+    // the descriptor is manifest-shaped (id 0, parent = the staging
+    // base); its list ref carries no column meta, so a publish splices
+    // only the band it re-keys
+    val desc = RawManifest(0L, base, "staged-append", ref.rows,
+      headerDdl(df.schema), Seq(ref.copy(meta = Map.empty)), Seq.empty,
+      stagedIds, last)
+    val out = fs.create(stagedPath(root, key), false)
+    try out.write(manifestText(desc).getBytes("UTF-8")) finally out.close()
     key
   }
 
@@ -3349,7 +3317,6 @@ object SnapshotLog {
         s"staged key $key holds columns dropped from the table since " +
           "staging; discardStaged and re-stage")
       val next = base + 1
-      val ddl = schema.toDDL.replace("\t", " ").replace("\n", " ")
       // re-key the staged lists' band stats through field ids: a
       // rename since staging moved the column to a new name (and may
       // have freed the OLD name for a fresh unrelated column), so a
@@ -3365,31 +3332,18 @@ object SnapshotLog {
             case None => Some(n -> mm)
           }
         }))
-      val refs = head.refs ++ rekeyedStaged
-      val m = manifestPath(root, next)
-      val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      val out = fs.create(tmp, true)
-      try out.write(
-        ((s"$next\t$base\tpublish-append\t${head.rows + staged.rows}\t$ddl" +
-          s"\t${idsField(ids)}\t$last") +:
-          (refs.map(r =>
-            refLine(r)) ++
-            head.inline.map(fileLine) ++
-            dRefLines(head.dRefs) ++
-            // staged rows sequence at STAGE time (their dir id), so an
-            // equality delete committed between stage and publish
-            // applies to them exactly as to a same-era append — one
-            // consistent rule, not publish-order-dependent
-            eqLines(head.eqRefs) ++
-            specLines(head.spec) ++
-            sortLines(head.sortOrder) :+ commitTimeLine()))
-          .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (publish(fs, tmp, m)) {
+      // head's equality deletes carry unchanged: staged rows sequence
+      // at STAGE time (their dir id), so an equality delete committed
+      // between stage and publish applies to them exactly as to a
+      // same-era append — one consistent rule, not
+      // publish-order-dependent
+      if (publishManifest(fs, manifestPath(root, next), head.copy(id = next,
+          parent = base, operation = "publish-append",
+          rows = head.rows + staged.rows, schemaDdl = headerDdl(schema),
+          refs = head.refs ++ rekeyedStaged, ids = ids, lastColId = last))) {
         fs.delete(sp, false)
         return next
       }
-      fs.delete(tmp, false)
       // the race we just lost may have been a CONCURRENT publish of
       // THIS key (both passed the pre-loop guard) — re-check against
       // fresh history before splicing again, else the loser's retry
@@ -3399,7 +3353,8 @@ object SnapshotLog {
         return currentId(spark, root)
       }
       attempt += 1
-      require(attempt < 20, s"publishStaged to $root lost $attempt races; aborting")
+      require(attempt < MaxCommitRaces,
+        s"publishStaged to $root lost $attempt races; aborting")
     }
     throw new IllegalStateException("unreachable")
   }
@@ -3605,25 +3560,10 @@ object SnapshotLog {
     writeDeleteVector(spark, root, hits, next) match {
       case None => base
       case Some((dRef, dvDir)) =>
-        val ddl = tableSchema.toDDL.replace("\t", " ").replace("\n", " ")
-        val m = manifestPath(root, next)
-        val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-        fs.mkdirs(m.getParent)
-        val out = fs.create(tmp, true)
-        try out.write(
-          ((s"$next\t$base\tmor-delete\t${raw.rows - dRef.delRows}\t$ddl" +
-            s"\t${idsField(tableIds)}\t$lastColId") +:
-            (raw.refs.map(r =>
-              refLine(r)) ++
-              raw.inline.map(fileLine) ++
-              dRefLines(raw.dRefs :+ dRef) ++
-              eqLines(raw.eqRefs) ++
-              specLines(raw.spec) ++
-              sortLines(raw.sortOrder) :+ commitTimeLine()))
-            .mkString("\n").getBytes("UTF-8"))
-        finally out.close()
-        if (!publish(fs, tmp, m)) {
-          fs.delete(tmp, false)
+        if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
+            parent = base, operation = "mor-delete",
+            rows = raw.rows - dRef.delRows, schemaDdl = headerDdl(tableSchema),
+            ids = tableIds, lastColId = lastColId, dRefs = raw.dRefs :+ dRef))) {
           fs.delete(new Path(s"$root/${dRef.path}"), false)
           fs.delete(new Path(s"$root/$dvDir"), true)
           throw new IllegalStateException(
@@ -3745,27 +3685,12 @@ object SnapshotLog {
     if (nKeys == 0L) { fs.delete(new Path(s"$root/$dir"), true); return base }
     val eq = EqRef(dir, nKeys,
       seq = next, keyIds = keys.schema.fieldNames.map(n => n -> tableIds(n)).toMap)
-    val ddl = tableSchema.toDDL.replace("\t", " ").replace("\n", " ")
-    val m = manifestPath(root, next)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
     // header rows = the parent's (an upper bound until conversion):
     // exactness would need the scan this verb exists to avoid
-    try out.write(
-      ((s"$next\t$base\teq-delete\t${raw.rows}\t$ddl" +
-        s"\t${idsField(tableIds)}\t$lastColId") +:
-        (raw.refs.map(r =>
-          refLine(r)) ++
-          raw.inline.map(fileLine) ++
-          dRefLines(raw.dRefs) ++
-          eqLines(raw.eqRefs :+ eq) ++
-          specLines(raw.spec) ++
-          sortLines(raw.sortOrder) :+ commitTimeLine()))
-        .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
+        parent = base, operation = "eq-delete",
+        schemaDdl = headerDdl(tableSchema), ids = tableIds,
+        lastColId = lastColId, eqRefs = raw.eqRefs :+ eq))) {
       fs.delete(new Path(s"$root/$dir"), true)
       throw new IllegalStateException(
         s"deleteWhereEqual on $root conflicted with a concurrent snapshot; " +
@@ -3910,15 +3835,19 @@ object SnapshotLog {
         .foreach(d => fs.delete(new Path(s"$root/$d"), true))
     }
     if (nKeys == 0L && srcRows == 0L) { cleanupData(); return base }
+    // first-attempt ids of the written columns: the fallback stamp for
+    // a nested path a race winner renamed away (the id survives)
+    val origIds = tableIds
+    val writtenNames = writtenFields.map(_._1).toSet
     var attempt = 0
     while (true) {
       val next = base + 1
-      // stamp ids for the WRITTEN columns only — claiming a race
-      // winner's new column on files that physically lack it would
-      // corrupt the manifest's physical-content contract
-      val writtenNames = writtenFields.map(_._1).toSet
+      // stamp ids for the WRITTEN columns (and their nested paths)
+      // only — claiming a race winner's new column on files that
+      // physically lack it would corrupt the manifest's
+      // physical-content contract
       val written = written0.map(f => f.copy(
-        ids = tableIds.filter { case (n, _) => writtenNames.contains(n) },
+        ids = idsForWrittenCols(origIds ++ tableIds, writtenNames),
         stats = f.stats + (SeqStatName -> (next.toString, next.toString)),
         sortedBy = if (eqSort.isEmpty) "" else renderSortOrder(eqSort)))
       // a key set on an EMPTY table retracts nothing — the bootstrap
@@ -3928,38 +3857,23 @@ object SnapshotLog {
         else Some(EqRef(dir, nKeys, seq = next,
           keyIds = keyCols.map(k => k -> tableIds(k)).toMap))
       val newRef = writeFileList(fs, root, next, written, tableSchema)
-      val ddl = tableSchema.toDDL.replace("\t", " ").replace("\n", " ")
-      val baseRows = rawOpt.map(_.rows).getOrElse(0L)
-      val refs = rawOpt.map(_.refs).getOrElse(Seq.empty) :+ newRef
-      val m = manifestPath(root, next)
-      val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      fs.mkdirs(m.getParent)
-      val out = fs.create(tmp, true)
+      val baseRaw = rawOpt.getOrElse(
+        RawManifest(0L, 0L, "", 0L, "", Seq.empty, Seq.empty))
       // rows: parent's count (an upper bound while key sets are
       // outstanding — the scan-free write cannot know the matched
       // count) plus the appended rows
-      try out.write(
-        ((s"$next\t$base\t$operation\t${baseRows + srcRows}\t$ddl" +
-          s"\t${idsField(tableIds)}\t$lastColId") +:
-          (refs.map(r =>
-            refLine(r)) ++
-            rawOpt.map(_.inline).getOrElse(Seq.empty).map(fileLine) ++
-            dRefLines(rawOpt.map(_.dRefs).getOrElse(Seq.empty)) ++
-            eqLines(rawOpt.map(_.eqRefs).getOrElse(Seq.empty) ++ eqOpt) ++
-            specLines(rawOpt.map(_.spec).getOrElse(Seq.empty)) ++
-            sortLines(rawOpt.map(_.sortOrder).getOrElse(Seq.empty)) :+
-            commitTimeLine()))
-          .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (publish(fs, tmp, m)) {
+      if (publishManifest(fs, manifestPath(root, next), baseRaw.copy(
+          id = next, parent = base, operation = operation,
+          rows = baseRaw.rows + srcRows, schemaDdl = headerDdl(tableSchema),
+          refs = baseRaw.refs :+ newRef, ids = tableIds,
+          lastColId = lastColId, eqRefs = baseRaw.eqRefs ++ eqOpt))) {
         if (eqOpt.isEmpty && nKeys > 0L)
           fs.delete(new Path(s"$root/$dir"), true) // unreferenced bootstrap keys
         return next
       }
-      fs.delete(tmp, false)
       fs.delete(new Path(s"$root/${newRef.path}"), false)
       attempt += 1
-      if (attempt >= 20) {
+      if (attempt >= MaxCommitRaces) {
         cleanupData()
         throw new IllegalStateException(
           s"mergeIntoEqual on $root lost $attempt commit races; aborting")
@@ -4107,24 +4021,12 @@ object SnapshotLog {
         writeDeleteVector(spark, root, hits, next)
       }
     val delRows = dvOpt.map(_._1.delRows).getOrElse(0L)
-    val ddl = tableSchema.toDDL.replace("\t", " ").replace("\n", " ")
-    val m = manifestPath(root, next)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(
-      ((s"$next\t$base\trewrite-eq\t${raw.rows - delRows}\t$ddl" +
-        s"\t${idsField(tableIds)}\t$lastColId") +:
-        (raw.refs.map(r =>
-          refLine(r)) ++
-          raw.inline.map(fileLine) ++
-          dRefLines(raw.dRefs ++ dvOpt.map(_._1)) ++
-          specLines(raw.spec) ++
-          sortLines(raw.sortOrder) :+ commitTimeLine()))
-        .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    // the key sets leave the manifest: the new vector replaces them
+    if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
+        parent = base, operation = "rewrite-eq", rows = raw.rows - delRows,
+        schemaDdl = headerDdl(tableSchema), ids = tableIds,
+        lastColId = lastColId, dRefs = raw.dRefs ++ dvOpt.map(_._1),
+        eqRefs = Seq.empty))) {
       dvOpt.foreach { case (dRef, dvDir) =>
         fs.delete(new Path(s"$root/${dRef.path}"), false)
         fs.delete(new Path(s"$root/$dvDir"), true)
@@ -4263,41 +4165,16 @@ object SnapshotLog {
       operation: String = "mor-merge"): Long = {
     val fs = fsOf(spark, root)
     val baseRaw = rawManifest(spark, root, base0)
-    val allFiles = baseRaw.inline ++
-      baseRaw.refs.flatMap(r => readFileList(fs, root, r.path))
     val tableSchema = StructType.fromDDL(baseRaw.schemaDdl)
     val (tableIds, lastColId) = currentIdsOf(baseRaw, tableSchema)
-    val tableCols = tableSchema.fieldNames.map(col).toSeq
-    val dvOpt = dead.filter(_ => allFiles.nonEmpty)
-      .flatMap(d => writeDeleteVector(spark, root, d, base0 + 1))
-    // the new files record the table's declared bucket layout
-    // (inherited like a CoW rewrite's), so readBuckets stays sharp
-    // declared sort: the appended files sort + stamp like any append —
-    // MoR churn must not decay reported-ordering eligibility (a DV
-    // only removes rows from a sorted file, which stays sorted)
-    val morSort = sortApplyFor(baseRaw.sortOrder, adds)
-    val written0 = writeDataFiles(spark, root,
-      adds.select(tableCols: _*), base0 + 1, None,
-      inheritedBucketStats(allFiles, tableSchema, tableIds),
-      sortApply = morSort)
-      .map(f => f.copy(ids =
-        idsForWrittenCols(tableIds, tableSchema.fieldNames.toSet),
-        sortedBy = if (morSort.isEmpty) "" else renderSortOrder(morSort)))
-    val srcRows = written0.iterator.map(_.rows).sum
-    val delRows = dvOpt.map(_._1.delRows).getOrElse(0L)
-    val ddl = tableSchema.toDDL.replace("\t", " ").replace("\n", " ")
-    val myTargets: Set[String] = dvOpt match {
+    val payload = writeMorPayload(spark, root, baseRaw, dead, adds, base0 + 1)
+    val myTargets: Set[String] = payload.dv match {
       case Some((dRef, _)) =>
         readDeleteList(fs, root, dRef.path).map(_.target).toSet
       case None => Set.empty
     }
     def abort(): Nothing = {
-      written0.map(f => f.path.substring(0, f.path.lastIndexOf('/'))).distinct
-        .foreach(d => fs.delete(new Path(s"$root/$d"), true))
-      dvOpt.foreach { case (dRef, dvDir) =>
-        fs.delete(new Path(s"$root/${dRef.path}"), false)
-        fs.delete(new Path(s"$root/$dvDir"), true)
-      }
+      payload.discard(fs, root)
       throw new IllegalStateException(
         s"$operation on $root conflicted with a concurrent snapshot on " +
           "the same rows (or a schema/spec/equality-delete change); " +
@@ -4326,7 +4203,7 @@ object SnapshotLog {
         .filter(e => myTargets(e.target))
       if (newEntries.isEmpty) return true // file-level disjoint
       // coordinate-level check: bounded by the two vectors' rows
-      val mine = spark.read.parquet(s"$root/${dvOpt.get._2}")
+      val mine = spark.read.parquet(s"$root/${payload.dv.get._2}")
         .select(col("t_path"), col("t_pos"))
       val theirs = spark.read
         .parquet(newEntries.map(_.dvDir).distinct.map(d => s"$root/$d"): _*)
@@ -4341,31 +4218,22 @@ object SnapshotLog {
       val next = base + 1
       // __seq re-stamped per attempt: equality deletes committed later
       // must sequence AFTER these rows whatever id the race settles on
-      val written = written0.map(f => f.copy(
+      val written = payload.written.map(f => f.copy(
         stats = f.stats + (SeqStatName -> (next.toString, next.toString))))
       val newRef = writeFileList(fs, root, next, written, tableSchema)
-      val m = manifestPath(root, next)
-      val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      fs.mkdirs(m.getParent)
-      val out = fs.create(tmp, true)
-      try out.write(
-        ((s"$next\t$base\t$operation\t${raw.rows - delRows + srcRows}\t$ddl" +
-          s"\t${idsField(tableIds)}\t$lastColId") +:
-          ((raw.refs :+ newRef).map(r =>
-            refLine(r)) ++
-            raw.inline.map(fileLine) ++
-            dRefLines(raw.dRefs ++ dvOpt.map(_._1)) ++
-            eqLines(raw.eqRefs) ++
-            specLines(raw.spec) ++
-            sortLines(raw.sortOrder) :+ commitTimeLine()))
-          .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      if (publish(fs, tmp, m)) return next
-      fs.delete(tmp, false)
+      if (publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
+          parent = base, operation = operation,
+          rows = raw.rows - payload.delRows + payload.srcRows,
+          schemaDdl = headerDdl(tableSchema), refs = raw.refs :+ newRef,
+          ids = tableIds, lastColId = lastColId,
+          dRefs = raw.dRefs ++ payload.dv.map(_._1))))
+        return next
       fs.delete(new Path(s"$root/${newRef.path}"), false)
       attempt += 1
       val head = currentId(spark, root)
       val headRaw = rawManifest(spark, root, head)
+      // a tighter bound than MaxCommitRaces: each rebase check can run
+      // a coordinate join against the winner's vectors
       if (attempt > 5 || !rebaseSafe(headRaw)) abort()
       raw = headRaw
       base = head
@@ -4417,55 +4285,75 @@ object SnapshotLog {
     require(k == baseK,
       s"branch $name of $root advanced since discovery ($baseK -> $k); " +
         "recompute against the branch head and retry")
-    val allFiles = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
     val tableSchema = StructType.fromDDL(raw.schemaDdl)
     val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
-    val tableCols = tableSchema.fieldNames.map(col).toSeq
     val pubSeq = fork + 1
-    val dvOpt = dead.filter(_ => allFiles.nonEmpty)
-      .flatMap(d => writeDeleteVector(spark, root, d, pubSeq))
-    // declared sort: branch-staged MoR appends sort + stamp too, so a
-    // WAP publish cannot silently decay ordering eligibility
-    val brSort = sortApplyFor(raw.sortOrder, adds)
-    val written = writeDataFiles(spark, root,
-      adds.select(tableCols: _*), pubSeq, None,
-      inheritedBucketStats(allFiles, tableSchema, tableIds),
-      sortApply = brSort)
-      .map(f => f.copy(
-        ids = tableIds.filter { case (n, _) =>
-          tableSchema.fieldNames.contains(n) },
-        stats = f.stats + (SeqStatName -> (pubSeq.toString, pubSeq.toString)),
-        sortedBy = if (brSort.isEmpty) "" else renderSortOrder(brSort)))
+    val payload = writeMorPayload(spark, root, raw, dead, adds, pubSeq)
+    val written = payload.written.map(f => f.copy(
+      stats = f.stats + (SeqStatName -> (pubSeq.toString, pubSeq.toString))))
     val newRef = writeFileList(fs, root, pubSeq, written, tableSchema)
-    val srcRows = written.iterator.map(_.rows).sum
-    val delRows = dvOpt.map(_._1.delRows).getOrElse(0L)
     val next = k + 1
-    val raw2 = RawManifest(next, if (k == 0) fork else k, operation,
-      raw.rows - delRows + srcRows,
-      tableSchema.toDDL.replace("\t", " ").replace("\n", " "),
-      raw.refs :+ newRef, raw.inline, tableIds, lastColId,
-      raw.dRefs ++ dvOpt.map(_._1), raw.eqRefs, raw.spec,
-      System.currentTimeMillis(), raw.sortOrder)
-    val m = branchManifestPath(root, name, next)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(manifestText(raw2).getBytes("UTF-8")) finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    if (!publishManifest(fs, branchManifestPath(root, name, next), raw.copy(
+        id = next, parent = if (k == 0) fork else k, operation = operation,
+        rows = raw.rows - payload.delRows + payload.srcRows,
+        schemaDdl = headerDdl(tableSchema), refs = raw.refs :+ newRef,
+        ids = tableIds, lastColId = lastColId,
+        dRefs = raw.dRefs ++ payload.dv.map(_._1)))) {
       fs.delete(new Path(s"$root/${newRef.path}"), false)
-      written.map(f => f.path.substring(0, f.path.lastIndexOf('/'))).distinct
-        .foreach(d => fs.delete(new Path(s"$root/$d"), true))
-      dvOpt.foreach { case (dRef, dvDir) =>
-        fs.delete(new Path(s"$root/${dRef.path}"), false)
-        fs.delete(new Path(s"$root/$dvDir"), true)
-      }
+      payload.discard(fs, root)
       throw new IllegalStateException(
         s"$operation on branch $name of $root lost the publish race; " +
           "recompute against the branch head and retry")
     }
     next
+  }
+
+  /** What a merge-on-read commit writes before its manifest, shared by
+    * [[morCommit]] and [[morCommitBranch]]: `dead`'s coordinates as one
+    * positional delete vector (none when nothing matched or the
+    * snapshot has no files) and `adds` as data files under the
+    * snapshot's schema. Both are named for commit `seq`; the files
+    * carry the table's bucket layout (inherited like a CoW rewrite's,
+    * so readBuckets stays sharp), its declared sort (MoR churn must not
+    * decay reported-ordering eligibility — a DV only removes rows from
+    * a sorted file, which stays sorted) and the field ids of every
+    * written column, nested paths included. `__seq` is the caller's
+    * stamp.
+    */
+  private final case class MorPayload(dv: Option[(DeleteRef, String)],
+      written: Seq[FileEntry]) {
+    def delRows: Long = dv.map(_._1.delRows).getOrElse(0L)
+    def srcRows: Long = written.iterator.map(_.rows).sum
+    /** Reclaim the payload of a commit that will not land. */
+    def discard(fs: FileSystem, root: String): Unit = {
+      written.map(f => f.path.substring(0, f.path.lastIndexOf('/'))).distinct
+        .foreach(d => fs.delete(new Path(s"$root/$d"), true))
+      dv.foreach { case (dRef, dvDir) =>
+        fs.delete(new Path(s"$root/${dRef.path}"), false)
+        fs.delete(new Path(s"$root/$dvDir"), true)
+      }
+    }
+  }
+
+  private def writeMorPayload(spark: SparkSession, root: String,
+      raw: RawManifest, dead: Option[DataFrame], adds: DataFrame,
+      seq: Long): MorPayload = {
+    val fs = fsOf(spark, root)
+    val allFiles = raw.inline ++
+      raw.refs.flatMap(r => readFileList(fs, root, r.path))
+    val tableSchema = StructType.fromDDL(raw.schemaDdl)
+    val tableIds = currentIdsOf(raw, tableSchema)._1
+    val dv = dead.filter(_ => allFiles.nonEmpty)
+      .flatMap(d => writeDeleteVector(spark, root, d, seq))
+    val sort = sortApplyFor(raw.sortOrder, adds)
+    val written = writeDataFiles(spark, root,
+      adds.select(tableSchema.fieldNames.map(col).toSeq: _*), seq, None,
+      inheritedBucketStats(allFiles, tableSchema, tableIds),
+      sortApply = sort)
+      .map(f => f.copy(
+        ids = idsForWrittenCols(tableIds, tableSchema.fieldNames.toSet),
+        sortedBy = if (sort.isEmpty) "" else renderSortOrder(sort)))
+    MorPayload(dv, written)
   }
 
   /** Copy-on-write MERGE (upsert): table rows whose `keyCols` match a
@@ -4571,8 +4459,8 @@ object SnapshotLog {
     * exists — the commit protocol's one primitive. Local filesystems
     * get a hard link (atomic EEXIST failure at the syscall); remote
     * filesystems rely on no-replace rename semantics (HDFS's rename
-    * returns false on an existing destination). The caller deletes
-    * `tmp` on the failure path.
+    * returns false on an existing destination). [[publishNew]], the
+    * only caller, deletes `tmp` on the failure path.
     *
     * LIMITATION — object stores: on a FileSystem whose rename is
     * copy+delete with no atomic no-replace (S3A and friends), the
@@ -4596,6 +4484,35 @@ object SnapshotLog {
         case _: java.nio.file.FileAlreadyExistsException => false
       }
     } else !fs.exists(m) && fs.rename(tmp, m)
+
+  /** The commit protocol's one write: `text` goes to a tmp file next to
+    * `target` (`<target>.tmp.<8 hex>`, the name [[vacuumOrphans]]
+    * reclaims for manifests), then [[publish]] moves it into place
+    * without replacing. Returns whether this write won; a lost race
+    * deletes the tmp, so only a crash between create and publish
+    * strands one.
+    */
+  private def publishNew(fs: FileSystem, target: Path, text: String): Boolean = {
+    val tmp = new Path(
+      s"$target.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
+    fs.mkdirs(target.getParent)
+    val out = fs.create(tmp, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    val won = publish(fs, tmp, target)
+    if (!won) fs.delete(tmp, false)
+    won
+  }
+
+  /** Publish `raw` as manifest `m` through [[publishNew]], stamped with
+    * the commit time (the `T` line) — every snapshot-log commit lands
+    * here, rendered only by [[manifestText]].
+    */
+  private def publishManifest(fs: FileSystem, m: Path, raw: RawManifest): Boolean =
+    publishNew(fs, m,
+      manifestText(raw.copy(commitTime = System.currentTimeMillis())))
+
+  /** Lost commit races a retrying verb tolerates before it aborts. */
+  private val MaxCommitRaces = 20
 
   /** `input_file_name()` URIs → the manifest's root-relative form.
     * Every data file lives under `root/data/`, so the relative path is
@@ -5042,37 +4959,19 @@ object SnapshotLog {
     val next = base + 1
     val spec = specOverride.getOrElse(editSpec(raw.spec, editKey))
     val refs = raw.refs.map(r => r.copy(band = editBandKeys(r.band, editKey)))
-    val ddl = schema.toDDL.replace("\t", " ").replace("\n", " ")
-    val m = manifestPath(root, next)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(
-      ((s"$next\t$base\t$operation\t${raw.rows}\t$ddl" +
-        s"\t${idsField(ids)}\t$lastColId") +:
-        (refs.map(r =>
-          refLine(r)) ++
-          raw.inline.map(fileLine) ++
-          // delete vectors ride metadata-only commits untouched: DV
-          // rows hold (file, position) coordinates, no column data, so
-          // rename/widen/drop never invalidate them — and a rollback
-          // restores its target's vectors with its file lists.
-          // Equality deletes ride too: their key refs bind by FIELD ID
-          // (rename/widen re-resolve at read; drop of a keyed column is
-          // refused in dropColumn), and a rollback restores the
-          // target's key sets exactly like its vectors.
-          dRefLines(raw.dRefs) ++
-          eqLines(raw.eqRefs) ++
-          specLines(spec) ++
-          sortLines(raw.sortOrder) :+ commitTimeLine()))
-        .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    // delete vectors ride metadata-only commits untouched: DV rows hold
+    // (file, position) coordinates, no column data, so rename/widen/
+    // drop never invalidate them — and a rollback restores its
+    // target's vectors with its file lists. Equality deletes ride too:
+    // their key refs bind by FIELD ID (rename/widen re-resolve at read;
+    // drop of a keyed column is refused in dropColumn), and a rollback
+    // restores the target's key sets exactly like its vectors.
+    if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
+        parent = base, operation = operation, schemaDdl = headerDdl(schema),
+        refs = refs, ids = ids, lastColId = lastColId, spec = spec)))
       throw new IllegalStateException(
         s"$operation on $root conflicted with a concurrent snapshot; " +
           "recompute against the new current schema and retry")
-    }
     next
   }
 
@@ -5495,7 +5394,6 @@ object SnapshotLog {
     val sortStamp =
       if (sortApplied.isEmpty) "" else renderSortOrder(sortApplied)
     while (true) {
-      val ddl = tableSchema.toDDL.replace("\t", " ").replace("\n", " ")
       val next = base + 1
       // this commit's files carry the name→id mapping for the columns
       // the frame actually wrote, under their PHYSICAL names;
@@ -5528,32 +5426,14 @@ object SnapshotLog {
       // every header between eq-delete and its conversion)
       val total = refs.iterator.map(_.rows).sum -
         carriedD.iterator.map(_.delRows).sum
-      val m = manifestPath(root, next)
-      val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-      fs.mkdirs(m.getParent)
-      val out = fs.create(tmp, true)
-      try out.write(
-        ((s"$next\t$base\t$operation\t$total\t$ddl" +
-          s"\t${idsField(tableIds)}\t$lastColId") +:
-          (refs.map(r =>
-            refLine(r)) ++
-            dRefLines(carriedD) ++
-            eqLines(carriedE) ++
-            specLines(carriedP) ++
-            sortLines(carriedO) :+ commitTimeLine()))
-          .mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      // publish must be atomic no-replace: on HDFS, rename to an
-      // existing destination returns false; on the LOCAL filesystem
-      // (specs, bench) Hadoop's rename is POSIX rename, which silently
-      // REPLACES the destination — the exists() pre-check alone is a
-      // TOCTOU window where two racing committers both publish and one
-      // snapshot is lost. There, hard-LINK the tmp into place:
-      // link(2) fails EEXIST atomically, so exactly one racer wins.
-      if (publish(fs, tmp, m)) return next
-      fs.delete(tmp, false)
+      if (publishManifest(fs, manifestPath(root, next),
+          RawManifest(next, base, operation, total, headerDdl(tableSchema),
+            refs, Seq.empty, tableIds, lastColId, carriedD, carriedE,
+            carriedP, sortOrder = carriedO)))
+        return next
       attempt += 1
-      require(attempt < 20, s"commit to $root lost ${attempt} races; aborting")
+      require(attempt < MaxCommitRaces,
+        s"commit to $root lost ${attempt} races; aborting")
       val prevBase = base
       base = currentId(spark, root)
       // publish failed yet the VISIBLE head did not move: the id we
@@ -6264,11 +6144,14 @@ object SnapshotLog {
       .foldLeft(0L)(math.max)
   }
 
-  /** Serialize a parsed manifest back to its wire text — the
-    * fast-forward publisher's tool; ManifestRoundtripSpec pins
-    * parse∘serialize identity on every line type.
+  /** Serialize a parsed manifest back to its wire text — with
+    * [[parseManifest]] the only code that knows the manifest layout;
+    * every commit renders through it ([[publishManifest]]).
+    * BranchRefSpec's roundtrip test pins parse∘serialize on every line
+    * type, and ManifestCanonicalSpec pins that every commit verb's
+    * bytes are this rendering of their own parse.
     */
-  private def manifestText(raw: RawManifest): String =
+  private[graft] def manifestText(raw: RawManifest): String =
     ((s"${raw.id}\t${raw.parent}\t${raw.operation}\t${raw.rows}" +
       s"\t${raw.schemaDdl}\t${idsField(raw.ids)}\t${raw.lastColId}") +:
       (raw.refs.map(r =>
@@ -6355,23 +6238,16 @@ object SnapshotLog {
       merged)
     val refs = base.refs :+ newRef
     val next = k + 1
-    val raw2 = RawManifest(next, if (k == 0) fork else k, "branch-append",
-      refs.iterator.map(_.rows).sum -
-        base.dRefs.iterator.map(_.delRows).sum,
-      merged.toDDL.replace("\t", " ").replace("\n", " "),
-      refs, Seq.empty, ids, last, base.dRefs, base.eqRefs, base.spec,
-      System.currentTimeMillis(), base.sortOrder)
-    val m = branchManifestPath(root, name, next)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(manifestText(raw2).getBytes("UTF-8")) finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    if (!publishManifest(fs, branchManifestPath(root, name, next), base.copy(
+        id = next, parent = if (k == 0) fork else k,
+        operation = "branch-append",
+        rows = refs.iterator.map(_.rows).sum -
+          base.dRefs.iterator.map(_.delRows).sum,
+        schemaDdl = headerDdl(merged), refs = refs, inline = Seq.empty,
+        ids = ids, lastColId = last)))
       throw new IllegalStateException(
         s"appendToBranch lost a race on branch $name of $root; " +
           "re-read the branch head and retry")
-    }
     next
   }
 
@@ -6405,20 +6281,11 @@ object SnapshotLog {
       s"cannot fast-forward branch $name: main advanced $fork -> $cur " +
         "since the fork (diverged); rebase or drop the branch")
     val next = fork + 1
-    val raw2 = head.copy(id = next, parent = fork,
-      operation = s"fast-forward=$name",
-      commitTime = System.currentTimeMillis())
-    val m = manifestPath(root, next)
-    val tmp = new Path(s"$m.tmp.${java.util.UUID.randomUUID().toString.take(8)}")
-    fs.mkdirs(m.getParent)
-    val out = fs.create(tmp, true)
-    try out.write(manifestText(raw2).getBytes("UTF-8")) finally out.close()
-    if (!publish(fs, tmp, m)) {
-      fs.delete(tmp, false)
+    if (!publishManifest(fs, manifestPath(root, next), head.copy(id = next,
+        parent = fork, operation = s"fast-forward=$name")))
       throw new IllegalStateException(
         s"fast-forward of branch $name to $root lost the publish race; " +
           "main diverged — rebase or drop the branch")
-    }
     dropBranch(spark, root, name)
     next
   }

@@ -42,6 +42,22 @@ class CodeDisciplineSpec extends AnyFunSuite {
     assert(builders === Seq("GraftSession.scala"), "SparkSession built outside GraftSession")
   }
 
+  test("snapshot-log commits publish through one writer and one manifest renderer") {
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))
+    def count(re: String): Int = re.r.findAllIn(src).size
+    def literal(s: String): Int = count(java.util.regex.Pattern.quote(s))
+    // one function names the tmp file and calls the no-replace publish
+    assert(literal(".tmp.${") === 1, "tmp files for a publish named in more than one place")
+    assert(count("""(?<!def )\bpublish\(""") === 1, "publish called outside the one publisher")
+    // the header (`…<TAB>ddl<TAB>ids<TAB>lastColId`) is rendered once,
+    // in manifestText; commit time is stamped only by the publisher
+    assert(count("""\\t\$\{idsField\([^)]*\)\}\\t\$\{?[\w.]*[lL]ast""") === 1,
+      "a manifest header rendered outside manifestText")
+    assert(literal("commitTimeLine") === 0)
+    assert(literal("""toDDL.replace("\t", " ")""") === 1)
+  }
+
   test("every registered query has a DuckDB oracle") {
     val missing = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
     assert(missing.isEmpty, s"queries without oracles: $missing")

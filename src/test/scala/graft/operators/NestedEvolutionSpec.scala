@@ -265,4 +265,45 @@ class NestedEvolutionSpec extends SparkSpec {
     assert(e.getMessage.contains("rewrite files first"),
       s"by-name era must refuse nested add: ${e.getMessage}")
   }
+
+  /** Upsert source over era-A: k=5 replaced, k=11 inserted. */
+  private def upsertSource() = {
+    import spark.implicits._
+    Seq((5L, ("m5", 500L)), (11L, ("m11", 110L))).toDF("k", "meta")
+      .select(col("k"), col("meta").cast(
+        "struct<name: string, qty: bigint>").as("meta"))
+  }
+
+  /** Rename meta.name -> label, then read era-A and the upsert's files. */
+  private def assertRenamedUpsert(root: String): Unit = {
+    SnapshotLog.renameColumn(spark, root, "meta.name", "label")
+    val rows = SnapshotLog.read(spark, root)
+      .select(col("k"), col("meta.label"), col("meta.qty")).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).sortBy(_._1)
+      .toSeq
+    val want = ((1 to 10).filterNot(_ == 5)
+      .map(k => (k.toLong, s"n$k", k * 10L)) ++
+      Seq((5L, "m5", 500L), (11L, "m11", 110L))).sortBy(_._1)
+    assert(rows == want)
+  }
+
+  test("files an equality merge wrote keep their nested ids through a rename") {
+    val root = newRoot("eqmerge")
+    eraA(root, 1 to 10)
+    SnapshotLog.mergeIntoEqual(spark, root, upsertSource(), Seq("k"))
+    assertRenamedUpsert(root)
+  }
+
+  test("files a WAP MERGE staged keep their nested ids through fast-forward and a rename") {
+    val root = newRoot("wapmerge")
+    eraA(root, 1 to 10)
+    upsertSource().createOrReplaceTempView("nested_wap_src")
+    spark.conf.set("spark.graft.wap.branch", "nested")
+    try spark.sql(s"MERGE INTO $cat.`$root` t USING nested_wap_src s " +
+      "ON t.k = s.k WHEN MATCHED THEN UPDATE SET * " +
+      "WHEN NOT MATCHED THEN INSERT *")
+    finally spark.conf.unset("spark.graft.wap.branch")
+    SnapshotLog.fastForward(spark, root, "nested")
+    assertRenamedUpsert(root)
+  }
 }

@@ -1,14 +1,57 @@
 package graft.operators
 
 import graft.SparkSpec
+import java.io.IOException
+import java.net.URI
 import java.nio.file.Files
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
+
+/** `crashfs:` — the local filesystem under its own scheme, so the
+  * commit protocol takes the generic `!exists && rename` publish. Its
+  * switch fails the next manifest tmp create (the file is left behind,
+  * as a crash leaves it) or the publish rename of a manifest tmp.
+  */
+class CrashFs extends FilterFileSystem(new CrashFs.Local) {
+  override def getScheme: String = CrashFs.Scheme
+
+  private def armed(mode: String, p: Path): Boolean =
+    CrashFs.failing == mode && p.getName.contains(".manifest.tmp.")
+
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    val out = super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+    if (armed("create", f)) {
+      out.close()
+      throw new IOException(s"injected crash creating $f")
+    }
+    out
+  }
+
+  override def rename(src: Path, dst: Path): Boolean =
+    if (armed("rename", src)) throw new IOException(s"injected crash renaming $src")
+    else super.rename(src, dst)
+}
+
+object CrashFs {
+  val Scheme = "crashfs"
+  /** "create", "rename" or "" (off). */
+  @volatile var failing: String = ""
+
+  class Local extends RawLocalFileSystem {
+    override def getUri: URI = URI.create(s"$Scheme:///")
+  }
+}
 
 /** Commit-protocol hardening from the round-10 adversarial pass:
   * beyond-head crash replay of a staged publish, NaN-stat degradation
-  * in the metadata path, tmp-manifest debris reclamation, and the
-  * rename-aware band re-key on staged splices.
+  * in the metadata path, tmp-manifest debris reclamation, the
+  * rename-aware band re-key on staged splices, and a crash injected at
+  * each step of the publish.
   */
 class SnapshotCommitProtocolSpec extends SparkSpec {
 
@@ -18,6 +61,71 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
     Files.createTempDirectory("graft_cproto").resolve("log").toString
   private def fs(root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** For each crash point, fresh log: `setUp` on the plain root, then
+    * `verb` on the same directory under `crashfs:` — once crashing,
+    * once clean. The crash must leave the previous snapshot reading
+    * exactly, the clean retry must commit, and [[SnapshotLog.vacuumOrphans]]
+    * must reclaim the stranded tmp manifest once it ages.
+    */
+  private def survivesCrashes(setUp: String => Unit)(verb: String => Long): Unit = {
+    spark.sparkContext.hadoopConfiguration
+      .set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashFs].getName)
+    for (mode <- Seq("create", "rename")) {
+      val root = newRoot()
+      setUp(root)
+      val head = SnapshotLog.currentId(spark, root)
+      val before = rowSet(SnapshotLog.read(spark, root))
+      val crashRoot = s"${CrashFs.Scheme}://$root"
+      CrashFs.failing = mode
+      val e = try intercept[IOException](verb(crashRoot))
+        finally CrashFs.failing = ""
+      assert(e.getMessage.contains("injected crash"))
+      assert(SnapshotLog.currentId(spark, root) === head, s"$mode crash moved the head")
+      assert(rowSet(SnapshotLog.read(spark, root)) === before)
+      val f = fs(root)
+      val stranded = f.listStatus(new Path(s"$root/snap")).map(_.getPath)
+        .filter(_.getName.contains(".manifest.tmp."))
+      assert(stranded.length === 1, s"$mode crash should strand one tmp")
+      assert(verb(crashRoot) === head + 1, s"commit after a $mode crash")
+      val after = rowSet(SnapshotLog.read(spark, root))
+      f.setTimes(stranded.head, System.currentTimeMillis() - 7200000L, -1)
+      SnapshotLog.vacuumOrphans(spark, root, graceMs = 3600000L)
+      assert(!f.exists(stranded.head), s"$mode crash tmp not reclaimed")
+      assert(rowSet(SnapshotLog.read(spark, root)) === after)
+    }
+  }
+
+  private def base(root: String): Unit =
+    SnapshotLog.append(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+
+  test("a crash at the publish of an append leaves the previous snapshot") {
+    survivesCrashes(base)(r =>
+      SnapshotLog.append(spark, r, Seq((3L, "c")).toDF("k", "v")))
+  }
+
+  test("a crash at the publish of a merge-on-read delete leaves the previous snapshot") {
+    survivesCrashes(base)(r =>
+      SnapshotLog.deleteWhereMoR(spark, r, col("k") === 1L))
+  }
+
+  test("a crash at the publish of an equality merge leaves the previous snapshot") {
+    survivesCrashes(base)(r => SnapshotLog.mergeIntoEqual(spark, r,
+      Seq((2L, "B"), (4L, "d")).toDF("k", "v"), Seq("k")))
+  }
+
+  test("a crash at the publish of a sort-order change leaves the previous snapshot") {
+    survivesCrashes(base)(r =>
+      SnapshotLog.setSortOrder(spark, r, Seq(SnapshotLog.SortField("k"))))
+  }
+
+  test("a crash at the publish of a fast-forward leaves the previous snapshot") {
+    survivesCrashes { root =>
+      base(root)
+      SnapshotLog.createBranch(spark, root, "ff")
+      SnapshotLog.appendToBranch(spark, root, "ff", Seq((5L, "e")).toDF("k", "v"))
+    }(r => SnapshotLog.fastForward(spark, r, "ff"))
+  }
 
   test("replaying a crashed staged publish after a CoW rewrite does not re-splice") {
     val root = newRoot()
