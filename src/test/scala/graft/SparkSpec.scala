@@ -1,8 +1,11 @@
 package graft
 
+import graft.recipes.{RecipeEtl, RecipeGoldenQueries}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
+import org.scalactic.source.Position
+import org.scalatest.{Assertions, BeforeAndAfterAll}
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** One shared local session for the whole test run (suites run
   * sequentially in the forked test JVM; recreating SparkContexts per
@@ -22,8 +25,29 @@ object TestSpark {
   }
 
   val FixtureDir = "src/test/resources/fixtures"
-  val GoldenDir = "/root/reference/output"
+  val GoldenDir = RecipeGoldenQueries.DefaultGoldenDir
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** The five CSVs (plus `validation_report.csv`) that `RecipeEtl.run`
+    * writes from the document fixtures: the reference-shaped star tables
+    * every checkout has. Written once per test JVM into a fresh directory
+    * (the pid keeps a killed run's leftovers out), deleted at JVM exit.
+    */
+  lazy val FixtureExports: String =
+    TempDirs.staged(s"fixture_exports_${ProcessHandle.current().pid()}") { dir =>
+      RecipeEtl.run(spark, FixtureDir, dir.toString)
+    }.toString
+
+  /** Path of `relPath` inside the reference checkout (the directory that
+    * holds [[GoldenDir]]). Cancels the calling test, naming the path, when
+    * the file is absent: the golden diffs compare against the reference's
+    * own bytes, which the repository does not hold.
+    */
+  def referenceFile(relPath: String)(implicit pos: Position): String = {
+    val p = Paths.get(GoldenDir).getParent.resolve(relPath)
+    Assertions.assume(Files.exists(p), s"reference file $p is absent")
+    p.toString
+  }
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -35,5 +59,5 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   def rowSet(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
     df.collect().toSeq
       .map(r => (0 until r.length).map(i => String.valueOf(r.get(i))))
-      .sortBy(_.mkString(""))
+      .sortBy(_.mkString("\u0001"))
 }

@@ -9,6 +9,9 @@ import org.apache.spark.sql.DataFrame
   * run through Normalize must reproduce every golden row exactly,
   * including the CSV stringification edge cases (timestamp format,
   * whole-float quantities, null rating → empty).
+  *
+  * The five "matches golden" tests read the reference checkout
+  * (`TestSpark.referenceFile`) and cancel where it is absent.
   */
 class NormalizeGoldenSpec extends SparkSpec {
 
@@ -23,7 +26,7 @@ class NormalizeGoldenSpec extends SparkSpec {
     * Spark CSV reader).
     */
   private def golden(name: String): Seq[Seq[String]] =
-    rowSet(CsvIO.readStrings(spark, s"${TestSpark.GoldenDir}/$name"))
+    rowSet(CsvIO.readStrings(spark, TestSpark.referenceFile(s"output/$name")))
 
   private def normalized(df: DataFrame): Seq[Seq[String]] =
     rowSet(CsvIO.stringified(df))

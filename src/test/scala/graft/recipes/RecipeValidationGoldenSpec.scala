@@ -9,20 +9,24 @@ import org.apache.spark.sql.functions._
   * PASS/OK values, same table ordering and row counts — plus FAIL-path
   * coverage on crafted bad rows (the golden report exercises only the
   * clean path).
+  *
+  * The validated tables are the fixture exports (`TestSpark.FixtureExports`),
+  * so the 266/266, per-table and `withTimestamp` tests run everywhere.
+  * The record-ID test diffs against the reference checkout's own
+  * `validation_report.csv` (`TestSpark.referenceFile`) and cancels where
+  * that checkout is absent.
   */
 class RecipeValidationGoldenSpec extends SparkSpec {
 
-  private lazy val tables: Map[String, org.apache.spark.sql.DataFrame] = Map(
-    "users" -> CsvIO.readStrings(spark, s"${TestSpark.GoldenDir}/users.csv"),
-    "recipes" -> CsvIO.readStrings(spark, s"${TestSpark.GoldenDir}/recipe.csv"),
-    "ingredients" -> CsvIO.readStrings(spark, s"${TestSpark.GoldenDir}/ingredients.csv"),
-    "steps" -> CsvIO.readStrings(spark, s"${TestSpark.GoldenDir}/steps.csv"),
-    "interactions" -> CsvIO.readStrings(spark, s"${TestSpark.GoldenDir}/interactions.csv"))
+  private lazy val tables: Map[String, org.apache.spark.sql.DataFrame] =
+    RecipeEtl.TableFiles.map { case (table, file) =>
+      table -> CsvIO.readStrings(spark, s"${TestSpark.FixtureExports}/$file")
+    }
 
   private lazy val report = RecipeValidation.validateAll(tables).cache()
 
   private lazy val goldenReport =
-    CsvIO.readStrings(spark, "/root/reference/validation_report.csv").cache()
+    CsvIO.readStrings(spark, TestSpark.referenceFile("validation_report.csv")).cache()
 
   test("golden data validates 266/266 PASS with OK issues") {
     assert(report.count() === 266)

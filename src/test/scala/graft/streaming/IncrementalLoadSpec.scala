@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, TestSpark}
 import graft.recipes.Schemas
 import org.apache.spark.sql.functions.col
 import java.nio.file.{Files, Paths}
@@ -41,7 +41,7 @@ class IncrementalLoadSpec extends SparkSpec {
     Seq("users.csv", "recipe.csv", "ingredients.csv", "steps.csv", "interactions.csv")
       .foreach { f =>
         Files.copy(
-          Paths.get(s"/root/reference/output/$f"),
+          Paths.get(TestSpark.referenceFile(s"output/$f")),
           Paths.get(s"$landing/backups/$f"))
       }
     IncrementalLoad.loadAllAvailableNow(spark, landing, s"$root/wh", s"$root/chk")
