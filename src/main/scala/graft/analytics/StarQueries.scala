@@ -1,7 +1,7 @@
 package graft.analytics
 
 import graft.{Q, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** The reference's 10 analytics queries (reference `README.md:334-519`),
@@ -20,12 +20,6 @@ import org.apache.spark.sql.functions._
   * total ORDER BY so row order is reproducible.
   */
 object StarQueries {
-
-  /** Exact fixed-point (4 dp) sum of a money column: deterministic across
-    * engines and partitionings; BIGINT units hold ~9e14 currency units.
-    */
-  private def exactSum(c: Column): Column =
-    sum(round(c * 10000).cast("long")).cast("double") / 10000.0
 
   /** Exact fixed-point mean, one division chain evaluated left-to-right in
     * the same order as the oracle SQL.

@@ -133,7 +133,7 @@ object Dedup {
         size(col("toks")).as("n_tokens"),
         size(col("cov")).cast("long").as("n_removed"),
         concat_ws(" ",
-          filter(col("toks"), (t, i) =>
+          filter(col("toks"), (_, i) =>
             !array_contains(col("cov"), i + 1))).as("clean_text"))
 
   /** Deterministic final ordering with a materialization barrier: a bare

@@ -254,7 +254,7 @@ object IncrementalView {
     * cursor-in-own-log discipline, extended to two inputs).
     */
   private def joinCursorOf(spark: SparkSession, viewRoot: String,
-      prefix: String = "refreshjoin="): (Long, Long) =
+      prefix: String): (Long, Long) =
     SnapshotLog.headOperation(spark, viewRoot) match {
       case None => (0L, 0L)
       case Some(op) =>

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.{Q, Tables}
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._

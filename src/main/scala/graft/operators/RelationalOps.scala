@@ -218,7 +218,7 @@ object RelationalOps {
     // (reference src/insert_recipe.py:81).
     Q(
       "f10_id_templating",
-      (s, dir) =>
+      (s, _) =>
         s.range(100)
           .select(format_string("rec_%03d_synthetic", (col("id") + 2).cast("int"))
             .as("rid"))

@@ -5165,9 +5165,8 @@ object SnapshotLog {
       idHint: Long, bloomSpec: Option[BloomSpec],
       derivedStats: Seq[(String, Column)],
       fanoutExprs: Seq[Column] = Nil,
-      sortApply: Seq[SortField] = Nil,
+      sortApply: Seq[SortField],
       preSorted: Boolean = false): Seq[FileEntry] = {
-    val fs = fsOf(spark, root)
     val dataDir =
       s"data/c${idHint}_${java.util.UUID.randomUUID().toString.take(8)}"
     val sortCols = sortApply.map(f =>
@@ -5346,20 +5345,20 @@ object SnapshotLog {
   private def commitFiles(spark: SparkSession, root: String, df: DataFrame,
       operation: String, carriedRefs0: Seq[ListRef],
       carriedInline0: Seq[FileEntry],
-      tableSchema0: StructType = null,
+      tableSchema0: StructType,
       bloomSpec: Option[BloomSpec] = None,
       derivedStats: Seq[(String, Column)] = Nil,
       fanoutExprs: Seq[Column] = Nil,
-      tableIds0: Map[String, Int] = Map.empty,
-      lastColId0: Int = 0,
+      tableIds0: Map[String, Int],
+      lastColId0: Int,
       carriedDRefs: Seq[DeleteRef] = Seq.empty,
       carriedEqRefs: Seq[EqRef] = Seq.empty,
-      plannedBase: Long = -1L,
+      plannedBase: Long,
       appendNewCols: Set[String] = Set.empty,
-      carriedSpec: Seq[PartField] = Seq.empty,
+      carriedSpec: Seq[PartField],
       specDeclared: Boolean = false,
       retryAsAppend: Boolean = false,
-      carriedSort: Seq[SortField] = Seq.empty,
+      carriedSort: Seq[SortField],
       // the sort order THIS commit's files were (or are about to be)
       // physically sorted by — stamps each written file's sortedBy
       sortApplied: Seq[SortField] = Nil,

@@ -573,7 +573,7 @@ private[plans] object SnapshotDml {
         "mor-delete")
       return
     }
-    wapBranch.foreach { b =>
+    if (wapBranch.isDefined) {
       // WAP DELETE stages on the branch as a MoR delete: one vector in
       // the branch's next manifest, zero file rewrites, invisible to
       // main until publish. NULL predicates are not matches (the same

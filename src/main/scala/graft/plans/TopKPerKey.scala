@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
@@ -120,7 +118,6 @@ object TopKPerKey {
   private[plans] def streamingRank(
       iter: Iterator[InternalRow],
       part: Seq[Expression],
-      order: Seq[SortOrder],
       k: Int,
       inputAttrs: Seq[Attribute],
       rank: Attribute): Iterator[InternalRow] = new Iterator[InternalRow] {
@@ -439,9 +436,9 @@ case class FinalTopKPerKeyExec(
     (part.map(SortOrder(_, Ascending)) ++ order) :: Nil
   override def outputOrdering: Seq[SortOrder] = child.outputOrdering
   override protected def doExecute(): RDD[InternalRow] = {
-    val (p, o, kk, attrs, rank) = (part, order, k, child.output, rankAttr)
+    val (p, kk, attrs, rank) = (part, k, child.output, rankAttr)
     child.execute().mapPartitions(
-      TopKPerKey.streamingRank(_, p, o, kk, attrs, rank),
+      TopKPerKey.streamingRank(_, p, kk, attrs, rank),
       preservesPartitioning = false)
   }
   override protected def withNewChildInternal(newChild: SparkPlan): SparkPlan =

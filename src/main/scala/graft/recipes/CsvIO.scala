@@ -63,11 +63,17 @@ object CsvIO {
     * (src/data_validation.py:30-36). Empty fields arrive as "" there; Spark
     * reads them as null, so the validator's empty-checks treat null and ""
     * alike.
+    *
+    * The caller declares the file's columns, so Spark runs no
+    * header-inference job. `enforceSchema=false` still checks each file's
+    * header against them: a renamed or reordered column fails the read
+    * with "CSV header does not conform to the schema".
     */
-  def readStrings(spark: SparkSession, path: String): DataFrame =
+  def readStrings(spark: SparkSession, path: String, columns: Seq[String]): DataFrame =
     spark.read
       .option("header", true)
-      .option("inferSchema", false)
+      .option("enforceSchema", false)
+      .schema(StructType(columns.map(StructField(_, StringType))))
       .csv(path)
 
   /** Typed CSV read with a declared schema (the warehouse-load side). */

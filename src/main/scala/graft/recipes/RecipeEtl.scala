@@ -1,7 +1,8 @@
 package graft.recipes
 
 import graft.etl.Validate
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 /** The composed batch ETL entry point — the executable form of the
   * reference's `run_etl_pipeline()` (`/root/reference/src/etl_pipeline.py:21-150`,
@@ -27,8 +28,15 @@ object RecipeEtl {
     "ingredients" -> "ingredients.csv", "steps" -> "steps.csv",
     "interactions" -> "interactions.csv")
 
+  /** Columns of `validation_report.csv`: the report's four plus the
+    * `Validated_At` stamp (src/data_validation.py:178).
+    */
+  val ReportColumns: Seq[String] = Seq("Table", "Record_ID", "Status", "Issues", "Validated_At")
+
   /** Run the full pipeline; returns per-table row counts (the reference's
-    * progress logging, etl_pipeline.py:101).
+    * progress logging, etl_pipeline.py:101). Each count is observed on the
+    * table's CSV write, so the pipeline runs six SQL executions in all:
+    * the five table writes and the report write.
     */
   def run(spark: SparkSession, docsDir: String, outDir: String): Map[String, Long] = {
     // EXTRACT: declared-schema document reads (no inference)
@@ -40,20 +48,25 @@ object RecipeEtl {
     // TRANSFORM: document → star (projections + explodes, no shuffle)
     val star = Normalize.normalize(users, recipes, interactions)
 
-    // LOAD: one headered CSV per table
-    star.foreach { case (table, df) =>
-      CsvIO.writeTable(df, s"$outDir/${TableFiles(table)}")
+    // LOAD: one headered CSV per table. Each table's row count rides its
+    // write job (`observe`), so nothing re-reads the documents to count.
+    val observed = star.map { case (table, df) =>
+      val obs = Observation()
+      CsvIO.writeTable(df.observe(obs, count(lit(1)).as("n")), s"$outDir/${TableFiles(table)}")
+      table -> obs
     }
 
     // VALIDATE what was actually written (all-string read, like the
-    // reference's DictReader pass) → stamped report CSV
+    // reference's DictReader pass, of each table's declared columns) →
+    // stamped report CSV
     val written = TableFiles.map { case (table, file) =>
-      table -> CsvIO.readStrings(spark, s"$outDir/$file")
+      table -> CsvIO.readStrings(
+        spark, s"$outDir/$file", Schemas.starTables(table).fieldNames.toSeq)
     }
     val report = Validate.withTimestamp(RecipeValidation.validateAll(written))
     CsvIO.writeTable(report, s"$outDir/validation_report.csv")
 
-    star.map { case (t, df) => t -> df.count() }
+    observed.map { case (t, obs) => t -> obs.get("n").asInstanceOf[Long] }
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,7 +1,7 @@
 package graft.recipes
 
 import graft.Q
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.ArrayType
 

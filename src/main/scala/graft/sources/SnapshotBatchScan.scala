@@ -412,7 +412,7 @@ class SnapshotBatchScan(required: StructType,
           kept = SnapshotLog.pruneEntriesForBoxes(
             kept, tableSchema, snap.curIds,
             SnapshotCatalog.boxOf(sources.In(c, vs)))
-      case f @ sources.EqualTo(c, v) =>
+      case sources.EqualTo(c, v) =>
         SnapshotCatalog.render(v).foreach(r =>
           kept = SnapshotLog.pruneEntriesForSets(
             kept, tableSchema, snap.curIds, Seq(c -> Seq(r))))
@@ -484,7 +484,7 @@ class SnapshotBatchScan(required: StructType,
       : (Array[SnapshotGroupSpec], Array[InputPartition], Boolean) = {
     val groups = files.groupBy(projectionOf).toSeq.sortBy(_._2.head.path)
     val columnar = columnarMode
-    val groupSpecs = groups.zipWithIndex.map { case ((proj, gFiles), gi) =>
+    val groupSpecs = groups.map { case (proj, gFiles) =>
       val present = proj.zipWithIndex.collect { case (Some(p), i) => (p, i) }
       val physFields = StructType(present.map { case (p, _) =>
         p.copy(nullable = true) })

@@ -44,8 +44,7 @@ object StateStoreDedup {
     * fingerprint seen; every later arrival emits nothing.
     */
   private[streaming] def firstSeen(
-      fingerprint: String, rows: Iterator[Keyed],
-      state: GroupState[Long]): Iterator[Doc] =
+      rows: Iterator[Keyed], state: GroupState[Long]): Iterator[Doc] =
     if (state.exists) Iterator.empty
     else {
       val first = rows.minBy(_.doc_id)
@@ -72,7 +71,9 @@ object StateStoreDedup {
       .as[Keyed]
     keyed.groupByKey(_.fingerprint)
       .flatMapGroupsWithState[Long, Doc](
-        OutputMode.Append, GroupStateTimeout.NoTimeout)(firstSeen)
+        OutputMode.Append, GroupStateTimeout.NoTimeout) {
+        (_: String, rows: Iterator[Keyed], state: GroupState[Long]) => firstSeen(rows, state)
+      }
       .writeStream
       .format("parquet")
       .option("path", outDir)

@@ -91,24 +91,6 @@ object StreamingDedup {
     batch.join(acceptedSigs.select("doc_id").distinct(), Seq("doc_id"))
   }
 
-  /** Always-on variant of [[nearDedupBatch]]. */
-  def nearDedupStream(
-      spark: SparkSession,
-      landingDir: String,
-      schema: org.apache.spark.sql.types.StructType,
-      stateDir: String,
-      checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    spark.readStream
-      .schema(schema)
-      .parquet(landingDir)
-      .writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        nearDedupBatch(batch.sparkSession, batch, stateDir): Unit
-      }
-      .start()
-
   /** Always-on variant: stream a landing directory of document parquet
     * files into the canonical store with exactly-once-per-file semantics.
     */

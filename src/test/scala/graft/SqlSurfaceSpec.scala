@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** The engine's queries are equally expressible through `spark.sql` over
   * registered views — the SQL face of the same Catalyst plans (the
   * reference's analytics run as SQL in its warehouse; a user can keep

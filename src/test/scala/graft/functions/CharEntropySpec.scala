@@ -29,7 +29,6 @@ class CharEntropySpec extends SparkSpec {
 
   test("stays inside whole-stage codegen (doGenCode path, not interpreted eval)") {
     GraftFunctions.register(spark)
-    import spark.implicits._
     // range source, not a local Seq — ConvertToLocalRelation would
     // constant-fold a local relation away and leave no codegen stage
     val df = spark.range(4)

@@ -176,7 +176,6 @@ class ArrayMapEvolutionSpec extends SparkSpec {
 
   test("SQL ALTER drives element-struct rename/widen/add/drop through " +
       "the catalog") {
-    import spark.implicits._
     val root = newRoot("sql")
     eraA(root, 1 to 6)
     spark.sql(s"ALTER TABLE $cat.`$root` " +
@@ -198,7 +197,6 @@ class ArrayMapEvolutionSpec extends SparkSpec {
 
   test("a TOP-LEVEL rename of the array column re-prefixes its " +
       "element-descendant ids") {
-    import spark.implicits._
     val root = newRoot("reprefix")
     eraA(root, 1 to 8)
     SnapshotLog.renameColumn(spark, root, "ingredients", "items")
@@ -218,7 +216,6 @@ class ArrayMapEvolutionSpec extends SparkSpec {
 
   test("a file predating element ids refuses rename/add loudly; " +
       "drop stays sound; reads resolve by name") {
-    import spark.implicits._
     val root = newRoot("legacy")
     eraA(root, 1 to 5)
     // simulate a pre-element-id stamp: strip dotted entries from the

@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Window arithmetic invariants of the chunker: full coverage of every
   * token, correct overlap, exactly-one-chunk short docs, and stable

@@ -3,7 +3,6 @@ package graft.operators
 import java.sql.Timestamp
 
 import graft.{SparkSpec, TestSpark}
-import org.apache.spark.sql.functions._
 
 /** OHLC bars (ev11) and the correlation matrix (dp5): tie-break
   * determinism on hand data, algebraic sanity on driver testdata.

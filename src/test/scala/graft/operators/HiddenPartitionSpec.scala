@@ -125,7 +125,6 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("spec evolution: changing the spec affects only new files") {
-    import spark.implicits._
     val root = graft.TempDirs.create("hp_evolve").resolve("log").toString
     appendPartitioned(spark, root, tsDf(Seq(0, 100)),
       Seq(PartField("days", "ts")))

@@ -399,7 +399,7 @@ class IncrementalViewSpec extends SparkSpec {
       keys = Seq("g"), mmCols = Seq("x"))
     assert(rowSet(SnapshotLog.read(spark, view)) === rowSet(direct()))
     // re-run is a no-op (cursor protocol)
-    val again = IncrementalView.refreshJoinAggMinMax(spark, view, rootA,
+    IncrementalView.refreshJoinAggMinMax(spark, view, rootA,
       rootB, "fk", keys = Seq("g"), mmCols = Seq("x"))
     assert(rowSet(SnapshotLog.read(spark, view)) === rowSet(direct()))
   }

@@ -22,7 +22,7 @@ class ManifestCanonicalSpec extends SparkSpec {
 
   private def kv(rows: (Long, String)*): DataFrame = rows.toDF("k", "v")
 
-  private def manifestFile(root: String, id: Long, branch: String = ""): Path =
+  private def manifestFile(root: String, id: Long, branch: String): Path =
     if (branch.isEmpty) new Path(f"$root/snap/v$id%08d.manifest")
     else new Path(f"$root/snap/branch_$branch/v$id%08d.manifest")
 

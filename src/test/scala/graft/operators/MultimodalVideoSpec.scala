@@ -13,7 +13,7 @@ import javax.imageio.{IIOImage, ImageIO}
   */
 class MultimodalVideoSpec extends SparkSpec {
 
-  import Multimodal.{MediaRow, decodeVideoFrames, sampleVideoFrames}
+  import Multimodal.{MediaRow, sampleVideoFrames}
 
   /** An animated GIF of solid-gray frames with the given values. */
   private def animatedGif(w: Int, h: Int, frameValues: Seq[Int]): Array[Byte] = {

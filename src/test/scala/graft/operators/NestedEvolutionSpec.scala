@@ -61,7 +61,6 @@ class NestedEvolutionSpec extends SparkSpec {
   }
 
   test("nested drop removes the field from both eras without a rewrite") {
-    import spark.implicits._
     val root = newRoot("drop")
     eraA(root, 1 to 10)
     val before = SnapshotLog.snapshot(spark, root, 1L).files.map { f =>
@@ -108,7 +107,6 @@ class NestedEvolutionSpec extends SparkSpec {
   }
 
   test("a file predating nested ids refuses nested rename loudly") {
-    import spark.implicits._
     val root = newRoot("legacy")
     eraA(root, 1 to 5)
     // simulate a pre-nested-id stamp: strip dotted entries from the
@@ -153,7 +151,6 @@ class NestedEvolutionSpec extends SparkSpec {
   }
 
   test("a TOP-LEVEL rename of a struct column re-prefixes its nested ids") {
-    import spark.implicits._
     val root = newRoot("reprefix")
     eraA(root, 1 to 8)
     // meta -> info: the children's dotted id paths must move with it,
@@ -178,7 +175,6 @@ class NestedEvolutionSpec extends SparkSpec {
   }
 
   test("SQL ALTER drives nested rename and drop through the catalog") {
-    import spark.implicits._
     val root = newRoot("sql")
     eraA(root, 1 to 6)
     spark.sql(s"ALTER TABLE $cat.`$root` RENAME COLUMN meta.name TO label")

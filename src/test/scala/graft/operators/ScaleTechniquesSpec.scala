@@ -21,7 +21,6 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("salted aggregation spreads a single hot key over salt buckets") {
-    import spark.implicits._
     // one key carrying 100k rows — the all-in-one-reducer scenario
     val hot = spark.range(100000).select(lit("hot").as("k"), col("id"))
       .unionAll(spark.range(50).select(lit("cold").as("k"), col("id")))
@@ -35,7 +34,6 @@ class ScaleTechniquesSpec extends SparkSpec {
   }
 
   test("salted join equals the plain join and spreads the hot key") {
-    import spark.implicits._
     // one hot key carrying 100k fact rows against a 60-row dim side
     val fact = spark.range(100000).select(lit(1L).as("k"), col("id").as("payload"))
       .unionAll(spark.range(500).select((col("id") % 50 + 2).as("k"), col("id").as("payload")))
@@ -126,7 +124,6 @@ class ScaleTechniquesSpec extends SparkSpec {
     s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16KB")
     s.conf.set("spark.sql.shuffle.partitions", "8")
 
-    import s.implicits._
     // one hot key carrying ~300k fact rows; 50 cold keys with ~20 each
     val fact = s.range(300000).select(lit(1L).as("k"), col("id").as("payload"))
       .unionAll(s.range(1000).select((col("id") % 50 + 2).as("k"), col("id").as("payload")))

@@ -13,7 +13,6 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 class SnapshotBloomSpec extends SparkSpec {
 
-  import spark.implicits._
 
   private def newRoot(): String =
     Files.createTempDirectory("graft_snapbloom_spec").resolve("log").toString

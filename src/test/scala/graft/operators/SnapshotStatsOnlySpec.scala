@@ -3,7 +3,6 @@ package graft.operators
 import java.nio.file.{Files, Path}
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** tt12's claim made falsifiable: [[SnapshotLog.statsSummary]] answers
   * COUNT/MIN/MAX from the manifest ALONE. Proof: delete every data

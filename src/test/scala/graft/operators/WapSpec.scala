@@ -1,7 +1,6 @@
 package graft.operators
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** Write-audit-publish: staged appends are invisible to every reader,
   * auditable in isolation, published by one atomic rename (correct

@@ -109,7 +109,6 @@ class SnapshotDmlSpec extends SparkSpec {
   }
 
   test("SQL UPDATE commits one MoR snapshot with partial assignments") {
-    import spark.implicits._
     val root = newLog("upd")
     val before = SnapshotLog.snapshot(spark, root, 1L).files.map(_.path).toSet
     spark.sql(s"UPDATE $cat.`$root` SET v = upper(v) WHERE k <= 3")

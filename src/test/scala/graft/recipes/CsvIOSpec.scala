@@ -77,9 +77,22 @@ class CsvIOSpec extends SparkSpec {
   }
 
   test("readStrings mirrors csv.DictReader: headered, all-string, empty → null") {
-    val df = CsvIO.readStrings(spark, s"${TestSpark.FixtureExports}/interactions.csv")
+    val df = CsvIO.readStrings(spark, s"${TestSpark.FixtureExports}/interactions.csv",
+      Schemas.interactionsTable.fieldNames.toSeq)
     assert(df.schema.fields.forall(_.dataType ==
       org.apache.spark.sql.types.StringType))
     assert(df.filter("rating IS NULL").count() === 38)
+  }
+
+  test("readStrings rejects a file whose header renames a declared column") {
+    val dir = Files.createTempDirectory("csvio-drift").toString
+    CsvIO.writeTable(Normalize.interactions(interactionDocs).withColumnRenamed("rating", "score"), dir)
+    val e = intercept[Exception] {
+      CsvIO.readStrings(spark, dir, Schemas.interactionsTable.fieldNames.toSeq).collect()
+    }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("CSV header does not conform to the schema")),
+      messages.mkString(" / "))
   }
 }

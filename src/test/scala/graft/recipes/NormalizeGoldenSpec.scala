@@ -26,7 +26,8 @@ class NormalizeGoldenSpec extends SparkSpec {
     * Spark CSV reader).
     */
   private def golden(name: String): Seq[Seq[String]] =
-    rowSet(CsvIO.readStrings(spark, TestSpark.referenceFile(s"output/$name")))
+    rowSet(CsvIO.readStrings(spark, TestSpark.referenceFile(s"output/$name"),
+      Schemas.starTables(RecipeEtl.TableFiles.map(_.swap).apply(name)).fieldNames.toSeq))
 
   private def normalized(df: DataFrame): Seq[Seq[String]] =
     rowSet(CsvIO.stringified(df))

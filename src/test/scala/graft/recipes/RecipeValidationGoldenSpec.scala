@@ -2,7 +2,6 @@ package graft.recipes
 
 import graft.{SparkSpec, TestSpark}
 import graft.etl.Validate
-import org.apache.spark.sql.functions._
 
 /** The data-quality validator against the golden `validation_report.csv`
   * (266 rows, all PASS): same table names, same record IDs, same
@@ -20,13 +19,15 @@ class RecipeValidationGoldenSpec extends SparkSpec {
 
   private lazy val tables: Map[String, org.apache.spark.sql.DataFrame] =
     RecipeEtl.TableFiles.map { case (table, file) =>
-      table -> CsvIO.readStrings(spark, s"${TestSpark.FixtureExports}/$file")
+      table -> CsvIO.readStrings(spark, s"${TestSpark.FixtureExports}/$file",
+        Schemas.starTables(table).fieldNames.toSeq)
     }
 
   private lazy val report = RecipeValidation.validateAll(tables).cache()
 
   private lazy val goldenReport =
-    CsvIO.readStrings(spark, TestSpark.referenceFile("validation_report.csv")).cache()
+    CsvIO.readStrings(spark, TestSpark.referenceFile("validation_report.csv"),
+      RecipeEtl.ReportColumns).cache()
 
   test("golden data validates 266/266 PASS with OK issues") {
     assert(report.count() === 266)

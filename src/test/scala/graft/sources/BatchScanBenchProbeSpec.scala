@@ -10,7 +10,6 @@ import graft.operators.SnapshotLog
   */
 class BatchScanBenchProbeSpec extends SparkSpec {
   test("V2 batch scan vs V1 read throughput probe") {
-    import spark.implicits._
     spark.conf.set("spark.sql.catalog.snapbench",
       classOf[SnapshotCatalog].getName)
     val root = graft.TempDirs.create("batbench").resolve("log").toString

@@ -196,7 +196,6 @@ class SnapshotBatchScanSpec extends SparkSpec {
   }
 
   test("empty tables and self-joins read correctly through the batch scan") {
-    import spark.implicits._
     // empty table: zero files, zero partitions, schema intact
     val empty = graft.TempDirs.create("batscan_empty").resolve("log").toString
     SnapshotLog.createTable(spark, empty,

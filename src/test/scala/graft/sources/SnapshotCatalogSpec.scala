@@ -130,7 +130,7 @@ class SnapshotCatalogSpec extends SparkSpec {
 
   test("writes to a time-travel snapshot are refused") {
     val root = freshLog()
-    val e = intercept[Exception] {
+    intercept[Exception] {
       spark.sql(s"INSERT INTO $cat.`$root` VERSION AS OF 1 VALUES (0, 'x')")
     }
     // parser may reject time-travel DML outright, or our builder does —

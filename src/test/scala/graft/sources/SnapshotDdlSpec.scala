@@ -1,7 +1,5 @@
 package graft.sources
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 import graft.operators.SnapshotLog
 

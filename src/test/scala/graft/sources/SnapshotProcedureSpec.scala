@@ -84,7 +84,6 @@ class SnapshotProcedureSpec extends SparkSpec {
   }
 
   test("set_partition_spec and optimize_sorted relayout through CALL") {
-    import spark.implicits._
     import SnapshotLog.PartField
     val root = newLog("spec")
     // declare, evolve, and clear — each a metadata-only commit

@@ -375,7 +375,6 @@ class SnapshotSpjSpec extends SparkSpec {
     val bound = SnapshotBucketFunction.bind(
       org.apache.spark.sql.types.StructType.fromDDL("n INT, c BIGINT"))
       .asInstanceOf[SnapshotBucketBound]
-    import spark.implicits._
     val expected = spark.range(1, 100)
       .select(org.apache.spark.sql.functions.pmod(
         org.apache.spark.sql.functions.hash(

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.types.{DateType, IntegerType, LongType, StringType, TimestampType}
+import org.apache.spark.sql.types.{DateType, LongType, StringType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.SparkSpec
