@@ -405,9 +405,9 @@ object SnapshotLog {
     * file's field ids — a rename between the re-bucket and the rewrite
     * must not silently drop the layout.
     */
-  private def inheritedBucketStats(files: Seq[FileEntry],
-      schema: StructType, curIds: Map[String, Int]): Seq[(String, Column)] = {
-    val idToCur = curIds.map(_.swap)
+  private def inheritedBucketStats(snap: Resolved): Seq[(String, Column)] = {
+    val (files, schema) = (snap.files, snap.schema)
+    val idToCur = snap.curIds.map(_.swap)
     def toCur(phys: String, hasIds: Boolean, f: FileEntry): Option[String] = {
       val cur =
         if (!hasIds) Some(phys)
@@ -496,16 +496,13 @@ object SnapshotLog {
     */
   def setPartitionSpec(spark: SparkSession, root: String,
       fields: Seq[PartField]): Long = {
-    val base = currentId(spark, root)
-    require(base > 0,
-      s"setPartitionSpec on empty log $root; use appendPartitioned to " +
-        "declare a spec with the first write")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    validateSpec(fields, schema)
-    val (ids, last) = currentIdsOf(raw, schema)
-    commitMetadata(spark, root, base, raw, schema, ids, last, "set-spec",
-      editKey = Some(_), specOverride = Some(fields))
+    // an empty log declares its spec with the first write
+    // (appendPartitioned)
+    val head = resolve(spark, root)
+    validateSpec(fields, head.schema)
+    commitMetadata(spark, head.id, head, head.schema, head.curIds,
+      head.lastColId, "set-spec", editKey = Some(_),
+      specOverride = Some(fields))
   }
 
   /** The declared partition spec at a snapshot (empty = unpartitioned
@@ -799,8 +796,8 @@ object SnapshotLog {
     require(!txnDir.exists(c => c == '\t' || c == '\n'),
       s"txn dir may not contain tab/newline: $txnDir")
     txnPlanWrite(spark, txnDir, morRoot +: frames.map(_._1))
-    val morId = morCommit(spark, morRoot, morBase, Some(dead), adds,
-      s"txn=$txnDir")
+    val morId = morCommit(spark, resolve(spark, morRoot, morBase), Some(dead),
+      adds, s"txn=$txnDir")
     val ids = frames.map { case (root, df) =>
       commit(spark, root, df, s"txn=$txnDir",
         keepBase = !overwriteRoots.contains(root),
@@ -1109,15 +1106,13 @@ object SnapshotLog {
     val fs = fsOf(spark, root)
     var attempt = 0
     while (true) {
-      val base = currentId(spark, root)
-      require(base > 0, s"no table at $root to declare a sort order on")
-      val raw = rawManifest(spark, root, base)
-      val schema = StructType.fromDDL(raw.schemaDdl)
-      so.foreach(f => require(schema.fieldNames.contains(f.column),
+      val head = resolve(spark, root)
+      so.foreach(f => require(head.schema.fieldNames.contains(f.column),
         s"sort column ${f.column} is not in the table schema"))
-      val next = base + 1
-      if (publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
-          parent = base, operation = "set-sort-order", sortOrder = so)))
+      val next = head.id + 1
+      if (publishManifest(fs, manifestPath(root, next), head.raw.copy(
+          id = next, parent = head.id, operation = "set-sort-order",
+          sortOrder = so)))
         return next
       attempt += 1
       require(attempt < MaxCommitRaces,
@@ -1727,19 +1722,25 @@ object SnapshotLog {
   }
 
   /** One snapshot resolved from ONE manifest parse — the value every
-    * read plans and scans from (Iceberg's TableMetadata/Snapshot
-    * split). The manifest, schema, field ids, partition spec and sort
-    * order are fixed at [[resolve]]; the live file inventory, the
-    * delete map and the table-level column meta load on first use and
-    * are then shared, so a table, a scan builder and the scan it builds
-    * all read ONE snapshot however many commits land meanwhile.
-    * `branch` is the branch-head pin it came from (None = main chain).
+    * read AND every commit attempt plans from (Iceberg's
+    * TableMetadata/Snapshot split: the metadata a commit planned
+    * against is the base its CAS fires on). The manifest, schema, field
+    * ids, partition spec and sort order are fixed at [[resolve]]; the
+    * live file inventory, the delete map and the table-level column
+    * meta load on first use and are then shared, so a table, a scan
+    * builder and the scan it builds — or a commit's discovery scan,
+    * carry split and publish — all see ONE snapshot however many
+    * commits land meanwhile. `branch` is the branch-head pin it came
+    * from (None = main chain).
     */
   private[graft] final class Resolved private[SnapshotLog] (
       val root: String, private[SnapshotLog] val raw: RawManifest,
       val branch: Option[(String, Long)], fs: FileSystem) {
     val schema: StructType = StructType.fromDDL(raw.schemaDdl)
-    val curIds: Map[String, Int] = currentIdsOf(raw, schema)._1
+    private val idsAndLast = currentIdsOf(raw, schema)
+    val curIds: Map[String, Int] = idsAndLast._1
+    /** The high-water field id: a new column numbers after it. */
+    def lastColId: Int = idsAndLast._2
     def id: Long = raw.id
     def spec: Seq[PartField] = raw.spec
     def sortOrder: Seq[SortField] = raw.sortOrder
@@ -1760,6 +1761,31 @@ object SnapshotLog {
       lists.getOrElseUpdate(r.path, readFileList(fs, root, r.path))
 
     lazy val files: Seq[FileEntry] = raw.inline ++ raw.refs.flatMap(listed)
+
+    /** The precondition of a PARTIAL copy-on-write rewrite
+      * ([[deleteWhere]]/[[mergeInto]]/[[optimizeBinPack]]): carrying
+      * files by reference past an outstanding vector or key set would
+      * need DV-aware carry rules.
+      */
+    private[SnapshotLog] def requireNoMorDeletes(): Unit =
+      require(raw.dRefs.isEmpty && raw.eqRefs.isEmpty,
+        s"$root has outstanding merge-on-read deletes (vectors or equality " +
+          "key sets); run rewriteEqualityDeletes + rewriteDeletes (or " +
+          "optimize) before a partial CoW rewrite")
+
+    /** The manifest-tree CoW carry around the files a rewrite replaces
+      * (`gone`): a file list holding none of them carries forward BY
+      * REFERENCE (zero metadata rewrite); a list that lost files
+      * dissolves, its survivors joining the inline entries in the
+      * commit's new list — O(touched lists), never O(#files). Returns
+      * (intact lists, carried survivors).
+      */
+    private[SnapshotLog] def carryAround(gone: String => Boolean)
+        : (Seq[ListRef], Seq[FileEntry]) = {
+      val (intact, touched) =
+        raw.refs.partition(r => !listed(r).exists(f => gone(f.path)))
+      (intact, (raw.inline ++ touched.flatMap(listed)).filterNot(f => gone(f.path)))
+    }
     private[SnapshotLog] lazy val deletes: Map[String, Seq[DeleteEntry]] =
       deleteMapOf(fs, root, raw)
     /** Per-target-file delete-vector dirs (each dirty file's reader
@@ -1808,6 +1834,14 @@ object SnapshotLog {
         rawManifest(spark, root, id)
     }
     new Resolved(root, raw, branch, fs)
+  }
+
+  /** [[resolve]] for the commits that may also bootstrap a log: the
+    * current head, None while the log is empty.
+    */
+  private def resolveHead(spark: SparkSession, root: String): Option[Resolved] = {
+    val id = currentId(spark, root)
+    if (id > 0) Some(resolve(spark, root, id)) else None
   }
 
   /** Load one snapshot's full metadata (manifest + its file lists). */
@@ -3231,23 +3265,21 @@ object SnapshotLog {
     * schema (use a real append for that).
     */
   def stageAppend(spark: SparkSession, root: String, df: DataFrame): String = {
-    val base = currentId(spark, root)
-    require(base > 0, s"stageAppend on empty log $root (bootstrap with append)")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
+    // an empty log bootstraps with a plain append
+    val head = resolve(spark, root)
+    val schema = head.schema
     df.schema.fields.foreach { f =>
       val t = schema.fields.find(_.name == f.name)
       require(t.isDefined, s"staged column ${f.name} not in table schema")
       require(t.get.dataType == f.dataType,
         s"staged column ${f.name} is ${f.dataType}, table has ${t.get.dataType}")
     }
-    val (curIds, last) = currentIdsOf(raw, schema)
     val fs = fsOf(spark, root)
-    val stagedIds = idsForWrittenCols(curIds, df.columns.toSet)
+    val stagedIds = idsForWrittenCols(head.curIds, df.columns.toSet)
     // staged WAP batches honor the declared sort like a live append —
     // a publish must not dilute the table's stamp unanimity
-    val wapSort = sortApplyFor(raw.sortOrder, df)
-    val written = writeDataFiles(spark, root, df, base + 1, None, Nil,
+    val wapSort = sortApplyFor(head.sortOrder, df)
+    val written = writeDataFiles(spark, root, df, head.id + 1, None, Nil,
       sortApply = wapSort)
       .map(f => f.copy(ids = stagedIds,
         sortedBy = if (wapSort.isEmpty) "" else renderSortOrder(wapSort)))
@@ -3256,9 +3288,9 @@ object SnapshotLog {
     // the descriptor is manifest-shaped (id 0, parent = the staging
     // base); its list ref carries no column meta, so a publish splices
     // only the band it re-keys
-    val desc = RawManifest(0L, base, "staged-append", ref.rows,
+    val desc = RawManifest(0L, head.id, "staged-append", ref.rows,
       headerDdl(df.schema), Seq(ref.copy(meta = Map.empty)), Seq.empty,
-      stagedIds, last)
+      stagedIds, head.lastColId)
     val out = fs.create(stagedPath(root, key), false)
     try out.write(manifestText(desc).getBytes("UTF-8")) finally out.close()
     key
@@ -3309,14 +3341,12 @@ object SnapshotLog {
       return currentId(spark, root)
     }
     while (true) {
-      val base = currentId(spark, root)
-      val head = rawManifest(spark, root, base)
-      val schema = StructType.fromDDL(head.schemaDdl)
-      val (ids, last) = currentIdsOf(head, schema)
+      val head = resolve(spark, root)
+      val ids = head.curIds
       require(staged.ids.values.toSet.subsetOf(ids.values.toSet),
         s"staged key $key holds columns dropped from the table since " +
           "staging; discardStaged and re-stage")
-      val next = base + 1
+      val next = head.id + 1
       // re-key the staged lists' band stats through field ids: a
       // rename since staging moved the column to a new name (and may
       // have freed the OLD name for a fresh unrelated column), so a
@@ -3337,10 +3367,12 @@ object SnapshotLog {
       // between stage and publish applies to them exactly as to a
       // same-era append — one consistent rule, not
       // publish-order-dependent
-      if (publishManifest(fs, manifestPath(root, next), head.copy(id = next,
-          parent = base, operation = "publish-append",
-          rows = head.rows + staged.rows, schemaDdl = headerDdl(schema),
-          refs = head.refs ++ rekeyedStaged, ids = ids, lastColId = last))) {
+      if (publishManifest(fs, manifestPath(root, next), head.raw.copy(
+          id = next, parent = head.id, operation = "publish-append",
+          rows = head.raw.rows + staged.rows,
+          schemaDdl = headerDdl(head.schema),
+          refs = head.raw.refs ++ rekeyedStaged, ids = ids,
+          lastColId = head.lastColId))) {
         fs.delete(sp, false)
         return next
       }
@@ -3396,13 +3428,12 @@ object SnapshotLog {
   private[graft] def writeLayout(spark: SparkSession, root: String,
       schema: StructType)
       : (Seq[PartField], Seq[SortField], Seq[(String, Column)]) = {
-    val id = currentId(spark, root)
-    val raw = if (id > 0) Some(rawManifest(spark, root, id)) else None
-    val spec = raw.map(_.spec).getOrElse(Seq.empty)
+    val head = resolveHead(spark, root)
+    val spec = head.map(_.spec).getOrElse(Seq.empty)
     val routed = spec.filter(f => schema.fieldNames.contains(f.column))
     val derived = routed.map(f =>
       partStatName(f) -> partExpr(f, schema(f.column).dataType))
-    val so = raw.map(_.sortOrder).getOrElse(Seq.empty)
+    val so = head.map(_.sortOrder).getOrElse(Seq.empty)
     val sortApply =
       if (so.nonEmpty && so.forall(f => schema.fieldNames.contains(f.column)))
         so
@@ -3467,24 +3498,17 @@ object SnapshotLog {
     * delete should not grow history).
     */
   def deleteWhere(spark: SparkSession, root: String, pred: Column): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"deleteWhere on empty log $root")
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    require(raw.dRefs.isEmpty && raw.eqRefs.isEmpty,
-      s"$root has outstanding merge-on-read deletes (vectors or equality " +
-        "key sets); run rewriteEqualityDeletes + rewriteDeletes (or " +
-        "optimize) before a partial CoW rewrite")
-    val groups = raw.refs.map(r => r -> readFileList(fs, root, r.path))
-    val allFiles = raw.inline ++ groups.flatMap(_._2)
-    if (allFiles.isEmpty) return base
+    val head = resolve(spark, root)
+    head.requireNoMorDeletes()
+    val allFiles = head.files
+    if (allFiles.isEmpty) return head.id
     // every read is pinned to the snapshot's schema: after additive
     // evolution the hit files may be NARROWER than the table (pinning
     // nulls the missing columns so the predicate can reference them),
     // and the rewrite must commit under the TABLE schema, not whatever
     // width the rewritten files happened to have
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
+    val tableSchema = head.schema
+    val tableIds = head.curIds
     val scan = resolvedRead(spark, root, allFiles, tableSchema, tableIds)
     // bounded driver value — O(#matching files), planning-scale metadata
     // (same class as StreamingMerge's affected-bucket set). The scan
@@ -3493,16 +3517,9 @@ object SnapshotLog {
     val hit = scan.filter(pred)
       .select(input_file_name().as("f"))
       .agg(collect_set(col("f"))).head().getSeq[String](0)
-    if (hit.isEmpty) return base
+    if (hit.isEmpty) return head.id
     val hitRel = hit.map(relativize(_)).toSet
-    // manifest-tree CoW: a file list with no hit file carries forward BY
-    // REFERENCE (zero metadata rewrite); a list that lost files
-    // dissolves its survivors into the commit's new list — O(touched
-    // lists), never O(#files)
-    val (intact, touched) = groups.partition {
-      case (_, fl) => !fl.exists(f => hitRel(f.path)) }
-    val keepInline = (raw.inline ++ touched.flatMap(_._2))
-      .filterNot(f => hitRel(f.path))
+    val (intact, keepInline) = head.carryAround(hitRel)
     // NULL-predicate rows must SURVIVE the rewrite: under three-valued
     // logic a NULL row fails both filter(pred) and filter(!pred), so a
     // bare !pred would silently drop rows the delete never matched
@@ -3510,12 +3527,9 @@ object SnapshotLog {
       resolvedRead(spark, root, allFiles.filter(f => hitRel(f.path)),
         tableSchema, tableIds)
         .filter(!coalesce(pred, lit(false)))
-    commitFiles(spark, root, rewritten, "delete",
-      intact.map(_._1), keepInline, tableSchema,
-      derivedStats = inheritedBucketStats(allFiles, tableSchema, tableIds),
-      tableIds0 = tableIds, lastColId0 = lastColId, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder,
-      sortApplied = sortApplyFor(raw.sortOrder, rewritten))
+    commitFiles(spark, root, Some(head), rewritten, "delete",
+      intact, keepInline, derivedStats = inheritedBucketStats(head),
+      sortApplied = sortApplyFor(head.sortOrder, rewritten))
   }
 
   /** MERGE-ON-READ delete: record the matched rows as a positional
@@ -3542,16 +3556,11 @@ object SnapshotLog {
     * [[deleteWhere]]).
     */
   def deleteWhereMoR(spark: SparkSession, root: String, pred: Column): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"deleteWhereMoR on empty log $root")
+    val head = resolve(spark, root)
+    val (base, raw) = (head.id, head.raw)
     val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    val allFiles = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    if (allFiles.isEmpty) return base
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
-    val live = livePosRead(spark, root, raw, allFiles, tableSchema, tableIds)
+    if (head.files.isEmpty) return base
+    val live = livePosRead(spark, head, head.files)
     // NULL-predicate rows are NOT matches (same three-valued rule as
     // deleteWhere's survivor filter, from the opposite side)
     val next = base + 1
@@ -3562,8 +3571,9 @@ object SnapshotLog {
       case Some((dRef, dvDir)) =>
         if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
             parent = base, operation = "mor-delete",
-            rows = raw.rows - dRef.delRows, schemaDdl = headerDdl(tableSchema),
-            ids = tableIds, lastColId = lastColId, dRefs = raw.dRefs :+ dRef))) {
+            rows = raw.rows - dRef.delRows, schemaDdl = headerDdl(head.schema),
+            ids = head.curIds, lastColId = head.lastColId,
+            dRefs = raw.dRefs :+ dRef))) {
           fs.delete(new Path(s"$root/${dRef.path}"), false)
           fs.delete(new Path(s"$root/$dvDir"), true)
           throw new IllegalStateException(
@@ -3579,18 +3589,19 @@ object SnapshotLog {
     * [[livePosRead]], also what [[rewriteEqualityDeletes]] scans to
     * locate the coordinates an equality delete kills.
     */
-  private def dvPosRead(spark: SparkSession, root: String,
-      raw: RawManifest, files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int]): DataFrame = {
-    val pos = resolvedReadWithPos(spark, root, files, schema, curIds)
-    val dv = deleteMapOf(fsOf(spark, root), root, raw)
+  private def dvPosRead(spark: SparkSession, snap: Resolved,
+      files: Seq[FileEntry]): DataFrame = {
+    val pos = resolvedReadWithPos(spark, snap.root, files, snap.schema,
+      snap.curIds)
+    val dv = snap.deletes
     if (dv.isEmpty) pos
     else {
       val dvDirs = dv.values.flatten.map(_.dvDir).toSeq.distinct.sorted
-      val dvRows = spark.read.parquet(dvDirs.map(d => s"$root/$d"): _*)
+      val dvRows = spark.read.parquet(dvDirs.map(d => s"${snap.root}/$d"): _*)
         .select(col("t_path"), col("t_pos"))
       val build =
-        if (raw.dRefs.iterator.map(_.delRows).sum <= DvBroadcastRows) broadcast(dvRows)
+        if (snap.raw.dRefs.iterator.map(_.delRows).sum <= DvBroadcastRows)
+          broadcast(dvRows)
         else dvRows
       pos.join(build,
         pos("__path") === build("t_path") && pos("__pos") === build("t_pos"),
@@ -3604,18 +3615,17 @@ object SnapshotLog {
     * twice across overlapping commits because a dead row never
     * reappears here.
     */
-  private def livePosRead(spark: SparkSession, root: String,
-      raw: RawManifest, files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int]): DataFrame =
-    if (raw.eqRefs.isEmpty || files.isEmpty)
-      dvPosRead(spark, root, raw, files, schema, curIds)
-    else files.groupBy(f => applicableEqs(raw.eqRefs, f).map(_.dir))
+  private def livePosRead(spark: SparkSession, snap: Resolved,
+      files: Seq[FileEntry]): DataFrame = {
+    val eqRefs = snap.raw.eqRefs
+    if (eqRefs.isEmpty || files.isEmpty) dvPosRead(spark, snap, files)
+    else files.groupBy(f => applicableEqs(eqRefs, f).map(_.dir))
       .toSeq.sortBy(_._2.head.path)
       .map { case (dirs, group) =>
-        applyEqs(spark, root,
-          dvPosRead(spark, root, raw, group, schema, curIds),
-          raw.eqRefs.filter(e => dirs.contains(e.dir)), schema, curIds)
+        applyEqs(spark, snap.root, dvPosRead(spark, snap, group),
+          eqRefs.filter(e => dirs.contains(e.dir)), snap.schema, snap.curIds)
       }.reduce(_ unionByName _)
+  }
 
   /** Write `hits` (t_path, t_pos) as snapshot `next`'s DV parquet dir
     * plus its delete list; None (dir reclaimed) when nothing matched.
@@ -3665,12 +3675,9 @@ object SnapshotLog {
     */
   def deleteWhereEqual(spark: SparkSession, root: String,
       keys: DataFrame): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"deleteWhereEqual on empty log $root")
+    val head = resolve(spark, root)
+    val (base, raw, tableSchema) = (head.id, head.raw, head.schema)
     val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
     require(keys.schema.fields.nonEmpty, "deleteWhereEqual needs key columns")
     keys.schema.fields.foreach { f =>
       val t = tableSchema.fields.find(_.name == f.name)
@@ -3684,13 +3691,13 @@ object SnapshotLog {
     val nKeys = spark.read.parquet(s"$root/$dir").count()
     if (nKeys == 0L) { fs.delete(new Path(s"$root/$dir"), true); return base }
     val eq = EqRef(dir, nKeys,
-      seq = next, keyIds = keys.schema.fieldNames.map(n => n -> tableIds(n)).toMap)
+      seq = next, keyIds = keys.schema.fieldNames.map(n => n -> head.curIds(n)).toMap)
     // header rows = the parent's (an upper bound until conversion):
     // exactness would need the scan this verb exists to avoid
     if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
         parent = base, operation = "eq-delete",
-        schemaDdl = headerDdl(tableSchema), ids = tableIds,
-        lastColId = lastColId, eqRefs = raw.eqRefs :+ eq))) {
+        schemaDdl = headerDdl(tableSchema), ids = head.curIds,
+        lastColId = head.lastColId, eqRefs = raw.eqRefs :+ eq))) {
       fs.delete(new Path(s"$root/$dir"), true)
       throw new IllegalStateException(
         s"deleteWhereEqual on $root conflicted with a concurrent snapshot; " +
@@ -3730,9 +3737,9 @@ object SnapshotLog {
     * the CoW paths, which load the inventory anyway, keep the exact
     * per-file [[inheritedBucketStats]].
     */
-  private def bandBucketSpecs(raw: RawManifest, schema: StructType,
-      curIds: Map[String, Int]): Seq[(String, Column)] = {
-    val idToCur = curIds.map(_.swap)
+  private def bandBucketSpecs(head: Resolved): Seq[(String, Column)] = {
+    val (raw, schema) = (head.raw, head.schema)
+    val idToCur = head.curIds.map(_.swap)
     // list-ref band keys already carry CURRENT names (rename commits
     // re-key them); inline per-file keys record PHYSICAL names and
     // must resolve through the file's ids, or a rename that freed the
@@ -3783,14 +3790,13 @@ object SnapshotLog {
       s"merge source has no key column $k"))
     val fs = fsOf(spark, root)
 
-    def schemaOf(rawOpt: Option[RawManifest]): (StructType, Map[String, Int], Int) =
-      rawOpt match {
+    def schemaOf(headOpt: Option[Resolved]): (StructType, Map[String, Int], Int) =
+      headOpt match {
         case None =>
           val (ids, last) = assignNewIds(source.schema, Map.empty, 0)
           (source.schema, ids, last)
-        case Some(raw) =>
-          val s = StructType.fromDDL(raw.schemaDdl)
-          val (ids, last) = currentIdsOf(raw, s)
+        case Some(head) =>
+          val s = head.schema
           keyCols.foreach(k => require(s.fieldNames.contains(k),
             s"merge key column $k not in table schema"))
           // same no-silent-retype rule as the other merges
@@ -3800,12 +3806,12 @@ object SnapshotLog {
                 s"merge source column ${f.name} is ${sf.dataType}, " +
                   s"table has ${f.dataType}"))
           }
-          (s, ids, last)
+          (s, head.curIds, head.lastColId)
       }
 
-    var base = currentId(spark, root)
-    var rawOpt = if (base > 0) Some(rawManifest(spark, root, base)) else None
-    var (tableSchema, tableIds, lastColId) = schemaOf(rawOpt)
+    var headOpt = resolveHead(spark, root)
+    var base = headOpt.map(_.id).getOrElse(0L)
+    var (tableSchema, tableIds, lastColId) = schemaOf(headOpt)
     val tableCols = tableSchema.fieldNames.map(col).toSeq
     // what the data files PHYSICALLY contain — fixed at the first
     // attempt; retries validate and stamp exactly these, never the
@@ -3823,10 +3829,10 @@ object SnapshotLog {
     // declared sort: the upsert's data files sort + stamp like any
     // append (churn must not decay reported-ordering eligibility)
     val eqSort = sortApplyFor(
-      rawOpt.map(_.sortOrder).getOrElse(Seq.empty), source)
+      headOpt.map(_.sortOrder).getOrElse(Seq.empty), source)
     val written0 = writeDataFiles(spark, root,
       source.select(tableCols: _*), firstNext, None,
-      rawOpt.map(bandBucketSpecs(_, tableSchema, tableIds)).getOrElse(Nil),
+      headOpt.map(bandBucketSpecs).getOrElse(Nil),
       sortApply = eqSort)
     val srcRows = written0.iterator.map(_.rows).sum
     def cleanupData(): Unit = {
@@ -3853,11 +3859,11 @@ object SnapshotLog {
       // a key set on an EMPTY table retracts nothing — the bootstrap
       // commit records only the data (no eq ref, no read-side join)
       val eqOpt =
-        if (nKeys == 0L || rawOpt.isEmpty) None
+        if (nKeys == 0L || headOpt.isEmpty) None
         else Some(EqRef(dir, nKeys, seq = next,
           keyIds = keyCols.map(k => k -> tableIds(k)).toMap))
       val newRef = writeFileList(fs, root, next, written, tableSchema)
-      val baseRaw = rawOpt.getOrElse(
+      val baseRaw = headOpt.map(_.raw).getOrElse(
         RawManifest(0L, 0L, "", 0L, "", Seq.empty, Seq.empty))
       // rows: parent's count (an upper bound while key sets are
       // outstanding — the scan-free write cannot know the matched
@@ -3878,9 +3884,9 @@ object SnapshotLog {
         throw new IllegalStateException(
           s"mergeIntoEqual on $root lost $attempt commit races; aborting")
       }
-      base = currentId(spark, root)
-      rawOpt = if (base > 0) Some(rawManifest(spark, root, base)) else None
-      val re = schemaOf(rawOpt)
+      headOpt = resolveHead(spark, root)
+      base = headOpt.map(_.id).getOrElse(0L)
+      val re = schemaOf(headOpt)
       tableSchema = re._1; tableIds = re._2; lastColId = re._3
       // the WRITTEN columns (not the source's projected-away extras)
       // must survive under their names with readable types — a winner
@@ -3929,9 +3935,10 @@ object SnapshotLog {
     * aggregations over churn-sized key dirs; layouts discovered once
     * per distinct column).
     */
-  private def eqPruneKeeps(spark: SparkSession, root: String,
-      raw: RawManifest, files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int]): (FileEntry, EqRef) => Boolean = {
+  private def eqPruneKeeps(spark: SparkSession,
+      head: Resolved): (FileEntry, EqRef) => Boolean = {
+    val (root, raw, files) = (head.root, head.raw, head.files)
+    val (schema, curIds) = (head.schema, head.curIds)
     val idToCur = curIds.map(_.swap)
     // per eq: its resolvable (physical, current) key columns
     val colsOf: Map[String, Seq[(String, String)]] = raw.eqRefs.iterator
@@ -3978,31 +3985,20 @@ object SnapshotLog {
     * pruning itself, not just the converted answer.
     */
   private[graft] def eqConvertScan(spark: SparkSession, root: String): Seq[String] = {
-    val base = currentId(spark, root)
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    val allFiles = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val ids = currentIdsOf(raw, schema)._1
-    val keeps = eqPruneKeeps(spark, root, raw, allFiles, schema, ids)
-    allFiles.filter(f => applicableEqs(raw.eqRefs, f).exists(e => keeps(f, e)))
-      .map(_.path)
+    val head = resolve(spark, root)
+    val keeps = eqPruneKeeps(spark, head)
+    head.files.filter(f =>
+      applicableEqs(head.raw.eqRefs, f).exists(e => keeps(f, e))).map(_.path)
   }
 
   def rewriteEqualityDeletes(spark: SparkSession, root: String): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"rewriteEqualityDeletes on empty log $root")
+    val head = resolve(spark, root)
+    val (base, raw) = (head.id, head.raw)
     val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
     if (raw.eqRefs.isEmpty) return base
-    val allFiles = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
     val next = base + 1
-    val keeps = eqPruneKeeps(spark, root, raw, allFiles, tableSchema, tableIds)
-    val affected = allFiles.filter(f =>
+    val keeps = eqPruneKeeps(spark, head)
+    val affected = head.files.filter(f =>
       applicableEqs(raw.eqRefs, f).exists(e => keeps(f, e)))
     val dvOpt =
       if (affected.isEmpty) None
@@ -4012,10 +4008,9 @@ object SnapshotLog {
             .filter(e => keeps(f, e)).map(_.dir))
           .toSeq.sortBy(_._2.head.path)
           .map { case (dirs, group) =>
-            peelMatches(spark, root,
-              dvPosRead(spark, root, raw, group, tableSchema, tableIds),
+            peelMatches(spark, root, dvPosRead(spark, head, group),
               raw.eqRefs.filter(e => dirs.contains(e.dir)),
-              tableSchema, tableIds)
+              head.schema, head.curIds)
               .select(col("__path").as("t_path"), col("__pos").as("t_pos"))
           }.reduce(_ unionByName _)
         writeDeleteVector(spark, root, hits, next)
@@ -4024,8 +4019,8 @@ object SnapshotLog {
     // the key sets leave the manifest: the new vector replaces them
     if (!publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
         parent = base, operation = "rewrite-eq", rows = raw.rows - delRows,
-        schemaDdl = headerDdl(tableSchema), ids = tableIds,
-        lastColId = lastColId, dRefs = raw.dRefs ++ dvOpt.map(_._1),
+        schemaDdl = headerDdl(head.schema), ids = head.curIds,
+        lastColId = head.lastColId, dRefs = raw.dRefs ++ dvOpt.map(_._1),
         eqRefs = Seq.empty))) {
       dvOpt.foreach { case (dRef, dvDir) =>
         fs.delete(new Path(s"$root/${dRef.path}"), false)
@@ -4048,35 +4043,22 @@ object SnapshotLog {
     * data bytes, the maintenance cost MoR deferred.
     */
   def rewriteDeletes(spark: SparkSession, root: String): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"rewriteDeletes on empty log $root")
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
+    val head = resolve(spark, root)
     // the rewrite stamps survivors with a NEW commit id — an
     // outstanding equality delete would stop applying to them (its
     // sequence predates the rewrite) and the dead rows would resurrect
-    require(raw.eqRefs.isEmpty,
+    require(head.raw.eqRefs.isEmpty,
       s"$root has outstanding equality deletes; run " +
         "rewriteEqualityDeletes first")
-    if (raw.dRefs.isEmpty) return base
-    val dv = deleteMapOf(fs, root, raw)
-    val groups = raw.refs.map(r => r -> readFileList(fs, root, r.path))
-    val allFiles = raw.inline ++ groups.flatMap(_._2)
+    if (head.raw.dRefs.isEmpty) return head.id
+    val dv = head.deletes
     val dirty = dv.keySet
-    val (intact, touched) = groups.partition {
-      case (_, fl) => !fl.exists(f => dirty(f.path)) }
-    val keepInline = (raw.inline ++ touched.flatMap(_._2))
-      .filterNot(f => dirty(f.path))
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
-    val rewritten = dvApply(spark, root,
-      allFiles.filter(f => dirty(f.path)), tableSchema, tableIds, dv)
-    commitFiles(spark, root, rewritten, "rewrite-deletes",
-      intact.map(_._1), keepInline, tableSchema,
-      derivedStats = inheritedBucketStats(allFiles, tableSchema, tableIds),
-      tableIds0 = tableIds, lastColId0 = lastColId, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder,
-      sortApplied = sortApplyFor(raw.sortOrder, rewritten))
+    val (intact, keepInline) = head.carryAround(dirty)
+    val rewritten = dvApply(spark, root, head.files.filter(f => dirty(f.path)),
+      head.schema, head.curIds, dv)
+    commitFiles(spark, root, Some(head), rewritten, "rewrite-deletes",
+      intact, keepInline, derivedStats = inheritedBucketStats(head),
+      sortApplied = sortApplyFor(head.sortOrder, rewritten))
   }
 
   /** MERGE-ON-READ upsert: matched table rows die via a positional
@@ -4094,17 +4076,11 @@ object SnapshotLog {
   def mergeIntoMoR(spark: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "mergeIntoMoR needs at least one key column")
-    val base = currentId(spark, root)
-    require(base > 0, s"mergeIntoMoR on empty log $root")
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    val allFiles = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, _) = currentIdsOf(raw, tableSchema)
+    val head = resolve(spark, root)
+    val allFiles = head.files
     // same no-silent-retype rule as mergeInto: source columns keep the
     // table's types, and the insert arm writes the table's column set
-    tableSchema.fields.foreach { f =>
+    head.schema.fields.foreach { f =>
       source.schema.fields.find(_.name == f.name).foreach(sf =>
         require(sf.dataType == f.dataType,
           s"merge source column ${f.name} is ${sf.dataType}, table has ${f.dataType}"))
@@ -4127,14 +4103,11 @@ object SnapshotLog {
           val hi = graft.sources.SnapshotCatalog.render(row.get(2 * i + 1))
           if (lo.isDefined && hi.isDefined) Some((c, lo, hi)) else None
         }
-        val scanFiles =
-          if (preds.isEmpty) allFiles
-          else boxFiles(new Resolved(root, raw, None, fs), preds)
-        val live = livePosRead(spark, root, raw, scanFiles, tableSchema, tableIds)
-        Some(live.join(keys, keyCols, "left_semi")
+        val scanFiles = if (preds.isEmpty) allFiles else boxFiles(head, preds)
+        Some(livePosRead(spark, head, scanFiles).join(keys, keyCols, "left_semi")
           .select(col("__path").as("t_path"), col("__pos").as("t_pos")))
       }
-    morCommit(spark, root, base, dead, source)
+    morCommit(spark, head, dead, source)
   }
 
   /** The atomic merge-on-read COMMIT both the library's [[mergeIntoMoR]]
@@ -4144,7 +4117,8 @@ object SnapshotLog {
     * current schema, and both land in ONE manifest publish — zero
     * existing files read back or rewritten.
     *
-    * Concurrency: the publish CAS fires at `base + 1`; on a lost race
+    * Concurrency: the publish CAS fires at `head.id + 1` (`head` is
+    * the snapshot the caller discovered `dead` against); on a lost race
     * the commit VALIDATES against the new head and REBASES instead of
     * aborting when it provably cannot be a lost update (Iceberg's
     * validate-and-retry): schema/field ids/spec/equality-delete state
@@ -4160,14 +4134,12 @@ object SnapshotLog {
     * concurrent merges both land (snapshot isolation — same as
     * concurrent appends); matched-row conflicts abort loudly.
     */
-  private[graft] def morCommit(spark: SparkSession, root: String,
-      base0: Long, dead: Option[DataFrame], adds: DataFrame,
+  private[graft] def morCommit(spark: SparkSession, head: Resolved,
+      dead: Option[DataFrame], adds: DataFrame,
       operation: String = "mor-merge"): Long = {
+    val root = head.root
     val fs = fsOf(spark, root)
-    val baseRaw = rawManifest(spark, root, base0)
-    val tableSchema = StructType.fromDDL(baseRaw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(baseRaw, tableSchema)
-    val payload = writeMorPayload(spark, root, baseRaw, dead, adds, base0 + 1)
+    val payload = writeMorPayload(spark, head, dead, adds, head.id + 1)
     val myTargets: Set[String] = payload.dv match {
       case Some((dRef, _)) =>
         readDeleteList(fs, root, dRef.path).map(_.target).toSet
@@ -4180,25 +4152,24 @@ object SnapshotLog {
           "the same rows (or a schema/spec/equality-delete change); " +
           "recompute against the new current snapshot and retry")
     }
-    /** Can this commit's content land unchanged on `headRaw`? */
-    def rebaseSafe(headRaw: RawManifest): Boolean = {
-      val sameShape = headRaw.schemaDdl == baseRaw.schemaDdl &&
-        currentIdsOf(headRaw, tableSchema)._1 == tableIds &&
-        specLines(headRaw.spec) == specLines(baseRaw.spec) &&
-        eqLines(headRaw.eqRefs) == eqLines(baseRaw.eqRefs) &&
+    /** Can this commit's content land unchanged on `winner`? */
+    def rebaseSafe(winner: Resolved): Boolean = {
+      val winnerRaw = winner.raw
+      val sameShape = winnerRaw.schemaDdl == head.raw.schemaDdl &&
+        winner.curIds == head.curIds &&
+        specLines(winnerRaw.spec) == specLines(head.raw.spec) &&
+        eqLines(winnerRaw.eqRefs) == eqLines(head.raw.eqRefs) &&
         // vectors may only be ADDED in the window: a removed one
         // (rollback, rewriteDeletes fold) can resurrect rows our
         // discovery saw dead — no sound rebase exists for that
-        baseRaw.dRefs.map(_.path).toSet
-          .subsetOf(headRaw.dRefs.map(_.path).toSet)
+        head.raw.dRefs.map(_.path).toSet
+          .subsetOf(winnerRaw.dRefs.map(_.path).toSet)
       if (!sameShape) return false
       if (myTargets.isEmpty) return true // pure append rebases freely
-      val headPaths = (headRaw.inline ++
-        headRaw.refs.flatMap(r => readFileList(fs, root, r.path)))
-        .map(_.path).toSet
-      if (!myTargets.subsetOf(headPaths)) return false // target rewritten
-      val baseDRefs = baseRaw.dRefs.map(_.path).toSet
-      val newEntries = headRaw.dRefs.filterNot(r => baseDRefs(r.path))
+      val winnerPaths = winner.files.map(_.path).toSet
+      if (!myTargets.subsetOf(winnerPaths)) return false // target rewritten
+      val baseDRefs = head.raw.dRefs.map(_.path).toSet
+      val newEntries = winnerRaw.dRefs.filterNot(r => baseDRefs(r.path))
         .flatMap(r => readDeleteList(fs, root, r.path))
         .filter(e => myTargets(e.target))
       if (newEntries.isEmpty) return true // file-level disjoint
@@ -4211,8 +4182,8 @@ object SnapshotLog {
       mine.join(theirs, Seq("t_path", "t_pos"), "left_semi")
         .limit(1).count() == 0L
     }
-    var raw = baseRaw
-    var base = base0
+    var raw = head.raw
+    var base = head.id
     var attempt = 0
     while (true) {
       val next = base + 1
@@ -4220,23 +4191,22 @@ object SnapshotLog {
       // must sequence AFTER these rows whatever id the race settles on
       val written = payload.written.map(f => f.copy(
         stats = f.stats + (SeqStatName -> (next.toString, next.toString))))
-      val newRef = writeFileList(fs, root, next, written, tableSchema)
+      val newRef = writeFileList(fs, root, next, written, head.schema)
       if (publishManifest(fs, manifestPath(root, next), raw.copy(id = next,
           parent = base, operation = operation,
           rows = raw.rows - payload.delRows + payload.srcRows,
-          schemaDdl = headerDdl(tableSchema), refs = raw.refs :+ newRef,
-          ids = tableIds, lastColId = lastColId,
+          schemaDdl = headerDdl(head.schema), refs = raw.refs :+ newRef,
+          ids = head.curIds, lastColId = head.lastColId,
           dRefs = raw.dRefs ++ payload.dv.map(_._1))))
         return next
       fs.delete(new Path(s"$root/${newRef.path}"), false)
       attempt += 1
-      val head = currentId(spark, root)
-      val headRaw = rawManifest(spark, root, head)
+      val winner = resolve(spark, root)
       // a tighter bound than MaxCommitRaces: each rebase check can run
       // a coordinate join against the winner's vectors
-      if (attempt > 5 || !rebaseSafe(headRaw)) abort()
-      raw = headRaw
-      base = head
+      if (attempt > 5 || !rebaseSafe(winner)) abort()
+      raw = winner.raw
+      base = winner.id
     }
     throw new IllegalStateException("unreachable")
   }
@@ -4261,8 +4231,7 @@ object SnapshotLog {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         snap.schema.add("__path", org.apache.spark.sql.types.StringType)
           .add("__pos", org.apache.spark.sql.types.LongType))
-    else livePosRead(spark, snap.root, snap.raw, files, snap.schema,
-      snap.curIds)
+    else livePosRead(spark, snap, files)
   }
 
   /** The merge-on-read commit against a BRANCH head — [[morCommit]]'s
@@ -4273,31 +4242,32 @@ object SnapshotLog {
     * like [[appendToBranch]] — the id the publish lands under, so
     * post-publish equality deletes sequence correctly against them.
     * No rebase retry here: a WAP branch is a single-writer staging
-    * area, so a lost race (k advanced since `baseK`) fails loudly.
+    * area, so a lost race (the branch advanced past `head`'s pin)
+    * fails loudly.
     */
-  private[graft] def morCommitBranch(spark: SparkSession, root: String,
-      name: String, baseK: Long, dead: Option[DataFrame], adds: DataFrame,
-      operation: String): Long = {
+  private[graft] def morCommitBranch(spark: SparkSession, head: Resolved,
+      dead: Option[DataFrame], adds: DataFrame, operation: String): Long = {
+    val root = head.root
+    require(head.branch.isDefined, s"$operation on $root needs a branch head")
+    val (name, baseK) = head.branch.get
     val fs = fsOf(spark, root)
     val fork = tagId(spark, root, branchRefName(name))
     val k = branchPin(spark, root, name)
-    val raw = resolve(spark, root, branch = Some((name, k))).raw
     require(k == baseK,
       s"branch $name of $root advanced since discovery ($baseK -> $k); " +
         "recompute against the branch head and retry")
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
+    val raw = head.raw
     val pubSeq = fork + 1
-    val payload = writeMorPayload(spark, root, raw, dead, adds, pubSeq)
+    val payload = writeMorPayload(spark, head, dead, adds, pubSeq)
     val written = payload.written.map(f => f.copy(
       stats = f.stats + (SeqStatName -> (pubSeq.toString, pubSeq.toString))))
-    val newRef = writeFileList(fs, root, pubSeq, written, tableSchema)
+    val newRef = writeFileList(fs, root, pubSeq, written, head.schema)
     val next = k + 1
     if (!publishManifest(fs, branchManifestPath(root, name, next), raw.copy(
         id = next, parent = if (k == 0) fork else k, operation = operation,
         rows = raw.rows - payload.delRows + payload.srcRows,
-        schemaDdl = headerDdl(tableSchema), refs = raw.refs :+ newRef,
-        ids = tableIds, lastColId = lastColId,
+        schemaDdl = headerDdl(head.schema), refs = raw.refs :+ newRef,
+        ids = head.curIds, lastColId = head.lastColId,
         dRefs = raw.dRefs ++ payload.dv.map(_._1)))) {
       fs.delete(new Path(s"$root/${newRef.path}"), false)
       payload.discard(fs, root)
@@ -4335,21 +4305,16 @@ object SnapshotLog {
     }
   }
 
-  private def writeMorPayload(spark: SparkSession, root: String,
-      raw: RawManifest, dead: Option[DataFrame], adds: DataFrame,
-      seq: Long): MorPayload = {
-    val fs = fsOf(spark, root)
-    val allFiles = raw.inline ++
-      raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val tableIds = currentIdsOf(raw, tableSchema)._1
-    val dv = dead.filter(_ => allFiles.nonEmpty)
+  private def writeMorPayload(spark: SparkSession, head: Resolved,
+      dead: Option[DataFrame], adds: DataFrame, seq: Long): MorPayload = {
+    val root = head.root
+    val (tableSchema, tableIds) = (head.schema, head.curIds)
+    val dv = dead.filter(_ => head.files.nonEmpty)
       .flatMap(d => writeDeleteVector(spark, root, d, seq))
-    val sort = sortApplyFor(raw.sortOrder, adds)
+    val sort = sortApplyFor(head.sortOrder, adds)
     val written = writeDataFiles(spark, root,
       adds.select(tableSchema.fieldNames.map(col).toSeq: _*), seq, None,
-      inheritedBucketStats(allFiles, tableSchema, tableIds),
-      sortApply = sort)
+      inheritedBucketStats(head), sortApply = sort)
       .map(f => f.copy(
         ids = idsForWrittenCols(tableIds, tableSchema.fieldNames.toSet),
         sortedBy = if (sort.isEmpty) "" else renderSortOrder(sort)))
@@ -4388,16 +4353,9 @@ object SnapshotLog {
   def mergeInto(spark: SparkSession, root: String, source: DataFrame,
       keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "mergeInto needs at least one key column")
-    val base = currentId(spark, root)
-    require(base > 0, s"mergeInto on empty log $root")
-    val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    require(raw.dRefs.isEmpty && raw.eqRefs.isEmpty,
-      s"$root has outstanding merge-on-read deletes (vectors or equality " +
-        "key sets); run rewriteEqualityDeletes + rewriteDeletes (or " +
-        "optimize) before a partial CoW rewrite")
-    val groups = raw.refs.map(r => r -> readFileList(fs, root, r.path))
-    val allFiles = raw.inline ++ groups.flatMap(_._2)
+    val head = resolve(spark, root)
+    head.requireNoMorDeletes()
+    val allFiles = head.files
     // reads pinned to the snapshot's schema and the rewrite committed
     // under it — post-evolution, hit files may be narrower than the
     // table, and the rewrite must not narrow the recorded schema.
@@ -4406,20 +4364,17 @@ object SnapshotLog {
     // physically wider than the recorded DDL, poisoning every later
     // pinned-schema read — the same no-silent-retype rule append's
     // mergeSchemas enforces.
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
+    val (tableSchema, tableIds) = (head.schema, head.curIds)
     tableSchema.fields.foreach { f =>
       source.schema.fields.find(_.name == f.name).foreach(sf =>
         require(sf.dataType == f.dataType,
           s"merge source column ${f.name} is ${sf.dataType}, table has ${f.dataType}"))
     }
     if (allFiles.isEmpty)
-      return commitFiles(spark, root,
+      return commitFiles(spark, root, Some(head),
         source.select(tableSchema.fieldNames.map(col).toSeq: _*),
-        "merge", Seq.empty, Seq.empty, tableSchema,
-        tableIds0 = tableIds, lastColId0 = lastColId, plannedBase = base,
-        carriedSpec = raw.spec, carriedSort = raw.sortOrder,
-        sortApplied = sortApplyFor(raw.sortOrder, source))
+        "merge", Seq.empty, Seq.empty,
+        sortApplied = sortApplyFor(head.sortOrder, source))
     val scan = resolvedRead(spark, root, allFiles, tableSchema, tableIds)
     val keys = source.select(keyCols.map(col): _*).distinct()
     // bounded driver value — O(#matching files); file column projected
@@ -4432,10 +4387,7 @@ object SnapshotLog {
     val hitRel = hit.map(relativize(_)).toSet
     // same manifest-tree CoW carry as deleteWhere: untouched lists by
     // reference, touched lists' survivors into the new list
-    val (intact, touched) = groups.partition {
-      case (_, fl) => !fl.exists(f => hitRel(f.path)) }
-    val carriedInline = (raw.inline ++ touched.flatMap(_._2))
-      .filterNot(f => hitRel(f.path))
+    val (intact, carriedInline) = head.carryAround(hitRel)
     // a USING join moves the key columns to the FRONT of its output —
     // re-select the table's own column order, or the rewrite would
     // silently reorder the table's physical (and manifest) schema
@@ -4447,12 +4399,9 @@ object SnapshotLog {
         .join(keys, keyCols, "left_anti")
         .select(tableCols: _*)
     val merged = survivors.unionByName(source.select(tableCols: _*))
-    commitFiles(spark, root, merged,
-      "merge", intact.map(_._1), carriedInline, tableSchema,
-      derivedStats = inheritedBucketStats(allFiles, tableSchema, tableIds),
-      tableIds0 = tableIds, lastColId0 = lastColId, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder,
-      sortApplied = sortApplyFor(raw.sortOrder, merged))
+    commitFiles(spark, root, Some(head), merged, "merge", intact,
+      carriedInline, derivedStats = inheritedBucketStats(head),
+      sortApplied = sortApplyFor(head.sortOrder, merged))
   }
 
   /** Atomically publish `tmp` as `m`, failing (false) if `m` already
@@ -4563,14 +4512,10 @@ object SnapshotLog {
     * carry ids — a table with pre-field-id files must rewrite them
     * first ([[optimize]]); refusing here beats silently misreading.
     */
-  private def requireAllFilesCarryIds(spark: SparkSession, root: String,
-      raw: RawManifest): Unit = {
-    val fs = fsOf(spark, root)
-    val files = raw.inline ++ raw.refs.flatMap(r => readFileList(fs, root, r.path))
-    require(files.forall(_.ids.nonEmpty),
-      s"schema evolution on $root needs field ids on every live file; " +
-        "rewrite pre-field-id files first (optimize)")
-  }
+  private def requireAllFilesCarryIds(head: Resolved): Unit =
+    require(head.files.forall(_.ids.nonEmpty),
+      s"schema evolution on ${head.root} needs field ids on every live " +
+        "file; rewrite pre-field-id files first (optimize)")
 
   /** The field at a dotted path. Navigates structs by field name and
     * containers by path step — `element` through arrays, `key`/`value`
@@ -4660,13 +4605,6 @@ object SnapshotLog {
     rewriteType(schema, segs).asInstanceOf[StructType]
   }
 
-  /** Every live file of `raw` — the set evolution preconditions check. */
-  private def liveFilesOf(spark: SparkSession, root: String,
-      raw: RawManifest): Seq[FileEntry] = {
-    val fs = fsOf(spark, root)
-    raw.inline ++ raw.refs.flatMap(r => readFileList(fs, root, r.path))
-  }
-
   /** Rename a column WITHOUT touching data — a metadata-only commit:
     * new schema DDL, same field id under the new name, every file list
     * carried by reference (bands re-keyed). Old files keep reading
@@ -4683,13 +4621,10 @@ object SnapshotLog {
     */
   def renameColumn(spark: SparkSession, root: String,
       from: String, to: String): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"renameColumn on empty log $root")
     require(to.matches("[A-Za-z_][A-Za-z0-9_]*"), s"invalid column name: $to")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    requireAllFilesCarryIds(spark, root, raw)
-    val (ids, last) = currentIdsOf(raw, schema)
+    val head = resolve(spark, root)
+    val (schema, ids, last) = (head.schema, head.curIds, head.lastColId)
+    requireAllFilesCarryIds(head)
     if (!from.contains('.')) {
       require(schema.fieldNames.contains(from), s"no column $from in $root")
       require(!schema.fieldNames.contains(to),
@@ -4706,7 +4641,7 @@ object SnapshotLog {
            k.substring(prefixOld.length)
          else k) -> v
       }
-      return commitMetadata(spark, root, base, raw, newSchema,
+      return commitMetadata(spark, head.id, head, newSchema,
         renamedIds, last, "rename",
         editKey = c => Some(if (c == from) to else c))
     }
@@ -4720,7 +4655,7 @@ object SnapshotLog {
     val id = ids.getOrElse(from, throw new IllegalArgumentException(
       s"nested field $from of $root carries no field id; the table " +
         "predates nested ids — rewrite files first (optimize), then retry"))
-    liveFilesOf(spark, root, raw).foreach(f => require(
+    head.files.foreach(f => require(
       f.ids.valuesIterator.contains(id),
       s"file ${f.path} predates the nested id of $from; a rename would " +
         "read its data as NULL — rewrite files first (optimize)"))
@@ -4734,7 +4669,7 @@ object SnapshotLog {
        else k) -> v
     }
     // nested names never key stats/bands/specs: top-level keys untouched
-    commitMetadata(spark, root, base, raw, newSchema, newIds, last,
+    commitMetadata(spark, head.id, head, newSchema, newIds, last,
       "rename", editKey = Some(_))
   }
 
@@ -4763,11 +4698,9 @@ object SnapshotLog {
     */
   def widenColumn(spark: SparkSession, root: String, name: String,
       to: org.apache.spark.sql.types.DataType): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"widenColumn on empty log $root")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val (ids, last) = currentIdsOf(raw, schema)
+    val head = resolve(spark, root)
+    val (base, schema, ids, last) =
+      (head.id, head.schema, head.curIds, head.lastColId)
     if (name.contains('.')) {
       // NESTED widen: metadata-only like the top-level verb — the
       // per-era read schema carries the CURRENT (wider) child type and
@@ -4780,7 +4713,7 @@ object SnapshotLog {
       require(isWidening(cur.dataType, to),
         s"cannot widen $name: ${cur.dataType} -> $to is not a lossless " +
           "promotion")
-      return commitMetadata(spark, root, base, raw,
+      return commitMetadata(spark, base, head,
         rewriteStructAt(schema, segs, f => Some(f.copy(dataType = to))),
         ids, last, "widen", editKey = Some(_))
     }
@@ -4789,7 +4722,7 @@ object SnapshotLog {
     if (from == to) return base
     require(isWidening(from, to),
       s"cannot widen $name: $from -> $to is not a lossless promotion")
-    commitMetadata(spark, root, base, raw,
+    commitMetadata(spark, base, head,
       StructType(schema.fields.map(f =>
         if (f.name == name) f.copy(dataType = to) else f)),
       ids, last, "widen", editKey = Some(_))
@@ -4809,11 +4742,8 @@ object SnapshotLog {
     */
   def addColumn(spark: SparkSession, root: String, name: String,
       dataType: org.apache.spark.sql.types.DataType): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"addColumn on empty log $root")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val (ids, last) = currentIdsOf(raw, schema)
+    val head = resolve(spark, root)
+    val (schema, ids, last) = (head.schema, head.curIds, head.lastColId)
     if (name.contains('.')) {
       // NESTED add: the struct gains a child at its END under a fresh
       // id — id-era files resolve it as absent (NULL; the sentinel
@@ -4835,8 +4765,8 @@ object SnapshotLog {
           s"${parentSegs.mkString(".")} is not a struct " +
             s"(${other.catalogString})")
       }
-      requireAllFilesCarryIds(spark, root, raw)
-      liveFilesOf(spark, root, raw).foreach { f =>
+      requireAllFilesCarryIds(head)
+      head.files.foreach { f =>
         physNameIn(f, segs.head, ids).foreach { phys =>
           require(f.ids.keysIterator.exists(_.startsWith(phys + ".")),
             s"file ${f.path} predates nested ids under ${segs.head}; " +
@@ -4859,7 +4789,7 @@ object SnapshotLog {
           f.dataType.asInstanceOf[StructType].fields :+
             org.apache.spark.sql.types.StructField(child, dataType,
               nullable = true)))))
-      return commitMetadata(spark, root, base, raw, newSchema,
+      return commitMetadata(spark, head.id, head, newSchema,
         newIds, l, "add-column", editKey = Some(_))
     }
     require(name.matches("[A-Za-z_][A-Za-z0-9_]*"),
@@ -4873,30 +4803,27 @@ object SnapshotLog {
     val newIds = ids ++ (name +: nestedPaths(StructType(Seq(
       org.apache.spark.sql.types.StructField(name, dataType)))).map(_._1))
       .map { p => l += 1; p -> l }
-    commitMetadata(spark, root, base, raw,
+    commitMetadata(spark, head.id, head,
       schema.add(name, dataType, nullable = true),
       newIds, l, "add-column",
       editKey = c => Some(c))
   }
 
   def dropColumn(spark: SparkSession, root: String, name: String): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"dropColumn on empty log $root")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    requireAllFilesCarryIds(spark, root, raw)
-    val (ids, last) = currentIdsOf(raw, schema)
+    val head = resolve(spark, root)
+    val (schema, ids, last) = (head.schema, head.curIds, head.lastColId)
+    requireAllFilesCarryIds(head)
     if (!name.contains('.')) {
       require(schema.fieldNames.contains(name), s"no column $name in $root")
       require(schema.fields.length > 1, "cannot drop the only column")
       // an outstanding equality delete keyed on this column could never
       // apply again — refuse rather than silently resurrect its rows
-      raw.eqRefs.foreach(e => require(!e.keyIds.values.toSet.contains(ids(name)),
+      head.raw.eqRefs.foreach(e => require(!e.keyIds.values.toSet.contains(ids(name)),
         s"column $name is a key of outstanding equality delete ${e.dir}; " +
           "run rewriteEqualityDeletes first"))
       // a dropped struct's nested id paths retire with it — orphaned
       // dotted keys would survive every later commit for nothing
-      return commitMetadata(spark, root, base, raw,
+      return commitMetadata(spark, head.id, head,
         StructType(schema.fields.filterNot(_.name == name)),
         ids.filterNot { case (k, _) =>
           k == name || k.startsWith(name + ".") },
@@ -4918,7 +4845,7 @@ object SnapshotLog {
     }
     val newSchema = rewriteStructAt(schema, segs, _ => None)
     val prefix = name + "."
-    commitMetadata(spark, root, base, raw, newSchema,
+    commitMetadata(spark, head.id, head, newSchema,
       ids.filterNot { case (k, _) => k == name || k.startsWith(prefix) },
       last, "drop-column", editKey = Some(_))
   }
@@ -4933,28 +4860,26 @@ object SnapshotLog {
     * eventually needs.
     */
   def rollback(spark: SparkSession, root: String, toId: Long): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"rollback on empty log $root")
+    val base = resolve(spark, root).id
     require(toId > 0 && toId <= base, s"cannot roll back to snapshot $toId")
     if (toId == base) return base
-    val target = rawManifest(spark, root, toId)
-    val schema = StructType.fromDDL(target.schemaDdl)
-    val (ids, last) = currentIdsOf(target, schema)
-    commitMetadata(spark, root, base, target, schema, ids, last,
-      s"rollback=$toId", editKey = Some(_))
+    val target = resolve(spark, root, toId)
+    commitMetadata(spark, base, target, target.schema, target.curIds,
+      target.lastColId, s"rollback=$toId", editKey = Some(_))
   }
 
-  /** Publish a metadata-only snapshot: the source manifest's refs
+  /** Publish a metadata-only snapshot as `base + 1`: `src`'s refs
     * (bands re-keyed) and inline entries carried verbatim under a new
-    * header committed as `base + 1`. Same atomic rename protocol; a
-    * lost race fails loudly (the caller's intent must be recomputed
-    * against the new current snapshot).
+    * header — `src` is the head `base` names, or for a rollback its
+    * target. Same atomic rename protocol; a lost race fails loudly
+    * (the caller's intent must be recomputed against the new current
+    * snapshot).
     */
-  private def commitMetadata(spark: SparkSession, root: String, base: Long,
-      raw: RawManifest, schema: StructType, ids: Map[String, Int],
-      lastColId: Int, operation: String,
-      editKey: String => Option[String],
+  private def commitMetadata(spark: SparkSession, base: Long, src: Resolved,
+      schema: StructType, ids: Map[String, Int], lastColId: Int,
+      operation: String, editKey: String => Option[String],
       specOverride: Option[Seq[PartField]] = None): Long = {
+    val (root, raw) = (src.root, src.raw)
     val fs = fsOf(spark, root)
     val next = base + 1
     val spec = specOverride.getOrElse(editSpec(raw.spec, editKey))
@@ -5045,36 +4970,34 @@ object SnapshotLog {
     // the CAS then fires at pin+1, so any commit that landed after the
     // caller's read fails the publish loudly instead of being clobbered
     // (the read-compute-overwrite lost-update window)
-    val base = if (basePin >= 0L) basePin else currentId(spark, root)
     // append carries the parent's file LISTS by reference — the parent's
     // inventory is never opened, so append metadata I/O is O(#commits),
     // not O(#files). A legacy flat manifest surfaces as inline entries
     // and gets migrated into a file list by this commit.
-    val prev = if (base > 0) Some(rawManifest(spark, root, base)) else None
+    val prev =
+      if (basePin < 0L) resolveHead(spark, root)
+      else if (basePin > 0L) Some(resolve(spark, root, basePin))
+      else None
     val (refs, inline, dRefs, eqRefs) =
-      if (keepBase) prev.map(p => (p.refs, p.inline, p.dRefs, p.eqRefs))
+      if (keepBase) prev.map(h => (h.raw.refs, h.raw.inline, h.raw.dRefs, h.raw.eqRefs))
         .getOrElse((Seq.empty[ListRef], Seq.empty[FileEntry],
           Seq.empty[DeleteRef], Seq.empty[EqRef]))
       else (Seq.empty[ListRef], Seq.empty[FileEntry],
         Seq.empty[DeleteRef], Seq.empty[EqRef])
     val (schema, ids, last) = prev match {
       case Some(p) if keepBase =>
-        val ps = StructType.fromDDL(p.schemaDdl)
-        val (pIds, pLast) = currentIdsOf(p, ps)
-        val merged = mergeSchemas(ps, df.schema)
-        val (mIds, mLast) = assignNewIds(merged, pIds, pLast)
+        val merged = mergeSchemas(p.schema, df.schema)
+        val (mIds, mLast) = assignNewIds(merged, p.curIds, p.lastColId)
         (merged, mIds, mLast)
       case Some(p) =>
         // overwrite replaces the schema wholesale, but a same-name
         // same-type column keeps its identity (its history stays
         // diffable); anything else is a new column with a new id
-        val ps = StructType.fromDDL(p.schemaDdl)
-        val (pIds, pLast) = currentIdsOf(p, ps)
-        val keep = ps.fields
+        val keep = p.schema.fields
           .filter(pf => df.schema.fields.exists(f =>
             f.name == pf.name && f.dataType == pf.dataType))
-          .map(pf => pf.name -> pIds(pf.name)).toMap
-        val (oIds, oLast) = assignNewIds(df.schema, keep, pLast)
+          .map(pf => pf.name -> p.curIds(pf.name)).toMap
+        val (oIds, oLast) = assignNewIds(df.schema, keep, p.lastColId)
         (df.schema, oIds, oLast)
       case None =>
         val (nIds, nLast) = assignNewIds(df.schema, Map.empty, 0)
@@ -5082,8 +5005,7 @@ object SnapshotLog {
     }
     val newCols = prev match {
       case Some(p) if keepBase =>
-        df.schema.fieldNames.toSet --
-          StructType.fromDDL(p.schemaDdl).fieldNames.toSet
+        df.schema.fieldNames.toSet -- p.schema.fieldNames.toSet
       case _ => df.schema.fieldNames.toSet
     }
     // hidden partitioning: a DECLARED spec routes this commit's rows by
@@ -5119,19 +5041,14 @@ object SnapshotLog {
     // declared write sort order: applies (and stamps) only when the
     // frame carries EVERY sort column — a partial sort would stamp a
     // claim the file's rows don't honor
-    val sortOrd = prev.map(_.sortOrder).getOrElse(Seq.empty)
-    val sortApply = sortOverride.getOrElse {
-      if (sortOrd.nonEmpty && sortOrd.forall(f => df.columns.contains(f.column)))
-        sortOrd
-      else Nil
-    }
-    commitFiles(spark, root, dfR, operation, refs, inline, schema, bloomSpec,
+    val sortApply = sortOverride.getOrElse(
+      sortApplyFor(prev.map(_.sortOrder).getOrElse(Seq.empty), df))
+    commitFiles(spark, root, prev, dfR, operation, refs, inline, bloomSpec,
       derivedStats = derivedR, fanoutExprs = fanoutR,
-      tableIds0 = ids, lastColId0 = last,
-      carriedDRefs = dRefs, carriedEqRefs = eqRefs, plannedBase = base,
-      appendNewCols = newCols, carriedSpec = spec,
-      specDeclared = declareSpec.isDefined,
-      carriedSort = sortOrd, sortApplied = sortApply,
+      evolved = Some((schema, ids, last)),
+      carriedDRefs = dRefs, carriedEqRefs = eqRefs,
+      appendNewCols = newCols, declaredSpec = declareSpec,
+      sortApplied = sortApply,
       preSorted = sparkPrepared, preWritten = preWritten,
       // only an APPEND-class commit may re-merge against a race
       // winner's refs; an overwrite (txn or not) replayed that way
@@ -5334,31 +5251,28 @@ object SnapshotLog {
     }
   }
 
-  /** `plannedBase` is the snapshot the CALLER planned its carried
-    * refs/content against — the publish CAS fires at plannedBase+1, so
-    * a commit that landed anywhere after the caller's read (including
-    * during its discovery scan) surfaces as a lost race instead of
-    * being silently clobbered by stale carried refs. −1 (only for
-    * callers that do no prior manifest read) falls back to a fresh
-    * read here.
+  /** `head` is the snapshot the CALLER planned its carried
+    * refs/content against (None: an empty log) — the publish CAS fires
+    * at head.id + 1, so a commit that landed anywhere after the
+    * caller's read (including during its discovery scan) surfaces as a
+    * lost race instead of being silently clobbered by stale carried
+    * refs. The commit keeps the head's partition spec (unless it
+    * declares one), its sort order, and — unless the append path
+    * passes the `evolved` (schema, field ids, high-water id) it merged —
+    * its schema and field ids.
     */
-  private def commitFiles(spark: SparkSession, root: String, df: DataFrame,
-      operation: String, carriedRefs0: Seq[ListRef],
-      carriedInline0: Seq[FileEntry],
-      tableSchema0: StructType,
+  private def commitFiles(spark: SparkSession, root: String,
+      head: Option[Resolved], df: DataFrame, operation: String,
+      carriedRefs0: Seq[ListRef], carriedInline0: Seq[FileEntry],
       bloomSpec: Option[BloomSpec] = None,
       derivedStats: Seq[(String, Column)] = Nil,
       fanoutExprs: Seq[Column] = Nil,
-      tableIds0: Map[String, Int],
-      lastColId0: Int,
+      evolved: Option[(StructType, Map[String, Int], Int)] = None,
       carriedDRefs: Seq[DeleteRef] = Seq.empty,
       carriedEqRefs: Seq[EqRef] = Seq.empty,
-      plannedBase: Long,
       appendNewCols: Set[String] = Set.empty,
-      carriedSpec: Seq[PartField],
-      specDeclared: Boolean = false,
+      declaredSpec: Option[Seq[PartField]] = None,
       retryAsAppend: Boolean = false,
-      carriedSort: Seq[SortField],
       // the sort order THIS commit's files were (or are about to be)
       // physically sorted by — stamps each written file's sortedBy
       sortApplied: Seq[SortField] = Nil,
@@ -5368,19 +5282,19 @@ object SnapshotLog {
       // files the DSv2 batch write's EXECUTORS already wrote and
       // described — the commit skips its own write and publishes these
       preWritten: Option[Seq[FileEntry]] = None): Long = {
-    var tableSchema = Option(tableSchema0).getOrElse(df.schema)
-    var (tableIds, lastColId) =
-      if (tableIds0.nonEmpty) (tableIds0, lastColId0)
-      else assignNewIds(tableSchema, Map.empty, 0)
+    // only the append path commits onto an empty log, and it passes
+    // the schema it evolved
+    var (tableSchema, tableIds, lastColId) = evolved.getOrElse(
+      (head.get.schema, head.get.curIds, head.get.lastColId))
     val fs = fsOf(spark, root)
     var attempt = 0
     var carriedRefs = carriedRefs0
     var carriedInline = carriedInline0
     var carriedD = carriedDRefs
     var carriedE = carriedEqRefs
-    var carriedP = carriedSpec
-    var carriedO = carriedSort
-    var base = if (plannedBase >= 0) plannedBase else currentId(spark, root)
+    var carriedP = declaredSpec.getOrElse(head.map(_.spec).getOrElse(Seq.empty))
+    var carriedO = head.map(_.sortOrder).getOrElse(Seq.empty)
+    var base = head.map(_.id).getOrElse(0L)
     // first-attempt binding of the written files' PHYSICAL column names
     // to their ids — a later retry's schema may know a column only
     // under a rename's new name, but the id is rename-stable, so the
@@ -5456,19 +5370,18 @@ object SnapshotLog {
         // old name-based mergeSchemas re-merge would resurrect a
         // renamed-away name as a phantom new column and strand the
         // appended values under it.
-        val winner = rawManifest(spark, root, base)
-        carriedRefs = winner.refs
-        carriedInline = winner.inline
-        carriedD = winner.dRefs
-        carriedE = winner.eqRefs
+        val winner = resolve(spark, root, base)
+        carriedRefs = winner.raw.refs
+        carriedInline = winner.raw.inline
+        carriedD = winner.raw.dRefs
+        carriedE = winner.raw.eqRefs
         // a concurrent spec change wins unless THIS commit declared one
-        if (!specDeclared) carriedP = winner.spec
+        if (declaredSpec.isEmpty) carriedP = winner.spec
         // a concurrent sort-order change always wins (commits never
         // declare one); the files' sortedBy stamps stay truthful — they
         // record what the rows ARE sorted by, not the current policy
         carriedO = winner.sortOrder
-        val ws = StructType.fromDDL(winner.schemaDdl)
-        val (wIds, wLast) = currentIdsOf(winner, ws)
+        val ws = winner.schema
         tableSchema.fields.foreach(f =>
           if (appendNewCols(f.name))
             ws.fields.find(_.name == f.name).foreach(wf =>
@@ -5478,7 +5391,8 @@ object SnapshotLog {
         val add = tableSchema.fields.filter(f =>
           appendNewCols(f.name) && !ws.fieldNames.contains(f.name))
         tableSchema = StructType(ws.fields ++ add)
-        val (nIds, nLast) = assignNewIds(tableSchema, wIds, wLast)
+        val (nIds, nLast) =
+          assignNewIds(tableSchema, winner.curIds, winner.lastColId)
         tableIds = nIds
         lastColId = nLast
       }
@@ -5782,19 +5696,13 @@ object SnapshotLog {
   def optimize(spark: SparkSession, root: String, clusterBy: String,
       numFiles: Int): Long = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    val base = currentId(spark, root)
-    require(base > 0, s"optimize on empty log $root")
-    // field ids must carry through the rewrite — resetting them would
-    // re-bind retired ids to different columns in cross-commit diffs
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val (ids, last) = currentIdsOf(raw, schema)
-    val cur = read(spark, root)
-    commitFiles(spark, root,
-      cur.repartitionByRange(numFiles, col(clusterBy)), "optimize",
-      Seq.empty, Seq.empty, schema,
-      tableIds0 = ids, lastColId0 = last, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder)
+    // field ids carry through the rewrite (commitFiles keeps the
+    // head's) — resetting them would re-bind retired ids to different
+    // columns in cross-commit diffs
+    val head = resolve(spark, root)
+    commitFiles(spark, root, Some(head),
+      dvRead(spark, head, head.files).repartitionByRange(numFiles, col(clusterBy)),
+      "optimize", Seq.empty, Seq.empty)
   }
 
   /** OPTIMIZE into a HASH-BUCKET layout: rewrite the current content
@@ -5812,19 +5720,12 @@ object SnapshotLog {
   def optimizeBucketed(spark: SparkSession, root: String, bucketBy: String,
       numBuckets: Int): Long = {
     require(numBuckets >= 1, "numBuckets must be >= 1")
-    val base = currentId(spark, root)
-    require(base > 0, s"optimizeBucketed on empty log $root")
     // same id carry-through as optimize
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val (ids, last) = currentIdsOf(raw, schema)
-    val cur = read(spark, root)
-    commitFiles(spark, root,
-      cur.repartitionByRange(numBuckets, bucketExpr(bucketBy, numBuckets)),
-      "optimize-bucket", Seq.empty, Seq.empty, schema,
-      derivedStats = bucketDerived(bucketBy, numBuckets),
-      tableIds0 = ids, lastColId0 = last, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder)
+    val head = resolve(spark, root)
+    commitFiles(spark, root, Some(head), dvRead(spark, head, head.files)
+      .repartitionByRange(numBuckets, bucketExpr(bucketBy, numBuckets)),
+      "optimize-bucket", Seq.empty, Seq.empty,
+      derivedStats = bucketDerived(bucketBy, numBuckets))
   }
 
   /** OPTIMIZE into the FANOUT layout of the table's DECLARED partition
@@ -5837,24 +5738,19 @@ object SnapshotLog {
     * the SPJ layout without touching its ingest.
     */
   def optimizePartitioned(spark: SparkSession, root: String): Long = {
-    val base = currentId(spark, root)
-    require(base > 0, s"optimizePartitioned on empty log $root")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val routed = raw.spec.filter(f => schema.fieldNames.contains(f.column))
+    val head = resolve(spark, root)
+    val schema = head.schema
+    val routed = head.spec.filter(f => schema.fieldNames.contains(f.column))
     require(routed.nonEmpty,
       s"optimizePartitioned needs a declared partition spec on $root " +
         "(CREATE TABLE … PARTITIONED BY, or declareSpec on append)")
-    val (ids, last) = currentIdsOf(raw, schema)
     val exprs = routed.map(f => partExpr(f, schema(f.column).dataType))
-    commitFiles(spark, root,
-      read(spark, root).repartitionByRange(exprs: _*),
-      "optimize-partitioned", Seq.empty, Seq.empty, schema,
+    commitFiles(spark, root, Some(head),
+      dvRead(spark, head, head.files).repartitionByRange(exprs: _*),
+      "optimize-partitioned", Seq.empty, Seq.empty,
       derivedStats = routed.map(f =>
         partStatName(f) -> partExpr(f, schema(f.column).dataType)),
-      fanoutExprs = exprs,
-      tableIds0 = ids, lastColId0 = last, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder)
+      fanoutExprs = exprs)
   }
 
   /** OPTIMIZE into a Z-ORDER (Morton) layout over two columns: rewrite
@@ -5887,20 +5783,14 @@ object SnapshotLog {
   def optimizeZOrder(spark: SparkSession, root: String, colA: String,
       colB: String, numFiles: Int): Long = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    val base = currentId(spark, root)
-    require(base > 0, s"optimizeZOrder on empty log $root")
-    val raw = rawManifest(spark, root, base)
-    val schema = StructType.fromDDL(raw.schemaDdl)
-    val (ids, last) = currentIdsOf(raw, schema)
+    val head = resolve(spark, root)
     val clustered = LakeMaintenance
-      .withZ(read(spark, root), colA, colB, "_z")
+      .withZ(dvRead(spark, head, head.files), colA, colB, "_z")
       .repartitionByRange(numFiles, col("_z"))
       .sortWithinPartitions("_z")
       .drop("_z")
-    commitFiles(spark, root, clustered,
-      "optimize-zorder", Seq.empty, Seq.empty, schema,
-      tableIds0 = ids, lastColId0 = last, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder)
+    commitFiles(spark, root, Some(head), clustered,
+      "optimize-zorder", Seq.empty, Seq.empty)
   }
 
   /** OPTIMIZE into the DECLARED write sort order: rewrite the live
@@ -5926,38 +5816,31 @@ object SnapshotLog {
   def optimizeSorted(spark: SparkSession, root: String,
       numFiles: Int = 8): Long = {
     require(numFiles >= 1, "numFiles must be >= 1")
-    val base = currentId(spark, root)
-    require(base > 0, s"optimizeSorted on empty log $root")
-    val raw = rawManifest(spark, root, base)
-    val so = raw.sortOrder
+    val head = resolve(spark, root)
+    val so = head.sortOrder
     require(so.nonEmpty,
       s"optimizeSorted needs a declared write sort order on $root " +
         "(setSortOrder, or ALTER TABLE … SET TBLPROPERTIES " +
         "('write.ordered-by' = …))")
-    val schema = StructType.fromDDL(raw.schemaDdl)
+    val schema = head.schema
     require(so.forall(f => schema.fieldNames.contains(f.column)),
       s"declared sort order of $root references a column the current " +
         "schema no longer carries")
-    val (ids, last) = currentIdsOf(raw, schema)
-    val cur = read(spark, root)
-    val routed = raw.spec.filter(f => schema.fieldNames.contains(f.column))
+    val cur = dvRead(spark, head, head.files)
+    val routed = head.spec.filter(f => schema.fieldNames.contains(f.column))
     if (routed.nonEmpty) {
       val exprs = routed.map(f => partExpr(f, schema(f.column).dataType))
-      commitFiles(spark, root, cur.repartitionByRange(exprs: _*),
-        "optimize-sorted", Seq.empty, Seq.empty, schema,
+      commitFiles(spark, root, Some(head), cur.repartitionByRange(exprs: _*),
+        "optimize-sorted", Seq.empty, Seq.empty,
         derivedStats = routed.map(f =>
           partStatName(f) -> partExpr(f, schema(f.column).dataType)),
-        fanoutExprs = exprs,
-        tableIds0 = ids, lastColId0 = last, plannedBase = base,
-        carriedSpec = raw.spec, carriedSort = so, sortApplied = so)
+        fanoutExprs = exprs, sortApplied = so)
     } else {
       val sortCols = so.map(f =>
         if (f.asc) col(f.column).asc else col(f.column).desc)
-      commitFiles(spark, root,
+      commitFiles(spark, root, Some(head),
         cur.repartitionByRange(numFiles, sortCols: _*),
-        "optimize-sorted", Seq.empty, Seq.empty, schema,
-        tableIds0 = ids, lastColId0 = last, plannedBase = base,
-        carriedSpec = raw.spec, carriedSort = so, sortApplied = so)
+        "optimize-sorted", Seq.empty, Seq.empty, sortApplied = so)
     }
   }
 
@@ -5977,47 +5860,30 @@ object SnapshotLog {
   def optimizeBinPack(spark: SparkSession, root: String,
       smallBytes: Long, targetBytes: Long = 128L * 1024 * 1024): Long = {
     require(smallBytes > 0 && targetBytes > 0, "byte thresholds must be positive")
-    val base = currentId(spark, root)
-    require(base > 0, s"optimizeBinPack on empty log $root")
+    val head = resolve(spark, root)
+    head.requireNoMorDeletes()
     val fs = fsOf(spark, root)
-    val raw = rawManifest(spark, root, base)
-    require(raw.dRefs.isEmpty && raw.eqRefs.isEmpty,
-      s"$root has outstanding merge-on-read deletes (vectors or equality " +
-        "key sets); run rewriteEqualityDeletes + rewriteDeletes (or " +
-        "optimize) before a partial CoW rewrite")
-    val groups = raw.refs.map(r => r -> readFileList(fs, root, r.path))
     def sizeOf(f: FileEntry): Long =
       fs.getFileStatus(new Path(s"$root/${f.path}")).getLen
-    val smallIn = (raw.inline ++ groups.flatMap(_._2))
-      .filter(f => sizeOf(f) < smallBytes).map(_.path).toSet
-    if (smallIn.size <= 1) return base
+    val smallEntries = head.files.filter(f => sizeOf(f) < smallBytes)
+    val smallIn = smallEntries.map(_.path).toSet
+    if (smallIn.size <= 1) return head.id
     // manifest-tree CoW carry, deleteWhere's discipline: lists with no
     // small file ride by reference; touched lists dissolve their large
     // survivors into the commit's new list
-    val (intact, touched) = groups.partition {
-      case (_, fl) => !fl.exists(f => smallIn(f.path)) }
-    val carriedInline = (raw.inline ++ touched.flatMap(_._2))
-      .filterNot(f => smallIn(f.path))
-    val tableSchema = StructType.fromDDL(raw.schemaDdl)
-    val (tableIds, lastColId) = currentIdsOf(raw, tableSchema)
-    val smallEntries = (raw.inline ++ touched.flatMap(_._2))
-      .filter(f => smallIn(f.path))
+    val (intact, carriedInline) = head.carryAround(smallIn)
     val totalBytes = smallEntries.map(sizeOf).sum
     val outFiles = math.max(1, (totalBytes / targetBytes).toInt +
       (if (totalBytes % targetBytes > 0) 1 else 0))
-    val packed = resolvedRead(spark, root, smallEntries, tableSchema, tableIds)
-      .coalesce(outFiles)
-    commitFiles(spark, root, packed, "optimize-binpack",
-      intact.map(_._1), carriedInline, tableSchema,
-      derivedStats =
-        inheritedBucketStats(raw.inline ++ groups.flatMap(_._2), tableSchema, tableIds),
-      tableIds0 = tableIds, lastColId0 = lastColId, plannedBase = base,
-      carriedSpec = raw.spec, carriedSort = raw.sortOrder,
+    val packed = resolvedRead(spark, root, smallEntries, head.schema,
+      head.curIds).coalesce(outFiles)
+    commitFiles(spark, root, Some(head), packed, "optimize-binpack",
+      intact, carriedInline, derivedStats = inheritedBucketStats(head),
       // under a declared sort the packed outputs re-sort + stamp
       // (O(small bytes) — maintenance must repair stamp unanimity,
       // not erode it; streaming debris is exactly the churn that
       // needs this)
-      sortApplied = sortApplyFor(raw.sortOrder, packed))
+      sortApplied = sortApplyFor(head.sortOrder, packed))
   }
 
   /** Expire all but the latest `keepLast` snapshots: their manifests are
@@ -6205,11 +6071,10 @@ object SnapshotLog {
     val fs = fsOf(spark, root)
     val fork = tagId(spark, root, branchRefName(name))
     val k = branchPin(spark, root, name)
-    val base = resolve(spark, root, branch = Some((name, k))).raw
-    val ps = StructType.fromDDL(base.schemaDdl)
-    val (pIds, pLast) = currentIdsOf(base, ps)
-    val merged = mergeSchemas(ps, df.schema)
-    val (ids, last) = assignNewIds(merged, pIds, pLast)
+    val head = resolve(spark, root, branch = Some((name, k)))
+    val base = head.raw
+    val merged = mergeSchemas(head.schema, df.schema)
+    val (ids, last) = assignNewIds(merged, head.curIds, head.lastColId)
     val routed = base.spec.filter(f => df.columns.contains(f.column))
     val (dfR, derived) =
       if (routed.isEmpty) (df, Seq.empty[(String, Column)])
@@ -6219,11 +6084,7 @@ object SnapshotLog {
           partStatName(f) -> partExpr(f, df.schema(f.column).dataType)))
     // the declared sort order applies on a branch exactly as on main —
     // WAP-staged files arrive on main (fast-forward) already stamped
-    val sortApply =
-      if (base.sortOrder.nonEmpty &&
-          base.sortOrder.forall(f => df.columns.contains(f.column)))
-        base.sortOrder
-      else Nil
+    val sortApply = sortApplyFor(base.sortOrder, df)
     val written = writeDataFiles(spark, root, dfR, fork + 1, None, derived,
       sortApply = sortApply)
     val dfCols = df.columns.toSet

@@ -199,40 +199,36 @@ final case class UpdateSnapshotCommand(root: String, table: LogicalPlan,
 
 private[plans] object SnapshotDml {
 
-  /** Discovery view for a row-level command: the MAIN head, or — under
-    * write-audit-publish — the session's WAP branch head (auto-forked
-    * at the current head on first use, exactly like the WAP INSERT
-    * door).
+  /** Discovery view for a row-level command, with the head it reads:
+    * the MAIN head, or — under write-audit-publish — the session's WAP
+    * branch head (auto-forked at the current head on first use,
+    * exactly like the WAP INSERT door). The head is what the command's
+    * commit plans from ([[commitMor]]).
     */
   private def discover(spark: SparkSession, root: String,
       wap: Option[String],
       preds: Seq[(String, Option[String], Option[String])])
-      : (Long, DataFrame, StructType) = wap match {
-    case Some(b) =>
-      if (!SnapshotLog.branchExists(spark, root, b))
-        SnapshotLog.createBranch(spark, root, b)
-      // the branch commit count k is the CAS the branch MoR commit fires at
-      val k = SnapshotLog.branchPin(spark, root, b)
-      val snap = SnapshotLog.resolve(spark, root, branch = Some((b, k)))
-      (k, SnapshotLog.readPosForDml(spark, snap, preds), snap.schema)
-    case None =>
-      val snap = SnapshotLog.resolve(spark, root)
-      (snap.id, SnapshotLog.readPosForDml(spark, snap, preds), snap.schema)
+      : (SnapshotLog.Resolved, DataFrame) = {
+    val head = wap match {
+      case Some(b) =>
+        if (!SnapshotLog.branchExists(spark, root, b))
+          SnapshotLog.createBranch(spark, root, b)
+        // the branch commit count k is the CAS the branch MoR commit fires at
+        SnapshotLog.resolve(spark, root,
+          branch = Some((b, SnapshotLog.branchPin(spark, root, b))))
+      case None => SnapshotLog.resolve(spark, root)
+    }
+    (head, SnapshotLog.readPosForDml(spark, head, preds))
   }
 
   /** The matching commit door: main MoR commit (validate-and-retry) or
     * the branch MoR commit (single-writer staging, loud on races).
     */
-  private def commitMor(spark: SparkSession, root: String,
-      wap: Option[String], base: Long, dead: Option[DataFrame],
-      adds: DataFrame, operation: String): Unit = {
-    wap match {
-      case Some(b) =>
-        SnapshotLog.morCommitBranch(spark, root, b, base, dead, adds,
-          operation)
-      case None =>
-        SnapshotLog.morCommit(spark, root, base, dead, adds, operation)
-    }
+  private def commitMor(spark: SparkSession, head: SnapshotLog.Resolved,
+      dead: Option[DataFrame], adds: DataFrame, operation: String): Unit = {
+    if (head.branch.isDefined)
+      SnapshotLog.morCommitBranch(spark, head, dead, adds, operation)
+    else SnapshotLog.morCommit(spark, head, dead, adds, operation)
     ()
   }
 
@@ -480,7 +476,8 @@ private[plans] object SnapshotDml {
     // match always intersects; BY SOURCE arms disable it — they need
     // every target row). The range costs one bounded agg on the source.
     val pruning = mergePruning(src0, cond, target, source, bySource)
-    val (base, tgt0, schema) = discover(spark, root, wapBranch, pruning)
+    val (head, tgt0) = discover(spark, root, wapBranch, pruning)
+    val schema = head.schema
     Seq("__path", "__pos", "__t", "__s").foreach(r => require(
       !schema.fieldNames.contains(r), s"column name $r is reserved"))
     // presence markers: outer joins null the absent side's marker, so
@@ -542,7 +539,7 @@ private[plans] object SnapshotDml {
         }
       val adds = addParts.reduceOption(_ unionByName _).getOrElse(
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
-      commitMor(spark, root, wapBranch, base, dead, adds, "mor-merge")
+      commitMor(spark, head, dead, adds, "mor-merge")
     } finally joined.unpersist()
     ()
   }
@@ -555,45 +552,25 @@ private[plans] object SnapshotDml {
     // against the coordinate frame
     val hasSubquery = cond.collectFirst { case sq: org.apache.spark.sql
         .catalyst.expressions.SubqueryExpression => sq }.isDefined
-    if (wapBranch.isEmpty && hasSubquery) {
+    if (wapBranch.isDefined || hasSubquery) {
+      // a WAP DELETE stages on the branch as a MoR delete too: one
+      // vector in the branch's next manifest, zero file rewrites,
+      // invisible to main until publish. NULL predicates are not
+      // matches (the same three-valued rule as every delete door).
       val tgtSet = (e: Expression) => e match {
         case a: AttributeReference => table.outputSet.contains(a)
         case _ => false
       }
       val pruning = literalBoxes(cond, tgtSet)
-      val (base, tgt, schema) = discover(spark, root, None, pruning)
+      val (head, tgt) = discover(spark, root, wapBranch, pruning)
       val tgtBy = outputsByName(tgt)
       val remap = binder(Seq(table -> tgtBy))
       val dead = tgt.filter(coalesce(remap(cond), lit(false)))
         .select(DmlBridge.column(tgtBy("__path")).as("t_path"),
           DmlBridge.column(tgtBy("__pos")).as("t_pos"))
       val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-      SnapshotLog.morCommit(spark, root, base, Some(dead), empty,
-        "mor-delete")
-      return
-    }
-    if (wapBranch.isDefined) {
-      // WAP DELETE stages on the branch as a MoR delete: one vector in
-      // the branch's next manifest, zero file rewrites, invisible to
-      // main until publish. NULL predicates are not matches (the same
-      // three-valued rule as every delete door).
-      val tgtSet = (e: Expression) => e match {
-        case a: AttributeReference => table.outputSet.contains(a)
-        case _ => false
-      }
-      val pruning = literalBoxes(cond, tgtSet)
-      val (base, tgt, schema) =
-        discover(spark, root, wapBranch, pruning)
-      val tgtBy = outputsByName(tgt)
-      val remap = binder(Seq(table -> tgtBy))
-      val dead = tgt.filter(coalesce(remap(cond), lit(false)))
-        .select(DmlBridge.column(tgtBy("__path")).as("t_path"),
-          DmlBridge.column(tgtBy("__pos")).as("t_pos"))
-      val empty = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], schema)
-      commitMor(spark, root, wapBranch, base, Some(dead), empty,
-        "mor-delete")
+        spark.sparkContext.emptyRDD[Row], head.schema)
+      commitMor(spark, head, Some(dead), empty, "mor-delete")
       return
     }
     // rebind the predicate's table attributes to UNRESOLVED names and
@@ -628,7 +605,7 @@ private[plans] object SnapshotDml {
       case _ => false
     }
     val pruning = cond.toSeq.flatMap(literalBoxes(_, tgtSet))
-    val (base, tgt, schema) = discover(spark, root, wapBranch, pruning)
+    val (head, tgt) = discover(spark, root, wapBranch, pruning)
     val tgtBy = outputsByName(tgt)
     val remap = binder(Seq(table -> tgtBy))
     val hit = tgt.filter(cond.map(remap).getOrElse(lit(true)))
@@ -637,8 +614,8 @@ private[plans] object SnapshotDml {
       val dead = hit.select(
         DmlBridge.column(tgtBy("__path")).as("t_path"),
         DmlBridge.column(tgtBy("__pos")).as("t_pos"))
-      val adds = updateProjection(hit, schema, remap, tgtBy, assigns)
-      commitMor(spark, root, wapBranch, base, Some(dead), adds, "mor-update")
+      val adds = updateProjection(hit, head.schema, remap, tgtBy, assigns)
+      commitMor(spark, head, Some(dead), adds, "mor-update")
     } finally hit.unpersist()
     ()
   }

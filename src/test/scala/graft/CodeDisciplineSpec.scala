@@ -58,6 +58,25 @@ class CodeDisciplineSpec extends AnyFunSuite {
     assert(literal("""toDDL.replace("\t", " ")""") === 1)
   }
 
+  test("snapshot-log commits plan from the read side's one resolved head") {
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))
+    // the object member (two-space indent) each occurrence sits in
+    val members = """(?m)^  (?:private(?:\[\w+\])? |final )*(?:def|class) (\w+)""".r
+      .findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+    def membersUsing(re: String): Set[String] =
+      re.r.findAllMatchIn(src).map(m => members.takeWhile(_._1 < m.start).last._2).toSet
+    // a manifest parse outside `resolve` is one of the history walkers
+    assert(membersUsing("""(?<!def )\brawManifest\(""") ===
+      Set("resolve", "publishStaged", "discardStaged", "expire", "vacuumOrphans"),
+      "a commit parses its base outside resolve")
+    assert(membersUsing(java.util.regex.Pattern.quote(
+      "StructType.fromDDL(raw.schemaDdl)")) === Set("Resolved"),
+      "a manifest schema parsed outside Resolved")
+    assert(membersUsing("""new Resolved\(""") === Set("resolve"),
+      "a Resolved built outside resolve")
+  }
+
   test("every registered query has a DuckDB oracle") {
     val missing = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
     assert(missing.isEmpty, s"queries without oracles: $missing")

@@ -39,8 +39,8 @@ class MorCommitRetrySpec extends SparkSpec {
     val (deadA, addsA) = upsertParts(root, 1L, Seq(1L, 2L, 3L), "a")
     val (deadB, addsB) = upsertParts(root, 1L, Seq(50L, 51L), "b")
     // A wins the CAS at 2; B computed against base 1 and must rebase
-    assert(SnapshotLog.morCommit(spark, root, 1L, Some(deadA), addsA) == 2L)
-    assert(SnapshotLog.morCommit(spark, root, 1L, Some(deadB), addsB) == 3L)
+    assert(SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadA), addsA) == 2L)
+    assert(SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadB), addsB) == 3L)
     val out = SnapshotLog.read(spark, root)
     assert(out.count() == 100L)
     assert(out.filter(col("v").startsWith("a")).count() == 3L)
@@ -53,9 +53,9 @@ class MorCommitRetrySpec extends SparkSpec {
     val root = newLog("samekey")
     val (deadA, addsA) = upsertParts(root, 1L, Seq(1L, 2L, 3L), "a")
     val (deadC, addsC) = upsertParts(root, 1L, Seq(3L, 4L), "c")
-    SnapshotLog.morCommit(spark, root, 1L, Some(deadA), addsA)
+    SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadA), addsA)
     val e = intercept[IllegalStateException] {
-      SnapshotLog.morCommit(spark, root, 1L, Some(deadC), addsC)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadC), addsC)
     }
     assert(e.getMessage.contains("same rows"))
     // the winner's state is intact, the loser committed nothing
@@ -73,13 +73,13 @@ class MorCommitRetrySpec extends SparkSpec {
     SnapshotLog.addColumn(spark, rootS, "extra",
       org.apache.spark.sql.types.StringType)
     intercept[IllegalStateException] {
-      SnapshotLog.morCommit(spark, rootS, 1L, Some(deadS), addsS)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, rootS, 1L), Some(deadS), addsS)
     }
     val rootE = newLog("eq")
     val (deadE, addsE) = upsertParts(rootE, 1L, Seq(1L), "e")
     SnapshotLog.deleteWhereEqual(spark, rootE, Seq(99L).toDF("k"))
     intercept[IllegalStateException] {
-      SnapshotLog.morCommit(spark, rootE, 1L, Some(deadE), addsE)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, rootE, 1L), Some(deadE), addsE)
     }
   }
 
@@ -91,7 +91,7 @@ class MorCommitRetrySpec extends SparkSpec {
     // rebase must refuse
     SnapshotLog.deleteWhere(spark, root, col("k") === 1L)
     intercept[IllegalStateException] {
-      SnapshotLog.morCommit(spark, root, 1L, Some(dead), adds)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(dead), adds)
     }
     assert(SnapshotLog.read(spark, root).count() == 99L)
   }
@@ -102,7 +102,7 @@ class MorCommitRetrySpec extends SparkSpec {
     SnapshotLog.append(spark, root, Seq((200L, "w")).toDF("k", "v"))
     // committed against base 1 while head is 2
     val adds = Seq((300L, "l")).toDF("k", "v")
-    assert(SnapshotLog.morCommit(spark, root, 1L, None, adds) == 3L)
+    assert(SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), None, adds) == 3L)
     assert(SnapshotLog.read(spark, root).count() == 102L)
   }
 }

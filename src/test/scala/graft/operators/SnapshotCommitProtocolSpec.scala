@@ -4,28 +4,29 @@ import graft.SparkSpec
 import java.io.IOException
 import java.net.URI
 import java.nio.file.Files
-import org.apache.hadoop.fs.{FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataInputStream, FSDataOutputStream, FilterFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 import org.apache.spark.sql.functions._
 
 /** `crashfs:` — the local filesystem under its own scheme, so the
   * commit protocol takes the generic `!exists && rename` publish. Its
-  * switch fails the next manifest tmp create (the file is left behind,
-  * as a crash leaves it) or the publish rename of a manifest tmp.
+  * switch fails the next manifest tmp create or file-list create (the
+  * file is left behind, as a crash leaves it) or the publish rename of
+  * a manifest tmp. Every open is counted by path.
   */
 class CrashFs extends FilterFileSystem(new CrashFs.Local) {
   override def getScheme: String = CrashFs.Scheme
 
   private def armed(mode: String, p: Path): Boolean =
-    CrashFs.failing == mode && p.getName.contains(".manifest.tmp.")
+    CrashFs.failing == mode && CrashFs.crashes(mode, p.getName)
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     val out = super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress)
-    if (armed("create", f)) {
+    if (armed("create", f) || armed("list", f)) {
       out.close()
       throw new IOException(s"injected crash creating $f")
     }
@@ -35,12 +36,25 @@ class CrashFs extends FilterFileSystem(new CrashFs.Local) {
   override def rename(src: Path, dst: Path): Boolean =
     if (armed("rename", src)) throw new IOException(s"injected crash renaming $src")
     else super.rename(src, dst)
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    CrashFs.opens.merge(f.toUri.getPath, 1, (a: Int, b: Int) => a + b)
+    super.open(f, bufferSize)
+  }
 }
 
 object CrashFs {
   val Scheme = "crashfs"
-  /** "create", "rename" or "" (off). */
+  /** "create", "rename", "list" (the file-list create) or "" (off). */
   @volatile var failing: String = ""
+
+  /** Whether crash mode `mode` fires on a file named `name`. */
+  def crashes(mode: String, name: String): Boolean =
+    if (mode == "list") name.startsWith("l_") && name.endsWith(".list")
+    else name.contains(".manifest.tmp.")
+
+  /** Opens per local path since the last clear. */
+  val opens = new java.util.concurrent.ConcurrentHashMap[String, Int]()
 
   class Local extends RawLocalFileSystem {
     override def getUri: URI = URI.create(s"$Scheme:///")
@@ -50,8 +64,9 @@ object CrashFs {
 /** Commit-protocol hardening from the round-10 adversarial pass:
   * beyond-head crash replay of a staged publish, NaN-stat degradation
   * in the metadata path, tmp-manifest debris reclamation, the
-  * rename-aware band re-key on staged splices, and a crash injected at
-  * each step of the publish.
+  * rename-aware band re-key on staged splices, a crash injected at
+  * each step of the publish and at the file-list write, and the number
+  * of times a commit opens its head manifest.
   */
 class SnapshotCommitProtocolSpec extends SparkSpec {
 
@@ -62,36 +77,44 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
   private def fs(root: String) =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** For each crash point, fresh log: `setUp` on the plain root, then
-    * `verb` on the same directory under `crashfs:` — once crashing,
-    * once clean. The crash must leave the previous snapshot reading
-    * exactly, the clean retry must commit, and [[SnapshotLog.vacuumOrphans]]
-    * must reclaim the stranded tmp manifest once it ages.
-    */
-  private def survivesCrashes(setUp: String => Unit)(verb: String => Long): Unit = {
+  private def crashRootOf(root: String): String = {
     spark.sparkContext.hadoopConfiguration
       .set(s"fs.${CrashFs.Scheme}.impl", classOf[CrashFs].getName)
-    for (mode <- Seq("create", "rename")) {
+    s"${CrashFs.Scheme}://$root"
+  }
+
+  /** For each crash point in `modes`, fresh log: `setUp` on the plain
+    * root, then `verb` on the same directory under `crashfs:` — once
+    * crashing, once clean. The crash must leave the previous snapshot
+    * reading exactly, the clean retry must commit, and
+    * [[SnapshotLog.vacuumOrphans]] must reclaim the stranded file (tmp
+    * manifest or file list) once it ages.
+    */
+  private def survivesCrashes(setUp: String => Unit,
+      modes: Seq[String] = Seq("create", "rename"))(verb: String => Long): Unit = {
+    for (mode <- modes) {
       val root = newRoot()
       setUp(root)
       val head = SnapshotLog.currentId(spark, root)
       val before = rowSet(SnapshotLog.read(spark, root))
-      val crashRoot = s"${CrashFs.Scheme}://$root"
+      val crashRoot = crashRootOf(root)
+      val f = fs(root)
+      def snapFiles() = f.listStatus(new Path(s"$root/snap")).map(_.getPath)
+        .filter(p => CrashFs.crashes(mode, p.getName)).toSet
+      val existing = snapFiles()
       CrashFs.failing = mode
       val e = try intercept[IOException](verb(crashRoot))
         finally CrashFs.failing = ""
       assert(e.getMessage.contains("injected crash"))
       assert(SnapshotLog.currentId(spark, root) === head, s"$mode crash moved the head")
       assert(rowSet(SnapshotLog.read(spark, root)) === before)
-      val f = fs(root)
-      val stranded = f.listStatus(new Path(s"$root/snap")).map(_.getPath)
-        .filter(_.getName.contains(".manifest.tmp."))
-      assert(stranded.length === 1, s"$mode crash should strand one tmp")
+      val stranded = (snapFiles() -- existing).toSeq
+      assert(stranded.length === 1, s"$mode crash should strand one file")
       assert(verb(crashRoot) === head + 1, s"commit after a $mode crash")
       val after = rowSet(SnapshotLog.read(spark, root))
       f.setTimes(stranded.head, System.currentTimeMillis() - 7200000L, -1)
       SnapshotLog.vacuumOrphans(spark, root, graceMs = 3600000L)
-      assert(!f.exists(stranded.head), s"$mode crash tmp not reclaimed")
+      assert(!f.exists(stranded.head), s"$mode crash file not reclaimed")
       assert(rowSet(SnapshotLog.read(spark, root)) === after)
     }
   }
@@ -125,6 +148,55 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
       SnapshotLog.createBranch(spark, root, "ff")
       SnapshotLog.appendToBranch(spark, root, "ff", Seq((5L, "e")).toDF("k", "v"))
     }(r => SnapshotLog.fastForward(spark, r, "ff"))
+  }
+
+  test("a crash at the file-list write of a copy-on-write delete leaves the previous snapshot") {
+    survivesCrashes(base, Seq("list"))(r =>
+      SnapshotLog.deleteWhere(spark, r, col("k") === 1L))
+  }
+
+  test("a crash at the file-list write of an optimize leaves the previous snapshot") {
+    survivesCrashes(base, Seq("list"))(r => SnapshotLog.optimize(spark, r, "k", 1))
+  }
+
+  /** Opens of snapshot `id`'s manifest under `root` while `body` runs. */
+  private def manifestOpens(root: String, id: Long)(body: => Unit): Int = {
+    CrashFs.opens.clear()
+    body
+    CrashFs.opens.getOrDefault(f"$root/snap/v$id%08d.manifest", 0)
+  }
+
+  test("optimize opens its head manifest at most twice: one header, one parse") {
+    val root = newRoot()
+    base(root)
+    SnapshotLog.append(spark, root, Seq((3L, "c")).toDF("k", "v"))
+    val crashRoot = crashRootOf(root)
+    val n = manifestOpens(root, 2L)(SnapshotLog.optimize(spark, crashRoot, "k", 1))
+    assert(n <= 2, s"optimize opened the head manifest $n times")
+    assert(SnapshotLog.read(spark, root).count() === 3L)
+  }
+
+  test("a SQL DELETE through the merge-on-read door opens its head manifest at most twice") {
+    val root = newRoot()
+    base(root)
+    // an outstanding vector: the table is merge-on-read from here on
+    SnapshotLog.deleteWhereMoR(spark, root, col("k") === 2L)
+    spark.conf.set("spark.sql.catalog.cprotocat",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.cprotocat.root",
+      crashRootOf(new Path(root).getParent.toUri.getPath))
+    Seq(1L).toDF("k").createOrReplaceTempView("cproto_gone")
+    // the subquery predicate takes SnapshotDml's MoR discovery route
+    val stmt = "DELETE FROM cprotocat.log t WHERE EXISTS " +
+      "(SELECT 1 FROM cproto_gone g WHERE g.k = t.k)"
+    // analysis loads the table through the catalog; count the run alone
+    val qe = spark.sessionState.executePlan(
+      spark.sessionState.sqlParser.parsePlan(stmt))
+    qe.analyzed
+    val n = manifestOpens(root, 2L)(qe.commandExecuted)
+    assert(n <= 2, s"the DELETE opened the head manifest $n times")
+    assert(SnapshotLog.currentId(spark, root) === 3L)
+    assert(SnapshotLog.read(spark, root).count() === 0L)
   }
 
   test("replaying a crashed staged publish after a CoW rewrite does not re-splice") {

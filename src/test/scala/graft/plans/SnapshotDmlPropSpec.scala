@@ -171,10 +171,10 @@ class SnapshotDmlPropSpec extends SparkSpec {
       }
       val (deadA, addsA) = parts(keysA, "a")
       val (deadB, addsB) = parts(keysB, "b")
-      SnapshotLog.morCommit(spark, root, 1L, Some(deadA), addsA)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadA), addsA)
       val overlap = keysA.toSet.intersect(keysB.toSet).nonEmpty
       val bCommitted =
-        try { SnapshotLog.morCommit(spark, root, 1L, Some(deadB), addsB); true }
+        try { SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadB), addsB); true }
         catch { case _: IllegalStateException => false }
       assert(bCommitted == !overlap,
         s"scenario $scenario: overlap=$overlap but B committed=$bCommitted")

@@ -411,7 +411,7 @@ class SnapshotDmlSpec extends SparkSpec {
       "(SELECT 1 FROM dml_race_tomb s WHERE s.tk = t.k)")
     assert(SnapshotLog.currentId(spark, root) == 2L)
     // disjoint keys: the stale merge validates and REBASES onto 2
-    assert(SnapshotLog.morCommit(spark, root, 1L, Some(dead), adds) == 3L)
+    assert(SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(dead), adds) == 3L)
     val out = SnapshotLog.read(spark, root)
     assert(out.count() == 97L)
     assert(out.filter(col("k") <= 3L).count() == 0L, "delete held")
@@ -429,7 +429,7 @@ class SnapshotDmlSpec extends SparkSpec {
     spark.sql(s"DELETE FROM $cat.`$root` t WHERE EXISTS " +
       "(SELECT 1 FROM dml_race_tomb2 s WHERE s.tk = t.k)")
     intercept[Exception] {
-      SnapshotLog.morCommit(spark, root, 3L, Some(dead2), adds2)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 3L), Some(dead2), adds2)
     }
     assert(SnapshotLog.read(spark, root).filter(col("k") === 50L)
       .count() == 0L, "the deleted row stayed dead")
@@ -493,10 +493,10 @@ class SnapshotDmlSpec extends SparkSpec {
          |THEN DELETE""".stripMargin)
     assert(SnapshotLog.currentId(spark, root) == 2L)
     // disjoint keys: the stale commit validates and rebases onto 2
-    assert(SnapshotLog.morCommit(spark, root, 1L, Some(deadD), addsD) == 3L)
+    assert(SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadD), addsD) == 3L)
     // same-key: the stale commit must abort, never resurrect the row
     intercept[Exception] {
-      SnapshotLog.morCommit(spark, root, 1L, Some(deadS), addsS)
+      SnapshotLog.morCommit(spark, SnapshotLog.resolve(spark, root, 1L), Some(deadS), addsS)
     }
     val out = SnapshotLog.read(spark, root)
     assert(out.filter(col("k").isin(50L, 60L)).count() == 0L,
