@@ -30,7 +30,7 @@ object SparkEntry {
       operators.Profiling.all ++
       operators.Packing.all ++
       operators.LakeMaintenance.all ++
-      operators.SnapshotLog.all ++
+      operators.SnapshotLogQueries.all ++
       operators.IncrementalView.all ++
       operators.ChangeCapture.all ++
       pipeline.CorpusPipeline.all ++

@@ -569,7 +569,7 @@ object IncrementalView {
     Q(
       "iv1_incremental_view",
       (s, dir) => {
-        val root = SnapshotLog.stagedOrdersLog(s, dir)
+        val root = SnapshotLogQueries.stagedOrdersLog(s, dir)
         materialize(s, root, keys = Seq("o_orderstatus"),
           sumCols = Seq("o_orderkey"))
           .select(col("o_orderstatus"), col("n"),
@@ -580,7 +580,7 @@ object IncrementalView {
              |       CAST(sum(o_orderkey) AS BIGINT) AS key_sum
              |FROM orders WHERE o_orderstatus <> 'F'
              |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin),
-      stage = Some((s, dir) => { SnapshotLog.stagedOrdersLog(s, dir); () })
+      stage = Some((s, dir) => { SnapshotLogQueries.stagedOrdersLog(s, dir); () })
     ),
 
     // IV2: the transactional refresh loop — a view in its own snapshot

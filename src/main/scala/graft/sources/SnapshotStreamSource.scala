@@ -8,7 +8,7 @@ import org.apache.spark.sql.graft.StreamingFrame
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.operators.SnapshotLog
+import graft.operators.{SnapshotLog, SnapshotLogQueries}
 
 /** A [[graft.operators.SnapshotLog]] as a Structured Streaming SOURCE —
   * the lakehouse ingestion loop Delta/Iceberg tables serve: a query
@@ -424,7 +424,7 @@ object SnapshotStreamQueries {
     Q(
       "sm26_stream_changelog_feed",
       (s, dir) => {
-        val root = SnapshotLog.stagedOrdersLog(s, dir)
+        val root = SnapshotLogQueries.stagedOrdersLog(s, dir)
         val out = graft.TempDirs.create("graft_sm26")
         val sink = out.resolve("sink").toString
         s.readStream.format("snapshot-log")
@@ -448,7 +448,7 @@ object SnapshotStreamQueries {
              |FROM orders WHERE o_orderstatus = 'F'
              |ORDER BY snapshot_id, change, o_orderkey""".stripMargin),
       bench = false,
-      stage = Some((s, dir) => { SnapshotLog.stagedOrdersLog(s, dir); () })
+      stage = Some((s, dir) => { SnapshotLogQueries.stagedOrdersLog(s, dir); () })
     ),
 
     // SM27: the appends-only ingestion feed under admission control —
@@ -667,7 +667,7 @@ object SnapshotStreamQueries {
     Q(
       "sm32_stream_changes_table",
       (s, dir) => {
-        val root = SnapshotLog.stagedOrdersLog(s, dir)
+        val root = SnapshotLogQueries.stagedOrdersLog(s, dir)
         val out = graft.TempDirs.create("graft_sm32")
         val sink = out.resolve("sink").toString
         s.conf.set("spark.sql.catalog.snapcat",
@@ -691,7 +691,7 @@ object SnapshotStreamQueries {
              |FROM orders WHERE o_orderstatus = 'F'
              |ORDER BY change, o_orderkey""".stripMargin),
       bench = false,
-      stage = Some((s, dir) => { SnapshotLog.stagedOrdersLog(s, dir); () })
+      stage = Some((s, dir) => { SnapshotLogQueries.stagedOrdersLog(s, dir); () })
     )
   )
 }

@@ -194,7 +194,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("tt27's staged events fixture prunes its two-day window from day bands") {
-    val root = SnapshotLog.partitionLog(spark, graft.TestSpark.Sf0001)
+    val root = SnapshotLogQueries.partitionLog(spark, graft.TestSpark.Sf0001)
     val kept = boxFiles(resolve(spark, root), Seq(("ts",
       Some("2024-01-10 00:00:00"), Some("2024-01-11 23:59:59"))))
     val all = resolve(spark, root).files
@@ -233,7 +233,7 @@ class HiddenPartitionSpec extends SparkSpec {
   }
 
   test("a SQL timestamp range over the catalog prunes through day bands") {
-    val root = SnapshotLog.partitionLog(spark, graft.TestSpark.Sf0001)
+    val root = SnapshotLogQueries.partitionLog(spark, graft.TestSpark.Sf0001)
     spark.conf.set("spark.sql.catalog.snapcat",
       classOf[graft.sources.SnapshotCatalog].getName)
     val df = spark.sql(
