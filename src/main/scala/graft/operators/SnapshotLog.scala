@@ -174,7 +174,7 @@ object SnapshotLog {
       id: Long, parent: Long, operation: String, rows: Long,
       schemaDdl: String, files: Seq[FileEntry])
 
-  private[graft] def fsOf(spark: SparkSession, root: String): FileSystem =
+  private def fsOf(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ---- stats encoding: `col=min,max;col=min,max` with URL-encoded

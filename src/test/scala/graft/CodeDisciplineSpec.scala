@@ -87,4 +87,26 @@ class CodeDisciplineSpec extends AnyFunSuite {
     assert(names.distinct.size === names.size)
     assert(names.forall(_.matches("[a-z0-9_]+")))
   }
+
+  test("staged-dir keys are distinct; the tt* registry lives apart from the table format") {
+    def source(file: String) =
+      new String(Files.readAllBytes(Paths.get(s"src/main/scala/graft/operators/$file")))
+    val queries = source("SnapshotLogQueries.scala")
+    // literal key prefixes of every TempDirs.staged call, plus the keys
+    // the tt* fixtures claim through their one staging call
+    val staged = """TempDirs\.staged\(s?"([a-z0-9]+)_""".r
+    val fixtures = """\b(?:log|pair)\("(\w+)"""".r
+    val keys = mainSources.flatMap { case (_, src) =>
+      staged.findAllMatchIn(src).map(_.group(1)) } ++
+      fixtures.findAllMatchIn(queries).map(_.group(1))
+    assert(keys.size > 60, s"too few staging keys found: $keys")
+    assert(keys.diff(keys.distinct).isEmpty,
+      s"staging keys taken twice: ${keys.diff(keys.distinct).distinct}")
+    val log = source("SnapshotLog.scala")
+    assert(!log.contains("TempDirs.staged"), "SnapshotLog stages a fixture")
+    assert("""\bQ\(""".r.findFirstIn(log).isEmpty, "SnapshotLog builds a registry row")
+    assert(java.util.regex.Pattern.quote("\"spark.sql.catalog.snapcat\"").r
+      .findAllIn(queries).size === 1,
+      "the snapshot catalog is registered in more than one place")
+  }
 }
