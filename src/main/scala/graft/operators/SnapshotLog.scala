@@ -1760,13 +1760,19 @@ object SnapshotLog {
 
     lazy val files: Seq[FileEntry] = raw.inline ++ raw.refs.flatMap(listed)
 
+    /** Whether this snapshot carries outstanding merge-on-read deletes
+      * (positional vectors or equality key sets).
+      */
+    private[graft] def hasMorDeletes: Boolean =
+      raw.dRefs.nonEmpty || raw.eqRefs.nonEmpty
+
     /** The precondition of a PARTIAL copy-on-write rewrite
       * ([[deleteWhere]]/[[mergeInto]]/[[optimizeBinPack]]): carrying
       * files by reference past an outstanding vector or key set would
       * need DV-aware carry rules.
       */
     private[SnapshotLog] def requireNoMorDeletes(): Unit =
-      require(raw.dRefs.isEmpty && raw.eqRefs.isEmpty,
+      require(!hasMorDeletes,
         s"$root has outstanding merge-on-read deletes (vectors or equality " +
           "key sets); run rewriteEqualityDeletes + rewriteDeletes (or " +
           "optimize) before a partial CoW rewrite")
@@ -3495,8 +3501,13 @@ object SnapshotLog {
     * snapshot id is returned and NO new snapshot is committed (a no-op
     * delete should not grow history).
     */
-  def deleteWhere(spark: SparkSession, root: String, pred: Column): Long = {
-    val head = resolve(spark, root)
+  def deleteWhere(spark: SparkSession, root: String, pred: Column): Long =
+    deleteWhere(spark, resolve(spark, root), pred)
+
+  /** [[deleteWhere]] against a head the caller already resolved. */
+  private[graft] def deleteWhere(spark: SparkSession, head: Resolved,
+      pred: Column): Long = {
+    val root = head.root
     head.requireNoMorDeletes()
     val allFiles = head.files
     if (allFiles.isEmpty) return head.id
@@ -3553,8 +3564,13 @@ object SnapshotLog {
     * no-match delete commits nothing (same no-op rule as
     * [[deleteWhere]]).
     */
-  def deleteWhereMoR(spark: SparkSession, root: String, pred: Column): Long = {
-    val head = resolve(spark, root)
+  def deleteWhereMoR(spark: SparkSession, root: String, pred: Column): Long =
+    deleteWhereMoR(spark, resolve(spark, root), pred)
+
+  /** [[deleteWhereMoR]] against a head the caller already resolved. */
+  private[graft] def deleteWhereMoR(spark: SparkSession, head: Resolved,
+      pred: Column): Long = {
+    val root = head.root
     val (base, raw) = (head.id, head.raw)
     val fs = fsOf(spark, root)
     if (head.files.isEmpty) return base
@@ -4344,8 +4360,7 @@ object SnapshotLog {
   def hasOutstandingDeletes(spark: SparkSession, root: String): Boolean = {
     val id = currentId(spark, root)
     if (id == 0L) return false
-    val raw = resolve(spark, root, id).raw
-    raw.dRefs.nonEmpty || raw.eqRefs.nonEmpty
+    resolve(spark, root, id).hasMorDeletes
   }
 
   def mergeInto(spark: SparkSession, root: String, source: DataFrame,

@@ -586,11 +586,11 @@ private[plans] object SnapshotDml {
     // mode, and the CoW deleteWhere refuses while any are outstanding —
     // so the pure-SQL sequence UPDATE-then-DELETE must take the MoR
     // delete (one more vector, zero file rewrites) instead of failing
-    // until a rewrite_deletes/optimize CALL folds them
-    if (SnapshotLog.hasOutstandingDeletes(spark, root))
-      SnapshotLog.deleteWhereMoR(spark, root, pred)
-    else
-      SnapshotLog.deleteWhere(spark, root, pred)
+    // until a rewrite_deletes/optimize CALL folds them. One resolved
+    // head serves the test and the delete.
+    val head = SnapshotLog.resolve(spark, root)
+    if (head.hasMorDeletes) SnapshotLog.deleteWhereMoR(spark, head, pred)
+    else SnapshotLog.deleteWhere(spark, head, pred)
     ()
   }
 

@@ -199,6 +199,32 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
     assert(SnapshotLog.read(spark, root).count() === 0L)
   }
 
+  test("a plain SQL DELETE opens its head manifest at most twice, with or without vectors") {
+    for (outstanding <- Seq(false, true)) {
+      val root = newRoot()
+      base(root)
+      // with a vector outstanding the DELETE takes the merge-on-read
+      // delete, without one the copy-on-write delete
+      if (outstanding) SnapshotLog.deleteWhereMoR(spark, root, col("k") === 2L)
+      else SnapshotLog.append(spark, root, Seq((2L, "c")).toDF("k", "v"))
+      // a catalog keeps the root it was first loaded with: one per log
+      val cat = s"cprotodel_$outstanding"
+      spark.conf.set(s"spark.sql.catalog.$cat",
+        classOf[graft.sources.SnapshotCatalog].getName)
+      spark.conf.set(s"spark.sql.catalog.$cat.root",
+        crashRootOf(new Path(root).getParent.toUri.getPath))
+      val qe = spark.sessionState.executePlan(
+        spark.sessionState.sqlParser.parsePlan(s"DELETE FROM $cat.log WHERE k = 1"))
+      qe.analyzed
+      val n = manifestOpens(root, 2L)(qe.commandExecuted)
+      assert(n <= 2, s"the DELETE (outstanding vectors: $outstanding) " +
+        s"opened the head manifest $n times")
+      assert(SnapshotLog.currentId(spark, root) === 3L)
+      assert(SnapshotLog.read(spark, root).filter(col("k") === 1L).count() === 0L)
+      assert(SnapshotLog.hasOutstandingDeletes(spark, root) === outstanding)
+    }
+  }
+
   test("replaying a crashed staged publish after a CoW rewrite does not re-splice") {
     val root = newRoot()
     SnapshotLog.append(spark, root,
