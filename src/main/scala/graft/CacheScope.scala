@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 
 /** Tracks the shared persisted intermediates the operator families create
   * (hashed-token / signature / prepared-vector tables, sort barriers) so a
@@ -23,8 +24,13 @@ object CacheScope {
 
   private val tracked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
 
-  /** Register a just-persisted frame; returns it for chaining. */
+  /** Register a just-persisted frame; returns it for chaining. Frames
+    * no longer cached (a harness's `clearCache`, a caller's own
+    * `unpersist`) are forgotten here, so a session that never calls
+    * [[release]] does not keep every frame and its plan alive.
+    */
   def track(df: DataFrame): DataFrame = synchronized {
+    tracked.filterInPlace(_.storageLevel != StorageLevel.NONE)
     tracked += df
     df
   }

@@ -1,8 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+import org.apache.spark.sql.types.StructType
 
 /** One registered engine query.
   *
@@ -48,9 +50,86 @@ object Tables {
     *     DuckDB's naive read of the same bytes.
     * Both rewrites happen above the scan, so pushdown/pruning on other
     * columns is unaffected.
+    *
+    * The schema is inferred once per (session, path): a read without a
+    * schema runs a one-task Spark job that opens a footer, and a
+    * registry query reads several tables. Later reads pass the inferred
+    * schema, which runs no job. The memo entry carries the signature of
+    * the relation it came from: every leaf file's path, length and
+    * modification time (the file index the read lists anyway), plus
+    * every session conf whose key contains `parquet`, because those
+    * confs (`binaryAsString`, `int96AsTimestamp`, `inferTimestampNTZ`,
+    * `nanosAsLong`, `mergeSchema`, ...) change what inference returns.
+    * A read with the stored schema whose signature differs (files
+    * rewritten or added, a conf changed) is dropped unexecuted and read
+    * again with inference, which replaces the entry.
     */
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalize(spark.read.parquet(s"$dir/$name.parquet"))
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schemas = memoOf(spark).schemas
+    def inferred(): DataFrame = {
+      val df = spark.read.parquet(path)
+      schemaSig(df).foreach(sig => schemas.put(path, (sig, df.schema)))
+      df
+    }
+    val df = schemas.get(path) match {
+      case null => inferred()
+      case (sig, known) =>
+        val hit = spark.read.schema(known).parquet(path)
+        if (schemaSig(hit).contains(sig)) hit else inferred()
+    }
+    normalize(df)
+  }
+
+  /** Per-session memo of [[apply]]'s schemas (path -> (signature,
+    * schema)) and [[spread]]'s split counts (signature -> count).
+    * Sessions are weakly keyed: test suites churn sessions and must not
+    * accumulate entries.
+    */
+  private final class Memo {
+    val schemas = new ConcurrentHashMap[String, (String, StructType)]()
+    val parts = new ConcurrentHashMap[String, Integer]()
+  }
+
+  private val memos = new java.util.WeakHashMap[SparkSession, Memo]()
+
+  private def memoOf(spark: SparkSession): Memo =
+    memos.synchronized(memos.computeIfAbsent(spark, _ => new Memo))
+
+  /** The file relation under an analyzed plan of Projects and Filters
+    * over ONE file scan, if it is one.
+    */
+  private def nearScan(plan: LogicalPlan): Option[HadoopFsRelation] = plan match {
+    case p: Project => nearScan(p.child)
+    case f: Filter => nearScan(f.child)
+    case r: LogicalRelation => r.relation match {
+      case h: HadoopFsRelation => Some(h)
+      case _ => None
+    }
+    case _ => None
+  }
+
+  /** Path, length and modification time of every leaf file the
+    * relation's index listed, plus the session confs `keep` selects.
+    */
+  private def signature(rel: HadoopFsRelation, keep: String => Boolean): Option[String] =
+    rel.location match {
+      case idx: PartitioningAwareFileIndex =>
+        val files = idx.allFiles()
+          .map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}").sorted
+        val confs = rel.sparkSession.sessionState.conf.getAllConfs
+          .filter { case (k, _) => keep(k) }.toSeq.sorted
+        Some((files ++ confs.map { case (k, v) => s"$k=$v" }).mkString("\n"))
+      case _ => None
+    }
+
+  private def schemaSig(df: DataFrame): Option[String] =
+    nearScan(df.queryExecution.analyzed).flatMap(signature(_, _.contains("parquet")))
+
+  /** The confs `FilePartition` packs splits by. */
+  private val SplitConfs = Set("spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes", "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum", "spark.sql.leafNodeDefaultParallelism")
 
   /** Round-robin a frame out to HALF the session's shuffle parallelism
     * iff its scan is narrower than that (identity otherwise — at
@@ -75,40 +154,25 @@ object Tables {
     * physical planning + RDD conversion of the subtree per call (ADVICE
     * r16), so a NEAR-SCAN frame ([[nearScan]]: projections/filters,
     * which never change split packing on these unpartitioned tables)
-    * is memoized per (session, file set) — one probe per input table
-    * per session covers every such caller. Any other frame (a
-    * coalesce, a join, an aggregate over the same files) gets its own
-    * probe: its partitioning is not the file set's. Sessions are weakly
-    * keyed: test suites churn sessions and must not accumulate entries.
+    * is memoized per session on its relation's signature: the leaf
+    * files as in [[apply]], the confs split packing reads, and the
+    * leaf default parallelism `minPartitionNum` falls back to. One
+    * probe per input table per session then covers every such caller.
+    * Any other frame (a coalesce, a join, an aggregate over the same
+    * files) gets its own probe: its partitioning is not the file set's.
     */
-  private val spreadParts =
-    new java.util.WeakHashMap[SparkSession, java.util.HashMap[String, java.lang.Integer]]()
-
-  /** Whether an analyzed plan is Project/Filter over ONE file relation. */
-  private def nearScan(plan: LogicalPlan): Boolean = plan match {
-    case p: Project => nearScan(p.child)
-    case f: Filter => nearScan(f.child)
-    case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
-    case _ => false
-  }
-
   private def scanParts(df: DataFrame): Int = {
-    if (!nearScan(df.queryExecution.analyzed)) return df.rdd.getNumPartitions
     val s = df.sparkSession
-    val key = df.inputFiles.sorted.mkString("\n")
-    spreadParts.synchronized {
-      var m = spreadParts.get(s)
-      if (m == null) {
-        m = new java.util.HashMap[String, java.lang.Integer]()
-        spreadParts.put(s, m)
-      }
-      val cached = m.get(key)
-      if (cached != null) cached.intValue()
-      else {
-        val p = df.rdd.getNumPartitions
-        m.put(key, Integer.valueOf(p))
-        p
-      }
+    nearScan(df.queryExecution.analyzed).flatMap(signature(_, SplitConfs)) match {
+      case None => df.rdd.getNumPartitions
+      case Some(files) =>
+        val key = s"$files\nparallelism=${s.sparkContext.defaultParallelism}"
+        val parts = memoOf(s).parts
+        Option(parts.get(key)).map(_.intValue).getOrElse {
+          val p = df.rdd.getNumPartitions
+          parts.put(key, Integer.valueOf(p))
+          p
+        }
     }
   }
 

@@ -1843,7 +1843,7 @@ object SnapshotLog {
   /** [[resolve]] for the commits that may also bootstrap a log: the
     * current head, None while the log is empty.
     */
-  private def resolveHead(spark: SparkSession, root: String): Option[Resolved] = {
+  private[graft] def resolveHead(spark: SparkSession, root: String): Option[Resolved] = {
     val id = currentId(spark, root)
     if (id > 0) Some(resolve(spark, root, id)) else None
   }

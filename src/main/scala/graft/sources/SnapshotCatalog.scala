@@ -95,8 +95,8 @@ class SnapshotCatalog extends TableCatalog
 
   private def tableAt(ident: Identifier, asOf: Long): Table = {
     val root = rootOf(ident)
-    if (SnapshotLog.currentId(spark, root) == 0L)
-      throw new NoSuchTableException(ident)
+    val head = SnapshotLog.currentId(spark, root)
+    if (head == 0L) throw new NoSuchTableException(ident)
     // WAP (write-audit-publish, Iceberg's `spark.wap.branch`): while
     // `spark.graft.wap.branch` is set, a plain CURRENT-head resolution
     // of a table that HAS that branch pins the branch head instead —
@@ -107,6 +107,9 @@ class SnapshotCatalog extends TableCatalog
       case Some(b) if asOf == 0L && SnapshotLog.branchExists(spark, root, b) =>
         new SnapshotTableV2(root, 0L,
           Some((b, SnapshotLog.branchPin(spark, root, b))), catName)
+      // a current-head table reads the head the existence test found
+      case _ if asOf == 0L => new SnapshotTableV2(root, 0L, None, catName,
+        Some(SnapshotLog.resolve(spark, root, head)))
       case _ => new SnapshotTableV2(root, asOf, None, catName)
     }
   }
@@ -443,19 +446,15 @@ object SnapshotCatalog {
     * the whole DataFrame driver-side. Must agree between
     * [[SnapshotTableV2.capabilities]] and the write builder: the
     * planner errors on a V1_BATCH_WRITE table whose Write isn't V1.
+    * Both pass the same resolved `head` (None: an empty log); the
+    * write itself still commits against the head at commit time.
     */
   private[sources] def v2WritePath(spark: SparkSession,
-      root: String): Boolean = {
+      head: => Option[SnapshotLog.Resolved]): Boolean = {
     val fanout = spark.conf.getOption("spark.graft.write.fanout")
       .exists(_.toBoolean)
-    !fanout && wapBranch(spark).isEmpty && !SqlTxn.isActive(spark) && {
-      // writes target the CURRENT head — resolved here, once
-      val head = SnapshotLog.currentId(spark, root)
-      head > 0L && {
-        val snap = SnapshotLog.resolve(spark, root, head)
-        snap.spec.nonEmpty || snap.sortOrder.nonEmpty
-      }
-    }
+    !fanout && wapBranch(spark).isEmpty && !SqlTxn.isActive(spark) &&
+      head.exists(snap => snap.spec.nonEmpty || snap.sortOrder.nonEmpty)
   }
 
   /** A declared partition field as the V2 transform THE CATALOG'S OWN
@@ -872,7 +871,8 @@ class SnapshotBatch extends org.apache.spark.sql.connector.catalog.TableProvider
 }
 
 /** One snapshot-log table pinned (optionally) to a time-travel
-  * snapshot or a branch head. The pin resolves ONCE, lazily ([[snap]]):
+  * snapshot or a branch head. The pin resolves ONCE ([[snap]]: lazily,
+  * unless the catalog hands in the head it already resolved):
   * schema, partitioning and properties all describe that one snapshot
   * — a commit landing between those calls can never hand Spark a
   * table whose schema and layout disagree — so `VERSION AS OF` reads
@@ -884,7 +884,8 @@ class SnapshotBatch extends org.apache.spark.sql.connector.catalog.TableProvider
   */
 private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
     val branch: Option[(String, Long)] = None,
-    catalogName: String = "snap")
+    catalogName: String = "snap",
+    resolved: Option[SnapshotLog.Resolved] = None)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -920,10 +921,18 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
     case None => s"snapshot-log `$root`"
   }
 
-  private lazy val snap: SnapshotLog.Resolved =
-    SnapshotLog.resolve(SparkSession.active, root, asOf, branch)
+  private lazy val snap: SnapshotLog.Resolved = resolved.getOrElse(
+    SnapshotLog.resolve(SparkSession.active, root, asOf, branch))
 
   override lazy val schema: StructType = snap.schema
+
+  /** The head writes target: [[snap]] itself for a current-head table
+    * (so capabilities and the write builder decide from one value),
+    * the root's head now for a pinned one.
+    */
+  private def writeHead: Option[SnapshotLog.Resolved] =
+    if (asOf == 0L && branch.isEmpty) Some(snap)
+    else SnapshotLog.resolveHead(SparkSession.active, root)
 
   // MICRO_BATCH_READ admits `readStream.table(...)` through analysis;
   // graft.plans.SnapshotStreamTableRule then substitutes the V1
@@ -948,7 +957,7 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
   // fanout writes keep the library's V1 path (frame-level staging /
   // point-banded file splitting need the whole DataFrame).
   override def capabilities(): util.Set[TableCapability] =
-    if (SnapshotCatalog.v2WritePath(SparkSession.active, root))
+    if (SnapshotCatalog.v2WritePath(SparkSession.active, writeHead))
       util.EnumSet.of(TableCapability.BATCH_READ,
         TableCapability.MICRO_BATCH_READ,
         TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
@@ -1048,7 +1057,7 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
       s"cannot write to a pinned read of $root: history is immutable " +
         "(branch writes go through SnapshotLog.appendToBranch, or set " +
         "spark.graft.wap.branch for SQL write-audit-publish)")
-    new SnapshotWriteBuilder(root, info.schema())
+    new SnapshotWriteBuilder(root, info.schema(), snap)
   }
 }
 
@@ -1095,7 +1104,7 @@ private[sources] class SnapshotBranchWriteBuilder(root: String, name: String)
   *    retry, spec routing) either way.
   */
 private[sources] class SnapshotWriteBuilder(root: String,
-    schema: StructType)
+    schema: StructType, head: SnapshotLog.Resolved)
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
 
@@ -1108,7 +1117,7 @@ private[sources] class SnapshotWriteBuilder(root: String,
 
   override def build(): org.apache.spark.sql.connector.write.Write = {
     val spark = SparkSession.active
-    if (SnapshotCatalog.v2WritePath(spark, root))
+    if (SnapshotCatalog.v2WritePath(spark, Some(head)))
       new SnapshotV2Write(root, schema, truncateFirst)
     else
       new org.apache.spark.sql.connector.write.V1Write {

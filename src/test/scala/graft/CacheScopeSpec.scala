@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.storage.StorageLevel
+
 /** A long-lived session running query families repeatedly must not
   * accumulate MEMORY_AND_DISK blocks: every graft-persisted shared table
   * is tracked, and `CacheScope.release()` frees them all (blocking).
@@ -38,6 +40,20 @@ class CacheScopeSpec extends SparkSpec {
       s"net cache growth: $cachedAfterFirst vs baseline $baseline")
     assert(cachedAfterSecond <= baseline,
       s"net cache growth: $cachedAfterSecond vs baseline $baseline")
+    assert(CacheScope.size === 0)
+  }
+
+  test("track forgets frames a catalog-wide clearCache dropped; release still unpersists") {
+    spark.catalog.clearCache()
+    CacheScope.release()
+    CacheScope.track(spark.range(0, 10).toDF("a").persist())
+    // the harnesses free caches this way and never call release()
+    spark.catalog.clearCache()
+    val kept = CacheScope.track(spark.range(0, 20).toDF("b").persist())
+    assert(CacheScope.size === 1)
+    assert(kept.storageLevel !== StorageLevel.NONE)
+    CacheScope.release()
+    assert(kept.storageLevel === StorageLevel.NONE)
     assert(CacheScope.size === 0)
   }
 }

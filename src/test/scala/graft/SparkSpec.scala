@@ -55,6 +55,17 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.catalog.clearCache()
 
+  /** Runs `f` with the session confs `pairs` set, then restores them. */
+  def withConfs[T](pairs: (String, String)*)(f: => T): T = {
+    val priors = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally priors.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Rows as sorted tuples-of-strings for order-insensitive comparison. */
   def rowSet(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
     df.collect().toSeq

@@ -3,12 +3,22 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.time.LocalDateTime
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.MessageTypeParser
+import org.apache.spark.graft.BusFlush
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Regression guard for the timestamp-physical-type resilience in
   * `Tables` (the round-8 testdata switched TIMESTAMP(NANOS) →
   * TIMESTAMP(MICROS, no UTC flag) and seven queries plan-failed):
   * `normalize` must map every historical shape to plain TimestampType
-  * with value-preserving semantics under the UTC session.
+  * with value-preserving semantics under the UTC session. Also pins the
+  * per-session memos behind `Tables`: the inferred schema of `apply`
+  * and the split count of `spread`.
   */
 class TablesNormalizeSpec extends SparkSpec {
 
@@ -73,6 +83,86 @@ class TablesNormalizeSpec extends SparkSpec {
     } finally old.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsIn[A](body: => A): (A, Int) = {
+    val jobs = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    BusFlush.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = body
+      BusFlush.flush(spark.sparkContext)
+      (a, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a second read of a table infers nothing: no job, the same schema and rows") {
+    val dir = TempDirs.create("tables_memo").toString
+    val tagged = new MetadataBuilder().putString("comment", "kept").build()
+    spark.range(0, 50)
+      .select(col("id"), col("id").cast("string").as("s", tagged),
+        lit(1).as("one"))
+      .write.parquet(s"$dir/t.parquet")
+    val (first, inferJobs) = jobsIn(Tables(spark, dir, "t"))
+    assert(inferJobs > 0, "the first read infers its schema with a job")
+    val (second, jobs) = jobsIn(Tables(spark, dir, "t"))
+    assert(jobs === 0, s"the second read ran $jobs jobs")
+    assert(second.schema === first.schema)
+    assert(second.schema("s").metadata.getString("comment") === "kept")
+    assert(rowSet(second) === rowSet(first))
+  }
+
+  test("a rewritten table is read with its new schema") {
+    val dir = TempDirs.create("tables_rewrite").toString
+    spark.range(0, 5).write.parquet(s"$dir/t.parquet")
+    assert(Tables(spark, dir, "t").columns.toSeq === Seq("id"))
+    spark.range(0, 5).withColumn("extra", col("id") * 2)
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables(spark, dir, "t")
+    assert(again.columns.toSeq === Seq("id", "extra"))
+    assert(again.agg(sum("extra")).head().getLong(0) === 20L)
+  }
+
+  test("a parquet conf that changes inference is part of the memo key") {
+    val dir = TempDirs.create("tables_conf").toString
+    // an unannotated binary column written without Spark's footer
+    // schema, which would otherwise fix the type whatever the conf
+    val schema = MessageTypeParser.parseMessageType("message t { required binary b; }")
+    val out = HadoopOutputFile.fromPath(
+      new Path(s"$dir/t.parquet/part-0.parquet"), spark.sparkContext.hadoopConfiguration)
+    val w = ExampleParquetWriter.builder(out).withType(schema).build()
+    try Seq("x", "y").foreach(v => w.write(new SimpleGroupFactory(schema).newGroup().append("b", v)))
+    finally w.close()
+    def typeWith(binaryAsString: String) =
+      withConfs("spark.sql.parquet.binaryAsString" -> binaryAsString)(
+        Tables(spark, dir, "t").schema("b").dataType)
+    assert(typeWith("false") === BinaryType)
+    assert(typeWith("true") === StringType)
+    assert(typeWith("false") === BinaryType)
+  }
+
+  test("spread's split memo is keyed on the split-packing confs") {
+    val dir = TempDirs.create("spread_confs").resolve("t").toString
+    // one file of ~100 KB: one split by default, many at 1k splits
+    spark.range(0, 4000).select(md5(col("id").cast("string")).as("h"))
+      .coalesce(1).write.parquet(dir)
+    val n = math.max(4, spark.sessionState.conf.numShufflePartitions / 2)
+    // a frame plans its splits once, so each conf state reads afresh
+    val t = spark.read.parquet(dir)
+    assert(t.rdd.getNumPartitions < n, "fixture must span < n splits by default")
+    assert(!(Tables.spread(t) eq t), "a narrow scan is spread")
+    withConfs("spark.sql.files.maxPartitionBytes" -> "1k",
+        "spark.sql.files.openCostInBytes" -> "1") {
+      val wide = spark.read.parquet(dir)
+      assert(spark.read.parquet(dir).rdd.getNumPartitions >= n,
+        "fixture must span >= n splits at 1k")
+      assert(Tables.spread(wide) eq wide,
+        "the memo answered with the split count of other confs")
     }
   }
 }

@@ -181,13 +181,13 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
     base(root)
     // an outstanding vector: the table is merge-on-read from here on
     SnapshotLog.deleteWhereMoR(spark, root, col("k") === 2L)
-    spark.conf.set("spark.sql.catalog.cprotocat",
+    spark.conf.set("spark.sql.catalog.cprotomor",
       classOf[graft.sources.SnapshotCatalog].getName)
-    spark.conf.set("spark.sql.catalog.cprotocat.root",
+    spark.conf.set("spark.sql.catalog.cprotomor.root",
       crashRootOf(new Path(root).getParent.toUri.getPath))
     Seq(1L).toDF("k").createOrReplaceTempView("cproto_gone")
     // the subquery predicate takes SnapshotDml's MoR discovery route
-    val stmt = "DELETE FROM cprotocat.log t WHERE EXISTS " +
+    val stmt = "DELETE FROM cprotomor.log t WHERE EXISTS " +
       "(SELECT 1 FROM cproto_gone g WHERE g.k = t.k)"
     // analysis loads the table through the catalog; count the run alone
     val qe = spark.sessionState.executePlan(
@@ -197,6 +197,22 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
     assert(n <= 2, s"the DELETE opened the head manifest $n times")
     assert(SnapshotLog.currentId(spark, root) === 3L)
     assert(SnapshotLog.read(spark, root).count() === 0L)
+  }
+
+  test("a catalog load of a current-head table opens its head manifest at most twice") {
+    val root = newRoot()
+    base(root)
+    SnapshotLog.append(spark, root, Seq((3L, "c")).toDF("k", "v"))
+    spark.conf.set("spark.sql.catalog.cprotoload",
+      classOf[graft.sources.SnapshotCatalog].getName)
+    spark.conf.set("spark.sql.catalog.cprotoload.root",
+      crashRootOf(new Path(root).getParent.toUri.getPath))
+    val qe = spark.sessionState.executePlan(
+      spark.sessionState.sqlParser.parsePlan("SELECT k, v FROM cprotoload.log"))
+    // one header read for the head id, one parse of that manifest
+    val n = manifestOpens(root, 2L)(qe.analyzed)
+    assert(n <= 2, s"loading the table opened the head manifest $n times")
+    assert(spark.sql("SELECT count(*) FROM cprotoload.log").head().getLong(0) === 3L)
   }
 
   test("a plain SQL DELETE opens its head manifest at most twice, with or without vectors") {

@@ -20,16 +20,6 @@ class SnapshotSpjSkewSpec extends SparkSpec {
     "snskew"
   }
 
-  private def withConfs[T](pairs: (String, String)*)(f: => T): T = {
-    val priors = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally priors.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** Day-fanout pair: fact day 0 hot (~half the rows), 5 rows per key,
     * written in THREE commits (three files per present day) — the
     * clearly-LARGER side Spark's size heuristic leaves partially
