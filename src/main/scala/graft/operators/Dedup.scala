@@ -49,7 +49,6 @@ object Dedup {
 
   private[operators] val NumHashes = 104 // minhash signature width
   private[operators] val BandSize = 13 // rows per band
-  private[operators] val NumBands = NumHashes / BandSize // 8
   private val JaccardThreshold = 0.9
   private[operators] val Mod = 4294967296L // 2^32
 

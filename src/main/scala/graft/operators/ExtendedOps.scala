@@ -835,8 +835,8 @@ object ExtendedOps {
     // Without the RangeJoinBinning interval rewrite this plans as a
     // broadcast-nested-loop (no equality conjunct); with it, the
     // interval side explodes into its overlapped bins
-    // (sequence(lo DIV W, hi DIV W), W from
-    // spark.graft.rangeJoin.binWidth) and the planner gets a shuffled
+    // (sequence(lo DIV W, hi DIV W), W the rule's 5-minute
+    // IntervalBinWidth) and the planner gets a shuffled
     // equi join on the bin — the left-outer point side stays
     // unduplicated, so zero-error purchases survive with count 0.
     Q(

@@ -260,10 +260,10 @@ object LakeMaintenance {
     val frame = withZ(df, x, y, "z")
       .repartitionByRange(numFiles, col("z"))
       .sortWithinPartitions("z")
-    // measurement aid (same pattern as SPARK_GRAFT_PIPELINE_TIMING): the
-    // write-side plan is invisible to Explain/Prof because the write runs
-    // as a side effect inside the query builder
-    if (sys.env.get("SPARK_GRAFT_EXPLAIN_WRITE").contains("1"))
+    // SPARK_GRAFT_PIPELINE_TIMING=1 diagnostics: the write-side plan is
+    // invisible to Explain/Prof because the write runs as a side effect
+    // inside the query builder
+    if (sys.env.get("SPARK_GRAFT_PIPELINE_TIMING").contains("1"))
       System.err.println(frame.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode))
     frame.write.mode("overwrite").option("compression", "zstd").parquet(outDir)

@@ -148,15 +148,15 @@ object SnapshotLog {
       // per-file sketch is what lets publish-time round-trips (WAP,
       // inline carries) refold list meta losslessly instead of
       // silently disabling stats forever. Same order of manifest
-      // weight as Iceberg's per-file column stats; tables that can't
-      // afford it opt out via spark.graft.stats.colmeta=false.
+      // weight as Iceberg's per-file column stats; every commit
+      // records it, and a legacy line without it reads as empty.
       meta: Map[String, (Long, Vector[Long])] = Map.empty,
       // per-column equi-height histogram BOUNDARIES (HistBins+1
       // approximate quantiles over the file's non-null values, in the
       // column's CBO double domain — numeric value, epoch day, epoch
       // micros), 8th field: the range-selectivity feed that corrects
-      // CBO where min/max-uniform misleads on skew. Opt out via
-      // spark.graft.stats.histogram=false.
+      // CBO where min/max-uniform misleads on skew. Every commit
+      // records it; a legacy line without it reads as empty.
       hist: Map[String, Vector[Double]] = Map.empty,
       // the rendered sort order ([[renderSortOrder]]) this file's ROWS
       // are physically sorted by, 9th field ("" = unsorted/legacy/
@@ -2497,7 +2497,7 @@ object SnapshotLog {
     * meta line: a column ABSENT from the file (pre-evolution) is
     * all-NULL there — exactly `rows` — and a present column answers
     * from its recorded count. None = the file carries no meta for it
-    * (pre-format lines, colmeta opt-out) — metadata cannot answer.
+    * (pre-format lines) — metadata cannot answer.
     */
   private[graft] def fileNullCount(f: FileEntry, cur: String,
       curIds: Map[String, Int]): Option[Long] =
@@ -5182,30 +5182,15 @@ object SnapshotLog {
       c -> e
     } ++ derivedStats
     val bloomCols = bloomSpec.map(_.cols).getOrElse(Nil)
-    // column meta (null counts + KMV NDV sketches) rides the SAME
-    // read-back aggregation as min/max — one pass over the written
-    // bytes per commit, pay once; opt out via spark.graft.stats.colmeta
-    // per-file equi-height histogram boundaries for CBO-double-domain
-    // columns — approximate quantiles riding the SAME one-pass
-    // read-back aggregation as min/max/meta (never a second scan of
-    // the written bytes)
-    // histogram SERVING weights each file's boundaries by its non-null
-    // count, which lives in meta — the two confs couple with the
-    // colmeta OPT-OUT winning: colmeta=false disables BOTH (a user who
-    // priced out per-file meta must not get it back as a histogram
-    // side effect, and boundaries without weights could never serve),
-    // while histogram=false alone keeps meta on.
-    val colmetaOff = spark.conf.getOption("spark.graft.stats.colmeta")
-      .exists(!_.toBoolean)
-    val histEnabled = !colmetaOff &&
-      spark.conf.getOption("spark.graft.stats.histogram")
-        .forall(_.toBoolean)
-    val metaCols =
-      if (colmetaOff) Seq.empty else statCols(df.schema)
+    // column meta (null counts + KMV NDV sketches) and per-file
+    // equi-height histogram boundaries for CBO-double-domain columns
+    // (approximate quantiles) ride the SAME read-back aggregation as
+    // min/max — one pass over the written bytes per commit, never a
+    // second scan. Histogram SERVING weights each file's boundaries by
+    // its non-null count, which lives in meta.
+    val metaCols = statCols(df.schema)
     val histCols: Seq[(String, Column)] =
-      if (histEnabled)
-        df.schema.fields.toSeq.flatMap(f => histExprOf(f).map(f.name -> _))
-      else Seq.empty
+      df.schema.fields.toSeq.flatMap(f => histExprOf(f).map(f.name -> _))
     if (bloomCols.nonEmpty || metaCols.nonEmpty)
       graft.functions.GraftFunctions.register(spark)
     val histPcts = array((0 to HistBins).map(j =>

@@ -35,14 +35,14 @@ import org.apache.spark.sql.types.LongType
   * `pt`, the other a data-carried interval `[lo, hi]` — which is what
   * `a.t BETWEEN b.lo AND b.hi` and the one-sided band
   * `b.t - w <= a.t <= b.t` both desugar to as two inequality conjuncts)
-  * have no literal width to bin by, so the bin width comes from
-  * `spark.graft.rangeJoin.binWidth` (micros-scale default 300000000 =
-  * 5 min). The INTERVAL side is exploded into `sequence(lo DIV W,
-  * hi DIV W)` bin copies — correctness never depends on W; W only tunes
-  * copies-per-row (intervals spanning many bins) against per-bin fan-in
-  * (bins matching many points), exactly the knob production range-join
-  * implementations expose as a bin-size hint. A matching pair agrees in
-  * exactly one bin copy (the point's own bin), so no dedup is needed.
+  * have no literal width to bin by, so they bin by the constant
+  * `IntervalBinWidth` (300000000 micros = 5 min). The INTERVAL side is
+  * exploded into `sequence(lo DIV W, hi DIV W)` bin copies — correctness
+  * never depends on W; W only tunes copies-per-row (intervals spanning
+  * many bins) against per-bin fan-in (bins matching many points),
+  * exactly the knob production range-join implementations expose as a
+  * bin-size hint. A matching pair agrees in exactly one bin copy (the
+  * point's own bin), so no dedup is needed.
   * For LEFT OUTER joins the exploded side must be the non-preserved
   * (right) side — exploding the preserved side would multiply its
   * zero-match rows — so an interval-on-the-left outer join is left
@@ -179,8 +179,7 @@ object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
   }
 
   /** Bin width for interval shapes (no literal width in the predicate). */
-  private def intervalBinWidth: Long =
-    conf.getConfString("spark.graft.rangeJoin.binWidth", "300000000").toLong
+  private val IntervalBinWidth = 300000000L
 
   /** Point side: bin projection. Interval side: explode into every bin
     * the interval overlaps (`sequence(lo DIV W, hi DIV W)`). The point
@@ -189,7 +188,7 @@ object RangeJoinBinning extends Rule[LogicalPlan] with PredicateHelper {
     */
   private def rewriteInterval(
       j: Join, jt: JoinType, hint: JoinHint, shape: IntervalShape): LogicalPlan = {
-    val width = Literal(intervalBinWidth, LongType)
+    val width = Literal(IntervalBinWidth, LongType)
     val ptBin = Alias(IntegralDivide(shape.pt, width), "graft_bin_pt")()
     // timeZoneId must be supplied by hand: the analyzer's ResolveTimeZone
     // has already run, and a TimeZoneAware expression without it is

@@ -45,10 +45,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * Memory safety at 100 TB — both passes are bounded at ANY key
   * cardinality:
   *
-  *  - The PARTIAL heap table is capped at
-  *    `spark.graft.topk.maxHeapKeys` keys (default 1M). On overflow the
-  *    first-seen key's current top-k is EMITTED downstream and its heap
-  *    dropped — correctness-preserving, because any row in the true
+  *  - The PARTIAL heap table is capped at [[TopKPerKey.MaxHeapKeys]]
+  *    keys (1M). On overflow the first-seen key's current top-k is
+  *    EMITTED downstream and its heap dropped — correctness-
+  *    preserving, because any row in the true
   *    partition top-k for a key beats all but < k rows of the whole
   *    partition, hence beats all but < k rows of whichever emitted
   *    chunk contains it: the union of a key's chunk top-k's is a
@@ -73,8 +73,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 object TopKPerKey {
 
   /** Cap on distinct keys held by one partial-pass task (keys × k rows). */
-  val MaxHeapKeysConf = "spark.graft.topk.maxHeapKeys"
-  val MaxHeapKeysDefault = 1 << 20
+  val MaxHeapKeys = 1 << 20
 
   /** Bounded-heap top-k reduction of one input partition (the partial
     * pass), as an iterator over [[PartialTopKRuntime]] — the same state
@@ -232,14 +231,10 @@ final class PartialTopKFactory(
     order: Seq[SortOrder],
     k: Int,
     inputAttrs: Seq[Attribute]) extends Serializable {
-  def create(): PartialTopKRuntime = {
-    val maxKeys = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(TopKPerKey.MaxHeapKeysConf,
-        TopKPerKey.MaxHeapKeysDefault.toString).toInt
+  def create(): PartialTopKRuntime =
     new PartialTopKRuntime(
       UnsafeProjection.create(part, inputAttrs),
-      RowOrdering.create(order, inputAttrs), k, maxKeys)
-  }
+      RowOrdering.create(order, inputAttrs), k, TopKPerKey.MaxHeapKeys)
 }
 
 /** Logical per-key top-k by rank: output = child.output :+ rankAttr,
@@ -330,7 +325,7 @@ object TopKStrategy extends SparkStrategy {
 
 /** Map-side combine: reduce every input partition to ≤ k rows per key
   * chunk it holds. No distribution requirement — runs where the data
-  * is; heap memory capped at `spark.graft.topk.maxHeapKeys` keys.
+  * is; heap memory capped at [[TopKPerKey.MaxHeapKeys]] keys.
   *
   * Implements whole-stage codegen as a BLOCKING operator (the SortExec
   * pattern): the upstream pipeline (scan → filter → project) pushes rows
@@ -355,11 +350,8 @@ case class PartialTopKPerKeyExec(
   override def outputPartitioning: Partitioning = child.outputPartitioning
   override protected def doExecute(): RDD[InternalRow] = {
     val (p, o, kk, attrs) = (part, order, k, child.output)
-    val maxKeys = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(TopKPerKey.MaxHeapKeysConf,
-        TopKPerKey.MaxHeapKeysDefault.toString).toInt
     child.execute().mapPartitions(
-      TopKPerKey.partialTopK(_, p, o, kk, attrs, maxKeys),
+      TopKPerKey.partialTopK(_, p, o, kk, attrs, TopKPerKey.MaxHeapKeys),
       preservesPartitioning = true)
   }
 

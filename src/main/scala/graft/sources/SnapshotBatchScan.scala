@@ -284,9 +284,7 @@ class SnapshotBatchScan(required: StructType,
 
   private lazy val orderedLayout: Option[Seq[SnapshotLog.SortField]] = {
     val so = snap.sortOrder
-    val on = SparkSession.active.conf
-      .getOption("spark.graft.catalog.reportOrdering").forall(_.toBoolean)
-    if (!on || so.isEmpty || plan0.kept.isEmpty) None
+    if (so.isEmpty || plan0.kept.isEmpty) None
     else if (!so.forall(f => required.fieldNames.contains(f.column))) None
     else {
       val tag = SnapshotLog.renderSortOrder(so)
@@ -299,7 +297,7 @@ class SnapshotBatchScan(required: StructType,
         f.sortedBy == tag &&
           f.stats.contains(lead.column) &&
           // zero nulls in EVERY sort column, proven by per-file meta —
-          // absent meta (colmeta opted out, legacy file) refuses
+          // absent meta (a legacy file line) refuses
           so.forall(c => f.meta.get(c.column).exists(_._1 == 0L))
       // multi-field orders need STRICT leading-column disjointness:
       // two files sharing a boundary value could interleave on the

@@ -1181,10 +1181,6 @@ private[sources] class SnapshotV2Write(root: String, schema: StructType,
 
   override def requiredNumPartitions(): Int = 0
 
-  override def advisoryPartitionSizeInBytes(): Long =
-    spark.conf.getOption("spark.graft.write.targetFileSize")
-      .map(_.toLong).getOrElse(0L)
-
   /** The partition transforms lead the required ordering (ascending —
     * the direction is arbitrary, grouping is what matters), the
     * declared sort follows: within a task rows then arrive grouped by
@@ -1476,29 +1472,20 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     b.result()
   }
 
-  /** V2 per-file batch scan by default ([[SnapshotBatchScan]] — the
-    * runtime-filterable planning shape); the V1 join read remains for
-    * snapshots carrying outstanding EQUALITY deletes (their
-    * sequence-rule anti-join is not a per-file test) and as an escape
-    * hatch (`spark.graft.catalog.batchScan=false`). The pushdown
-    * CONTRACT follows the conf alone: the batch scan's parquet
-    * pushdown is row-group INEXACT, so under it every filter stays
-    * residual for Spark to re-apply above (the V1 read self-applies
-    * its claimed set, so residual duplication in the rare
-    * eq-outstanding fallback is merely a re-check, never wrong).
+  /** The V2 per-file batch scan ([[SnapshotBatchScan]] — the
+    * runtime-filterable planning shape) serves every snapshot but one
+    * carrying outstanding EQUALITY deletes (their sequence-rule
+    * anti-join is not a per-file test), which the V1 join read serves.
+    * The batch scan's parquet pushdown is row-group INEXACT, so every
+    * unclaimed filter stays residual for Spark to re-apply above (the
+    * V1 read self-applies its pushed set, so residual duplication in
+    * the eq-outstanding fallback is merely a re-check, never wrong).
     */
-  private lazy val batchConf: Boolean =
-    SparkSession.active.conf.getOption("spark.graft.catalog.batchScan")
-      .forall(_.toBoolean)
-
   override def pushFilters(filters: Array[sources.Filter])
       : Array[sources.Filter] = {
     allPushed = filters.toSeq
     boxes = filters.toSeq.flatMap(SnapshotCatalog.boxOf)
-    val (ex, residual) =
-      filters.partition(f => SnapshotCatalog.columnOf(f).isDefined)
-    exact = ex.toSeq
-    if (!batchConf) return residual
+    exact = filters.toSeq.filter(f => SnapshotCatalog.columnOf(f).isDefined)
     // ---- partition-exact claiming: a filter EVERY planned file
     // decides (all-rows-true or all-rows-false, from point stats +
     // per-file null counts — fileFilterState) is claimed EXACT even
@@ -1578,7 +1565,6 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     import org.apache.spark.sql.connector.expressions.NamedReference
     import org.apache.spark.sql.connector.expressions.aggregate.{CountStar, Max, Min}
     import org.apache.spark.sql.types.{LongType, StructField}
-    if (!batchConf) return None
     // filters are admitted ONLY when every pushed one was CLAIMED
     // exact (file-decidable): the refined kept set is then exactly the
     // matching rows — whole files — and the manifest fold below is the
@@ -1746,7 +1732,7 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     // ONE file plan (shared with pushFilters' claim decision and the
     // aggregate pushdown) serves the batch scan and the V1 fallback
     val plan0 = resolvePlan()
-    if (!batchConf || snap.eqOutstanding)
+    if (snap.eqOutstanding)
       return new SnapshotScan(plan0, required, exact)
     // claimed filters apply exactly at FILE granularity: the all-false
     // files drop here, the all-true survivors are the claim's contract

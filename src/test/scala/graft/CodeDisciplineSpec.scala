@@ -77,6 +77,17 @@ class CodeDisciplineSpec extends AnyFunSuite {
       "a Resolved built outside resolve")
   }
 
+  test("the engine reads only the spark.graft confs a registry row sets") {
+    val key = """"spark\.graft\.([A-Za-z.]+)"""".r
+    val keys = mainSources.flatMap { case (_, src) =>
+      key.findAllMatchIn(src).map(_.group(1)) }.toSet
+    assert(keys === Set("write.fanout", "catalog.preserveGrouping", "wap.branch"))
+    val explainWrite = mainSources.collect {
+      case (path, src) if src.contains("SPARK_GRAFT_EXPLAIN_WRITE") => path
+    }
+    assert(explainWrite.isEmpty, s"SPARK_GRAFT_EXPLAIN_WRITE read in: $explainWrite")
+  }
+
   test("every registered query has a DuckDB oracle") {
     val missing = SparkEntry.registry.filter(_.oracle.isEmpty).map(_.name)
     assert(missing.isEmpty, s"queries without oracles: $missing")

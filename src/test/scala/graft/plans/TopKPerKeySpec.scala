@@ -64,31 +64,33 @@ class TopKPerKeySpec extends SparkSpec {
   }
 
   test("bounded heap table: eviction path is exact at key cardinality >> resident keys") {
-    // 50k distinct keys across 7 partitions with only 16 resident heaps
-    // per task — thousands of evictions per partition; the emitted-chunk
-    // union must still reduce to exactly the window semantics.
-    spark.conf.set(TopKPerKey.MaxHeapKeysConf, "16")
-    try {
-      val n = 200000
-      val df = spark.range(n)
-        .selectExpr("id % 50000 AS key", "(id * 2654435761) % 1000000 AS value", "id")
-        .repartition(7)
-      val w = Window.partitionBy("key").orderBy(desc("value"), asc("id"))
-      val out = df.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
-      val plan = planOf(out)
-      assert(plan.contains("PartialTopKPerKey"), plan.take(800))
-      val want = (0L until n)
-        .map(id => (id % 50000, (id * 2654435761L) % 1000000, id))
-        .groupBy(_._1)
-        .flatMap { case (key, rows) =>
-          rows.sortBy(r => (-r._2, r._3)).take(2).zipWithIndex.map {
-            case ((_, v, id), idx) => (key, v, id, idx + 1)
-          }
-        }.toSet
-      val got = out.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).toSet
-      assert(got === want)
-    } finally spark.conf.unset(TopKPerKey.MaxHeapKeysConf)
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, SortOrder}
+    import org.apache.spark.sql.types.LongType
+    // 5k distinct keys cycling through each of 7 partitions with only 16
+    // resident heaps per pass — every key is evicted between its
+    // occurrences; the emitted-chunk union must still reduce to exactly
+    // the window semantics.
+    val (key, value, id) = (AttributeReference("key", LongType)(),
+      AttributeReference("value", LongType)(), AttributeReference("id", LongType)())
+    val order = Seq(SortOrder(value, Descending), SortOrder(id, Ascending))
+    val (n, keys, parts, k) = (200000L, 5000L, 7L, 2)
+    def row(i: Long) = (i % keys, (i * 2654435761L) % 1000000, i)
+    val emitted = (0L until parts).flatMap { p =>
+      val in = (p until n by parts).iterator.map { i =>
+        val (kk, v, ii) = row(i); InternalRow(kk, v, ii) }
+      TopKPerKey.partialTopK(in, Seq(key), order, k, Seq(key, value, id), maxKeys = 16)
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toVector
+    }
+    // an unbounded heap table emits at most k rows per key per partition
+    assert(emitted.size > parts * keys * k, "no chunk was evicted")
+    def topK(rows: Seq[(Long, Long, Long)]) = rows.groupBy(_._1)
+      .flatMap { case (kk, rs) =>
+        rs.sortBy(r => (-r._2, r._3)).take(k).zipWithIndex.map {
+          case ((_, v, ii), idx) => (kk, v, ii, idx + 1)
+        }
+      }.toSet
+    assert(topK(emitted) === topK((0L until n).map(row)))
   }
 
   test("partial pass participates in whole-stage codegen (no fallback)") {

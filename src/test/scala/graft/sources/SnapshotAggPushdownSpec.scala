@@ -66,19 +66,13 @@ class SnapshotAggPushdownSpec extends SparkSpec {
     assert(r2.getLong(0) == 30L && r2.getLong(1) == 1L)
   }
 
-  test("a WHERE clause refuses pushdown on both scan modes") {
+  test("a WHERE clause refuses pushdown on the batch scan") {
     val root = freshLog("filtered")
-    Seq("true", "false").foreach { mode =>
-      spark.conf.set("spark.graft.catalog.batchScan", mode)
-      try {
-        val df = spark.sql(
-          s"SELECT count(*) AS n, max(k) AS mx FROM $cat.`$root` WHERE k < 100")
-        assert(!isLocal(df),
-          s"filtered aggregate must scan rows (batchScan=$mode)")
-        val r = df.head()
-        assert(r.getLong(0) == 10L && r.getLong(1) == 10L)
-      } finally spark.conf.unset("spark.graft.catalog.batchScan")
-    }
+    val df = spark.sql(
+      s"SELECT count(*) AS n, max(k) AS mx FROM $cat.`$root` WHERE k < 100")
+    assert(!isLocal(df), "filtered aggregate must scan rows")
+    val r = df.head()
+    assert(r.getLong(0) == 10L && r.getLong(1) == 10L)
   }
 
   test("outstanding delete vectors refuse pushdown; counts stay exact") {

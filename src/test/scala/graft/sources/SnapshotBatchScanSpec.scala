@@ -185,16 +185,6 @@ class SnapshotBatchScanSpec extends SparkSpec {
     assert(df2.count() == 29L)
   }
 
-  test("the escape hatch restores the V1 scan") {
-    val root = freshLog("hatch")
-    spark.conf.set("spark.graft.catalog.batchScan", "false")
-    try {
-      val df = spark.sql(s"SELECT * FROM $cat.`$root`")
-      assert(SnapshotCatalog.scanOf(df).isInstanceOf[SnapshotScan])
-      assert(df.count() == 30L)
-    } finally spark.conf.unset("spark.graft.catalog.batchScan")
-  }
-
   test("empty tables and self-joins read correctly through the batch scan") {
     // empty table: zero files, zero partitions, schema intact
     val empty = graft.TempDirs.create("batscan_empty").resolve("log").toString

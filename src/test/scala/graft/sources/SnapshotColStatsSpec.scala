@@ -96,18 +96,19 @@ class SnapshotColStatsSpec extends SparkSpec {
       val tag = if (withMeta) "meta" else "bare"
       val (fact, dim, dim2) =
         (newRoot(s"fact_$tag"), newRoot(s"dimhi_$tag"), newRoot(s"dimlo_$tag"))
-      if (!withMeta) spark.conf.set("spark.graft.stats.colmeta", "false")
-      try {
-        SnapshotLog.append(spark, fact,
-          (1 to 20000).map(i => (i.toLong % 2000L, i.toLong)).toDF("k", "m")
-            .repartition(4))
-        SnapshotLog.append(spark, dim,
-          (1 to 2000).map(i => (i.toLong, s"L${i % 1000}")).toDF("k", "label")
-            .repartition(2))
-        SnapshotLog.append(spark, dim2,
-          (1 to 2000).map(i => (i.toLong, s"T${i % 2}")).toDF("j", "tag")
-            .repartition(2))
-      } finally if (!withMeta) spark.conf.unset("spark.graft.stats.colmeta")
+      SnapshotLog.append(spark, fact,
+        (1 to 20000).map(i => (i.toLong % 2000L, i.toLong)).toDF("k", "m")
+          .repartition(4))
+      SnapshotLog.append(spark, dim,
+        (1 to 2000).map(i => (i.toLong, s"L${i % 1000}")).toDF("k", "label")
+          .repartition(2))
+      SnapshotLog.append(spark, dim2,
+        (1 to 2000).map(i => (i.toLong, s"T${i % 2}")).toDF("j", "tag")
+          .repartition(2))
+      // the control: the same commits as tables written before
+      // manifests carried column meta or histograms
+      if (!withMeta)
+        Seq(fact, dim, dim2).foreach(LegacyStats.strip(spark, _, meta = true))
       (fact, dim, dim2)
     }
     def planOf(fact: String, dim: String, dim2: String): String =

@@ -23,12 +23,13 @@ class SnapshotHistogramSpec extends SparkSpec {
   private def skewed(tag: String, withHist: Boolean): String = {
     import spark.implicits._
     val root = newRoot(tag)
-    if (!withHist) spark.conf.set("spark.graft.stats.histogram", "false")
-    try SnapshotLog.append(spark, root,
+    SnapshotLog.append(spark, root,
       (1 to 2000).map(i => (i.toLong,
         if (i % 20 == 0) (i % 2000).toLong else (i % 10 + 1).toLong))
         .toDF("k", "w").repartition(2))
-    finally if (!withHist) spark.conf.unset("spark.graft.stats.histogram")
+    // the control: the same commit as a table written before manifests
+    // carried histograms (column meta kept)
+    if (!withHist) LegacyStats.strip(spark, root, meta = false)
     root
   }
 

@@ -217,10 +217,6 @@ class SnapshotSortOrderSpec extends SparkSpec {
         .repartitionByRange(3, col("k")))
     assert(reportsOrdering(clean),
       "disjoint stamped chain must report ordering")
-    // and the conf opt-out kills it
-    spark.conf.set("spark.graft.catalog.reportOrdering", "false")
-    try assert(!reportsOrdering(clean), "reportOrdering=false must refuse")
-    finally spark.conf.unset("spark.graft.catalog.reportOrdering")
 
     // nulls in the sort column: stats can't place them — refuse
     val nulls = newRoot("neg_nulls")
