@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -3459,7 +3459,7 @@ object SnapshotLog {
     else Nil
 
   /** Publish files a DSv2 batch write's executors wrote (and
-    * [[describeDataDir]] described) as one append/overwrite commit —
+    * [[describeFiles]] described) as one append/overwrite commit —
     * the commit protocol (CAS, race retry, evolution, spec/sort
     * carry, id + seq + sorted stamping) is exactly [[append]]'s; only
     * the data write itself already happened.
@@ -3701,8 +3701,11 @@ object SnapshotLog {
     }
     val next = base + 1
     val dir = s"data/c${next}_eq_${java.util.UUID.randomUUID().toString.take(8)}"
-    keys.distinct().write.parquet(s"$root/$dir")
-    val nKeys = spark.read.parquet(s"$root/$dir").count()
+    // the key count rides the write (`observe`): no read-back to count
+    val keysWritten = Observation()
+    keys.distinct().observe(keysWritten, count(lit(1)).as("n"))
+      .write.parquet(s"$root/$dir")
+    val nKeys = keysWritten.get("n").asInstanceOf[Long]
     if (nKeys == 0L) { fs.delete(new Path(s"$root/$dir"), true); return base }
     val eq = EqRef(dir, nKeys,
       seq = next, keyIds = keys.schema.fieldNames.map(n => n -> head.curIds(n)).toMap)
@@ -3834,8 +3837,10 @@ object SnapshotLog {
     val writtenFields = tableSchema.fields.map(f => f.name -> f.dataType).toSeq
     val firstNext = base + 1
     val dir = s"data/c${firstNext}_eq_${java.util.UUID.randomUUID().toString.take(8)}"
-    source.select(keyCols.map(col): _*).distinct().write.parquet(s"$root/$dir")
-    val nKeys = spark.read.parquet(s"$root/$dir").count()
+    val keysWritten = Observation()
+    source.select(keyCols.map(col): _*).distinct()
+      .observe(keysWritten, count(lit(1)).as("n")).write.parquet(s"$root/$dir")
+    val nKeys = keysWritten.get("n").asInstanceOf[Long]
     // the source's files: the table's declared bucket layout inherited
     // from band metadata, field ids stamped, and the EXPLICIT sequence
     // stat (re-stamped per attempt) — fileSeq(next) is not < seq(next),
@@ -5047,9 +5052,9 @@ object SnapshotLog {
         val derived = routed.map(f =>
           partStatName(f) -> partExpr(f, df.schema(f.column).dataType))
         // both modes co-locate each transform tuple's rows first, so a
-        // fanout task usually owns whole values (one open writer each)
+        // fanout task usually holds whole values (one file each)
         (if (sparkPrepared) df else df.repartitionByRange(exprs: _*),
-          derived, if (fanout) exprs else Nil)
+          derived, if (fanout) routed else Nil)
       }
     // declared write sort order: applies (and stamps) only when the
     // frame carries EVERY sort column — a partial sort would stamp a
@@ -5057,7 +5062,7 @@ object SnapshotLog {
     val sortApply = sortOverride.getOrElse(
       sortApplyFor(prev.map(_.sortOrder).getOrElse(Seq.empty), df))
     commitFiles(spark, root, prev, dfR, operation, refs, inline, bloomSpec,
-      derivedStats = derivedR, fanoutExprs = fanoutR,
+      derivedStats = derivedR, fanout = fanoutR,
       evolved = Some((schema, ids, last)),
       carriedDRefs = dRefs, carriedEqRefs = eqRefs,
       appendNewCols = newCols, declaredSpec = declareSpec,
@@ -5071,112 +5076,59 @@ object SnapshotLog {
         operation.startsWith("txn=")))
   }
 
-  /** Write `df`'s files, count rows per file (one small job — the counts
-    * become file-list metadata, as Iceberg records them at write time),
-    * then publish the next snapshot via tmp-write + rename: ONE new
-    * file list holding the commit's own files plus any inline carries
-    * (legacy-manifest migration, CoW rewrite survivors), and a manifest
-    * referencing the carried lists by name. Retries the rename against
-    * a fresh current id if a concurrent committer wins the race — for
-    * `append` the carried refs are recomputed, so both writers' rows
-    * survive (Iceberg's optimistic append); a lost attempt's freshly
-    * written file list is stranded for [[vacuumOrphans]].
-    */
-  /** Write `df`'s parquet files under a fresh data dir and return their
-    * FileEntries: per-file counts + min/max column stats (+ derived
-    * layout stats, e.g. the bucket band, + optional per-file bloom
-    * filters) — O(#files) rows reduced to one driver value, the same
-    * bounded-metadata class as the delete's hit-file set, and the same
-    * single job (count, stats, and blooms share the map-side combine).
-    * An empty task can still emit a file; the listing is the source of
-    * truth and absent files count 0.
+  /** Write `df`'s parquet files under a fresh data dir through the one
+    * per-task writer ([[SnapshotFileWriter]]) and describe exactly the
+    * files it returns ([[describeFiles]]). Under `fanout` (the routed
+    * spec fields, `spark.graft.write.fanout`) each task sorts by the
+    * routing expressions, then the declared sort, and the writer rolls
+    * a file at every transform-tuple boundary: every file holds one
+    * tuple and is sorted within it. Otherwise each task writes one
+    * file, sorted by the declared sort unless the rows arrive
+    * `preSorted`.
     */
   private def writeDataFiles(spark: SparkSession, root: String, df: DataFrame,
       idHint: Long, bloomSpec: Option[BloomSpec],
       derivedStats: Seq[(String, Column)],
-      fanoutExprs: Seq[Column] = Nil,
+      fanout: Seq[PartField] = Nil,
       sortApply: Seq[SortField],
       preSorted: Boolean = false): Seq[FileEntry] = {
-    val dataDir =
-      s"data/c${idHint}_${java.util.UUID.randomUUID().toString.take(8)}"
     val sortCols = sortApply.map(f =>
       if (f.asc) col(f.column).asc else col(f.column).desc)
-    if (fanoutExprs.isEmpty) {
-      // declared sort order: one task = one parquet file here, so
-      // sorting within partitions makes every written file S-sorted
-      val d = if (sortCols.nonEmpty && !preSorted)
-        df.sortWithinPartitions(sortCols: _*) else df
-      d.write.parquet(s"$root/$dataDir")
-    } else {
-      // fanout: split files at transform-value boundaries via the
-      // parquet writer's own dynamic partitioning — the `__fan*`
-      // helper columns live only in the DIRECTORY names (partitionBy
-      // excludes them from the file bytes), so the data files carry
-      // exactly the table's columns; stats below recompute the
-      // transforms from those real columns, never from the dir names
-      val names = fanoutExprs.indices.map(i => s"__fan$i")
-      val withFan = fanoutExprs.zip(names)
-        .foldLeft(df) { case (d, (e, n)) => d.withColumn(n, e) }
-      // under a declared sort the task sorts by (partition, S): the
-      // partition prefix satisfies FileFormatWriter's dynamic-
-      // partition ordering requirement (so it inserts NO writer-side
-      // re-sort of its own, which would not preserve S among equal
-      // partition values), and each value's contiguous run is then
-      // S-sorted — exactly what the per-file stamp claims. Applied
-      // even for preSorted frames: skipping would bet the stamp on the
-      // writer's alias-aware ordering match, and a sort over already-
-      // sorted runs is near-linear anyway.
-      val d = if (sortCols.nonEmpty)
-        withFan.sortWithinPartitions(names.map(col) ++ sortCols: _*)
-      else withFan
-      d.write.partitionBy(names: _*).parquet(s"$root/$dataDir")
-    }
-    describeDataDir(spark, root, dataDir, df.schema, bloomSpec,
-      derivedStats)
+    val rollCols = fanout.map(f => partExpr(f, df.schema(f.column).dataType).asc)
+    val d =
+      if (rollCols.nonEmpty) df.sortWithinPartitions(rollCols ++ sortCols: _*)
+      else if (sortCols.nonEmpty && !preSorted) df.sortWithinPartitions(sortCols: _*)
+      else df
+    val dataDir = SnapshotFileWriter.freshDir(idHint)
+    describeFiles(spark, root,
+      SnapshotFileWriter.write(spark, root, dataDir, d, fanout),
+      df.schema, bloomSpec, derivedStats)
   }
 
-  /** The stats read-back: list `root/dataDir`'s parquet files and fold
-    * each one's manifest facts (row count, min/max bands, blooms,
-    * column meta, histogram boundaries) in ONE aggregation pass over
-    * the written bytes. Factored out of [[writeDataFiles]] so the DSv2
-    * batch write (whose EXECUTORS wrote the files) describes its
-    * commit-message files through the identical path. `only` restricts
-    * to those committed task files — a crashed speculative attempt's
-    * orphan must not enter the manifest (vacuum reclaims it).
+  /** The stats read-back: read exactly `files` (relative path, bytes) —
+    * what one write returned — with the `schema` they were written
+    * with, and fold each one's manifest facts (row count, min/max bands,
+    * blooms, column meta, histogram boundaries) in ONE aggregation over
+    * the written bytes: two jobs, the shuffle's map stage and the fold.
+    * Both write paths describe through here: [[writeDataFiles]] and the
+    * SQL door's DSv2 batch write, whose committed task messages name
+    * the files (an aborted attempt's orphan is named by none, so it
+    * never enters the manifest).
     */
-  private[graft] def describeDataDir(spark: SparkSession, root: String,
-      dataDir: String, schema: StructType,
+  private[graft] def describeFiles(spark: SparkSession, root: String,
+      files: Seq[(String, Long)], schema: StructType,
       bloomSpec: Option[BloomSpec],
-      derivedStats: Seq[(String, Column)],
-      only: Option[Set[String]] = None): Seq[FileEntry] = {
-    val fs = fsOf(spark, root)
-    val df = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    // recursive listing FIRST: a fanout write of an EMPTY frame emits
-    // no parquet at all (dynamic partitioning has no rows to name a
-    // directory with, unlike the flat path's schema-bearing empty
-    // file) — an empty listing short-circuits the stats read-back,
-    // which would otherwise fail schema inference on a fileless dir
-    def listParquet(dir: Path): Iterator[org.apache.hadoop.fs.FileStatus] =
-      fs.listStatus(dir).iterator.flatMap { st =>
-        if (st.isDirectory) listParquet(st.getPath)
-        else if (st.getPath.getName.endsWith(".parquet")) Iterator(st)
-        else Iterator.empty
-      }
-    val listed = listParquet(new Path(s"$root/$dataDir"))
-      .map(st => relativize(st.getPath.toString) -> st.getLen)
-      .filter(pl => only.forall(_.contains(pl._1)))
-      .toSeq.sortBy(_._1)
-    if (listed.isEmpty) return Seq.empty
+      derivedStats: Seq[(String, Column)]): Seq[FileEntry] = {
+    if (files.isEmpty) return Seq.empty
     // timestamp stats record as epoch MICROS (unix_micros), not
     // cast-to-string: the datetime rendering depends on the writer
     // session's zone, which the manifest never records — a reader in
     // any other zone could only invert it shifted. Micros are the
     // Catalyst-internal value itself: zone-proof to compare, exact to
     // invert, and LONG-ordered exactly as the timestamps order.
-    val sc = statCols(df.schema).map { c =>
+    val sc = statCols(schema).map { c =>
       val e =
-        if (df.schema(c).dataType == org.apache.spark.sql.types.TimestampType)
+        if (schema(c).dataType == org.apache.spark.sql.types.TimestampType)
           unix_micros(col(c))
         else col(c)
       c -> e
@@ -5188,9 +5140,9 @@ object SnapshotLog {
     // min/max — one pass over the written bytes per commit, never a
     // second scan. Histogram SERVING weights each file's boundaries by
     // its non-null count, which lives in meta.
-    val metaCols = statCols(df.schema)
+    val metaCols = statCols(schema)
     val histCols: Seq[(String, Column)] =
-      df.schema.fields.toSeq.flatMap(f => histExprOf(f).map(f.name -> _))
+      schema.fields.toSeq.flatMap(f => histExprOf(f).map(f.name -> _))
     if (bloomCols.nonEmpty || metaCols.nonEmpty)
       graft.functions.GraftFunctions.register(spark)
     val histPcts = array((0 to HistBins).map(j =>
@@ -5213,12 +5165,12 @@ object SnapshotLog {
         percentile_approx(e, histPcts, lit(1000)).as(s"hq_$i") }
     val metaBase = 2 + 2 * sc.size + bloomCols.size
     val histBase = metaBase + 2 * metaCols.size
-    // read exactly the listed files (under `only`, a crashed attempt's
-    // orphan in the same directory must not pollute the fold)
-    val counted = spark.read
-      .parquet(listed.map(pl => s"$root/${pl._1}"): _*)
+    val counted = spark.read.schema(schema)
+      .parquet(files.map(f => s"$root/${f._1}"): _*)
       .groupBy(input_file_name().as("f"))
       .agg(count(lit(1)).as("n"), statAggs: _*)
+      // one task folds the O(#files) rows: no second shuffle
+      .coalesce(1)
       .agg(collect_list(struct(col("*")))).head().getSeq[Row](0)
       .map { r =>
         val stats = sc.zipWithIndex.flatMap { case ((c, _), i) =>
@@ -5240,16 +5192,25 @@ object SnapshotLog {
         relativize(r.getString(0)) ->
           ((r.getLong(1), stats, blooms, meta, hist))
       }.toMap
-    listed.map { case (p, len) =>
+    // the writer opens no file for an empty task: every file has rows
+    files.map { case (p, len) =>
       val (n, stats, blooms, meta, hist) = counted.getOrElse(p,
-        (0L, Map.empty[String, (String, String)],
-          Map.empty[String, String], Map.empty[String, (Long, Vector[Long])],
-          Map.empty[String, Vector[Double]]))
+        throw new IllegalStateException(s"written file $p was not read back"))
       FileEntry(p, n, stats, blooms, bytes = len, meta = meta, hist = hist)
     }
   }
 
-  /** `head` is the snapshot the CALLER planned its carried
+  /** Write `df`'s files ([[writeDataFiles]], unless a DSv2 batch write
+    * already wrote them) and publish the next snapshot via tmp-write +
+    * rename: ONE new file list holding the commit's own files plus any
+    * inline carries (legacy-manifest migration, CoW rewrite survivors),
+    * and a manifest referencing the carried lists by name. Retries the
+    * rename against a fresh current id if a concurrent committer wins
+    * the race — for `append` the carried refs are recomputed, so both
+    * writers' rows survive (Iceberg's optimistic append); a lost
+    * attempt's freshly written file list is stranded for [[vacuumOrphans]].
+    *
+    * `head` is the snapshot the CALLER planned its carried
     * refs/content against (None: an empty log) — the publish CAS fires
     * at head.id + 1, so a commit that landed anywhere after the
     * caller's read (including during its discovery scan) surfaces as a
@@ -5264,7 +5225,7 @@ object SnapshotLog {
       carriedRefs0: Seq[ListRef], carriedInline0: Seq[FileEntry],
       bloomSpec: Option[BloomSpec] = None,
       derivedStats: Seq[(String, Column)] = Nil,
-      fanoutExprs: Seq[Column] = Nil,
+      fanout: Seq[PartField] = Nil,
       evolved: Option[(StructType, Map[String, Int], Int)] = None,
       carriedDRefs: Seq[DeleteRef] = Seq.empty,
       carriedEqRefs: Seq[EqRef] = Seq.empty,
@@ -5300,7 +5261,7 @@ object SnapshotLog {
     val origIds = tableIds
     val written = preWritten.getOrElse(
       writeDataFiles(spark, root, df, base + 1, bloomSpec, derivedStats,
-        fanoutExprs, sortApply = sortApplied, preSorted = preSorted))
+        fanout, sortApply = sortApplied, preSorted = preSorted))
     val dfCols = df.columns.toSet
     val sortStamp =
       if (sortApplied.isEmpty) "" else renderSortOrder(sortApplied)
@@ -5748,7 +5709,7 @@ object SnapshotLog {
       "optimize-partitioned", Seq.empty, Seq.empty,
       derivedStats = routed.map(f =>
         partStatName(f) -> partExpr(f, schema(f.column).dataType)),
-      fanoutExprs = exprs)
+      fanout = routed)
   }
 
   /** OPTIMIZE into a Z-ORDER (Morton) layout over two columns: rewrite
@@ -5832,7 +5793,7 @@ object SnapshotLog {
         "optimize-sorted", Seq.empty, Seq.empty,
         derivedStats = routed.map(f =>
           partStatName(f) -> partExpr(f, schema(f.column).dataType)),
-        fanoutExprs = exprs, sortApplied = so)
+        fanout = routed, sortApplied = so)
     } else {
       val sortCols = so.map(f =>
         if (f.asc) col(f.column).asc else col(f.column).desc)

@@ -17,7 +17,7 @@ import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.operators.SnapshotLog
+import graft.operators.{SnapshotFileWriter, SnapshotLog, SnapshotWriteMessage}
 
 /** DSv2 catalog over [[graft.operators.SnapshotLog]] tables — the SQL
   * front door the table format was missing: register once per session
@@ -442,8 +442,8 @@ object SnapshotCatalog {
     * (executor-written files under Spark's prepared distribution +
     * ordering) — exactly when the table declares a layout worth
     * distributing for, and no frame-level machinery (WAP branch
-    * routing, SQL transaction staging, fanout file splitting) needs
-    * the whole DataFrame driver-side. Must agree between
+    * routing, SQL transaction staging, fanout's range-clustered
+    * routing) needs the whole DataFrame driver-side. Must agree between
     * [[SnapshotTableV2.capabilities]] and the write builder: the
     * planner errors on a V1_BATCH_WRITE table whose Write isn't V1.
     * Both pass the same resolved `head` (None: an empty log); the
@@ -948,14 +948,16 @@ private[graft] class SnapshotTableV2(val root: String, val asOf: Long,
   // The WRITE capability is the V1/V2 fork, and Spark's planner forces
   // it to be exclusive (a V1_BATCH_WRITE table whose Write is not a
   // V1Write is a planner error): a table with a DECLARED layout (spec
-  // or sort order) advertises the true V2 BATCH_WRITE — executors
-  // write the parquet files themselves under Spark's
+  // or sort order) advertises the true V2 BATCH_WRITE — executors run
+  // the snapshot-log file writer over Spark's
   // RequiresDistributionAndOrdering-prepared query (AQE-rebalanced
   // clustering + in-task sort; the V1 fallback hands InsertableRelation
   // the UNPREPARED analyzed query, so distribution can never reach it)
   // — while plain tables, WAP sessions, active SQL transactions, and
-  // fanout writes keep the library's V1 path (frame-level staging /
-  // point-banded file splitting need the whole DataFrame).
+  // fanout writes keep the library's V1 path (branch routing and
+  // transaction staging need the whole DataFrame; fanout routes by the
+  // library's range clustering). Both paths write through the same
+  // per-task writer.
   override def capabilities(): util.Set[TableCapability] =
     if (SnapshotCatalog.v2WritePath(SparkSession.active, writeHead))
       util.EnumSet.of(TableCapability.BATCH_READ,
@@ -1095,13 +1097,15 @@ private[sources] class SnapshotBranchWriteBuilder(root: String, name: String)
   *    [[SnapshotV2Write]] — Spark's true DSv2 batch write, where
   *    `RequiresDistributionAndOrdering` plans the AQE
   *    `RebalancePartitions` clustering + the declared sort ONCE and
-  *    executors stream rows straight into final parquet files;
-  *  - otherwise (or when WAP routing / SQL transaction staging /
-  *    forced fanout needs the whole DataFrame driver-side) the
-  *    `V1_BATCH_WRITE` fallback hands `InsertableRelation` the query
-  *    and the body is just the library call — SQL writes and API
-  *    writes share one commit protocol (CAS manifest rename, race
-  *    retry, spec routing) either way.
+  *    executors run the snapshot-log file writer
+  *    ([[graft.operators.SnapshotFileWriter]]) into final parquet files;
+  *  - otherwise (or when WAP routing / SQL transaction staging needs
+  *    the whole DataFrame driver-side, or fanout asks for the library's
+  *    range-clustered routing) the `V1_BATCH_WRITE` fallback hands
+  *    `InsertableRelation` the query and the body is just the library
+  *    call — SQL writes and API writes share one file writer and one
+  *    commit protocol (CAS manifest rename, race retry, spec routing)
+  *    either way.
   */
 private[sources] class SnapshotWriteBuilder(root: String,
     schema: StructType, head: SnapshotLog.Resolved)
@@ -1139,24 +1143,18 @@ private[sources] class SnapshotWriteBuilder(root: String,
   }
 }
 
-/** The executor-written data files of one task (relative paths, in
-  * the order they were rolled) — empty for a task that never opened a
-  * writer.
-  */
-private[sources] case class SnapshotWriteMessage(relPaths: Seq[String])
-  extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
 /** The true DSv2 batch write for layout-declared tables: asks Spark
   * for the table's clustering (non-strict → AQE RebalancePartitions:
   * small shuffle partitions coalesce toward the advisory size, a
   * skewed partition value SPLITS across tasks — neither of which the
   * library's own repartitionByRange can do) and its declared sort;
-  * executors then write their task's rows straight to final parquet
-  * paths ([[org.apache.spark.sql.graft.ParquetWriteBridge]]), and the
-  * driver folds the commit-message files through the SAME describe +
-  * manifest-CAS protocol a library append uses. Visibility is by
-  * manifest, so aborted/speculative attempts leak at worst an orphan
-  * file for vacuum — never a torn table.
+  * executors then run the one snapshot-log file writer
+  * ([[graft.operators.SnapshotWriterFactory]]) over their task's rows,
+  * and the driver describes exactly the files the committed tasks'
+  * messages name ([[SnapshotLog.describeFiles]]) and publishes them
+  * through the manifest-CAS protocol a library append uses. Visibility
+  * is by manifest, so aborted/speculative attempts leak at worst an
+  * orphan file for vacuum — never a torn table.
   */
 private[sources] class SnapshotV2Write(root: String, schema: StructType,
     doOverwrite: Boolean)
@@ -1210,28 +1208,21 @@ private[sources] class SnapshotV2Write(root: String, schema: StructType,
 
   override def toBatch: org.apache.spark.sql.connector.write.BatchWrite =
     new org.apache.spark.sql.connector.write.BatchWrite {
-      private val dataDir =
-        s"data/c${SnapshotLog.currentId(spark, root) + 1}_" +
-          java.util.UUID.randomUUID().toString.take(8)
+      private val dataDir = SnapshotFileWriter.freshDir(
+        SnapshotLog.currentId(spark, root) + 1)
 
       override def createBatchWriterFactory(
           info: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
-          : org.apache.spark.sql.connector.write.DataWriterFactory = {
-        val (factory, conf) = org.apache.spark.sql.graft
-          .ParquetWriteBridge.writerFactory(spark, schema)
-        new SnapshotWriterFactory(root, dataDir, schema, spec, factory,
-          conf)
-      }
+          : org.apache.spark.sql.connector.write.DataWriterFactory =
+        SnapshotFileWriter.factory(spark, root, dataDir, schema, spec)
 
       override def commit(messages: Array[
           org.apache.spark.sql.connector.write.WriterCommitMessage]): Unit = {
-        val paths = messages.iterator
-          .collect { case m: SnapshotWriteMessage => m.relPaths }
-          .flatten.toSet
-        val described =
-          if (paths.isEmpty) Seq.empty[SnapshotLog.FileEntry]
-          else SnapshotLog.describeDataDir(spark, root, dataDir, schema,
-            bloomSpec = None, derivedStats = derived, only = Some(paths))
+        val described = SnapshotLog.describeFiles(spark, root,
+          messages.toSeq.flatMap {
+            case m: SnapshotWriteMessage => m.files
+            case _ => Nil
+          }, schema, bloomSpec = None, derivedStats = derived)
         SnapshotLog.commitDescribed(spark, root, schema, described,
           overwrite = doOverwrite, sortApplied = sortApply)
       }
@@ -1241,150 +1232,13 @@ private[sources] class SnapshotV2Write(root: String, schema: StructType,
         val fs = new Path(root).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
         messages.foreach {
-          case m: SnapshotWriteMessage => m.relPaths.foreach { rel =>
+          case m: SnapshotWriteMessage => m.files.foreach { case (rel, _) =>
             try fs.delete(new Path(s"$root/$rel"), false)
             catch { case scala.util.control.NonFatal(_) => () }
           }
           case _ => ()
         }
       }
-    }
-}
-
-/** Ships the parquet writer factory + its bound conf; each task rolls
-  * ONE FILE PER PARTITION VALUE (rows arrive grouped — the write's
-  * required ordering leads with the partition transforms), so every
-  * written file carries a point band on each spec field: exactly the
-  * layout SPJ, bucket pruning, and time-band pruning read. File names
-  * embed (partition, task, roll-seq) plus a uuid — attempt-unique, so
-  * speculation and retries can never collide, and only the committed
-  * attempt's message reaches the manifest.
-  */
-private[sources] class SnapshotWriterFactory(root: String, dataDir: String,
-    schema: StructType, spec: Seq[SnapshotLog.PartField],
-    factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-    conf: org.apache.spark.sql.graft.SerializableHadoopConf)
-  extends org.apache.spark.sql.connector.write.DataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] =
-    new org.apache.spark.sql.connector.write.DataWriter[
-        org.apache.spark.sql.catalyst.InternalRow] {
-      import org.apache.spark.sql.catalyst.InternalRow
-
-      // Per-row partition-value evaluators, mirroring the routing
-      // expressions ([[SnapshotLog]] partExpr / the catalog's V2
-      // functions) EXACTLY: bucket = pmod(murmur3(col), n) with null
-      // hashing to the seed, days/hours/months via epoch-micros
-      // floorDiv (zone-proof), trunc = v - floorMod(v, w) / string
-      // prefix. A drifted evaluator would not corrupt data (bands are
-      // described from the written files), it would only widen bands —
-      // but these stay exact so they never do.
-      private val extractors: Array[InternalRow => AnyRef] = {
-        import org.apache.spark.sql.types._
-        spec.filter(f => schema.fieldNames.contains(f.column)).map { f =>
-          val i = schema.fieldIndex(f.column)
-          val dt = schema(i).dataType
-          def nullable(g: InternalRow => AnyRef): InternalRow => AnyRef =
-            r => if (r.isNullAt(i)) null else g(r)
-          def days(r: InternalRow): Long = dt match {
-            case DateType => r.getInt(i).toLong
-            case _ => Math.floorDiv(r.getLong(i), 86400000000L)
-          }
-          f.transform match {
-            case "bucket" =>
-              val h = new org.apache.spark.sql.catalyst.expressions
-                .Murmur3Hash(Seq(org.apache.spark.sql.catalyst.expressions
-                  .BoundReference(i, dt, nullable = true)))
-              (r: InternalRow) => {
-                val v = h.eval(r).asInstanceOf[Int]
-                java.lang.Long.valueOf((((v % f.n) + f.n) % f.n).toLong)
-              }
-            case "days" => nullable(r => java.lang.Long.valueOf(days(r)))
-            case "hours" => nullable(r => java.lang.Long.valueOf(dt match {
-              case DateType => days(r) * 24L
-              case _ => Math.floorDiv(r.getLong(i), 3600000000L)
-            }))
-            case "months" => nullable { r =>
-              val d = java.time.LocalDate.ofEpochDay(days(r))
-              java.lang.Long.valueOf(
-                (d.getYear - 1970).toLong * 12L + d.getMonthValue - 1L)
-            }
-            case "trunc" => dt match {
-              // clone(): the prefix may share the (task-reused) row
-              // buffer — a stored key must own its bytes
-              case StringType => nullable(r =>
-                r.getUTF8String(i).substringSQL(1, f.n).clone())
-              case IntegerType => nullable(r => java.lang.Long.valueOf(
-                (r.getInt(i) - Math.floorMod(r.getInt(i), f.n)).toLong))
-              case _ => nullable(r => java.lang.Long.valueOf(
-                r.getLong(i) - Math.floorMod(r.getLong(i), f.n.toLong)))
-            }
-            case other => throw new IllegalStateException(
-              s"unknown partition transform $other")
-          }
-        }.toArray
-      }
-
-      private var writer
-          : org.apache.spark.sql.execution.datasources.OutputWriter = null
-      private val rels = Seq.newBuilder[String]
-      private var seq = 0
-      private var cur: Array[AnyRef] = null
-
-      /** Updates `cur` to the row's partition key either way; true iff
-        * the key changed against the previous row's.
-        */
-      private def boundary(r: InternalRow): Boolean = {
-        if (cur == null) { cur = extractors.map(_(r)); return false }
-        var j = 0
-        var changed = false
-        while (j < extractors.length) {
-          val v = extractors(j)(r)
-          if (if (v == null) cur(j) != null else v != cur(j)) {
-            changed = true; cur(j) = v
-          }
-          j += 1
-        }
-        changed
-      }
-
-      override def write(r: InternalRow): Unit = {
-        val roll = extractors.nonEmpty && boundary(r)
-        if (writer == null || roll) {
-          if (writer != null) { writer.close(); writer = null }
-          // lazily opened: an empty task commits no file at all
-          val rel = f"$dataDir/part-$partitionId%05d-$taskId-$seq%04d-" +
-            s"${java.util.UUID.randomUUID().toString.take(8)}.snappy.parquet"
-          seq += 1
-          writer = org.apache.spark.sql.graft.ParquetWriteBridge
-            .open(factory, conf.value, s"$root/$rel", schema)
-          rels += rel
-        }
-        writer.write(r)
-      }
-
-      override def commit()
-          : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-        if (writer != null) { writer.close(); writer = null }
-        SnapshotWriteMessage(rels.result())
-      }
-
-      override def abort(): Unit = {
-        if (writer != null) { writer.close(); writer = null }
-        val done = rels.result()
-        if (done.nonEmpty) {
-          val fs = new Path(s"$root/${done.head}").getFileSystem(conf.value)
-          done.foreach { rel =>
-            try fs.delete(new Path(s"$root/$rel"), false)
-            catch { case scala.util.control.NonFatal(_) => () }
-          }
-        }
-      }
-
-      override def close(): Unit =
-        if (writer != null) { writer.close(); writer = null }
     }
 }
 
@@ -1930,9 +1784,10 @@ private[graft] class SnapshotMetaTable(val root: String, val kind: String)
         TableCapability.MICRO_BATCH_READ)
     else util.EnumSet.of(TableCapability.BATCH_READ)
 
-  /** The changes window: reader options (`spark.read.option`) first,
-    * then session confs (`SET spark.graft.changes.fromId/toId` — the
-    * pure-SQL route), defaulting to the LAST transition (parent of the
+  /** The changes window: reader options — `spark.read.option`, or in
+    * pure SQL the table options clause
+    * (`FROM snap.t.changes WITH ('fromId' = '3', 'toId' = '4')`) —
+    * defaulting to the LAST transition (parent of the
     * current snapshot -> current). Timestamp twins `fromTs`/`toTs`
     * (epoch millis, or an ISO instant / UTC datetime string) resolve
     * through the snapshot log's commit times — the same
@@ -1942,9 +1797,7 @@ private[graft] class SnapshotMetaTable(val root: String, val kind: String)
     */
   private def changesWindow(s: SparkSession,
       options: CaseInsensitiveStringMap): (Long, Long) = {
-    def opt(key: String): Option[String] =
-      Option(options.get(key))
-        .orElse(s.conf.getOption(s"spark.graft.changes.$key"))
+    def opt(key: String): Option[String] = Option(options.get(key))
     // bare digits auto-detect millis vs MICROS by magnitude: every
     // other timestamp surface in the format (stats, pushed bounds)
     // renders epoch micros, so a caller pasting one of those must not

@@ -5,6 +5,24 @@ import org.apache.spark.sql.catalyst.expressions.{BoundReference, Murmur3Hash}
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
 import org.apache.spark.sql.types.{DataType, DateType, IntegerType, LongType, StringType, StructType, TimestampType}
 
+/** The layout transform functions the catalog serves, bound. */
+object SnapshotFunctions {
+
+  /** `f`'s function over a `dt` column (bucket takes (n INT, col), the
+    * others (col)): what [[SnapshotCatalog.loadFunction]] binds for the
+    * name [[SnapshotCatalog.v2TransformOf]] gives `f`, and what the
+    * data-file writer ([[graft.operators.SnapshotWriterFactory]]) rolls
+    * its files on. The spec was validated against the schema when it
+    * was declared.
+    */
+  private[graft] def bound(f: graft.operators.SnapshotLog.PartField,
+      dt: DataType): ScalarFunction[_] = f.transform match {
+    case "bucket" => new SnapshotBucketBound(dt)
+    case "trunc" => new SnapshotTruncBound(f.n, dt)
+    case t => new SnapshotTimeBound(t, dt)
+  }
+}
+
 /** The snapshot catalog's V2 FUNCTION for its `bucket(n, col)` layout
   * transform — what Spark's storage-partitioned-join machinery loads
   * (via the catalog's FunctionCatalog door) to decide that two scans
@@ -104,8 +122,11 @@ private[sources] final class SnapshotTimeBound(transform: String,
     if (colType == DateType) input.getInt(0).toLong
     else Math.floorDiv(input.getLong(0), 86400000000L)
 
+  // a null column has no time value: null, as partExpr routes it (the
+  // write's clustering and the file writer both evaluate this on rows)
   override def produceResult(input: InternalRow): java.lang.Long =
-    java.lang.Long.valueOf(transform match {
+    if (input.isNullAt(0)) null
+    else java.lang.Long.valueOf(transform match {
       case "days" => daysOf(input)
       case "hours" =>
         if (colType == DateType) daysOf(input) * 24L
@@ -164,15 +185,18 @@ private[sources] final class SnapshotTruncBound(width: Int,
   override def canonicalName(): String =
     s"graft.snapshot.trunc[$width][${colType.catalogString}]"
 
-  override def produceResult(input: InternalRow): AnyRef = colType match {
-    case StringType => input.getUTF8String(0).substring(0, width)
-    case LongType =>
-      val v = input.getLong(0)
-      java.lang.Long.valueOf(v - Math.floorMod(v, width.toLong))
-    case IntegerType =>
-      val v = input.getInt(0).toLong
-      java.lang.Long.valueOf(v - Math.floorMod(v, width.toLong))
-    case other => throw new UnsupportedOperationException(
-      s"trunc over ${other.catalogString}")
-  }
+  // null in, null out, as for the time transforms
+  override def produceResult(input: InternalRow): AnyRef =
+    if (input.isNullAt(0)) null
+    else colType match {
+      case StringType => input.getUTF8String(0).substring(0, width)
+      case LongType =>
+        val v = input.getLong(0)
+        java.lang.Long.valueOf(v - Math.floorMod(v, width.toLong))
+      case IntegerType =>
+        val v = input.getInt(0).toLong
+        java.lang.Long.valueOf(v - Math.floorMod(v, width.toLong))
+      case other => throw new UnsupportedOperationException(
+        s"trunc over ${other.catalogString}")
+    }
 }

@@ -58,6 +58,17 @@ class CodeDisciplineSpec extends AnyFunSuite {
     assert(literal("""toDDL.replace("\t", " ")""") === 1)
   }
 
+  test("snapshot-log data files have one writer") {
+    val opens = mainSources.flatMap { case (path, src) =>
+      """ParquetWriteBridge\s*\.open\(""".r.findAllIn(src).map(_ => path) }
+    assert(opens.map(p => Paths.get(p).getFileName.toString) ===
+      Seq("SnapshotFileWriter.scala"), "a parquet writer opened outside the one writer")
+    val log = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))
+    assert(!log.contains("__fan"), "fanout helper columns are back")
+    assert(!log.contains(".partitionBy("), "a Spark-writer partitioned branch is back")
+  }
+
   test("snapshot-log commits plan from the read side's one resolved head") {
     val src = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))
@@ -78,7 +89,8 @@ class CodeDisciplineSpec extends AnyFunSuite {
   }
 
   test("the engine reads only the spark.graft confs a registry row sets") {
-    val key = """"spark\.graft\.([A-Za-z.]+)"""".r
+    // a literal key, or the literal head of an interpolated one
+    val key = """"spark\.graft\.([A-Za-z.]+)["$]""".r
     val keys = mainSources.flatMap { case (_, src) =>
       key.findAllMatchIn(src).map(_.group(1)) }.toSet
     assert(keys === Set("write.fanout", "catalog.preserveGrouping", "wap.branch"))

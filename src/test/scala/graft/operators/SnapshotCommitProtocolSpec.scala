@@ -11,22 +11,23 @@ import org.apache.spark.sql.functions._
 
 /** `crashfs:` — the local filesystem under its own scheme, so the
   * commit protocol takes the generic `!exists && rename` publish. Its
-  * switch fails the next manifest tmp create or file-list create (the
-  * file is left behind, as a crash leaves it) or the publish rename of
-  * a manifest tmp. Every open is counted by path.
+  * switch fails the next manifest tmp create, file-list create or
+  * data-file create (the file is left behind, as a crash leaves it) or
+  * the publish rename of a manifest tmp. Every open is counted by path.
   */
 class CrashFs extends FilterFileSystem(new CrashFs.Local) {
   override def getScheme: String = CrashFs.Scheme
 
   private def armed(mode: String, p: Path): Boolean =
-    CrashFs.failing == mode && CrashFs.crashes(mode, p.getName)
+    CrashFs.failing == mode && CrashFs.crashes(mode, p.getName) &&
+      (mode != "data" || p.toUri.getPath.contains("/data/"))
 
   override def create(f: Path, permission: FsPermission, overwrite: Boolean,
       bufferSize: Int, replication: Short, blockSize: Long,
       progress: Progressable): FSDataOutputStream = {
     val out = super.create(f, permission, overwrite, bufferSize, replication,
       blockSize, progress)
-    if (armed("create", f) || armed("list", f)) {
+    if (armed("create", f) || armed("list", f) || armed("data", f)) {
       out.close()
       throw new IOException(s"injected crash creating $f")
     }
@@ -45,12 +46,15 @@ class CrashFs extends FilterFileSystem(new CrashFs.Local) {
 
 object CrashFs {
   val Scheme = "crashfs"
-  /** "create", "rename", "list" (the file-list create) or "" (off). */
+  /** "create", "rename", "list" (the file-list create), "data" (the
+    * create of a `.parquet` file under `data/`) or "" (off).
+    */
   @volatile var failing: String = ""
 
   /** Whether crash mode `mode` fires on a file named `name`. */
   def crashes(mode: String, name: String): Boolean =
     if (mode == "list") name.startsWith("l_") && name.endsWith(".list")
+    else if (mode == "data") name.endsWith(".parquet")
     else name.contains(".manifest.tmp.")
 
   /** Opens per local path since the last clear. */
@@ -157,6 +161,84 @@ class SnapshotCommitProtocolSpec extends SparkSpec {
 
   test("a crash at the file-list write of an optimize leaves the previous snapshot") {
     survivesCrashes(base, Seq("list"))(r => SnapshotLog.optimize(spark, r, "k", 1))
+  }
+
+  /** A crash at the create of a data file: `verb` on a fresh log under
+    * `crashfs:` fails, the head and the rows stay as `setUp` left them,
+    * the same verb then commits, and [[SnapshotLog.vacuumOrphans]]
+    * reclaims the one data dir the crash stranded once it ages.
+    */
+  private def survivesDataCrash(setUp: String => Unit)(verb: String => Long): Unit = {
+    val root = newRoot()
+    setUp(root)
+    val head = SnapshotLog.currentId(spark, root)
+    val before = rowSet(SnapshotLog.read(spark, root))
+    val crashRoot = crashRootOf(root)
+    val f = fs(root)
+    def dataDirs() = f.listStatus(new Path(s"$root/data")).map(_.getPath).toSet
+    val existing = dataDirs()
+    CrashFs.failing = "data"
+    val e = try intercept[Exception](verb(crashRoot))
+      finally CrashFs.failing = ""
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("injected crash")), e)
+    assert(SnapshotLog.currentId(spark, root) === head, "data crash moved the head")
+    assert(rowSet(SnapshotLog.read(spark, root)) === before)
+    val stranded = (dataDirs() -- existing).toSeq
+    assert(stranded.length === 1, s"data crash should strand one dir: $stranded")
+    assert(verb(crashRoot) === head + 1, "commit after a data crash")
+    val after = rowSet(SnapshotLog.read(spark, root))
+    assert(after.size > before.size)
+    f.setTimes(stranded.head, System.currentTimeMillis() - 7200000L, -1)
+    SnapshotLog.vacuumOrphans(spark, root, graceMs = 3600000L)
+    assert(!f.exists(stranded.head), "data crash dir not reclaimed")
+    assert(rowSet(SnapshotLog.read(spark, root)) === after)
+  }
+
+  private def bucketed(root: String): Unit = {
+    SnapshotLog.createTable(spark, root,
+      org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING"),
+      Seq(SnapshotLog.PartField("bucket", "k", 4)))
+    SnapshotLog.append(spark, root, Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
+  }
+
+  test("a crash at the data write of an append leaves the previous snapshot") {
+    survivesDataCrash(base)(r =>
+      SnapshotLog.append(spark, r, Seq((3L, "c"), (4L, "d")).toDF("k", "v")))
+  }
+
+  test("a crash at the data write of a fanout append leaves the previous snapshot") {
+    withConfs("spark.graft.write.fanout" -> "true") {
+      survivesDataCrash(bucketed)(r => SnapshotLog.append(spark, r,
+        Seq((3L, "c"), (4L, "d"), (5L, "e")).toDF("k", "v")))
+    }
+  }
+
+  test("a crash at the data write of a SQL INSERT into a bucketed table leaves the previous snapshot") {
+    // a catalog keeps the root it was first loaded with: the crash and
+    // the clean retry both write the one log this test creates
+    var cat = ""
+    survivesDataCrash(bucketed) { r =>
+      if (cat.isEmpty) {
+        cat = "cprotoins"
+        spark.conf.set(s"spark.sql.catalog.$cat",
+          classOf[graft.sources.SnapshotCatalog].getName)
+        spark.conf.set(s"spark.sql.catalog.$cat.root", r.stripSuffix("/log"))
+      }
+      spark.sql(s"INSERT INTO $cat.log VALUES (3, 'c'), (4, 'd'), (5, 'e')")
+      SnapshotLog.currentId(spark, r)
+    }
+  }
+
+  test("vacuumOrphans keeps the aged data dir of a live fanout append") {
+    val root = newRoot()
+    withConfs("spark.graft.write.fanout" -> "true")(bucketed(root))
+    val before = rowSet(SnapshotLog.read(spark, root))
+    val f = fs(root)
+    f.listStatus(new Path(s"$root/data")).foreach(st =>
+      f.setTimes(st.getPath, System.currentTimeMillis() - 7200000L, -1))
+    assert(SnapshotLog.vacuumOrphans(spark, root, graceMs = 3600000L) === 0)
+    assert(rowSet(SnapshotLog.read(spark, root)) === before)
   }
 
   /** Opens of snapshot `id`'s manifest under `root` while `body` runs. */

@@ -271,16 +271,12 @@ class SnapshotCatalogSpec extends SparkSpec {
     assert(rowSet(spark.sql(
       s"SELECT k, v, change FROM $cat.`$root`.changes"))
       == Seq(Seq("30", "g", "insert")))
-    // conf-set window = the MoR delete transition
-    spark.conf.set("spark.graft.changes.fromId", "3")
-    spark.conf.set("spark.graft.changes.toId", "4")
-    try assert(rowSet(spark.sql(
-      s"SELECT k, v, change FROM $cat.`$root`.changes").limit(10))
+    // options-clause window = the MoR delete transition: the pure-SQL
+    // route reaches the meta table's scan options
+    assert(rowSet(spark.sql(
+      s"SELECT k, v, change FROM $cat.`$root`.changes " +
+        "WITH ('fromId' = '3', 'toId' = '4')").limit(10))
       == Seq(Seq("10", "c", "delete")))
-    finally {
-      spark.conf.unset("spark.graft.changes.fromId")
-      spark.conf.unset("spark.graft.changes.toId")
-    }
     // reader-option window = everything since empty: snapshot 5's live
     // content (k=10's delete applied) as inserts
     assert(spark.read.option("fromId", "0").option("toId", "5")
