@@ -40,11 +40,6 @@ object ScaleTechniques {
         aggs.tail.map(a => a._2(a._3).as(a._3)): _*)
   }
 
-  /** Convenience: salted count per key. */
-  def saltedCount(df: DataFrame, key: Column, saltBuckets: Int = 16): DataFrame =
-    saltedAgg(df, key, saltBuckets,
-      Seq((count(lit(1)), (c: String) => sum(col(c)), "n")))
-
   /** Salt-replicate shuffle join for a skewed fact key — the commoner
     * 100 TB killer than skewed aggregation: one hot key routes its whole
     * fact volume through a single reducer of the shuffle join. Fix: the

@@ -117,11 +117,12 @@ import org.apache.spark.sql.types.StructType
   *
   * 100 TB judgment: manifests are O(#files) text read on the DRIVER —
   * the same planning-scale metadata every table format (Iceberg, Delta)
-  * keeps; no data byte is ever read to plan. [[read]] hands the file
-  * list to the parquet source, so pushdown/pruning/codegen are exactly
-  * a plain scan's. [[deleteWhere]]'s candidate discovery is one
-  * predicate-pushed scan projecting only `input_file_name()` (row-group
-  * stats skip non-matching files' row groups); only files that actually
+  * keeps; no data byte is ever read to plan. [[read]] plans the
+  * catalog's batch scan over the manifest's file list ([[scanFiles]]),
+  * so pushdown, file pruning and codegen are a SQL read's.
+  * [[deleteWhere]]'s candidate discovery is one predicate-pushed scan
+  * projecting only `input_file_name()` (row-group stats skip
+  * non-matching files' row groups); only files that actually
   * contain matches are rewritten. At full scale the discovery scan
   * would consult manifest-level min/max stats instead — the header has
   * room, the scan path is the honest local[32] stand-in.
@@ -962,7 +963,19 @@ object SnapshotLog {
   /** One delete-list line: target data file, rows its DVs kill, and
     * the DV parquet dir holding those (t_path, t_pos) rows.
     */
-  private final case class DeleteEntry(target: String, delRows: Long, dvDir: String)
+  private[graft] final case class DeleteEntry(target: String, delRows: Long,
+      dvDir: String)
+
+  /** Per-target DV dirs of a delete map. */
+  private def dvDirsOf(dv: Map[String, Seq[DeleteEntry]]): Map[String, Seq[String]] =
+    dv.map { case (t, es) => t -> es.map(_.dvDir).distinct }
+
+  /** Per-target kill counts of a delete map (sum of each DV's recorded
+    * delRows — disjoint by construction: a MoR delete computes
+    * positions from a MoR read, so a dead row never re-kills).
+    */
+  private def dvKillsOf(dv: Map[String, Seq[DeleteEntry]]): Map[String, Long] =
+    dv.map { case (t, es) => t -> es.map(_.delRows).sum }
 
   /** One EQUALITY-DELETE reference inside a manifest (line
     * `E<TAB>keydir<TAB>nKeys<TAB>seq<TAB>keyIds`) — Iceberg v2's second
@@ -1503,10 +1516,10 @@ object SnapshotLog {
   // ---- merge-on-read delete vectors: a `deleteWhereMoR` writes NO
   // data file — it records the matched rows' (file, row_index) pairs
   // in a DV parquet dir and commits a DELETE LIST naming each target
-  // file, its dead-row count, and the DV dir. Readers anti-join only
-  // the DIRTY files against the DV rows; clean files scan exactly as
-  // before. At 100 TB this turns "delete 1 row from each of 10k hot
-  // files" from a 10k-file CoW rewrite into one churn-sized DV write
+  // file, its dead-row count, and the DV dir. Each DIRTY file's
+  // reader loads its own DV rows and skips those positions; clean
+  // files scan exactly as before. At 100 TB this turns "delete 1 row
+  // from each of 10k hot files" from a 10k-file CoW rewrite into one churn-sized DV write
   // (Iceberg v2 positional deletes / Delta deletion vectors);
   // [[rewriteDeletes]] is the compaction that folds DVs back into
   // data files when read amplification warrants it. ----
@@ -1554,15 +1567,15 @@ object SnapshotLog {
   private def dRefLines(dRefs: Seq[DeleteRef]): Seq[String] =
     dRefs.map(r => s"D\t${r.path}\t${r.nTargets}\t${r.delRows}")
 
-  /** DV rows below this count broadcast in the anti/semi joins that
-    * apply them — ONE metadata-driven plan rule shared by every DV
-    * consumer ([[dvApply]], [[livePosRead]], [[changes]]), chosen by
-    * the manifest's recorded delete counts, never a sampling job. A
-    * (path, pos) row costs ~100 B in the hash relation, so 500k rows
-    * ≈ 50 MB — deliberately conservative because a forced broadcast()
-    * hint BYPASSES autoBroadcastJoinThreshold's byte check; above it
-    * the join falls back to shuffle, whose cost is bounded by the
-    * dirty files, not the table.
+  /** Key and coordinate rows below this count broadcast in the joins
+    * that apply them — equality-delete key sets ([[eqJoin]], by their
+    * recorded `nKeys`) and [[changes]]' position deltas, chosen by the
+    * manifest's recorded counts, never a sampling job. A (path, pos)
+    * row costs ~100 B in the hash relation, so 500k rows ≈ 50 MB —
+    * deliberately conservative because a forced broadcast() hint
+    * BYPASSES autoBroadcastJoinThreshold's byte check; above it the
+    * join falls back to shuffle, whose cost is bounded by the dirty
+    * files, not the table.
     */
   private val DvBroadcastRows = 500000L
 
@@ -1795,16 +1808,12 @@ object SnapshotLog {
     /** Per-target-file delete-vector dirs (each dirty file's reader
       * loads ONLY its own DV rows, executor-side).
       */
-    lazy val dvByTarget: Map[String, Seq[String]] =
-      deletes.map { case (t, es) => t -> es.map(_.dvDir).distinct }
-    /** Per-target-file DV kill counts (sum of each DV's recorded
-      * delRows — disjoint by construction: a MoR delete computes
-      * positions from a MoR read, so a dead row never re-kills). What
-      * keeps row counts, COUNT(col) pushdown and CBO stats truthful
-      * while DVs are outstanding.
+    lazy val dvByTarget: Map[String, Seq[String]] = dvDirsOf(deletes)
+    /** Per-target-file DV kill counts ([[dvKillsOf]]). What keeps row
+      * counts, COUNT(col) pushdown and CBO stats truthful while DVs are
+      * outstanding.
       */
-    lazy val dvKills: Map[String, Long] =
-      deletes.map { case (t, es) => t -> es.map(_.delRows).sum }
+    lazy val dvKills: Map[String, Long] = dvKillsOf(deletes)
     /** Table-level (nullCount, ndvEstimate) per column ([[tableColMeta]]). */
     lazy val colMeta: Map[String, (Long, Long)] = tableColMeta(raw, schema)
     /** Table-level typed (min, max) per column ([[tableBandBounds]]). */
@@ -1821,13 +1830,19 @@ object SnapshotLog {
     * the current head), or — when `branch` is set — that branch's head
     * at commit count k (k = 0: the fork snapshot). Branch manifests are
     * write-once like main ones, so a pin reads a consistent snapshot
-    * however many commits land after it. The read side's one manifest
-    * parse.
+    * however many commits land after it. `staged` instead pins the
+    * descriptor of a write-audit-publish staging key: its schema and
+    * its staged file lists only. The read side's one manifest parse.
     */
   private[graft] def resolve(spark: SparkSession, root: String,
-      asOf: Long = 0L, branch: Option[(String, Long)] = None): Resolved = {
+      asOf: Long = 0L, branch: Option[(String, Long)] = None,
+      staged: Option[String] = None): Resolved = {
     val fs = fsOf(spark, root)
     val raw = branch match {
+      case _ if staged.isDefined =>
+        val p = stagedPath(root, staged.get)
+        require(fs.exists(p), s"unknown staged key ${staged.get}")
+        parseManifest(readTextFile(fs, p))
       case Some((name, k)) =>
         if (k == 0)
           rawManifest(spark, root, tagId(spark, root, branchRefName(name)))
@@ -1867,10 +1882,11 @@ object SnapshotLog {
         .toSeq.sorted.map(snapshot(spark, root, _))
   }
 
-  /** Read the table at snapshot `asOf` (default: current). The file
-    * list goes straight to the parquet source — the scan keeps full
-    * pushdown/pruning. An empty snapshot reads as 0 rows with the
-    * schema recorded at commit time.
+  /** Read the table at snapshot `asOf` (default: current): the
+    * [[scanFiles]] batch scan over the manifest's file list, planned
+    * from the manifest alone (no listing, no per-file stat), with the
+    * snapshot's delete vectors and equality deletes applied. An empty
+    * snapshot reads as 0 rows with the schema recorded at commit time.
     *
     * The scan is pinned to the MANIFEST's schema, not the files'
     * footers: each snapshot reads with exactly the schema it committed
@@ -1885,100 +1901,45 @@ object SnapshotLog {
     dvRead(spark, snap, snap.files)
   }
 
-  /** Read `files` under `schema`, resolving columns by FIELD ID: each
-    * file's recorded name→id map projects its physical columns onto
-    * the current names, so files written before a [[renameColumn]]
+  /** The one read of snapshot data files: `files` under `snap`'s
+    * schema, minus the rows the positional delete vectors `dv` mark
+    * dead (None = the snapshot's own). Columns resolve by FIELD ID:
+    * each file's recorded name→id map projects its physical columns
+    * onto the current names, so files written before a [[renameColumn]]
     * keep reading correctly and a dropped-then-readded name never
-    * resurrects old data (the new column has a new id). Id-less legacy
-    * files resolve by name. Files group by the projection they induce
-    * — on a table that never renamed that is ONE group with an
-    * identity projection, i.e. exactly the single pinned-schema scan
-    * this generalizes; after a rename it is one extra scan branch per
-    * distinct historical mapping, unioned by name.
+    * resurrects old data; id-less legacy files resolve by name.
+    *
+    * The frame is a `DataSourceV2Relation` over the catalog's
+    * [[graft.sources.SnapshotBatchScan]], the scan SQL reads plan: no
+    * filesystem call per file on the driver, pushed conjuncts prune
+    * files by their manifest bands, and each file's reader drops its
+    * dead positions executor-side. With `withPos` the frame adds
+    * `__path` (the file's manifest-relative path) and `__pos` (the
+    * row's position in it) — the coordinates delete vectors address.
+    * Equality deletes are joins above it ([[morApply]]).
     */
-  private def resolvedRead(spark: SparkSession, root: String,
-      files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int]): DataFrame =
-    resolvedReadCore(spark, root, files, schema, curIds, withPos = false)
-
-  /** [[resolvedRead]] plus two virtual columns: `__path` (the file's
-    * manifest-relative path — the greedy regexp keeps everything from
-    * the LAST `/data/` component, matching [[relativize]]) and `__pos`
-    * (the row's position within its file, parquet's `_metadata
-    * .row_index`). The coordinate system positional delete vectors
-    * address rows in; stable because data files are immutable.
-    */
-  private def resolvedReadWithPos(spark: SparkSession, root: String,
-      files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int]): DataFrame = {
-    // the virtual names are reserved by merge-on-read — fail with the
-    // real constraint, not an AMBIGUOUS_REFERENCE deep in the scan
-    Seq("__path", "__pos").foreach(n => require(
-      !schema.fieldNames.contains(n),
+  private[graft] def scanFiles(spark: SparkSession, snap: Resolved,
+      files: Seq[FileEntry], dv: Option[Map[String, Seq[DeleteEntry]]] = None,
+      withPos: Boolean = false): DataFrame = {
+    // the coordinate names are reserved — fail with the real
+    // constraint, not an AMBIGUOUS_REFERENCE deep in the scan
+    if (withPos) Seq("__path", "__pos").foreach(n => require(
+      !snap.schema.fieldNames.contains(n),
       s"column name $n is reserved by merge-on-read reads"))
-    resolvedReadCore(spark, root, files, schema, curIds, withPos = true)
+    val plan = CatalogBatchPlan(snap, files,
+      dv.fold(snap.dvByTarget)(dvDirsOf), dv.fold(snap.dvKills)(dvKillsOf),
+      files.size, whole = false)
+    org.apache.spark.sql.graft.DmlBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.sources.SnapshotFilesTable(plan, withPos), None, None))
   }
 
-  /** The one field-id-resolving scan both readers share — a plain
-    * pinned-schema read, optionally widened by the MoR coordinate
-    * columns. Kept single so the projection/rename resolution can
-    * never diverge between the DV-aware and plain paths.
-    */
-  private def resolvedReadCore(spark: SparkSession, root: String,
-      files: Seq[FileEntry], schema: StructType,
-      curIds: Map[String, Int], withPos: Boolean): DataFrame = {
-    if (files.isEmpty) {
-      val out =
-        if (!withPos) schema
-        else StructType(schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("__path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("__pos",
-            org.apache.spark.sql.types.LongType)))
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], out)
-    }
-    def projectionOf(f: FileEntry)
-        : Seq[Option[org.apache.spark.sql.types.StructField]] =
-      schema.fields.toSeq.map(c => physFieldIn(f, c, curIds))
-    val posCols =
-      if (!withPos) Seq.empty
-      else Seq(
-        regexp_extract(col("_metadata.file_path"), ".*/(data/.*)$", 1)
-          .as("__path"),
-        col("_metadata.row_index").as("__pos"))
-    files.groupBy(projectionOf).toSeq.sortBy(_._2.head.path)
-      .map { case (proj, group) =>
-        val physFields = proj.collect {
-          case Some(pf) => pf.copy(nullable = true)
-        }
-        spark.read.schema(StructType(physFields))
-          .parquet(group.map(f => s"$root/${f.path}"): _*)
-          .select(schema.fields.toSeq.zip(proj).map {
-            // a struct whose NESTED names were resolved to an older
-            // era casts to the current type — positional (struct
-            // layout is ordinal), so the cast is a pure rename
-            case (c, Some(pf)) if pf.dataType != c.dataType =>
-              col(pf.name).cast(c.dataType).as(c.name)
-            case (c, Some(pf)) => col(pf.name).as(c.name)
-            case (c, None) => lit(null).cast(c.dataType).as(c.name)
-          } ++ posCols: _*)
-      }.reduce(_ unionByName _)
-  }
-
-  /** DV-aware read: `files` under `schema`, minus any rows the
-    * snapshot's outstanding delete vectors mark dead. Clean files take
-    * exactly the [[resolvedRead]] scan (zero overhead — a table with
-    * no MoR deletes never touches this path's join); dirty files
-    * anti-join their (path, pos) coordinates against the DV rows,
-    * which are broadcast when the manifest's recorded delete counts
-    * say they fit (metadata-driven plan choice — no sampling job). The
-    * scan cost a DV adds is bounded by the DIRTY files plus the DV
-    * rows, never the table.
+  /** Read `files` of `snap` with its delete vectors and equality
+    * deletes applied ([[morApply]]); the V1 SQL fallback's reader too.
     */
   private[graft] def dvRead(spark: SparkSession, snap: Resolved,
       files: Seq[FileEntry]): DataFrame =
-    morApply(spark, snap.root, files, snap.schema, snap.curIds,
-      snap.deletes, snap.raw.eqRefs)
+    morApply(spark, snap, files, None, snap.raw.eqRefs)
 
   /** Join `df` (table rows under the current schema) against ONE
     * equality delete's key set: anti = survivors, semi = the rows it
@@ -2034,50 +1995,22 @@ object SnapshotLog {
           "left_semi")))
     }._2
 
-  /** The full merge-on-read row-level view: positional vectors
-    * ([[dvApply]]) plus equality deletes, the latter grouped by each
-    * file's APPLICABLE delete set (the sequence rule) so a file
-    * appended after a delete never pays its anti-join — and a table
-    * with no equality deletes takes the plain DV path untouched.
+  /** The full merge-on-read row-level view: [[scanFiles]] (positional
+    * vectors `dv`, None = the snapshot's own) plus the equality deletes
+    * `eqs`, grouped by each file's APPLICABLE delete set (the sequence
+    * rule) so a file appended after a delete never pays its anti-join
+    * — and a table with no equality deletes is the bare scan.
     */
-  private def morApply(spark: SparkSession, root: String,
-      files: Seq[FileEntry], schema: StructType, curIds: Map[String, Int],
-      dv: Map[String, Seq[DeleteEntry]], eqs: Seq[EqRef]): DataFrame =
-    if (eqs.isEmpty || files.isEmpty)
-      dvApply(spark, root, files, schema, curIds, dv)
+  private def morApply(spark: SparkSession, snap: Resolved,
+      files: Seq[FileEntry], dv: Option[Map[String, Seq[DeleteEntry]]],
+      eqs: Seq[EqRef], withPos: Boolean = false): DataFrame =
+    if (eqs.isEmpty || files.isEmpty) scanFiles(spark, snap, files, dv, withPos)
     else files.groupBy(f => applicableEqs(eqs, f).map(_.dir))
       .toSeq.sortBy(_._2.head.path)
       .map { case (dirs, group) =>
-        applyEqs(spark, root,
-          dvApply(spark, root, group, schema, curIds, dv),
-          eqs.filter(e => dirs.contains(e.dir)), schema, curIds)
+        applyEqs(spark, snap.root, scanFiles(spark, snap, group, dv, withPos),
+          eqs.filter(e => dirs.contains(e.dir)), snap.schema, snap.curIds)
       }.reduce(_ unionByName _)
-
-  /** [[dvRead]]'s core with an explicit delete map — [[changes]] needs
-    * to apply EACH SIDE's own vectors to that side's file diff.
-    */
-  private def dvApply(spark: SparkSession, root: String,
-      files: Seq[FileEntry], schema: StructType, curIds: Map[String, Int],
-      dv: Map[String, Seq[DeleteEntry]]): DataFrame = {
-    val (dirty, clean) = files.partition(f => dv.contains(f.path))
-    if (dirty.isEmpty)
-      return resolvedRead(spark, root, files, schema, curIds)
-    val cleanDf = resolvedRead(spark, root, clean, schema, curIds)
-    val posDf = resolvedReadWithPos(spark, root, dirty, schema, curIds)
-    val dvDirs = dirty.flatMap(f => dv(f.path)).map(_.dvDir).distinct.sorted
-    val dvRows = spark.read.parquet(dvDirs.map(d => s"$root/$d"): _*)
-      .select(col("t_path"), col("t_pos"))
-    // extra DV rows addressing files outside `dirty` (a pruned read)
-    // can never match the anti-join — no filter needed, the join is
-    // exact on the (file, position) coordinate
-    val delTotal = dv.valuesIterator.flatten.map(_.delRows).sum
-    val build = if (delTotal <= DvBroadcastRows) broadcast(dvRows) else dvRows
-    val applied = posDf.join(build,
-      posDf("__path") === build("t_path") && posDf("__pos") === build("t_pos"),
-      "left_anti")
-      .drop("__path", "__pos")
-    cleanDf.unionByName(applied)
-  }
 
   /** The PHYSICAL name under which file `f` recorded data/stats for
     * current column `cur` — the file's own name for cur's field id
@@ -2316,18 +2249,20 @@ object SnapshotLog {
     * kept, and predicates on columns the snapshot lacks are ignored
     * (the caller's residual filter still applies — pruning only ever
     * skips files, never changes the answer); no predicates = the full
-    * live inventory.
+    * live inventory. `among` replaces that inventory with an explicit
+    * file list (a library read's), which skips step 1.
     */
   private[graft] def boxFiles(snap: Resolved,
-      preds: Seq[(String, Option[String], Option[String])]): Seq[FileEntry] = {
+      preds: Seq[(String, Option[String], Option[String])],
+      among: Option[Seq[FileEntry]] = None): Seq[FileEntry] = {
     val boxes = boxesOf(snap.schema, preds)
-    if (boxes.isEmpty) return snap.files
+    if (boxes.isEmpty) return among.getOrElse(snap.files)
     val memo = scala.collection.mutable.HashMap
       .empty[(String, Int, String), Option[String]]
     // list bands carry CURRENT column names (rename commits re-key them)
-    val listed = snap.raw.inline ++ snap.raw.refs
+    val listed = among.getOrElse(snap.raw.inline ++ snap.raw.refs
       .filter(r => boxKeeps(boxes, r.band, Some(_), memo))
-      .flatMap(snap.listed)
+      .flatMap(snap.listed))
     val banded = pruneEntriesForBoxes(listed, snap.schema, snap.curIds, preds)
     val points = boxes.collect {
       case (c, dt, Some(lo), Some(hi)) if lo == hi &&
@@ -2864,12 +2799,24 @@ object SnapshotLog {
       name: String): Long =
     branchHeadK(fsOf(spark, root), root, name)
 
-  /** The catalog's V2 BATCH scan plan: the resolved snapshot it reads
-    * (schema, field ids, delete vectors, spec, sort order, column meta)
-    * and the files its pushed conjuncts kept ([[boxFiles]]).
+  /** A V2 batch scan's plan: the resolved snapshot it reads (schema,
+    * field ids, spec, sort order, column meta), the files its pushed
+    * conjuncts kept ([[boxFiles]]), the delete vectors that apply to
+    * them (per target: DV dirs and recorded kill count), and how many
+    * files the scan started from. `whole` = it started from the
+    * snapshot's live set, so the table-level column meta describes an
+    * unpruned `kept`.
     */
   private[graft] final case class CatalogBatchPlan(snap: Resolved,
-      kept: Seq[FileEntry])
+      kept: Seq[FileEntry], dvByTarget: Map[String, Seq[String]],
+      dvKills: Map[String, Long], totalFiles: Int, whole: Boolean)
+
+  private[graft] object CatalogBatchPlan {
+    /** A catalog scan's plan: the snapshot's own live set and deletes. */
+    def apply(snap: Resolved, kept: Seq[FileEntry]): CatalogBatchPlan =
+      CatalogBatchPlan(snap, kept, snap.dvByTarget, snap.dvKills,
+        snap.totalFiles, whole = true)
+  }
 
   /** Snapshot `id`'s parent id — header bytes only. The default
     * changelog window (`parent(current) -> current`) resolves through
@@ -3304,13 +3251,8 @@ object SnapshotLog {
     * still reads without them.
     */
   def auditStaged(spark: SparkSession, root: String, key: String): DataFrame = {
-    val fs = fsOf(spark, root)
-    val p = stagedPath(root, key)
-    require(fs.exists(p), s"unknown staged key $key")
-    val staged = parseManifest(readTextFile(fs, p))
-    val files = staged.refs.flatMap(r => readFileList(fs, root, r.path))
-    resolvedRead(spark, root, files,
-      StructType.fromDDL(staged.schemaDdl), staged.ids)
+    val staged = resolve(spark, root, staged = Some(key))
+    scanFiles(spark, staged, staged.files)
   }
 
   /** Publish a staged append: one manifest rename splices the staged
@@ -3516,9 +3458,7 @@ object SnapshotLog {
     // nulls the missing columns so the predicate can reference them),
     // and the rewrite must commit under the TABLE schema, not whatever
     // width the rewritten files happened to have
-    val tableSchema = head.schema
-    val tableIds = head.curIds
-    val scan = resolvedRead(spark, root, allFiles, tableSchema, tableIds)
+    val scan = scanFiles(spark, head, allFiles)
     // bounded driver value — O(#matching files), planning-scale metadata
     // (same class as StreamingMerge's affected-bucket set). The scan
     // projects only the virtual file-name column under the pushed
@@ -3532,10 +3472,8 @@ object SnapshotLog {
     // NULL-predicate rows must SURVIVE the rewrite: under three-valued
     // logic a NULL row fails both filter(pred) and filter(!pred), so a
     // bare !pred would silently drop rows the delete never matched
-    val rewritten =
-      resolvedRead(spark, root, allFiles.filter(f => hitRel(f.path)),
-        tableSchema, tableIds)
-        .filter(!coalesce(pred, lit(false)))
+    val rewritten = scanFiles(spark, head, allFiles.filter(f => hitRel(f.path)))
+      .filter(!coalesce(pred, lit(false)))
     commitFiles(spark, root, Some(head), rewritten, "delete",
       intact, keepInline, derivedStats = inheritedBucketStats(head),
       sortApplied = sortApplyFor(head.sortOrder, rewritten))
@@ -3544,9 +3482,9 @@ object SnapshotLog {
   /** MERGE-ON-READ delete: record the matched rows as a positional
     * DELETE VECTOR — (file, row_index) pairs in one parquet dir — and
     * commit a metadata line pointing at them; NO data file is read
-    * back, rewritten, or moved. Readers apply the vector by
-    * anti-joining only the dirty files' rows ([[dvRead]]), so the read
-    * overhead is bounded by the dirty files + DV rows. This is Iceberg
+    * back, rewritten, or moved. Readers apply the vector inside each
+    * dirty file's reader ([[scanFiles]]), so the read overhead is
+    * bounded by the dirty files + DV rows. This is Iceberg
     * v2's positional delete / Delta's deletion vector: at 100 TB,
     * deleting one row from each of 10k hot files costs one churn-sized
     * DV write here versus a 10k-file rewrite under [[deleteWhere]] —
@@ -3598,31 +3536,6 @@ object SnapshotLog {
     }
   }
 
-  /** Rows of `files` with their (file, position) coordinates, the
-    * snapshot's POSITIONAL vectors applied — the DV half of
-    * [[livePosRead]], also what [[rewriteEqualityDeletes]] scans to
-    * locate the coordinates an equality delete kills.
-    */
-  private def dvPosRead(spark: SparkSession, snap: Resolved,
-      files: Seq[FileEntry]): DataFrame = {
-    val pos = resolvedReadWithPos(spark, snap.root, files, snap.schema,
-      snap.curIds)
-    val dv = snap.deletes
-    if (dv.isEmpty) pos
-    else {
-      val dvDirs = dv.values.flatten.map(_.dvDir).toSeq.distinct.sorted
-      val dvRows = spark.read.parquet(dvDirs.map(d => s"${snap.root}/$d"): _*)
-        .select(col("t_path"), col("t_pos"))
-      val build =
-        if (snap.raw.dRefs.iterator.map(_.delRows).sum <= DvBroadcastRows)
-          broadcast(dvRows)
-        else dvRows
-      pos.join(build,
-        pos("__path") === build("t_path") && pos("__pos") === build("t_pos"),
-        "left_anti")
-    }
-  }
-
   /** The snapshot's LIVE rows with their (file, position) coordinates —
     * existing positional vectors AND equality deletes applied. The view
     * every MoR writer's discovery scans: a coordinate can never match
@@ -3630,16 +3543,8 @@ object SnapshotLog {
     * reappears here.
     */
   private def livePosRead(spark: SparkSession, snap: Resolved,
-      files: Seq[FileEntry]): DataFrame = {
-    val eqRefs = snap.raw.eqRefs
-    if (eqRefs.isEmpty || files.isEmpty) dvPosRead(spark, snap, files)
-    else files.groupBy(f => applicableEqs(eqRefs, f).map(_.dir))
-      .toSeq.sortBy(_._2.head.path)
-      .map { case (dirs, group) =>
-        applyEqs(spark, snap.root, dvPosRead(spark, snap, group),
-          eqRefs.filter(e => dirs.contains(e.dir)), snap.schema, snap.curIds)
-      }.reduce(_ unionByName _)
-  }
+      files: Seq[FileEntry]): DataFrame =
+    morApply(spark, snap, files, None, snap.raw.eqRefs, withPos = true)
 
   /** Write `hits` (t_path, t_pos) as snapshot `next`'s DV parquet dir
     * plus its delete list; None (dir reclaimed) when nothing matched.
@@ -3928,7 +3833,7 @@ object SnapshotLog {
     * applied), locate the matching rows' coordinates, and commit a DV
     * that replaces the key refs. The row count becomes EXACT again
     * (the conversion finally knows the kill count), per-read anti-joins
-    * collapse to the coordinate join [[dvApply]] already optimizes, and
+    * collapse to the per-file position check of [[scanFiles]], and
     * [[rewriteDeletes]] can then fold everything back into data files.
     * Work is O(applicable files + matching rows) — the scan the delete
     * deferred, paid once here instead of per read — and on a
@@ -4027,7 +3932,7 @@ object SnapshotLog {
             .filter(e => keeps(f, e)).map(_.dir))
           .toSeq.sortBy(_._2.head.path)
           .map { case (dirs, group) =>
-            peelMatches(spark, root, dvPosRead(spark, head, group),
+            peelMatches(spark, root, scanFiles(spark, head, group, withPos = true),
               raw.eqRefs.filter(e => dirs.contains(e.dir)),
               head.schema, head.curIds)
               .select(col("__path").as("t_path"), col("__pos").as("t_pos"))
@@ -4073,8 +3978,7 @@ object SnapshotLog {
     val dv = head.deletes
     val dirty = dv.keySet
     val (intact, keepInline) = head.carryAround(dirty)
-    val rewritten = dvApply(spark, root, head.files.filter(f => dirty(f.path)),
-      head.schema, head.curIds, dv)
+    val rewritten = scanFiles(spark, head, head.files.filter(f => dirty(f.path)))
     commitFiles(spark, root, Some(head), rewritten, "rewrite-deletes",
       intact, keepInline, derivedStats = inheritedBucketStats(head),
       sortApplied = sortApplyFor(head.sortOrder, rewritten))
@@ -4244,13 +4148,7 @@ object SnapshotLog {
     // row-level command's matched rows all fall inside them) skip
     // whole files from the stat bands — files without usable stats are
     // kept, so pruning can only ever shrink the scan, never the answer
-    val files = boxFiles(snap, preds)
-    if (files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snap.schema.add("__path", org.apache.spark.sql.types.StringType)
-          .add("__pos", org.apache.spark.sql.types.LongType))
-    else livePosRead(spark, snap, files)
+    livePosRead(spark, snap, boxFiles(snap, preds))
   }
 
   /** The merge-on-read commit against a BRANCH head — [[morCommit]]'s
@@ -4382,7 +4280,7 @@ object SnapshotLog {
     // physically wider than the recorded DDL, poisoning every later
     // pinned-schema read — the same no-silent-retype rule append's
     // mergeSchemas enforces.
-    val (tableSchema, tableIds) = (head.schema, head.curIds)
+    val tableSchema = head.schema
     tableSchema.fields.foreach { f =>
       source.schema.fields.find(_.name == f.name).foreach(sf =>
         require(sf.dataType == f.dataType,
@@ -4393,7 +4291,7 @@ object SnapshotLog {
         source.select(tableSchema.fieldNames.map(col).toSeq: _*),
         "merge", Seq.empty, Seq.empty,
         sortApplied = sortApplyFor(head.sortOrder, source))
-    val scan = resolvedRead(spark, root, allFiles, tableSchema, tableIds)
+    val scan = scanFiles(spark, head, allFiles)
     val keys = source.select(keyCols.map(col): _*).distinct()
     // bounded driver value — O(#matching files); file column projected
     // BEFORE the join (input_file_name is per-scan-row, and Spark 4
@@ -4412,8 +4310,7 @@ object SnapshotLog {
     val tableCols = scan.columns.map(col).toSeq
     val survivors =
       if (hitRel.isEmpty) scan.limit(0)
-      else resolvedRead(spark, root, allFiles.filter(f => hitRel(f.path)),
-        tableSchema, tableIds)
+      else scanFiles(spark, head, allFiles.filter(f => hitRel(f.path)))
         .join(keys, keyCols, "left_anti")
         .select(tableCols: _*)
     val merged = survivors.unionByName(source.select(tableCols: _*))
@@ -4493,7 +4390,7 @@ object SnapshotLog {
 
   // ---- field-id schema evolution: rename/drop as METADATA-ONLY
   // commits. Data files never rewrite — reads resolve columns by id
-  // ([[resolvedRead]]), so files written under the old name keep
+  // ([[scanFiles]]), so files written under the old name keep
   // reading correctly, and a dropped name re-added later gets a NEW id
   // (old data never resurrects). Iceberg's evolution model. ----
 
@@ -5421,13 +5318,13 @@ object SnapshotLog {
     val toDv = to.deletes
     val eqFrom = from.map(_.raw.eqRefs).getOrElse(Seq.empty)
     val eqTo = to.raw.eqRefs
-    def readFiles(files: Seq[FileEntry], dv: Map[String, Seq[DeleteEntry]],
+    def sideRows(files: Seq[FileEntry], dv: Map[String, Seq[DeleteEntry]],
         eqs: Seq[EqRef]): DataFrame =
-      morApply(spark, root, files.sortBy(_.path), schema, toIds, dv, eqs)
+      morApply(spark, to, files.sortBy(_.path), Some(dv), eqs)
     val addedFiles = to.files.filter(f => !fromPaths(f.path))
     val removedFiles = fromFiles.filter(f => !toPaths(f.path))
-    val added = readFiles(addedFiles, toDv, eqTo)
-    val removed = readFiles(removedFiles, fromDv, eqFrom)
+    val added = sideRows(addedFiles, toDv, eqTo)
+    val removed = sideRows(removedFiles, fromDv, eqFrom)
     // One-sided file diffs skip the exceptAll pair outright:
     // exceptAll(x, empty) = x and exceptAll(empty, x) = empty, so a
     // bootstrap window (fromId = 0), a pure-append window, or a
@@ -5482,8 +5379,7 @@ object SnapshotLog {
         .groupBy(f => applicableEqs(changed, f).map(_.dir))
         .toSeq.sortBy(_._2.head.path)
         .map { case (dirs, group) =>
-          val live = morApply(spark, root, group, schema, toIds,
-            bothDv, sideEqs)
+          val live = morApply(spark, to, group, Some(bothDv), sideEqs)
           peelMatches(spark, root, live,
             changed.filter(e => dirs.contains(e.dir)), schema, toIds)
             .withColumn("change", lit(tag))
@@ -5534,8 +5430,8 @@ object SnapshotLog {
       !dirsOf(toDv, p).subsetOf(dirsOf(fromDv, p)))
     val mayIns = changedTargets.exists(p =>
       !dirsOf(fromDv, p).subsetOf(dirsOf(toDv, p)))
-    // position deltas are DV-row-sized — broadcast them under the same
-    // metadata-driven threshold dvApply uses (delTotal derived from
+    // position deltas are DV-row-sized — broadcast them under the
+    // metadata-driven DvBroadcastRows threshold (delTotal derived from
     // the delete maps already in scope, no manifest re-read)
     val delTotal = (fromDv.values.flatten ++ toDv.values.flatten)
       .map(_.delRows).sum
@@ -5552,8 +5448,9 @@ object SnapshotLog {
         .groupBy(f => applicableEqs(sideEqs, f).map(_.dir))
         .toSeq.sortBy(_._2.head.path)
         .map { case (dirs, group) =>
-          val pr = resolvedReadWithPos(spark, root,
-            group.sortBy(_.path), schema, toIds)
+          // the coordinates of every row, dead or alive on either side
+          val pr = scanFiles(spark, to, group.sortBy(_.path), Some(Map.empty),
+            withPos = true)
           val hit = pr.join(sized(posDelta),
             pr("__path") === posDelta("t_path") &&
               pr("__pos") === posDelta("t_pos"), "left_semi")
@@ -5626,7 +5523,8 @@ object SnapshotLog {
     val at =
       if (schemaAt > 0L && schemaAt != id) resolve(spark, root, schemaAt)
       else snap
-    resolvedRead(spark, root, files.sortBy(_.path), at.schema, at.curIds)
+    // an append-class commit's own files, without later vectors
+    scanFiles(spark, at, files.sortBy(_.path), Some(Map.empty))
   }
 
   def changelog(spark: SparkSession, root: String, fromId: Long = 0L,
@@ -5813,8 +5711,9 @@ object SnapshotLog {
     * bit-preserved ([[changes]] across the commit is empty); a log with
     * at most one small file is left alone (no history growth).
     *
-    * File sizes come from the filesystem listing — O(#files) driver
-    * metadata calls, zero data reads, same class as the manifest read.
+    * File sizes come from the manifest (the writer records each
+    * file's bytes); only a legacy entry without a recorded size is
+    * stat'ed, once. Zero data reads to plan.
     */
   def optimizeBinPack(spark: SparkSession, root: String,
       smallBytes: Long, targetBytes: Long = 128L * 1024 * 1024): Long = {
@@ -5822,20 +5721,20 @@ object SnapshotLog {
     val head = resolve(spark, root)
     head.requireNoMorDeletes()
     val fs = fsOf(spark, root)
-    def sizeOf(f: FileEntry): Long =
-      fs.getFileStatus(new Path(s"$root/${f.path}")).getLen
-    val smallEntries = head.files.filter(f => sizeOf(f) < smallBytes)
+    val sized = head.files.map(f => f -> (if (f.bytes > 0) f.bytes
+      else fs.getFileStatus(new Path(s"$root/${f.path}")).getLen))
+    val small = sized.filter(_._2 < smallBytes)
+    val smallEntries = small.map(_._1)
     val smallIn = smallEntries.map(_.path).toSet
     if (smallIn.size <= 1) return head.id
     // manifest-tree CoW carry, deleteWhere's discipline: lists with no
     // small file ride by reference; touched lists dissolve their large
     // survivors into the commit's new list
     val (intact, carriedInline) = head.carryAround(smallIn)
-    val totalBytes = smallEntries.map(sizeOf).sum
+    val totalBytes = small.map(_._2).sum
     val outFiles = math.max(1, (totalBytes / targetBytes).toInt +
       (if (totalBytes % targetBytes > 0) 1 else 0))
-    val packed = resolvedRead(spark, root, smallEntries, head.schema,
-      head.curIds).coalesce(outFiles)
+    val packed = scanFiles(spark, head, smallEntries).coalesce(outFiles)
     commitFiles(spark, root, Some(head), packed, "optimize-binpack",
       intact, carriedInline, derivedStats = inheritedBucketStats(head),
       // under a declared sort the packed outputs re-sort + stamp

@@ -1223,7 +1223,7 @@ object SnapshotLogQueries {
     // TT6: manifest-stats pruned range read — a narrow key band over
     // the range-clustered log. Correctness never depends on pruning
     // (the residual filter runs either way); SnapshotLogSpec asserts
-    // the plan-side property (inputFiles shrinks to the overlapping
+    // the plan-side property (the planned scan keeps only the overlapping
     // band). The oracle is the plain relational range scan.
     row("tt6_stats_pruned_read", rangeLog,
       """SELECT o_orderkey, o_custkey, o_totalprice FROM orders

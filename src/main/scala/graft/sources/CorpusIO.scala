@@ -3,55 +3,20 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Corpus-interchange sources/sinks beyond the parquet/CSV/JSON the rest
-  * of the library already exercises (`Tables`, `recipes.CsvIO`,
-  * `recipes.Normalize.readDocs`):
-  *
-  *  - JSONL (one JSON object per line) — the de-facto wire format for
-  *    document corpora. Readers take an EXPLICIT schema: schema
-  *    inference on JSON is a full extra pass over the data at 100 TB
-  *    AND silently widens/narrows types when a batch happens to miss a
-  *    field; a declared schema is both the fast path and the contract.
-  *  - ORC — the other columnar format warehouses hand over; same
-  *    predicate-pushdown/column-pruning machinery as parquet (asserted
-  *    in the spec).
-  *  - A landing→lake ingestion step: JSONL in, zstd parquet out,
-  *    partitioned by a routing column — the layout that gives every
-  *    downstream query partition pruning for free. `maxRecordsPerFile`
-  *    caps file size instead of `coalesce` (which would serialize the
-  *    write through few tasks).
+/** Corpus-interchange JSONL (one JSON object per line) — the de-facto
+  * wire format for document corpora — beside the parquet/CSV/JSON the
+  * rest of the library already exercises (`Tables`, `recipes.CsvIO`,
+  * `recipes.Normalize.readDocs`). Readers take an EXPLICIT schema:
+  * schema inference on JSON is a full extra pass over the data at
+  * 100 TB AND silently widens/narrows types when a batch happens to
+  * miss a field; a declared schema is both the fast path and the
+  * contract.
   */
 object CorpusIO {
-
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("compression", "zstd").orc(path)
-
-  def readOrc(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).orc(path)
 
   def writeJsonl(df: DataFrame, path: String): Unit =
     df.write.mode(SaveMode.Overwrite).option("compression", "gzip").json(path)
 
   def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
-
-  /** JSONL landing files → partitioned zstd parquet lake layout.
-    * Returns the re-read lake frame (partition-pruned scans from here on).
-    */
-  def ingestJsonl(
-      spark: SparkSession,
-      landingPath: String,
-      schema: StructType,
-      lakePath: String,
-      partitionBy: Seq[String],
-      maxRecordsPerFile: Long = 5000000L): DataFrame = {
-    readJsonl(spark, landingPath, schema)
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("compression", "zstd")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionBy: _*)
-      .parquet(lakePath)
-    spark.read.parquet(lakePath)
-  }
 }

@@ -5,13 +5,13 @@ import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.graft.ParquetReadBridge
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.operators.SnapshotLog
@@ -42,19 +42,26 @@ trait SnapshotScanLike {
   * Merge-on-read: a file with outstanding positional delete vectors
   * reads with the parquet row-index column appended; its reader first
   * loads the file's OWN DV rows (pushed `t_path` filter — executor
-  * side, never through the driver) and skips dead positions. Snapshots
-  * with outstanding EQUALITY deletes fall back to the V1 join read at
-  * plan time ([[SnapshotScanBuilder.build]]) — that transitional state
-  * needs the sequence-rule anti-join, not a per-file test.
+  * side, never through the driver) and skips dead positions — the one
+  * place positional deletes are applied. Equality deletes are joins
+  * above the scan: a library read adds them itself, and a SQL read of
+  * a snapshot with outstanding ones plans the V1 fallback
+  * ([[SnapshotScanBuilder.build]]), which reads through the library.
   *
   * Schema evolution: files group by their field-id physical
   * projection; each group reads under its own physical names and
-  * projects to the current schema (absent columns surface NULL),
-  * exactly [[SnapshotLog]]'s resolvedRead semantics per partition.
+  * projects to the current schema (absent columns surface NULL).
+  *
+  * `coords` names the coordinate columns a library read asked for
+  * ([[SnapshotBatchScan.CoordFields]]), appended after `required`:
+  * `__path` (the slice's manifest-relative path) and `__pos` (its
+  * parquet row index) — the (file, position) address delete vectors
+  * use.
   */
 class SnapshotBatchScan(required: StructType,
     plan0: SnapshotLog.CatalogBatchPlan,
-    reportPushed: Seq[sources.Filter])
+    reportPushed: Seq[sources.Filter],
+    coords: Seq[String] = Seq.empty)
     extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportOrdering
@@ -64,15 +71,18 @@ class SnapshotBatchScan(required: StructType,
   private val spark = SparkSession.active
   private val snap = plan0.snap
   val root: String = snap.root
-  val totalFiles: Int = snap.totalFiles
+  val totalFiles: Int = plan0.totalFiles
   val tableSchema: StructType = snap.schema
+  private val dvByTarget = plan0.dvByTarget
+  private val dvKills = plan0.dvKills
 
   @volatile private var kept: Seq[SnapshotLog.FileEntry] = plan0.kept
   @volatile private var runtimeDropped: Int = 0
   def keptFiles: Seq[SnapshotLog.FileEntry] = kept
   def runtimeDroppedFiles: Int = runtimeDropped
 
-  override def readSchema(): StructType = required
+  override def readSchema(): StructType =
+    StructType(required.fields ++ coords.map(SnapshotBatchScan.CoordFields(_)))
   override def toBatch: Batch = this
 
   override def description(): String =
@@ -86,7 +96,7 @@ class SnapshotBatchScan(required: StructType,
     // DV kill count — exact, so a MoR-heavy table's CBO sees the true
     // cardinality instead of dead-row-inflated counts
     private val rows =
-      kept.map(f => f.rows - snap.dvKills.getOrElse(f.path, 0L)).sum
+      kept.map(f => f.rows - dvKills.getOrElse(f.path, 0L)).sum
     override def sizeInBytes(): util.OptionalLong =
       util.OptionalLong.of(math.max(1L, rows) *
         math.max(1, required.map(_.dataType.defaultSize).sum))
@@ -111,14 +121,14 @@ class SnapshotBatchScan(required: StructType,
       // mixed ones (see liveNullCount) — estimate-grade, which is
       // this surface's contract; the EXACT-answer aggregate pushdown
       // has its own stricter gate.
-      val pruned = kept.size != totalFiles
+      val pruned = !plan0.whole || kept.size != totalFiles
       val hasKills =
-        kept.exists(f => snap.dvKills.getOrElse(f.path, 0L) > 0L)
+        kept.exists(f => dvKills.getOrElse(f.path, 0L) > 0L)
       val (metaMap, boundsMap): (Map[String, (Long, Long)],
           Map[String, (Any, Any)]) =
         if (!pruned && !hasKills) (snap.colMeta, snap.colBounds)
         else (SnapshotLog.subsetColMeta(kept, tableSchema, snap.curIds,
-          snap.dvKills),
+          dvKills),
           // bounds may include dead extremes — a (slightly) widened
           // band, safe for range-selectivity estimation
           SnapshotLog.subsetColBounds(kept, tableSchema, snap.curIds))
@@ -129,7 +139,7 @@ class SnapshotBatchScan(required: StructType,
       // weight to its live non-null estimate.
       val histMap: Map[String, (Long, Vector[Double])] =
         SnapshotLog.subsetColHist(kept, tableSchema, snap.curIds,
-          snap.dvKills)
+          dvKills)
       required.fieldNames.foreach { c =>
         metaMap.get(c).foreach { case (nulls, ndv) =>
           // typed min/max beside ndv/nulls — the range-selectivity
@@ -423,8 +433,8 @@ class SnapshotBatchScan(required: StructType,
 
   // ---- partition planning ----
 
-  /** Per-file physical projection under the current field ids —
-    * [[SnapshotLog]]'s resolvedRead rule: ids-less files (legacy) read
+  /** Per-file physical projection under the current field ids
+    * ([[SnapshotLog.physFieldIn]]): ids-less files (legacy) read
     * by current name; stamped files resolve each current column — and
     * its NESTED struct names — to the physical field carrying the id,
     * None = absent (NULL).
@@ -451,7 +461,8 @@ class SnapshotBatchScan(required: StructType,
     */
   private lazy val columnarMode: Boolean = {
     val files = kept
-    !files.exists(f => snap.dvByTarget.contains(f.path)) &&
+    coords.isEmpty &&
+      !files.exists(f => dvByTarget.contains(f.path)) &&
       files.groupBy(projectionOf).keys.forall(isIdentity) &&
       ParquetReadBridge.supportBatch(spark, required)
   }
@@ -490,7 +501,9 @@ class SnapshotBatchScan(required: StructType,
         val readIdx = present.map(_._2).zipWithIndex.toMap // requiredIdx -> readIdx
         required.fields.indices.map(i => readIdx.getOrElse(i, -1)).toArray
       }
-      val dirty = gFiles.exists(f => snap.dvByTarget.contains(f.path))
+      val dirty = gFiles.exists(f => dvByTarget.contains(f.path))
+      // the row index is read for dead-row checks and for `__pos`
+      val hasPos = dirty || coords.nonEmpty
       // pushed filters reach the parquet reader (row-group/page skip)
       // only when the group reads under CURRENT names — renamed files
       // skip pushdown, the residual Filter above re-applies exactly.
@@ -504,7 +517,7 @@ class SnapshotBatchScan(required: StructType,
         reportPushed.filter(_.references.forall(required.fieldNames.contains))
       else Seq.empty
       val readSchema =
-        if (dirty) StructType(physFields.fields :+ ParquetReadBridge.RowIndexField)
+        if (hasPos) StructType(physFields.fields :+ ParquetReadBridge.RowIndexField)
         else physFields
       SnapshotGroupSpec(
         ParquetReadBridge.reader(spark, readSchema, pushable, columnar),
@@ -513,8 +526,8 @@ class SnapshotBatchScan(required: StructType,
         // schema to be EXACTLY the required schema — a group that
         // appended the row-index column must project it away even for
         // its clean files, or their rows carry a phantom extra field
-        identity = isIdentity(proj) && outMap.forall(_ >= 0) && !dirty,
-        hasPos = dirty)
+        identity = isIdentity(proj) && outMap.forall(_ >= 0) && !hasPos,
+        hasPos = hasPos)
     }.toArray
     // per-dirty-file DV reader closures: pushed t_path filter, so each
     // reader loads only its own rows from the shared DV parquet dirs
@@ -526,7 +539,7 @@ class SnapshotBatchScan(required: StructType,
     val groupIdx = groups.zipWithIndex
       .flatMap { case ((_, gf), gi) => gf.map(f => f.path -> gi) }.toMap
     def sliceOf(f: SnapshotLog.FileEntry): SnapshotFileSlice = {
-      val dvDirs = snap.dvByTarget.getOrElse(f.path, Seq.empty)
+      val dvDirs = dvByTarget.getOrElse(f.path, Seq.empty)
       SnapshotFileSlice(
         groupIdx(f.path),
         s"$root/${f.path}", relPath = f.path, bytes = f.bytes,
@@ -600,8 +613,16 @@ class SnapshotBatchScan(required: StructType,
   override def planInputPartitions(): Array[InputPartition] = planned._2
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new SnapshotReaderFactory(planned._1, required, planned._3,
+    new SnapshotReaderFactory(planned._1, required, coords, planned._3,
       ParquetReadBridge.serializableConf(spark))
+}
+
+object SnapshotBatchScan {
+
+  /** The coordinate columns a library read may append, by name. */
+  val CoordFields: Map[String, StructField] = Map(
+    "__path" -> StructField("__path", StringType),
+    "__pos" -> StructField("__pos", LongType))
 }
 
 /** One file group's executor recipe: the reader closure, its physical
@@ -636,7 +657,7 @@ private[sources] final case class SnapshotFilePartition(
 
 private[sources] class SnapshotReaderFactory(
     groups: Array[SnapshotGroupSpec], required: StructType,
-    columnar: Boolean,
+    coords: Seq[String], columnar: Boolean,
     conf: org.apache.spark.sql.graft.SerializableHadoopConf)
     extends PartitionReaderFactory {
 
@@ -657,14 +678,28 @@ private[sources] class SnapshotReaderFactory(
         st.getModificationTime)
     }
 
+  /** Open `slice` for reading and point `input_file_name()` at it;
+    * the holder is cleared when the task completes, as `FileScanRDD`
+    * does.
+    */
+  private def open(slice: SnapshotFileSlice): Iterator[InternalRow] = {
+    val pf = pfileOf(slice)
+    ParquetReadBridge.setInputFile(pf)
+    groups(slice.group).reader(pf)
+  }
+
+  private def unsetOnCompletion(): Unit =
+    Option(org.apache.spark.TaskContext.get()).foreach(
+      _.addTaskCompletionListener[Unit](_ => ParquetReadBridge.unsetInputFile()))
+
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[SnapshotFilePartition]
+    unsetOnCompletion()
     // flatMap is lazy per slice: each file opens when the previous
     // one's batches are drained
     val it = part.slices.iterator.flatMap(s =>
-      groups(s.group).reader(pfileOf(s))
-        .asInstanceOf[Iterator[ColumnarBatch]])
+      open(s).asInstanceOf[Iterator[ColumnarBatch]])
     new PartitionReader[ColumnarBatch] {
       private var cur: ColumnarBatch = _
       override def next(): Boolean =
@@ -677,7 +712,7 @@ private[sources] class SnapshotReaderFactory(
   /** One slice's live, projected rows. */
   private def sliceRows(slice: SnapshotFileSlice): Iterator[InternalRow] = {
     val g = groups(slice.group)
-    val raw = g.reader(pfileOf(slice))
+    val raw = open(slice)
     val alive: Iterator[InternalRow] =
       if (!slice.dirty) raw
       else {
@@ -713,13 +748,26 @@ private[sources] class SnapshotReaderFactory(
             g.physFields.fields(ri).dataType, nullable = true)
         }
       }
-      val proj = UnsafeProjection.create(exprs)
-      alive.map(proj)
+      // coordinates: the row index the reader appended (a read with
+      // coordinates always appends it), and the slice's path as a
+      // one-column row joined after it
+      val coordExprs = coords.map {
+        case "__path" => BoundReference(g.posIdx + 1, StringType, nullable = false)
+        case _ => BoundReference(g.posIdx, LongType, nullable = false)
+      }
+      val proj = UnsafeProjection.create(exprs ++ coordExprs)
+      if (coords.isEmpty) alive.map(proj)
+      else {
+        val joined = new JoinedRow(null, InternalRow(
+          org.apache.spark.unsafe.types.UTF8String.fromString(slice.relPath)))
+        alive.map(r => proj(joined.withLeft(r)))
+      }
     }
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[SnapshotFilePartition]
+    unsetOnCompletion()
     val out = part.slices.iterator.flatMap(sliceRows)
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _

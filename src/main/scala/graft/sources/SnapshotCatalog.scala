@@ -44,11 +44,12 @@ import graft.operators.{SnapshotFileWriter, SnapshotLog, SnapshotWriteMessage}
   * pinned for time travel), the scan builder receives Spark's pushed
   * conjuncts and turns them into manifest stat-band + transform-band +
   * bloom file pruning via `SnapshotLog.boxFiles`, and the scan — the
-  * per-file [[SnapshotBatchScan]], or the [[V1Scan]] fallback whose
-  * relation produces rows from `SnapshotLog.dvRead` — applies the same
-  * field-id schema resolution, delete-vector anti-joins, and equality
-  * -delete application every library read gets, so SQL and API results
-  * can never diverge. Filters fully translated to Catalyst columns are
+  * per-file [[SnapshotBatchScan]] every library read also plans, or
+  * the [[V1Scan]] fallback whose relation produces rows from
+  * `SnapshotLog.dvRead` — applies the same field-id schema
+  * resolution, delete vectors, and equality-delete application every
+  * library read gets, so SQL and API results can never diverge.
+  * Filters fully translated to Catalyst columns are
   * claimed EXACT (evaluated inside the produced plan, inside
   * whole-stage codegen, and additionally pushed into the parquet row
   * -group reader by the inner scan); anything else is left residual
@@ -510,7 +511,12 @@ object SnapshotCatalog {
     * specs assert FILE pruning through the SQL path (kept vs total),
     * not just the answer.
     */
-  def scanOf(df: DataFrame): SnapshotScanLike =
+  def scanOf(df: DataFrame): SnapshotScanLike = scansOf(df).head
+
+  /** Every snapshot scan `df`'s optimized plan reads, library reads
+    * included — what specs sum file pruning over.
+    */
+  private[graft] def scansOf(df: DataFrame): Seq[SnapshotScanLike] =
     df.queryExecution.optimizedPlan.collect {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
         r.scan match {
@@ -523,7 +529,7 @@ object SnapshotCatalog {
               case _ => None
             } catch { case _: NoSuchMethodException => None }
         }
-    }.flatten.head
+    }.flatten
 
   /** Render a pushed literal the way file stats were rendered at write
     * time (`min(col).cast("string")`), so band comparison is apples to
@@ -1242,6 +1248,35 @@ private[sources] class SnapshotV2Write(root: String, schema: StructType,
     }
 }
 
+/** The relation a library read plans ([[SnapshotLog.scanFiles]]): one
+  * snapshot's explicit file list and the delete vectors that apply to
+  * it, fixed in `plan`. Its builder always builds the batch scan —
+  * equality deletes are the caller's joins above it — and `withPos`
+  * adds the `__path`/`__pos` coordinate columns.
+  */
+private[graft] class SnapshotFilesTable(plan: SnapshotLog.CatalogBatchPlan,
+    withPos: Boolean) extends Table with SupportsRead {
+
+  override def name(): String =
+    s"snapshot-log `${plan.snap.root}` ${plan.snap.pinLabel}"
+
+  // every column reads nullable: a file that predates a column reads
+  // it as NULL, whatever the committed DDL says
+  private val nullable =
+    StructType(plan.snap.schema.fields.map(_.copy(nullable = true)))
+
+  override lazy val schema: StructType =
+    if (!withPos) nullable
+    else StructType(nullable.fields ++
+      Seq("__path", "__pos").map(SnapshotBatchScan.CoordFields(_)))
+
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(TableCapability.BATCH_READ)
+
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new SnapshotScanBuilder(plan.snap, nullable, Some(plan))
+}
+
 /** Receives Spark's pushdown: required columns prune the projection;
   * pushed conjuncts drive manifest file pruning (all of them — even a
   * residual-only filter's box can skip files) and, where fully
@@ -1251,16 +1286,21 @@ private[sources] class SnapshotV2Write(root: String, schema: StructType,
   * current-head read — so the file plan and the execution-time MoR
   * resolution (schema, delete vectors, equality deletes) come from the
   * SAME snapshot: a commit landing between plan and execute can never
-  * produce a mixed-snapshot read.
+  * produce a mixed-snapshot read. `pinned` is a library read's file
+  * list and delete vectors ([[SnapshotFilesTable]]): pruning starts
+  * from its files instead of the snapshot's, and the batch scan is
+  * always built.
   */
 private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
-    tableSchema: StructType)
+    tableSchema: StructType,
+    pinned: Option[SnapshotLog.CatalogBatchPlan] = None)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownAggregates
     with org.apache.spark.sql.connector.read.SupportsPushDownLimit {
 
   private var required: StructType = tableSchema
+  private var coords: Seq[String] = Seq.empty
   private var exact: Seq[sources.Filter] = Seq.empty
   private var allPushed: Seq[sources.Filter] = Seq.empty
   private var claimed: Seq[sources.Filter] = Seq.empty
@@ -1279,7 +1319,11 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
   private def resolvePlan(): SnapshotLog.CatalogBatchPlan = {
     val c = planCache
     if (c != null && c._1 == boxes) return c._2
-    val p = SnapshotLog.CatalogBatchPlan(snap, SnapshotLog.boxFiles(snap, boxes))
+    val p = pinned match {
+      case Some(base) =>
+        base.copy(kept = SnapshotLog.boxFiles(snap, boxes, Some(base.kept)))
+      case None => SnapshotLog.CatalogBatchPlan(snap, SnapshotLog.boxFiles(snap, boxes))
+    }
     planCache = (boxes, p)
     p
   }
@@ -1335,8 +1379,12 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     * V1 read self-applies its pushed set, so residual duplication in
     * the eq-outstanding fallback is merely a re-check, never wrong).
     */
-  override def pushFilters(filters: Array[sources.Filter])
+  override def pushFilters(pushed: Array[sources.Filter])
       : Array[sources.Filter] = {
+    // a filter on a coordinate column stays residual: the scan has no
+    // stats for it
+    val (onCoords, filters) = pushed.partition(
+      _.references.exists(SnapshotBatchScan.CoordFields.contains))
     allPushed = filters.toSeq
     boxes = filters.toSeq.flatMap(SnapshotCatalog.boxOf)
     exact = filters.toSeq.filter(f => SnapshotCatalog.columnOf(f).isDefined)
@@ -1351,20 +1399,24 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     // aligned predicates. Translatable filters only (the V1
     // eq-outstanding fallback self-applies its claimed set, so the
     // claim must be expressible there too).
-    if (exact.isEmpty) return filters
+    if (exact.isEmpty) return pushed
     val plan = resolvePlan()
     claimed =
       if (snap.eqOutstanding) Seq.empty
       else exact.filter(f => plan.kept.forall(file =>
         SnapshotCatalog.fileFilterState(file, snap.schema, snap.curIds, f)
           .isDefined))
-    filters.filterNot(claimed.contains)
+    filters.filterNot(claimed.contains) ++ onCoords
   }
 
   override def pushedFilters(): Array[sources.Filter] = exact.toArray
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    val (c, r) = requiredSchema.fields.partition(f =>
+      SnapshotBatchScan.CoordFields.contains(f.name))
+    required = StructType(r)
+    coords = c.map(_.name).toSeq
+  }
 
   // ---- aggregate pushdown: an UNFILTERED, UNGROUPED
   // COUNT(*)/MIN/MAX answers from the manifest ALONE — the metadata
@@ -1436,7 +1488,7 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     val plan = if (claimed.isEmpty) plan0
       else plan0.copy(kept = refinedKept(plan0))
     def killOf(f: SnapshotLog.FileEntry): Long =
-      snap.dvKills.getOrElse(f.path, 0L)
+      plan.dvKills.getOrElse(f.path, 0L)
 
     def colOf(e: org.apache.spark.sql.connector.expressions.Expression)
         : Option[String] = e match {
@@ -1476,7 +1528,7 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
         // the list-level meta, or per kept file by the per-file null
         // counts (the proof that also holds under pruning).
         if (groupCols.exists(c =>
-            !snap.colMeta.get(c).exists(_._1 == 0L) &&
+            !(plan.whole && snap.colMeta.get(c).exists(_._1 == 0L)) &&
             !(plan.kept.nonEmpty && plan.kept.forall(f =>
               SnapshotLog.fileNullCount(f, c, snap.curIds).contains(0L)))))
           return None
@@ -1548,8 +1600,8 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
               }
               val count: Option[Long] =
                 if (perFile.forall(_.isDefined)) Some(perFile.flatten.sum)
-                else if (groupCols.isEmpty && claimed.isEmpty &&
-                    files.forall(killOf(_) == 0L))
+                else if (plan.whole && groupCols.isEmpty &&
+                    claimed.isEmpty && files.forall(killOf(_) == 0L))
                   snap.colMeta.get(cn).map(nu => files.map(_.rows).sum - nu._1)
                 else None
               count.map(n => (s"count($cn)",
@@ -1586,7 +1638,7 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     // ONE file plan (shared with pushFilters' claim decision and the
     // aggregate pushdown) serves the batch scan and the V1 fallback
     val plan0 = resolvePlan()
-    if (snap.eqOutstanding)
+    if (snap.eqOutstanding && pinned.isEmpty)
       return new SnapshotScan(plan0, required, exact)
     // claimed filters apply exactly at FILE granularity: the all-false
     // files drop here, the all-true survivors are the claim's contract
@@ -1594,11 +1646,11 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
       else plan0.copy(kept = refinedKept(plan0))
     val limited = limit match {
       case Some(n) if exact.isEmpty && boxes.isEmpty &&
-          snap.dvByTarget.isEmpty =>
+          plan.dvByTarget.isEmpty =>
         plan.copy(kept = limitFiles(plan.kept, n))
       case _ => plan
     }
-    new SnapshotBatchScan(required, limited, exact)
+    new SnapshotBatchScan(required, limited, exact, coords)
   }
 }
 

@@ -63,7 +63,7 @@ import graft.operators.{SnapshotLog, SnapshotLogQueries}
   * (which the sibling [[DocStoreSource]] uses): a V2 stream hands out
   * `PartitionReader`s that must produce rows THEMSELVES — fine for
   * docstore's own wire format, wrong for batches that are whole QUERY
-  * PLANS (field-id-resolving parquet scans, DV anti-joins, equality
+  * PLANS (field-id-resolving snapshot scans, equality
   * anti-joins, changelog exceptAll pairs). V1's `getBatch` returns a
   * DataFrame, so each micro-batch IS the engine-optimized plan —
   * exactly why Delta's streaming source sits on the same API. The one

@@ -12,7 +12,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *   - `ofRows`: wrap an ALREADY-ANALYZED logical plan (the MERGE
   *     statement's source subtree) as a DataFrame without re-analysis,
   *     preserving its attribute ids so the statement's resolved
-  *     expressions keep referring to it;
+  *     expressions keep referring to it; also how a library snapshot
+  *     read becomes a DataFrame over its DSv2 relation;
   *   - `column` / `expression`: cross between Catalyst `Expression`s
   *     (what the analyzed MERGE carries) and user-facing `Column`s
   *     (what the DataFrame combinators accept) — Spark 4 removed the

@@ -2,6 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.InputFileBlockHolder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
@@ -59,6 +60,15 @@ object ParquetReadBridge {
   def partitionedFile(path: String, size: Long, mtime: Long): PartitionedFile =
     PartitionedFile(InternalRow.empty, SparkPath.fromPathString(path),
       0L, size, Array.empty, mtime, size)
+
+  /** Point `input_file_name()` at `f` for the rows read next on this
+    * thread, as `FileScanRDD` does per file; the holder is
+    * `private[spark]`, and `DataSourceRDD` never sets it.
+    */
+  def setInputFile(f: PartitionedFile): Unit =
+    InputFileBlockHolder.set(f.urlEncodedPath, f.start, f.length)
+
+  def unsetInputFile(): Unit = InputFileBlockHolder.unset()
 
   def hadoopConf(spark: SparkSession): Configuration =
     spark.sessionState.newHadoopConfWithOptions(Map.empty)

@@ -69,6 +69,27 @@ class CodeDisciplineSpec extends AnyFunSuite {
     assert(!log.contains(".partitionBy("), "a Spark-writer partitioned branch is back")
   }
 
+  test("snapshot data has one reader") {
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))
+    assert(!src.contains("_metadata"), "a parquet _metadata column read is back")
+    assert(!src.contains("resolvedRead"), "the second read path is back")
+    val members = """(?m)^  (?:private(?:\[\w+\])? |final )*(?:def|class) (\w+)""".r
+      .findAllMatchIn(src).map(m => m.start -> m.group(1)).toSeq
+    def membersUsing(re: String): Set[String] =
+      re.r.findAllMatchIn(src).map(m => members.takeWhile(_._1 < m.start).last._2).toSet
+    // the parquet reads left read delete-vector dirs (writeDeleteVector,
+    // morCommit, changes), equality-delete key sets (eqJoin,
+    // eqPruneKeeps), or the files a commit just wrote (describeFiles,
+    // the only schema-pinned read: the writer knows the schema, and
+    // inferring it would run a job per commit)
+    assert(membersUsing("""\bspark\.read\b""") === Set("writeDeleteVector",
+      "morCommit", "changes", "eqJoin", "eqPruneKeeps", "describeFiles"),
+      "snapshot data read outside the one scan")
+    assert(membersUsing("""\.read\.schema\(""") === Set("describeFiles"),
+      "a schema-pinned parquet read outside describeFiles")
+  }
+
   test("snapshot-log commits plan from the read side's one resolved head") {
     val src = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))

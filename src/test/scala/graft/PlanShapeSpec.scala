@@ -135,16 +135,15 @@ class PlanShapeSpec extends SparkSpec {
       s"ss6 contains a nested-loop/cartesian join:\n$t")
   }
 
-  test("a dirty MoR read applies its vector as a BROADCAST anti-join, never a sort-merge") {
-    // tt21's read has one outstanding vector below the metadata
-    // threshold — the dirty-file scan must anti-join a broadcast DV
-    // build (forced by recorded delete counts, not sampled stats) and
-    // must not fall into a sort-merge shuffle of the dirty rows
+  test("a dirty MoR read drops its dead rows inside the snapshot scan — no join at all") {
+    // tt21's read has one outstanding vector: the dirty file's reader
+    // loads its own DV rows and skips those positions, so the plan is
+    // the batch scan alone — no anti-join build, broadcast or shuffled
     val t = tree("tt21_mor_merge")
-    assert(t.contains("BroadcastHashJoin") && t.contains("LeftAnti"),
-      s"tt21's vector is not a broadcast anti-join:\n$t")
-    assert(!t.contains("SortMergeJoin"),
-      s"tt21 shuffles its dirty files to apply a small vector:\n$t")
+    assert(t.contains("BatchScan snapshot-log"),
+      s"tt21 does not read through the snapshot batch scan:\n$t")
+    assert(!t.contains("Join"),
+      s"tt21 applies its vector with a join:\n$t")
   }
 
   test("the DV changelog reads changed positions only — no file-diff exceptAll branches") {
@@ -164,8 +163,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("vector-free snapshot reads take the plain scan — zero MoR overhead") {
     // the DV-aware path must cost nothing on clean tables: no anti
-    // join, no _metadata projection, identical shape to the pinned
-    // pre-MoR plan (one scan group, no joins at all)
+    // join, identical shape to the pinned pre-MoR plan (one scan, no
+    // joins at all)
     for (q <- Seq("tt1_time_travel", "tt19_mor_compaction")) {
       val t = tree(q)
       assert(!t.contains("LeftAnti") && !t.contains("Join"),

@@ -66,6 +66,13 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** The manifest paths of the data files `df`'s planned snapshot
+    * scans read, over every scan in the plan (`Dataset.inputFiles` is
+    * empty over a non-file DSv2 relation).
+    */
+  def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    graft.sources.SnapshotCatalog.scansOf(df).flatMap(_.keptFiles.map(_.path))
+
   /** Rows as sorted tuples-of-strings for order-insensitive comparison. */
   def rowSet(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
     df.collect().toSeq

@@ -242,8 +242,9 @@ class IncrementalViewSpec extends SparkSpec {
       SnapshotLog.currentId(spark, rootB)).files
     val dA = SnapshotLog.changes(spark, rootA, 2L, 3L)
     val pre = IncrementalView.preState(spark, rootB, 2L, "fk", Some(dA))
-    assert(pre.inputFiles.nonEmpty && pre.inputFiles.length < bAll.size,
-      s"pre-state not pruned: ${pre.inputFiles.length} of ${bAll.size}")
+    val preFiles = plannedFiles(pre)
+    assert(preFiles.nonEmpty && preFiles.length < bAll.size,
+      s"pre-state not pruned: ${preFiles.length} of ${bAll.size}")
     // and the pruned pre-state holds exactly the delta-bucket's rows
     val deltaBucket = spark.range(1)
       .select(pmod(hash(lit(5L)), lit(n)).cast("long")).head().getLong(0)
@@ -416,14 +417,14 @@ class IncrementalViewSpec extends SparkSpec {
     val pruned = IncrementalView.regroupSide(spark, root, cur,
       Seq("g"), touched, Seq("fk", "g", "x"))
     val all = SnapshotLog.snapshot(spark, root, cur).files
-    assert(pruned.inputFiles.nonEmpty && pruned.inputFiles.length < all.size,
-      s"regroup not pruned: ${pruned.inputFiles.length} of ${all.size}")
+    val prunedFiles = plannedFiles(pruned)
+    assert(prunedFiles.nonEmpty && prunedFiles.length < all.size,
+      s"regroup not pruned: ${prunedFiles.length} of ${all.size}")
     // THE STRONG FORM: delete every file outside the touched bucket —
     // the regroup must still answer, proving those were never planned
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val plannedNames = pruned.inputFiles.map(p =>
-      p.substring(p.lastIndexOf("/data/") + 1)).toSet
+    val plannedNames = prunedFiles.toSet
     all.map(_.path).filterNot(plannedNames)
       .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(s"$root/$p"), false))
     val got = IncrementalView.regroupSide(spark, root, cur,

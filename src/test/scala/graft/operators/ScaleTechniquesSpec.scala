@@ -16,7 +16,8 @@ class ScaleTechniquesSpec extends SparkSpec {
   test("salted two-phase aggregation equals the direct groupBy exactly") {
     val direct = events.groupBy(col("user_id").as("_key"))
       .agg(count(lit(1)).as("n"))
-    val salted = ScaleTechniques.saltedCount(events, col("user_id"), saltBuckets = 8)
+    val salted = ScaleTechniques.saltedAgg(events, col("user_id"), 8,
+      Seq((count(lit(1)), (c: String) => sum(col(c)), "n")))
     assert(rowSet(salted) === rowSet(direct))
   }
 

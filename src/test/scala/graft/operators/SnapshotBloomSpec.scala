@@ -111,4 +111,65 @@ class SnapshotBloomSpec extends SparkSpec {
     assert(SnapshotLog.read(spark, root).count() === 20060L)
     assert(SnapshotLog.optimizeBinPack(spark, root, smallBytes = thresh) === id)
   }
+
+  test("binpack sizes files from the manifest; an entry without a recorded size is stat'ed") {
+    val root = newRoot()
+    SnapshotLog.append(spark, root,
+      spark.range(0, 20000).select(col("id").as("k")).coalesce(1))
+    (0 until 6).foreach(i =>
+      SnapshotLog.append(spark, root,
+        spark.range(100000L + i * 10, 100000L + i * 10 + 10)
+          .select(col("id").as("k")).coalesce(1)))
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files = SnapshotLog.resolve(spark, root).files
+    val bigPath = SnapshotLog.snapshot(spark, root, 1L).files.head.path
+    val small = files.map(_.path).filterNot(_ == bigPath).sorted
+    // rewrite the head's recorded sizes: `bytes` is the sixth field of
+    // a file line, 0 = a legacy entry that recorded none
+    def setBytes(sizes: Map[String, Long]): Unit = {
+      def text(p: Path): String = {
+        val in = fs.open(p)
+        try new String(in.readAllBytes(), "UTF-8") finally in.close()
+      }
+      def put(p: Path, t: String): Unit = {
+        val out = fs.create(p, true)
+        try out.write(t.getBytes("UTF-8")) finally out.close()
+      }
+      val mp = SnapshotLog.manifestPath(root, SnapshotLog.currentId(spark, root))
+      val raw = SnapshotLog.parseManifest(text(mp))
+      raw.refs.foreach { r =>
+        val lp = new Path(s"$root/${r.path}")
+        put(lp, text(lp).split("\n", -1).map { l =>
+          val f = l.split('\t')
+          sizes.get(f(0)).foreach(b => f(5) = b.toString)
+          if (l.isEmpty) l else f.mkString("\t")
+        }.mkString("\n"))
+      }
+      put(mp, SnapshotLog.manifestText(raw.copy(inline = raw.inline.map(f =>
+        sizes.get(f.path).map(b => f.copy(bytes = b)).getOrElse(f)))))
+    }
+    val thresh = fs.getFileStatus(new Path(s"$root/$bigPath")).getLen / 2
+    // the big file and one small file recorded no size: both are stat'ed
+    // and the selection is the one true sizes give — the six small files
+    setBytes(Map(bigPath -> 0L, small.head -> 0L))
+    val base = SnapshotLog.currentId(spark, root)
+    val id = SnapshotLog.optimizeBinPack(spark, root, smallBytes = thresh)
+    val after = SnapshotLog.snapshot(spark, root, id).files.map(_.path)
+    assert(after.size === 2 && after.contains(bigPath), after)
+    assert(SnapshotLog.changes(spark, root, base, id).isEmpty)
+    // a recorded size is believed: a small file recorded as large is
+    // carried, not packed
+    SnapshotLog.append(spark, root,
+      spark.range(200000L, 200010L).select(col("id").as("k")).coalesce(1))
+    SnapshotLog.append(spark, root,
+      spark.range(300000L, 300010L).select(col("id").as("k")).coalesce(1))
+    val cur = SnapshotLog.resolve(spark, root).files.map(_.path)
+    val fresh = cur.filterNot(after.contains).sorted
+    setBytes(Map(fresh.head -> (thresh * 4)))
+    val id2 = SnapshotLog.optimizeBinPack(spark, root, smallBytes = thresh)
+    val after2 = SnapshotLog.snapshot(spark, root, id2).files.map(_.path)
+    assert(after2.contains(fresh.head) && after2.contains(bigPath) &&
+      after2.size === 3, after2)
+    assert(SnapshotLog.read(spark, root).count() === 20080L)
+  }
 }

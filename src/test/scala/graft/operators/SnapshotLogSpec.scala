@@ -274,20 +274,20 @@ class SnapshotLogSpec extends SparkSpec {
 
     // narrow band plans exactly the one overlapping file
     val mid = SnapshotLog.readRange(spark, root, "k", Some("12"), Some("15"))
-    assert(mid.inputFiles.length === 1)
+    assert(plannedFiles(mid).length === 1)
     assert(mid.count() === 0) // band 12..15 has no rows, but file 11..20 overlaps
     val hit = SnapshotLog.readRange(spark, root, "k", Some("11"), Some("20"))
-    assert(hit.inputFiles.length === 1)
+    assert(plannedFiles(hit).length === 1)
     assert(rowSet(hit) === rowSet(Seq((11, "c"), (20, "d")).toDF("k", "v")))
     // string column prunes lexically
     val sv = SnapshotLog.readRange(spark, root, "v", Some("e"), None)
-    assert(sv.inputFiles.length === 1)
+    assert(plannedFiles(sv).length === 1)
     assert(rowSet(sv) === rowSet(Seq((21, "e"), (30, "f")).toDF("k", "v")))
     // unbounded read keeps everything; residual filter still correct
     assert(SnapshotLog.readRange(spark, root, "k", None, None).count() === 6)
     // no overlap at all → zero files, empty frame with the right schema
     val none = SnapshotLog.readRange(spark, root, "k", Some("99"), None)
-    assert(none.inputFiles.isEmpty && none.isEmpty)
+    assert(plannedFiles(none).isEmpty && none.isEmpty)
     assert(none.schema.fieldNames.toSeq === Seq("k", "v"))
   }
 
@@ -305,8 +305,8 @@ class SnapshotLogSpec extends SparkSpec {
     val re = SnapshotLog.snapshot(spark, root, 1L)
     assert(re.files.head.stats.isEmpty)
     // stats-less file is conservatively kept even for a non-overlapping band
-    assert(SnapshotLog.readRange(spark, root, "k", Some("99"), None)
-      .inputFiles.length === 1)
+    assert(plannedFiles(SnapshotLog.readRange(spark, root, "k", Some("99"), None))
+      .length === 1)
   }
 
   test("optimize clusters into disjoint stat bands with a zero-change commit") {
@@ -318,8 +318,8 @@ class SnapshotLogSpec extends SparkSpec {
         (i until 40 by 4).map(k => (k, s"v$k")).toDF("k", "v").coalesce(1))
     }
     val pre = SnapshotLog.currentId(spark, root)
-    assert(SnapshotLog.readRange(spark, root, "k", Some("10"), Some("12"))
-      .inputFiles.length === 4)
+    assert(plannedFiles(SnapshotLog.readRange(spark, root, "k", Some("10"), Some("12")))
+      .length === 4)
 
     val post = SnapshotLog.optimize(spark, root, clusterBy = "k", numFiles = 4)
     val snap = SnapshotLog.snapshot(spark, root, post)
@@ -335,8 +335,8 @@ class SnapshotLogSpec extends SparkSpec {
       case _ =>
     }
     // ...so the same narrow read now plans exactly one file
-    assert(SnapshotLog.readRange(spark, root, "k", Some("10"), Some("12"))
-      .inputFiles.length === 1)
+    assert(plannedFiles(SnapshotLog.readRange(spark, root, "k", Some("10"), Some("12")))
+      .length === 1)
     // pre-optimize snapshot still time-travels to the old layout
     assert(SnapshotLog.read(spark, root, asOf = pre).count() === 40)
   }

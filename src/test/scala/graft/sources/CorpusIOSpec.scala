@@ -1,29 +1,13 @@
 package graft.sources
 
-import graft.{SparkSpec, TestSpark}
+import graft.SparkSpec
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
-/** Round-trip fidelity + scan-level behavior for the corpus formats:
-  * ORC carries pushed filters like parquet, JSONL round-trips nested
-  * structures under a declared schema, and the ingestion step produces a
-  * partition-pruned lake layout.
+/** Round-trip fidelity for the corpus format: JSONL round-trips nested
+  * structures under a declared schema.
   */
 class CorpusIOSpec extends SparkSpec {
-
-  private def docs = graft.Tables(spark, TestSpark.Sf0001, "documents")
-
-  test("ORC round-trip is lossless and pushes filters into the scan") {
-    val dir = Files.createTempDirectory("orc").toString + "/docs"
-    CorpusIO.writeOrc(docs, dir)
-    val back = CorpusIO.readOrc(spark, dir, docs.schema)
-    assert(rowSet(back) === rowSet(docs))
-
-    val plan = back.filter(col("n_chars") > 400).select("doc_id")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(n_chars), GreaterThan(n_chars,400)"),
-      plan.take(600))
-  }
 
   test("JSONL round-trips nested array<struct> under a declared schema") {
     import spark.implicits._
@@ -38,18 +22,5 @@ class CorpusIOSpec extends SparkSpec {
     CorpusIO.writeJsonl(nested, dir)
     val back = CorpusIO.readJsonl(spark, dir, nested.schema)
     assert(rowSet(back) === rowSet(nested))
-  }
-
-  test("ingestJsonl lands a partitioned lake layout that prunes at the scan") {
-    val root = Files.createTempDirectory("ingest").toString
-    CorpusIO.writeJsonl(docs, s"$root/landing")
-    val lake = CorpusIO.ingestJsonl(
-      spark, s"$root/landing", docs.schema, s"$root/lake", Seq("lang"))
-    // lossless modulo partition-column position
-    assert(rowSet(lake.select(docs.columns.map(col): _*)) === rowSet(docs))
-    // a lang predicate prunes partitions instead of filtering rows
-    val plan = lake.filter(col("lang") === "en")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(lang"), plan.take(600))
   }
 }

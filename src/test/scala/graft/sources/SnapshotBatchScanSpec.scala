@@ -33,6 +33,32 @@ class SnapshotBatchScanSpec extends SparkSpec {
     root
   }
 
+  test("input_file_name() names each row's file on the columnar and row paths") {
+    val root = freshLog("ifn")
+    // rows per manifest-relative file; the three files pack into ONE
+    // task, so the holder must move per file
+    def perFile(df: org.apache.spark.sql.DataFrame): Map[String, Long] =
+      df.collect().map { r =>
+        val f = r.getString(0)
+        f.substring(f.lastIndexOf("/data/") + 1) -> r.getLong(1)
+      }.toMap
+    val q = s"SELECT input_file_name(), count(*) FROM $cat.`$root` GROUP BY 1"
+    val files = SnapshotLog.snapshot(spark, root, 3L).files
+    val byFile = files.map(f => f.path -> f.rows).toMap
+    // clean identity scan: vectorized
+    assert(spark.sql(s"SELECT input_file_name(), k FROM $cat.`$root`")
+      .queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(perFile(spark.sql(q)) === byFile)
+    // a delete vector puts the dirty file on the row path
+    SnapshotLog.deleteWhereMoR(spark, root, col("k") === 105L)
+    val dirty = files.find(_.stats("k")._1 == "101").get.path
+    val live = byFile.updated(dirty, byFile(dirty) - 1)
+    assert(perFile(spark.sql(q)) === live)
+    // the library read answers the same
+    assert(perFile(SnapshotLog.read(spark, root)
+      .groupBy(org.apache.spark.sql.functions.input_file_name()).count()) === live)
+  }
+
   test("batch scan plans manifest-sized partitions and matches the library read") {
     val root = freshLog("basic")
     val df = spark.sql(s"SELECT * FROM $cat.`$root`")
