@@ -982,7 +982,7 @@ object SnapshotLog {
     * delete form, the one positional vectors cannot give you: the
     * commit records only the KEY SET (a parquet dir of distinct key
     * rows), never a (file, position) coordinate, so the write needs NO
-    * table scan at all. Readers anti-join the keys against exactly the
+    * table scan at all. Readers drop key matches from exactly the
     * files committed BEFORE the delete (`fileSnap < seq` — Iceberg's
     * sequence-number rule), so rows appended later with the same keys
     * are untouched. `keyIds` maps the key columns' PHYSICAL names at
@@ -1031,7 +1031,7 @@ object SnapshotLog {
   /** The equality deletes applicable to a data file: those whose
     * sequence is AFTER the file's commit.
     */
-  private def applicableEqs(eqs: Seq[EqRef], f: FileEntry): Seq[EqRef] = {
+  private[graft] def applicableEqs(eqs: Seq[EqRef], f: FileEntry): Seq[EqRef] = {
     if (eqs.isEmpty) return eqs
     val s = fileSeq(f)
     eqs.filter(e => s < e.seq)
@@ -1755,8 +1755,9 @@ object SnapshotLog {
     def id: Long = raw.id
     def spec: Seq[PartField] = raw.spec
     def sortOrder: Seq[SortField] = raw.sortOrder
-    /** Outstanding EQUALITY deletes — the state a per-file scan cannot
-      * serve (their sequence-rule anti-join is not a per-file test).
+    /** Outstanding EQUALITY deletes — the state manifest row counts
+      * cannot see (a key set records no kill count), so metadata-only
+      * answers refuse while it holds.
       */
     def eqOutstanding: Boolean = raw.eqRefs.nonEmpty
     /** Live file count from the manifest's per-list subtotals — never
@@ -1898,12 +1899,13 @@ object SnapshotLog {
     */
   def read(spark: SparkSession, root: String, asOf: Long = 0L): DataFrame = {
     val snap = resolve(spark, root, asOf)
-    dvRead(spark, snap, snap.files)
+    scanFiles(spark, snap, snap.files)
   }
 
   /** The one read of snapshot data files: `files` under `snap`'s
     * schema, minus the rows the positional delete vectors `dv` mark
-    * dead (None = the snapshot's own). Columns resolve by FIELD ID:
+    * dead and the rows the equality deletes `eqs` kill (None = the
+    * snapshot's own). Columns resolve by FIELD ID:
     * each file's recorded name→id map projects its physical columns
     * onto the current names, so files written before a [[renameColumn]]
     * keep reading correctly and a dropped-then-readded name never
@@ -1913,13 +1915,14 @@ object SnapshotLog {
     * [[graft.sources.SnapshotBatchScan]], the scan SQL reads plan: no
     * filesystem call per file on the driver, pushed conjuncts prune
     * files by their manifest bands, and each file's reader drops its
-    * dead positions executor-side. With `withPos` the frame adds
+    * dead positions and the rows its [[applicableEqs]] key sets hold,
+    * executor-side. With `withPos` the frame adds
     * `__path` (the file's manifest-relative path) and `__pos` (the
     * row's position in it) — the coordinates delete vectors address.
-    * Equality deletes are joins above it ([[morApply]]).
     */
   private[graft] def scanFiles(spark: SparkSession, snap: Resolved,
       files: Seq[FileEntry], dv: Option[Map[String, Seq[DeleteEntry]]] = None,
+      eqs: Option[Seq[EqRef]] = None,
       withPos: Boolean = false): DataFrame = {
     // the coordinate names are reserved — fail with the real
     // constraint, not an AMBIGUOUS_REFERENCE deep in the scan
@@ -1928,18 +1931,25 @@ object SnapshotLog {
       s"column name $n is reserved by merge-on-read reads"))
     val plan = CatalogBatchPlan(snap, files,
       dv.fold(snap.dvByTarget)(dvDirsOf), dv.fold(snap.dvKills)(dvKillsOf),
-      files.size, whole = false)
+      eqs.getOrElse(snap.raw.eqRefs), files.size, whole = false)
     org.apache.spark.sql.graft.DmlBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
         new graft.sources.SnapshotFilesTable(plan, withPos), None, None))
   }
 
-  /** Read `files` of `snap` with its delete vectors and equality
-    * deletes applied ([[morApply]]); the V1 SQL fallback's reader too.
+  /** An equality delete's key columns as (physical name in its key
+    * files, current column name), in field-id order — resolved by
+    * FIELD ID, so renames since the delete never detach it.
     */
-  private[graft] def dvRead(spark: SparkSession, snap: Resolved,
-      files: Seq[FileEntry]): DataFrame =
-    morApply(spark, snap, files, None, snap.raw.eqRefs)
+  private[graft] def eqKeyCols(e: EqRef,
+      curIds: Map[String, Int]): Seq[(String, String)] = {
+    val idToCur = curIds.map(_.swap)
+    e.keyIds.toSeq.sortBy(_._2).map { case (phys, id) =>
+      (phys, idToCur.getOrElse(id, throw new IllegalStateException(
+        s"equality delete ${e.dir} keys on dropped field id $id; " +
+          "rewriteEqualityDeletes before dropping its column")))
+    }
+  }
 
   /** Join `df` (table rows under the current schema) against ONE
     * equality delete's key set: anti = survivors, semi = the rows it
@@ -1956,12 +1966,7 @@ object SnapshotLog {
   private def eqJoin(spark: SparkSession, root: String, df: DataFrame,
       e: EqRef, schema: StructType, curIds: Map[String, Int],
       joinType: String): DataFrame = {
-    val idToCur = curIds.map(_.swap)
-    val cols = e.keyIds.toSeq.sortBy(_._2).map { case (phys, id) =>
-      (phys, idToCur.getOrElse(id, throw new IllegalStateException(
-        s"equality delete ${e.dir} keys on dropped field id $id; " +
-          "rewriteEqualityDeletes before dropping its column")))
-    }
+    val cols = eqKeyCols(e, curIds)
     val keys = spark.read.parquet(s"$root/${e.dir}")
       .select(cols.map { case (phys, cur) =>
         col(phys).cast(schema(cur).dataType).as(s"__eq_$cur") }: _*)
@@ -1971,20 +1976,12 @@ object SnapshotLog {
     df.join(build, cond, joinType)
   }
 
-  /** Survivors of `df` under every delete in `eqs` — sequential
-    * anti-joins (each exact; order is irrelevant for anti).
-    */
-  private def applyEqs(spark: SparkSession, root: String, df: DataFrame,
-      eqs: Seq[EqRef], schema: StructType,
-      curIds: Map[String, Int]): DataFrame =
-    eqs.foldLeft(df)((d, e) => eqJoin(spark, root, d, e, schema, curIds,
-      "left_anti"))
-
   /** The rows of `df` at least one delete in `eqs` kills — peeled
     * sequentially (semi of the remaining-live rows per delete), so a
     * row matching two key sets surfaces exactly ONCE: the exact
     * multiset [[changes]]' deltas and [[rewriteEqualityDeletes]]'
-    * coordinates both need.
+    * coordinates both need. `df` must not have these key sets applied
+    * already (scan it with an explicit eq list).
     */
   private def peelMatches(spark: SparkSession, root: String, df: DataFrame,
       eqs: Seq[EqRef], schema: StructType,
@@ -1994,23 +1991,6 @@ object SnapshotLog {
         acc.unionByName(eqJoin(spark, root, live, e, schema, curIds,
           "left_semi")))
     }._2
-
-  /** The full merge-on-read row-level view: [[scanFiles]] (positional
-    * vectors `dv`, None = the snapshot's own) plus the equality deletes
-    * `eqs`, grouped by each file's APPLICABLE delete set (the sequence
-    * rule) so a file appended after a delete never pays its anti-join
-    * — and a table with no equality deletes is the bare scan.
-    */
-  private def morApply(spark: SparkSession, snap: Resolved,
-      files: Seq[FileEntry], dv: Option[Map[String, Seq[DeleteEntry]]],
-      eqs: Seq[EqRef], withPos: Boolean = false): DataFrame =
-    if (eqs.isEmpty || files.isEmpty) scanFiles(spark, snap, files, dv, withPos)
-    else files.groupBy(f => applicableEqs(eqs, f).map(_.dir))
-      .toSeq.sortBy(_._2.head.path)
-      .map { case (dirs, group) =>
-        applyEqs(spark, snap.root, scanFiles(spark, snap, group, dv, withPos),
-          eqs.filter(e => dirs.contains(e.dir)), snap.schema, snap.curIds)
-      }.reduce(_ unionByName _)
 
   /** The PHYSICAL name under which file `f` recorded data/stats for
     * current column `cur` — the file's own name for cur's field id
@@ -2225,7 +2205,7 @@ object SnapshotLog {
     require(preds.nonEmpty, "boxFiles needs at least one predicate")
     val snap = resolve(spark, root, asOf)
     requireColumns(snap, preds.map(_._1))
-    val base = dvRead(spark, snap, boxFiles(snap, preds))
+    val base = scanFiles(spark, snap, boxFiles(snap, preds))
     preds.foldLeft(base) { case (df, (column, lower, upper)) =>
       val dt = snap.schema(column).dataType
       val c = col(column)
@@ -2760,7 +2740,7 @@ object SnapshotLog {
 
   // ---- DSv2 catalog support: the SQL front door (graft.sources
   // .SnapshotCatalog) resolves each table and scan to one [[Resolved]]
-  // snapshot, prunes through [[boxFiles]] and reads through [[dvRead]]
+  // snapshot, prunes through [[boxFiles]] and reads through [[scanFiles]]
   // — the library reads' own pruner and MoR resolution, so the catalog
   // path and the library API can never diverge. ----
 
@@ -2802,20 +2782,22 @@ object SnapshotLog {
   /** A V2 batch scan's plan: the resolved snapshot it reads (schema,
     * field ids, spec, sort order, column meta), the files its pushed
     * conjuncts kept ([[boxFiles]]), the delete vectors that apply to
-    * them (per target: DV dirs and recorded kill count), and how many
-    * files the scan started from. `whole` = it started from the
-    * snapshot's live set, so the table-level column meta describes an
-    * unpruned `kept`.
+    * them (per target: DV dirs and recorded kill count), the equality
+    * deletes in force (each applies to a file by [[applicableEqs]]),
+    * and how many files the scan started from. `whole` = it started
+    * from the snapshot's live set, so the table-level column meta
+    * describes an unpruned `kept`.
     */
   private[graft] final case class CatalogBatchPlan(snap: Resolved,
       kept: Seq[FileEntry], dvByTarget: Map[String, Seq[String]],
-      dvKills: Map[String, Long], totalFiles: Int, whole: Boolean)
+      dvKills: Map[String, Long], eqs: Seq[EqRef], totalFiles: Int,
+      whole: Boolean)
 
   private[graft] object CatalogBatchPlan {
     /** A catalog scan's plan: the snapshot's own live set and deletes. */
     def apply(snap: Resolved, kept: Seq[FileEntry]): CatalogBatchPlan =
       CatalogBatchPlan(snap, kept, snap.dvByTarget, snap.dvKills,
-        snap.totalFiles, whole = true)
+        snap.raw.eqRefs, snap.totalFiles, whole = true)
   }
 
   /** Snapshot `id`'s parent id — header bytes only. The default
@@ -3036,7 +3018,7 @@ object SnapshotLog {
     val snap = resolve(spark, root, asOf)
     requireColumns(snap, Seq(column))
     val v = value.toString
-    dvRead(spark, snap, boxFiles(snap, Seq((column, Some(v), Some(v)))))
+    scanFiles(spark, snap, boxFiles(snap, Seq((column, Some(v), Some(v)))))
       .filter(col(column) === lit(value).cast(snap.schema(column).dataType))
   }
 
@@ -3056,7 +3038,7 @@ object SnapshotLog {
     val base =
       if (buckets.isEmpty)
         spark.createDataFrame(spark.sparkContext.emptyRDD[Row], snap.schema)
-      else dvRead(spark, snap, kept)
+      else scanFiles(spark, snap, kept)
     base.filter(bucketExpr(column, numBuckets).isin(buckets.toSeq: _*))
   }
 
@@ -3189,7 +3171,7 @@ object SnapshotLog {
       keys: DataFrame, asOf: Long = 0L): DataFrame = {
     val snap = resolve(spark, root, asOf)
     val (kept, byLayout) = keyFilesOf(snap, column, keys)
-    val base = dvRead(spark, snap, kept)
+    val base = scanFiles(spark, snap, kept)
     byLayout.toSeq.sortBy(_._1).foldLeft(base) { case (d, (n, set)) =>
       d.filter(bucketExpr(column, n).isin(set.toSeq: _*))
     }
@@ -3544,7 +3526,7 @@ object SnapshotLog {
     */
   private def livePosRead(spark: SparkSession, snap: Resolved,
       files: Seq[FileEntry]): DataFrame =
-    morApply(spark, snap, files, None, snap.raw.eqRefs, withPos = true)
+    scanFiles(spark, snap, files, withPos = true)
 
   /** Write `hits` (t_path, t_pos) as snapshot `next`'s DV parquet dir
     * plus its delete list; None (dir reclaimed) when nothing matched.
@@ -3575,8 +3557,8 @@ object SnapshotLog {
     * file read, NO coordinates — where [[deleteWhereMoR]] still pays
     * one discovery scan to locate positions, this writes O(keys) bytes
     * total, which is what lets a streaming CDC ingest retract keys at
-    * write cost independent of table size. Readers anti-join the keys
-    * against exactly the files committed BEFORE this delete
+    * write cost independent of table size. Readers drop key matches
+    * from exactly the files committed BEFORE this delete
     * ([[applicableEqs]] — the sequence rule), so re-inserting a deleted
     * key later works: the new row's file postdates the delete.
     *
@@ -3586,7 +3568,7 @@ object SnapshotLog {
     * The trade: while key sets are outstanding, the manifest's row
     * count is an upper bound (the scan-free write cannot know its kill
     * count), partial CoW rewrites are locked out, and every read of
-    * pre-delete files pays the anti-join — [[rewriteEqualityDeletes]]
+    * pre-delete files pays a key-set lookup per row — [[rewriteEqualityDeletes]]
     * converts the keys to positional vectors (re-exacting the count),
     * and [[rewriteDeletes]] folds those into data files, restoring the
     * clean-table fast path. A key frame matching the no-key case
@@ -3638,7 +3620,7 @@ object SnapshotLog {
     * pays the discovery scan to find positions, this writes O(source)
     * bytes total, which is what lets a CDC stream upsert at a cost
     * independent of table size, every checkpoint. The read-side price
-    * is the outstanding key set's anti-join until
+    * is the outstanding key set's per-row lookup until
     * [[rewriteEqualityDeletes]] + [[rewriteDeletes]] compact it away.
     *
     * Semantics match [[mergeInto]] (WHEN MATCHED replace with the
@@ -3832,8 +3814,8 @@ object SnapshotLog {
     * scan only the files the key sets apply to (positional vectors
     * applied), locate the matching rows' coordinates, and commit a DV
     * that replaces the key refs. The row count becomes EXACT again
-    * (the conversion finally knows the kill count), per-read anti-joins
-    * collapse to the per-file position check of [[scanFiles]], and
+    * (the conversion finally knows the kill count), per-read key-set
+    * loads collapse to the per-file position check of [[scanFiles]], and
     * [[rewriteDeletes]] can then fold everything back into data files.
     * Work is O(applicable files + matching rows) — the scan the delete
     * deferred, paid once here instead of per read — and on a
@@ -3932,7 +3914,10 @@ object SnapshotLog {
             .filter(e => keeps(f, e)).map(_.dir))
           .toSeq.sortBy(_._2.head.path)
           .map { case (dirs, group) =>
-            peelMatches(spark, root, scanFiles(spark, head, group, withPos = true),
+            // the scan keeps the rows the key sets kill: peeling
+            // needs them
+            peelMatches(spark, root, scanFiles(spark, head, group,
+              eqs = Some(Seq.empty), withPos = true),
               raw.eqRefs.filter(e => dirs.contains(e.dir)),
               head.schema, head.curIds)
               .select(col("__path").as("t_path"), col("__pos").as("t_pos"))
@@ -5320,7 +5305,7 @@ object SnapshotLog {
     val eqTo = to.raw.eqRefs
     def sideRows(files: Seq[FileEntry], dv: Map[String, Seq[DeleteEntry]],
         eqs: Seq[EqRef]): DataFrame =
-      morApply(spark, to, files.sortBy(_.path), Some(dv), eqs)
+      scanFiles(spark, to, files.sortBy(_.path), Some(dv), Some(eqs))
     val addedFiles = to.files.filter(f => !fromPaths(f.path))
     val removedFiles = fromFiles.filter(f => !toPaths(f.path))
     val added = sideRows(addedFiles, toDv, eqTo)
@@ -5379,7 +5364,7 @@ object SnapshotLog {
         .groupBy(f => applicableEqs(changed, f).map(_.dir))
         .toSeq.sortBy(_._2.head.path)
         .map { case (dirs, group) =>
-          val live = morApply(spark, to, group, Some(bothDv), sideEqs)
+          val live = scanFiles(spark, to, group, Some(bothDv), Some(sideEqs))
           peelMatches(spark, root, live,
             changed.filter(e => dirs.contains(e.dir)), schema, toIds)
             .withColumn("change", lit(tag))
@@ -5443,22 +5428,18 @@ object SnapshotLog {
     // exactly the key-set-dead coordinates, and this filter is what
     // makes rewriteEqualityDeletes read-invariant under changes())
     def rowsAt(posDelta: DataFrame, tag: String,
-        sideEqs: Seq[EqRef]): DataFrame =
-      to.files.filter(f => targetSet(f.path))
-        .groupBy(f => applicableEqs(sideEqs, f).map(_.dir))
-        .toSeq.sortBy(_._2.head.path)
-        .map { case (dirs, group) =>
-          // the coordinates of every row, dead or alive on either side
-          val pr = scanFiles(spark, to, group.sortBy(_.path), Some(Map.empty),
-            withPos = true)
-          val hit = pr.join(sized(posDelta),
-            pr("__path") === posDelta("t_path") &&
-              pr("__pos") === posDelta("t_pos"), "left_semi")
-          applyEqs(spark, root, hit,
-            sideEqs.filter(e => dirs.contains(e.dir)), schema, toIds)
-            .drop("__path", "__pos")
-        }.reduce(_ unionByName _)
+        sideEqs: Seq[EqRef]): DataFrame = {
+      // the coordinates of every row positionally dead or alive on
+      // either side, minus the rows the side's key sets kill
+      val pr = scanFiles(spark, to,
+        to.files.filter(f => targetSet(f.path)).sortBy(_.path),
+        Some(Map.empty), Some(sideEqs), withPos = true)
+      pr.join(sized(posDelta),
+          pr("__path") === posDelta("t_path") &&
+            pr("__pos") === posDelta("t_pos"), "left_semi")
+        .drop("__path", "__pos")
         .withColumn("change", lit(tag))
+    }
     val withDel =
       if (!mayDel) fileDiff
       else fileDiff.unionByName(
@@ -5523,8 +5504,9 @@ object SnapshotLog {
     val at =
       if (schemaAt > 0L && schemaAt != id) resolve(spark, root, schemaAt)
       else snap
-    // an append-class commit's own files, without later vectors
-    scanFiles(spark, at, files.sortBy(_.path), Some(Map.empty))
+    // an append-class commit's own files, without later vectors or
+    // key sets
+    scanFiles(spark, at, files.sortBy(_.path), Some(Map.empty), Some(Seq.empty))
   }
 
   def changelog(spark: SparkSession, root: String, fromId: Long = 0L,
@@ -5558,7 +5540,7 @@ object SnapshotLog {
     // columns in cross-commit diffs
     val head = resolve(spark, root)
     commitFiles(spark, root, Some(head),
-      dvRead(spark, head, head.files).repartitionByRange(numFiles, col(clusterBy)),
+      scanFiles(spark, head, head.files).repartitionByRange(numFiles, col(clusterBy)),
       "optimize", Seq.empty, Seq.empty)
   }
 
@@ -5579,7 +5561,7 @@ object SnapshotLog {
     require(numBuckets >= 1, "numBuckets must be >= 1")
     // same id carry-through as optimize
     val head = resolve(spark, root)
-    commitFiles(spark, root, Some(head), dvRead(spark, head, head.files)
+    commitFiles(spark, root, Some(head), scanFiles(spark, head, head.files)
       .repartitionByRange(numBuckets, bucketExpr(bucketBy, numBuckets)),
       "optimize-bucket", Seq.empty, Seq.empty,
       derivedStats = bucketDerived(bucketBy, numBuckets))
@@ -5603,7 +5585,7 @@ object SnapshotLog {
         "(CREATE TABLE … PARTITIONED BY, or declareSpec on append)")
     val exprs = routed.map(f => partExpr(f, schema(f.column).dataType))
     commitFiles(spark, root, Some(head),
-      dvRead(spark, head, head.files).repartitionByRange(exprs: _*),
+      scanFiles(spark, head, head.files).repartitionByRange(exprs: _*),
       "optimize-partitioned", Seq.empty, Seq.empty,
       derivedStats = routed.map(f =>
         partStatName(f) -> partExpr(f, schema(f.column).dataType)),
@@ -5642,7 +5624,7 @@ object SnapshotLog {
     require(numFiles >= 1, "numFiles must be >= 1")
     val head = resolve(spark, root)
     val clustered = LakeMaintenance
-      .withZ(dvRead(spark, head, head.files), colA, colB, "_z")
+      .withZ(scanFiles(spark, head, head.files), colA, colB, "_z")
       .repartitionByRange(numFiles, col("_z"))
       .sortWithinPartitions("_z")
       .drop("_z")
@@ -5683,7 +5665,7 @@ object SnapshotLog {
     require(so.forall(f => schema.fieldNames.contains(f.column)),
       s"declared sort order of $root references a column the current " +
         "schema no longer carries")
-    val cur = dvRead(spark, head, head.files)
+    val cur = scanFiles(spark, head, head.files)
     val routed = head.spec.filter(f => schema.fieldNames.contains(f.column))
     if (routed.nonEmpty) {
       val exprs = routed.map(f => partExpr(f, schema(f.column).dataType))
@@ -5976,7 +5958,7 @@ object SnapshotLog {
   def readBranch(spark: SparkSession, root: String, name: String): DataFrame = {
     val snap = resolve(spark, root,
       branch = Some((name, branchPin(spark, root, name))))
-    dvRead(spark, snap, snap.files)
+    scanFiles(spark, snap, snap.files)
   }
 
   /** Publish the branch onto main — allowed only while main's head IS

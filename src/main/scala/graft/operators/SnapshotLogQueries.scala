@@ -839,7 +839,8 @@ object SnapshotLogQueries {
     * kills only keys ≡ 0 (mod 6) (the evens it predates — re-inserted
     * odd multiples of 3 survive), the second kills 'P' rows in BOTH
     * eras. Two outstanding sets with different key columns also pin
-    * the per-era grouping in [[SnapshotLog.morApply]].
+    * the per-file key-set application in the batch scan's readers:
+    * each era's files test exactly the sets that postdate them.
     */
   private val eqLog = log("tteq")(seedEqScenario)
 

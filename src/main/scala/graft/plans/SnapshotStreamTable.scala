@@ -15,8 +15,8 @@ import graft.sources.SnapshotTableV2
   * accepts the streaming relation; this rule then substitutes the V1
   * [[graft.sources.SnapshotChangeProvider]] source for the V2 relation
   * (Delta's exact fallback move): the snapshot-log stream's
-  * micro-batches are whole QUERY PLANS — snapshot scans, equality
-  * -delete anti-joins — which only the V1 `Source.getBatch` API can return, so
+  * micro-batches are whole QUERY PLANS — snapshot scans, changelog
+  * joins — which only the V1 `Source.getBatch` API can return, so
   * a genuine V2 `PartitionReader` door would force row-by-row
   * re-implementation of the MoR read. The substituted relation keeps
   * the V2 node's output attribute ids (a projection re-aliases), so

@@ -5,27 +5,17 @@ import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, JoinedRow, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, Statistics, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.execution.datasources.PartitionedFile
 import org.apache.spark.sql.graft.ParquetReadBridge
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
 import graft.operators.SnapshotLog
-
-/** What a spec (and `description()`) reads off a planned catalog scan,
-  * V1 or V2: the table and the file-pruning outcome.
-  */
-trait SnapshotScanLike {
-  def root: String
-  def keptFiles: Seq[SnapshotLog.FileEntry]
-  def totalFiles: Int
-  def readSchema(): StructType
-  def description(): String
-}
 
 /** The snapshot catalog's NATIVE DSv2 batch scan: one `InputPartition`
   * per live data file, read executor-side through the same
@@ -42,11 +32,13 @@ trait SnapshotScanLike {
   * Merge-on-read: a file with outstanding positional delete vectors
   * reads with the parquet row-index column appended; its reader first
   * loads the file's OWN DV rows (pushed `t_path` filter — executor
-  * side, never through the driver) and skips dead positions — the one
-  * place positional deletes are applied. Equality deletes are joins
-  * above the scan: a library read adds them itself, and a SQL read of
-  * a snapshot with outstanding ones plans the V1 fallback
-  * ([[SnapshotScanBuilder.build]]), which reads through the library.
+  * side, never through the driver) and skips dead positions. A file
+  * with applicable equality deletes (the plan's key sets whose
+  * sequence postdates it, `SnapshotLog.applicableEqs`) also reads
+  * their key columns; each task loads each applicable key set once
+  * into a hash set and drops the rows whose key it holds — null-safe,
+  * float keys normalized as Spark's join keys are. These readers
+  * are the one place either delete form is applied.
   *
   * Schema evolution: files group by their field-id physical
   * projection; each group reads under its own physical names and
@@ -65,8 +57,7 @@ class SnapshotBatchScan(required: StructType,
     extends Scan with Batch
     with SupportsRuntimeFiltering with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportOrdering
-    with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-    with SnapshotScanLike {
+    with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
 
   private val spark = SparkSession.active
   private val snap = plan0.snap
@@ -75,6 +66,10 @@ class SnapshotBatchScan(required: StructType,
   val tableSchema: StructType = snap.schema
   private val dvByTarget = plan0.dvByTarget
   private val dvKills = plan0.dvKills
+  private val eqs = plan0.eqs
+  /** Each equality delete's (physical, current) key columns. */
+  private lazy val eqCols: Map[SnapshotLog.EqRef, Seq[(String, String)]] =
+    eqs.map(e => e -> SnapshotLog.eqKeyCols(e, snap.curIds)).toMap
 
   @volatile private var kept: Seq[SnapshotLog.FileEntry] = plan0.kept
   @volatile private var runtimeDropped: Int = 0
@@ -433,16 +428,27 @@ class SnapshotBatchScan(required: StructType,
 
   // ---- partition planning ----
 
-  /** Per-file physical projection under the current field ids
-    * ([[SnapshotLog.physFieldIn]]): ids-less files (legacy) read
+  /** Per-file physical projection of `cols` under the current field
+    * ids ([[SnapshotLog.physFieldIn]]): ids-less files (legacy) read
     * by current name; stamped files resolve each current column — and
     * its NESTED struct names — to the physical field carrying the id,
     * None = absent (NULL).
     */
-  private def projectionOf(f: SnapshotLog.FileEntry)
+  private def projectionOf(f: SnapshotLog.FileEntry,
+      cols: Seq[StructField] = required.fields.toSeq)
       : Seq[Option[org.apache.spark.sql.types.StructField]] =
-    required.fields.toSeq.map(c =>
-      SnapshotLog.physFieldIn(f, c, snap.curIds))
+    cols.map(c => SnapshotLog.physFieldIn(f, c, snap.curIds))
+
+  /** The columns a file with applicable equality deletes `fEqs` reads:
+    * `required`, then the key columns the query pruned, under their
+    * current types — read for the key test, projected away after it.
+    */
+  private def readColsOf(fEqs: Seq[SnapshotLog.EqRef]): Seq[StructField] = {
+    val keyCols = fEqs.flatMap(e => eqCols(e).map(_._2)).distinct
+      .filterNot(required.fieldNames.contains)
+    required.fields.toSeq ++
+      keyCols.map(c => tableSchema(c).copy(nullable = true))
+  }
 
   private def isIdentity(
       proj: Seq[Option[org.apache.spark.sql.types.StructField]]): Boolean =
@@ -463,7 +469,8 @@ class SnapshotBatchScan(required: StructType,
     val files = kept
     coords.isEmpty &&
       !files.exists(f => dvByTarget.contains(f.path)) &&
-      files.groupBy(projectionOf).keys.forall(isIdentity) &&
+      !files.exists(f => SnapshotLog.applicableEqs(eqs, f).nonEmpty) &&
+      files.groupBy(projectionOf(_)).keys.forall(isIdentity) &&
       ParquetReadBridge.supportBatch(spark, required)
   }
 
@@ -491,16 +498,31 @@ class SnapshotBatchScan(required: StructType,
     */
   private def plan(files: Seq[SnapshotLog.FileEntry])
       : (Array[SnapshotGroupSpec], Array[InputPartition], Boolean) = {
-    val groups = files.groupBy(projectionOf).toSeq.sortBy(_._2.head.path)
+    // files group by their applicable equality deletes and their
+    // physical projection of the columns those make them read
+    val groups = files.groupBy { f =>
+      val fEqs = SnapshotLog.applicableEqs(eqs, f)
+      (fEqs, projectionOf(f, readColsOf(fEqs)))
+    }.toSeq.sortBy(_._2.head.path)
     val columnar = columnarMode
-    val groupSpecs = groups.map { case (proj, gFiles) =>
+    // one key-set reader per equality delete some kept file applies:
+    // the physical key names under each column's CURRENT type, so
+    // renamed and widened keys re-resolve as the data columns do
+    val eqSpecs = groups.flatMap(_._1._1).distinct.map { e =>
+      val keySchema = StructType(eqCols(e).map { case (phys, cur) =>
+        StructField(phys, tableSchema(cur).dataType) })
+      e -> SnapshotEqSpec(s"$root/${e.dir}", keySchema.fields.map(_.dataType),
+        ParquetReadBridge.reader(spark, keySchema, Seq.empty,
+          returningBatch = false))
+    }.toMap
+    val groupSpecs = groups.map { case ((fEqs, proj), gFiles) =>
+      val cols = readColsOf(fEqs)
       val present = proj.zipWithIndex.collect { case (Some(p), i) => (p, i) }
       val physFields = StructType(present.map { case (p, _) =>
         p.copy(nullable = true) })
-      val outMap: Array[Int] = {
-        val readIdx = present.map(_._2).zipWithIndex.toMap // requiredIdx -> readIdx
+      val readIdx = present.map(_._2).zipWithIndex.toMap // colIdx -> readIdx
+      val outMap: Array[Int] =
         required.fields.indices.map(i => readIdx.getOrElse(i, -1)).toArray
-      }
       val dirty = gFiles.exists(f => dvByTarget.contains(f.path))
       // the row index is read for dead-row checks and for `__pos`
       val hasPos = dirty || coords.nonEmpty
@@ -524,10 +546,17 @@ class SnapshotBatchScan(required: StructType,
         physFields, outMap, posIdx = physFields.length,
         // identity (reader rows ARE the output rows) requires the read
         // schema to be EXACTLY the required schema — a group that
-        // appended the row-index column must project it away even for
-        // its clean files, or their rows carry a phantom extra field
-        identity = isIdentity(proj) && outMap.forall(_ >= 0) && !hasPos,
-        hasPos = hasPos)
+        // appended the row-index column or key columns must project
+        // them away even for its clean files, or their rows carry
+        // phantom extra fields
+        identity = cols.length == required.length && isIdentity(proj) &&
+          !hasPos,
+        hasPos = hasPos,
+        // each applicable key set with its columns' read ordinals (-1:
+        // the file predates the column, which reads NULL)
+        eqs = fEqs.map(e => (eqSpecs(e), eqCols(e).map { case (_, cur) =>
+          readIdx.getOrElse(cols.indexWhere(_.name == cur), -1) }.toArray))
+          .toArray)
     }.toArray
     // per-dirty-file DV reader closures: pushed t_path filter, so each
     // reader loads only its own rows from the shared DV parquet dirs
@@ -553,11 +582,15 @@ class SnapshotBatchScan(required: StructType,
             Seq(sources.EqualTo("t_path", f.path)), returningBatch = false),
         dvDirs = dvDirs.map(d => s"$root/$d").toArray)
     }
-    // ---- bin-packing: files pack into tasks up to
-    // `spark.sql.files.maxPartitionBytes` (+ the per-file open cost),
-    // exactly FileSourceScanExec's sizing — a compacted-badly table of
-    // 100k small files reads as ~bytes/maxPartitionBytes tasks, not
-    // 100k. Sizes come from the MANIFEST (exact, committer-recorded);
+    // ---- bin-packing: files pack, in order, into tasks of at most
+    // `spark.sql.files.maxPartitionBytes`, each file costing its bytes
+    // plus `spark.sql.files.openCostInBytes` — FileSourceScanExec's
+    // per-file cost, WITHOUT its bytes-per-core cap (`min(maxBytes,
+    // max(openCost, totalBytes / parallelism))`), so a read smaller
+    // than maxPartitionBytes packs into ONE task however many cores
+    // are idle. A compacted-badly table of 100k small files reads as
+    // ~bytes/maxPartitionBytes tasks, not 100k. Sizes come from the
+    // MANIFEST (exact, committer-recorded);
     // a legacy entry without one estimates from its row count and the
     // schema's default widths — conservative either way, a split never
     // crosses a file boundary. Under key-grouping, packing stays
@@ -628,11 +661,21 @@ object SnapshotBatchScan {
 /** One file group's executor recipe: the reader closure, its physical
   * read schema, and the projection map back to the current schema
   * (`outMap(i)` = read ordinal of required column i, -1 = NULL).
+  * `eqs` pairs each applicable equality delete with the read ordinals
+  * of its key columns (-1 = NULL).
   */
 private[sources] final case class SnapshotGroupSpec(
     reader: PartitionedFile => Iterator[InternalRow],
     physFields: StructType, outMap: Array[Int], posIdx: Int,
-    identity: Boolean, hasPos: Boolean) extends Serializable
+    identity: Boolean, hasPos: Boolean,
+    eqs: Array[(SnapshotEqSpec, Array[Int])]) extends Serializable
+
+/** One equality delete's executor recipe: its key dir, the key
+  * columns' current types, and the reader of its key files.
+  */
+private[sources] final case class SnapshotEqSpec(dir: String,
+    keyTypes: Array[DataType],
+    reader: PartitionedFile => Iterator[InternalRow]) extends Serializable
 
 /** One file's executor read recipe inside a packed partition. */
 private[sources] final case class SnapshotFileSlice(
@@ -709,11 +752,46 @@ private[sources] class SnapshotReaderFactory(
     }
   }
 
-  /** One slice's live, projected rows. */
-  private def sliceRows(slice: SnapshotFileSlice): Iterator[InternalRow] = {
+  /** Parquet files of `dir`, for the executor-side delete loads. */
+  private def parquetFilesIn(dir: String)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    val dp = new Path(dir)
+    dp.getFileSystem(conf.value).listStatus(dp).iterator
+      .filter(_.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** The key `ords` of a row as a comparable UnsafeRow: NULL for a
+    * negative ordinal, float and double keys normalized (one NaN, -0.0
+    * as 0.0) as Spark normalizes join keys.
+    */
+  private def keyProjection(ords: Array[Int], types: Array[DataType])
+      : UnsafeProjection =
+    UnsafeProjection.create(ords.zip(types).toSeq.map { case (o, t) =>
+      val k = if (o < 0) Literal.create(null, t) else BoundReference(o, t, nullable = true)
+      if (t == FloatType || t == DoubleType) NormalizeNaNAndZero(k) else k
+    })
+
+  /** An equality delete's key set: every key row of its dir. */
+  private def loadKeys(spec: SnapshotEqSpec): java.util.HashSet[UnsafeRow] = {
+    val proj = keyProjection(spec.keyTypes.indices.toArray, spec.keyTypes)
+    val keys = new java.util.HashSet[UnsafeRow]()
+    parquetFilesIn(spec.dir).foreach { st =>
+      spec.reader(ParquetReadBridge.partitionedFile(
+        st.getPath.toString, st.getLen, st.getModificationTime))
+        .foreach(r => keys.add(proj(r).copy()))
+    }
+    keys
+  }
+
+  /** One slice's live, projected rows; `keysOf` gives an equality
+    * delete's key set, loaded once per task.
+    */
+  private def sliceRows(slice: SnapshotFileSlice,
+      keysOf: SnapshotEqSpec => java.util.HashSet[UnsafeRow])
+      : Iterator[InternalRow] = {
     val g = groups(slice.group)
     val raw = open(slice)
-    val alive: Iterator[InternalRow] =
+    val posAlive: Iterator[InternalRow] =
       if (!slice.dirty) raw
       else {
         // the file's dead positions, loaded HERE (executor), bounded by
@@ -722,22 +800,28 @@ private[sources] class SnapshotReaderFactory(
         val me = org.apache.spark.unsafe.types.UTF8String
           .fromString(slice.relPath)
         slice.dvDirs.foreach { dir =>
-          val dp = new Path(dir)
-          val fs = dp.getFileSystem(conf.value)
-          fs.listStatus(dp).iterator
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .foreach { st =>
-              slice.dvReader(ParquetReadBridge.partitionedFile(
-                st.getPath.toString, st.getLen, st.getModificationTime))
-                // exact match: the pushed filter only skips row groups
-                .filter(r => r.getUTF8String(0) == me)
-                .foreach(r => b += r.getLong(1))
-            }
+          parquetFilesIn(dir).foreach { st =>
+            slice.dvReader(ParquetReadBridge.partitionedFile(
+              st.getPath.toString, st.getLen, st.getModificationTime))
+              // exact match: the pushed filter only skips row groups
+              .filter(r => r.getUTF8String(0) == me)
+              .foreach(r => b += r.getLong(1))
+          }
         }
         val dead = b.result().sorted
         if (dead.isEmpty) raw
         else raw.filter(r =>
           java.util.Arrays.binarySearch(dead, r.getLong(g.posIdx)) < 0)
+      }
+    // a row dies when any applicable key set holds its key
+    val alive: Iterator[InternalRow] =
+      if (g.eqs.isEmpty) posAlive
+      else {
+        val tests = g.eqs.map { case (spec, ords) =>
+          (keysOf(spec), keyProjection(ords, spec.keyTypes))
+        }
+        posAlive.filter(r => !tests.exists { case (keys, proj) =>
+          keys.contains(proj(r)) })
       }
     if (g.identity) alive
     else {
@@ -768,7 +852,10 @@ private[sources] class SnapshotReaderFactory(
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val part = p.asInstanceOf[SnapshotFilePartition]
     unsetOnCompletion()
-    val out = part.slices.iterator.flatMap(sliceRows)
+    val keySets = scala.collection.mutable.HashMap
+      .empty[String, java.util.HashSet[UnsafeRow]]
+    val out = part.slices.iterator.flatMap(sliceRows(_, spec =>
+      keySets.getOrElseUpdate(spec.dir, loadKeys(spec))))
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean =

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, SQLContext}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
@@ -44,17 +44,13 @@ import graft.operators.{SnapshotFileWriter, SnapshotLog, SnapshotWriteMessage}
   * pinned for time travel), the scan builder receives Spark's pushed
   * conjuncts and turns them into manifest stat-band + transform-band +
   * bloom file pruning via `SnapshotLog.boxFiles`, and the scan — the
-  * per-file [[SnapshotBatchScan]] every library read also plans, or
-  * the [[V1Scan]] fallback whose relation produces rows from
-  * `SnapshotLog.dvRead` — applies the same field-id schema
-  * resolution, delete vectors, and equality-delete application every
-  * library read gets, so SQL and API results can never diverge.
-  * Filters fully translated to Catalyst columns are
-  * claimed EXACT (evaluated inside the produced plan, inside
-  * whole-stage codegen, and additionally pushed into the parquet row
-  * -group reader by the inner scan); anything else is left residual
-  * for Spark. `needConversion = false` hands Spark the inner plan's
-  * InternalRows directly — no Row boxing on the hot path.
+  * per-file [[SnapshotBatchScan]] every library read also plans —
+  * applies the same field-id schema resolution, delete vectors and
+  * equality deletes inside each file's reader, so SQL and API results
+  * can never diverge. Filters every planned file decides from its
+  * manifest stats are claimed EXACT (the scan drops the all-false
+  * files); the rest are pushed into the parquet row-group reader and
+  * left residual for Spark.
   *
   * At 100 TB the wins are the same as the library API's: a
   * `WHERE o_orderkey BETWEEN a AND b` over a range-clustered log opens
@@ -507,29 +503,21 @@ object SnapshotCatalog {
     }
   }
 
-  /** The [[SnapshotScan]] a planned catalog query resolved to — how
-    * specs assert FILE pruning through the SQL path (kept vs total),
-    * not just the answer.
+  /** The [[SnapshotBatchScan]] a planned catalog query resolved to —
+    * how specs assert FILE pruning through the SQL path (kept vs
+    * total), not just the answer.
     */
-  def scanOf(df: DataFrame): SnapshotScanLike = scansOf(df).head
+  def scanOf(df: DataFrame): SnapshotBatchScan = scansOf(df).head
 
   /** Every snapshot scan `df`'s optimized plan reads, library reads
     * included — what specs sum file pruning over.
     */
-  private[graft] def scansOf(df: DataFrame): Seq[SnapshotScanLike] =
+  private[graft] def scansOf(df: DataFrame): Seq[SnapshotBatchScan] =
     df.queryExecution.optimizedPlan.collect {
-      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
-        r.scan match {
-          case s: SnapshotScanLike => Some(s)
-          case w =>
-            // the V1 fallback wraps the scan in Spark's (private)
-            // V1ScanWrapper — unwrap through its v1Scan accessor
-            try w.getClass.getMethod("v1Scan").invoke(w) match {
-              case s: SnapshotScanLike => Some(s)
-              case _ => None
-            } catch { case _: NoSuchMethodException => None }
-        }
-    }.flatten
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+          if r.scan.isInstanceOf[SnapshotBatchScan] =>
+        r.scan.asInstanceOf[SnapshotBatchScan]
+    }
 
   /** Render a pushed literal the way file stats were rendered at write
     * time (`min(col).cast("string")`), so band comparison is apples to
@@ -1249,10 +1237,9 @@ private[sources] class SnapshotV2Write(root: String, schema: StructType,
 }
 
 /** The relation a library read plans ([[SnapshotLog.scanFiles]]): one
-  * snapshot's explicit file list and the delete vectors that apply to
-  * it, fixed in `plan`. Its builder always builds the batch scan —
-  * equality deletes are the caller's joins above it — and `withPos`
-  * adds the `__path`/`__pos` coordinate columns.
+  * snapshot's explicit file list and the delete vectors and equality
+  * deletes that apply to it, fixed in `plan`. `withPos` adds the
+  * `__path`/`__pos` coordinate columns.
   */
 private[graft] class SnapshotFilesTable(plan: SnapshotLog.CatalogBatchPlan,
     withPos: Boolean) extends Table with SupportsRead {
@@ -1287,9 +1274,8 @@ private[graft] class SnapshotFilesTable(plan: SnapshotLog.CatalogBatchPlan,
   * resolution (schema, delete vectors, equality deletes) come from the
   * SAME snapshot: a commit landing between plan and execute can never
   * produce a mixed-snapshot read. `pinned` is a library read's file
-  * list and delete vectors ([[SnapshotFilesTable]]): pruning starts
-  * from its files instead of the snapshot's, and the batch scan is
-  * always built.
+  * list and deletes ([[SnapshotFilesTable]]): pruning starts from its
+  * files instead of the snapshot's.
   */
 private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     tableSchema: StructType,
@@ -1346,8 +1332,9 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
   // keeps its own Limit above), so truncating the file list is the
   // whole optimization; applied only when every planned file's rows
   // are all live (no filters in play — a kept file might match
-  // nothing; no outstanding deletes — dead rows would shrink a file's
-  // contribution below its manifest count). ----
+  // nothing; no delete vector and no applicable equality delete — dead
+  // rows would shrink a file's contribution below its manifest
+  // count). ----
 
   override def pushLimit(n: Int): Boolean = {
     limit = Some(n)
@@ -1370,14 +1357,8 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     b.result()
   }
 
-  /** The V2 per-file batch scan ([[SnapshotBatchScan]] — the
-    * runtime-filterable planning shape) serves every snapshot but one
-    * carrying outstanding EQUALITY deletes (their sequence-rule
-    * anti-join is not a per-file test), which the V1 join read serves.
-    * The batch scan's parquet pushdown is row-group INEXACT, so every
-    * unclaimed filter stays residual for Spark to re-apply above (the
-    * V1 read self-applies its pushed set, so residual duplication in
-    * the eq-outstanding fallback is merely a re-check, never wrong).
+  /** The batch scan's parquet pushdown is row-group INEXACT, so every
+    * unclaimed filter stays residual for Spark to re-apply above.
     */
   override def pushFilters(pushed: Array[sources.Filter])
       : Array[sources.Filter] = {
@@ -1396,16 +1377,13 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     // re-check. Removing the residual Filter is what unlocks aggregate
     // pushdown over a FILTERED scan (`count(*) WHERE day = …` answers
     // from the manifest) and saves the per-row re-check on partition-
-    // aligned predicates. Translatable filters only (the V1
-    // eq-outstanding fallback self-applies its claimed set, so the
-    // claim must be expressible there too).
+    // aligned predicates. Deletes only remove rows, so a file-decided
+    // claim stays exact under them.
     if (exact.isEmpty) return pushed
     val plan = resolvePlan()
-    claimed =
-      if (snap.eqOutstanding) Seq.empty
-      else exact.filter(f => plan.kept.forall(file =>
-        SnapshotCatalog.fileFilterState(file, snap.schema, snap.curIds, f)
-          .isDefined))
+    claimed = exact.filter(f => plan.kept.forall(file =>
+      SnapshotCatalog.fileFilterState(file, snap.schema, snap.curIds, f)
+        .isDefined))
     filters.filterNot(claimed.contains) ++ onCoords
   }
 
@@ -1426,7 +1404,7 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
   // exact: no pushed predicates (stat-band pruning is file-INEXACT, so
   // an aggregate over a filtered scan must run on real rows — CLAIMED
   // predicates excepted), no outstanding equality deletes (their
-  // sequence-rule anti-join is not per-file), every kept file carrying
+  // key sets record no kill count), every kept file carrying
   // a round-trippable stat for each MIN/MAX column (an all-null file
   // records no stat — indistinguishable from stats-off, so refuse
   // rather than guess). Outstanding DELETE VECTORS are fine for the
@@ -1479,8 +1457,8 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
     // but the refusal is kept explicit rather than assumed.
     if (!allPushed.forall(claimed.contains)) return None
     val plan0 = resolvePlan()
-    // equality deletes refuse (their sequence-rule anti-join is not a
-    // per-file count); DELETE VECTORS do not — each target's kill
+    // equality deletes refuse (a key set records no kill count);
+    // DELETE VECTORS do not — each target's kill
     // count is manifest-recorded, so COUNT stays exact under MoR
     // (per-file rules below); MIN/MAX refuse per killed file (the
     // extremum may be dead).
@@ -1636,17 +1614,16 @@ private[sources] class SnapshotScanBuilder(snap: SnapshotLog.Resolved,
   override def build(): Scan = {
     if (aggScan.isDefined) return aggScan.get
     // ONE file plan (shared with pushFilters' claim decision and the
-    // aggregate pushdown) serves the batch scan and the V1 fallback
+    // aggregate pushdown) serves the batch scan
     val plan0 = resolvePlan()
-    if (snap.eqOutstanding && pinned.isEmpty)
-      return new SnapshotScan(plan0, required, exact)
     // claimed filters apply exactly at FILE granularity: the all-false
     // files drop here, the all-true survivors are the claim's contract
     val plan = if (claimed.isEmpty) plan0
       else plan0.copy(kept = refinedKept(plan0))
     val limited = limit match {
       case Some(n) if exact.isEmpty && boxes.isEmpty &&
-          plan.dvByTarget.isEmpty =>
+          plan.dvByTarget.isEmpty && !plan.kept.exists(f =>
+            SnapshotLog.applicableEqs(plan.eqs, f).nonEmpty) =>
         plan.copy(kept = limitFiles(plan.kept, n))
       case _ => plan
     }
@@ -1678,59 +1655,6 @@ class SnapshotAggScan(snap: SnapshotLog.Resolved,
     s"SnapshotAggScan root=${snap.root} ${snap.pinLabel}" +
       s" files=$filesAggregated/${snap.totalFiles} (manifest-only)" +
       s" out=${out.fieldNames.mkString("[", ", ", "]")}"
-}
-
-/** The V1 fallback scan: reads exactly the builder's file plan —
-  * `keptFiles`/`totalFiles` are what a spec (and `description()`)
-  * asserts — from the same resolved snapshot it was planned on. Row
-  * production goes through the V1 relation below.
-  */
-class SnapshotScan(plan: SnapshotLog.CatalogBatchPlan,
-    required: StructType,
-    exact: Seq[sources.Filter])
-    extends V1Scan with SupportsReportStatistics with SnapshotScanLike {
-
-  private val spark = SparkSession.active
-  val root: String = plan.snap.root
-  val keptFiles: Seq[SnapshotLog.FileEntry] = plan.kept
-  val totalFiles: Int = plan.snap.totalFiles
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"SnapshotScan root=$root ${plan.snap.pinLabel}" +
-      s" files=${keptFiles.size}/$totalFiles" +
-      s" pushed=${exact.mkString("[", ", ", "]")}"
-
-  /** Manifest row counts — free statistics for the SQL planner's
-    * broadcast decisions (pruned-file rows as the bound; byte size via
-    * the required schema's default width).
-    */
-  override def estimateStatistics(): Statistics = new Statistics {
-    private val rows = keptFiles.map(_.rows).sum
-    override def sizeInBytes(): util.OptionalLong =
-      util.OptionalLong.of(math.max(1L, rows) *
-        math.max(1, required.map(_.dataType.defaultSize).sum))
-    override def numRows(): util.OptionalLong = util.OptionalLong.of(rows)
-  }
-
-  override def toBatch: Batch =
-    throw new UnsupportedOperationException("V1 fallback scan")
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new SnapshotV1Relation(context, this).asInstanceOf[T]
-
-  /** The MoR read of the pruned file set, filtered by the claimed-
-    * exact predicates and projected to the required columns — built
-    * lazily at execution so the relation plans nothing twice.
-    */
-  private[sources] def innerPlan(): DataFrame = {
-    val base = SnapshotLog.dvRead(spark, plan.snap, keptFiles)
-    val filtered = exact.flatMap(SnapshotCatalog.columnOf)
-      .foldLeft(base)((d, c) => d.filter(c))
-    filtered.select(required.fieldNames.map(col).toIndexedSeq: _*)
-  }
 }
 
 /** The staged side of an atomic CTAS/RTAS: Spark writes the query
@@ -1941,25 +1865,4 @@ private[graft] class SnapshotMetaTable(val root: String, val kind: String)
           override def needConversion: Boolean = false
         }.asInstanceOf[T]
     }
-}
-
-/** V1 bridge: Spark's `DataSourceV2Strategy` plans a [[V1Scan]] as a
-  * row-source scan over this relation. `needConversion = false` +
-  * `queryExecution.toRdd` hands over the inner plan's InternalRows
-  * directly — the parquet scan underneath stays vectorized and
-  * whole-stage-codegen'd; no per-row `Row` boxing is ever paid.
-  */
-private[sources] class SnapshotV1Relation(ctx: SQLContext,
-    scan: SnapshotScan) extends BaseRelation with TableScan {
-
-  override def sqlContext: SQLContext = ctx
-
-  override def schema: StructType = scan.readSchema()
-
-  override def needConversion: Boolean = false
-
-  override def buildScan(): RDD[Row] =
-    scan.innerPlan().queryExecution.toRdd.asInstanceOf[RDD[Row]]
-
-  override def toString: String = scan.description()
 }

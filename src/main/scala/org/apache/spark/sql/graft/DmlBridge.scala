@@ -55,7 +55,7 @@ object DmlBridge {
     * The stream-table rewrite (graft.plans.SnapshotStreamTableRule)
     * substitutes this for a catalog table's StreamingRelationV2, the
     * exact V1-fallback move Delta's DeltaAnalysis makes: micro-batches
-    * of a table format are QUERY PLANS (MoR anti-joins, field-id
+    * of a table format are QUERY PLANS (changelog joins, field-id
     * scans), which only the V1 Source API can return.
     */
   def streamingSourceRelation(spark: SparkSession, source: String,

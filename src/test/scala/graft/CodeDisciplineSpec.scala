@@ -90,6 +90,29 @@ class CodeDisciplineSpec extends AnyFunSuite {
       "a schema-pinned parquet read outside describeFiles")
   }
 
+  test("deletes apply in the reader") {
+    def source(name: String): String = new String(Files.readAllBytes(
+      Paths.get(s"src/main/scala/graft/$name")))
+    val log = source("operators/SnapshotLog.scala")
+    Seq("morApply", "applyEqs", "dvRead").foreach(n =>
+      assert(s"\\b$n\\b".r.findFirstIn(log).isEmpty, s"$n is back"))
+    // the object member (two-space indent) each eqJoin call sits in
+    val members = """(?m)^  (?:private(?:\[\w+\])? |final )*(?:def|class) (\w+)""".r
+      .findAllMatchIn(log).map(m => m.start -> m.group(1)).toSeq
+    assert("""(?<!def )\beqJoin\(""".r.findAllMatchIn(log)
+      .map(m => members.takeWhile(_._1 < m.start).last._2).toSet === Set("peelMatches"),
+      "equality deletes joined outside peelMatches")
+    val cat = source("sources/SnapshotCatalog.scala")
+    assert(!cat.contains("SnapshotV1Relation"), "the V1 relation is back")
+    assert(!cat.contains("class SnapshotScan("), "the V1 fallback scan is back")
+    // outside imports, V1Scan appears only in the metadata table
+    val tops = """(?m)^(?:private(?:\[\w+\])? )?(?:class|object|trait) (\w+)""".r
+      .findAllMatchIn(cat).map(m => m.start -> m.group(1)).toSeq
+    val v1 = """(?m)^(?!import ).*\bV1Scan\b""".r.findAllMatchIn(cat)
+      .map(m => tops.takeWhile(_._1 < m.start).last._2).toSet
+    assert(v1 === Set("SnapshotMetaTable"), s"V1Scan used in $v1")
+  }
+
   test("snapshot-log commits plan from the read side's one resolved head") {
     val src = new String(Files.readAllBytes(
       Paths.get("src/main/scala/graft/operators/SnapshotLog.scala")))

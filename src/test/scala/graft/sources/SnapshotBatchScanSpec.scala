@@ -197,13 +197,13 @@ class SnapshotBatchScanSpec extends SparkSpec {
     assert(spark.sql(s"SELECT * FROM $cat.`$root`").count() == 30L)
   }
 
-  test("outstanding equality deletes fall back to the V1 scan") {
+  test("outstanding equality deletes read through the batch scan") {
     import spark.implicits._
     val root = freshLog("eq")
     SnapshotLog.deleteWhereEqual(spark, root, Seq((1L)).toDF("k"))
     val df = spark.sql(s"SELECT * FROM $cat.`$root`")
-    assert(SnapshotCatalog.scanOf(df).isInstanceOf[SnapshotScan],
-      "eq-delete state takes the V1 join read")
+    assert(SnapshotCatalog.scanOf(df).isInstanceOf[SnapshotBatchScan],
+      "eq-delete state applies its key sets inside the batch scan")
     assert(df.count() == 29L)
     SnapshotLog.rewriteEqualityDeletes(spark, root)
     val df2 = spark.sql(s"SELECT * FROM $cat.`$root`")

@@ -17,12 +17,15 @@ def main():
     blocks = re.split(r"^===== (\S+) =====$", text, flags=re.M)[1:]
     for name, body in zip(blocks[::2], blocks[1::2]):
         # formatted mode prints the tree, then per-node detail sections that
-        # repeat every operator name — count the tree only
+        # repeat every operator name — count the tree only, plus the
+        # pushed-filter lines: a parquet scan's `PushedFilters: [...]` and
+        # a snapshot-log batch scan's description, `... pushed=[...]`
         detail = re.search(r"^\(\d+\) ", body, flags=re.M)
         if detail:
             body = body[:detail.start()] + "\n" + "\n".join(
                 l for l in body[detail.start():].splitlines()
-                if l.startswith("PushedFilters") or "PushedFilters: [" in l)
+                if l.startswith("PushedFilters") or "PushedFilters: [" in l or
+                l.startswith("SnapshotBatchScan ") and " pushed=[" in l)
         feats = []
         bhj = len(re.findall(r"\bBroadcastHashJoin\b", body))
         smj = len(re.findall(r"\bSortMergeJoin\b", body))
@@ -43,7 +46,7 @@ def main():
         feats.append(f"Exchange x{exch}")
         # non-trivial pushed filters only (IsNotNull-only lists are noise)
         pfs = {m.group(1).strip() for m in
-               re.finditer(r"PushedFilters: \[([^\]]+)\]", body)
+               re.finditer(r"(?:PushedFilters: | pushed=)\[([^\]]+)\]", body)
                if m.group(1).strip() and
                any(not f.strip().startswith("IsNotNull")
                    for f in m.group(1).split(","))}
